@@ -280,25 +280,16 @@ def _split_eval(spark: SparkSession,
                 pretrain_epochs: int = 0,
                 pretrain_mode: str = "latency",
                 pretrain_censor_ms: float | None = None,
-                enrich: bool = False,
                 pair_weighting: str = "none") -> dict[str, Any]:
     """Train on ``train``, score ``test``: returns the ranking losses,
     the argmin picks and the held-out second totals — one evaluation of
     one train/held-out split (the main split and every cross-validation
-    fold go through this same path). With ``enrich``, candidates are
-    expected to carry realized-strategy refined plans
-    (``plans.enrich.enrich_candidates``) and the extended-vocabulary
-    featurizer is used end-to-end (train + executor-side scoring)."""
-    fg = None
-    if enrich:
-        from ..plans.enrich import EnrichedFeatureGenerator
-
-        fg = EnrichedFeatureGenerator()
+    fold go through this same path)."""
     model = train_pairwise_from_bundles(
         [(qid, [(c.plan, float(c.exec_time_ms)) for c in cands])
          for qid, cands in train], epochs=epochs, seed=seed,
         pretrain_epochs=pretrain_epochs, pretrain_mode=pretrain_mode,
-        pretrain_censor_ms=pretrain_censor_ms, feature_generator=fg,
+        pretrain_censor_ms=pretrain_censor_ms,
         pair_weighting=pair_weighting)
     rows = [(qid, i, c.variant, c.to_bundle_json(), float(c.exec_time_ms))
             for qid, cands in test for i, c in enumerate(cands)]
@@ -309,24 +300,8 @@ def _split_eval(spark: SparkSession,
     scored = score_plans(df, model).cache()
     loss = ranking_loss(scored)
     wloss = weighted_ranking_loss(scored)
-    # NON-REFERENCE opt-in: default-prior near-tie guard (SCALE.md
-    # round-13 q180 anatomy; 0 = reference behavior, plain argmin)
-    margin = float(os.environ.get("SPARK_GRAFT_DEFAULT_MARGIN", "0"))
     picked = {r["qid"]: r["candidate_idx"]
-              for r in choose_best(scored,
-                                   default_margin=margin or None).collect()}
-    # margin-sweep instrumentation (A/B on the same scored frame — each
-    # extra margin is one more window pass over the cached scores, no
-    # retraining): picks at every probe margin, for the per-margin
-    # decision-metric table in optimizer_results
-    margin_picks: dict[float, dict[str, int]] = {}
-    sweep_env = os.environ.get("SPARK_GRAFT_MARGIN_SWEEP", "")
-    for m_txt in filter(None, (s.strip() for s in sweep_env.split(","))):
-        m = float(m_txt)
-        margin_picks[m] = {
-            r["qid"]: r["candidate_idx"]
-            for r in choose_best(scored,
-                                 default_margin=m or None).collect()}
+              for r in choose_best(scored).collect()}
     scored.unpersist()
     tot = {"default": 0.0, "chosen": 0.0, "best": 0.0}
     for qid, cands in test:
@@ -336,7 +311,7 @@ def _split_eval(spark: SparkSession,
         tot["chosen"] += times[picked[qid]] / 1e3
         tot["best"] += min(times) / 1e3
     return {"model": model, "loss": loss, "wloss": wloss,
-            "picked": picked, "margin_picks": margin_picks,
+            "picked": picked,
             "totals": {k: round(v, 4) for k, v in tot.items()}}
 
 
@@ -352,7 +327,6 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
                       probe_default_s: float | None = None,
                       skip_saturated: bool = False,
                       oversample: float = 2.0,
-                      enrich_joins: bool = False,
                       pair_weighting: str = "none",
                       ) -> dict[str, Any]:
     # (timeout-penalty labels are censored observations: excluded from
@@ -386,18 +360,8 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
           file=sys.stderr, flush=True)
     from ..plans.explore import LABEL_TIMEOUT_PENALTY as _PEN
     censor_ms = _PEN * label_timeout_s * 1000.0
-    if enrich_joins:
-        # refine join ops with each candidate's recorded realized
-        # strategy (round-10 verdict #4) — cache-immutable: new Candidate
-        # objects, same labels
-        from ..plans.enrich import enrich_candidates
-
-        bundles = [(qid, enrich_candidates(cands))
-                   for qid, cands in bundles]
-        train, test = bundles[:n_train], bundles[n_train:]
     main_eval = _split_eval(spark, train, test, epochs, seed,
                             pretrain_epochs, pretrain_mode, censor_ms,
-                            enrich=enrich_joins,
                             pair_weighting=pair_weighting)
     loss, wloss = main_eval["loss"], main_eval["wloss"]
     picked = main_eval["picked"]
@@ -408,10 +372,6 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
     if cross_folds > 1:
         cross_folds = _clamp_folds(cross_folds, len(bundles))
         fold_rows = []
-        # per-margin decision-metric accumulator for the near-tie-guard
-        # A/B (SPARK_GRAFT_MARGIN_SWEEP): same trained folds, same
-        # scores — only the pick rule varies
-        sweep_acc: dict[float, dict[str, float]] = {}
         block = len(bundles) // cross_folds
         for j in range(cross_folds):
             print(f"cross-split fold {j}/{cross_folds}", file=sys.stderr,
@@ -422,7 +382,6 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
             f_train = bundles[:lo] + bundles[hi:]
             ev = _split_eval(spark, f_train, f_test, epochs, seed,
                              pretrain_epochs, pretrain_mode, censor_ms,
-                             enrich=enrich_joins,
                              pair_weighting=pair_weighting)
             t = ev["totals"]
             gap = (round(100.0 * (t["chosen"] - t["best"]) / t["best"], 2)
@@ -462,18 +421,6 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
                     "share_pct": round(100.0 * worst[0] / total_regret, 1),
                 },
             })
-            for m, picks in ev["margin_picks"].items():
-                acc = sweep_acc.setdefault(m, {
-                    "regret_ms": 0.0, "chosen_ms": 0.0, "best_ms": 0.0,
-                    "timeout_picks": 0, "picks_changed": 0})
-                for qid, cands in f_test:
-                    times = [float(c.exec_time_ms) for c in cands]
-                    ci = picks[qid]
-                    acc["regret_ms"] += times[ci] - min(times)
-                    acc["chosen_ms"] += times[ci]
-                    acc["best_ms"] += min(times)
-                    acc["timeout_picks"] += times[ci] >= timeout_ms
-                    acc["picks_changed"] += ci != ev["picked"][qid]
         losses = [f["ranking_loss"] for f in fold_rows
                   if f["ranking_loss"] is not None]
         gaps = [f["oracle_gap_pct"] for f in fold_rows
@@ -490,17 +437,6 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
             "oracle_gap_spread_pct": (round(max(gaps) - min(gaps), 2)
                                       if gaps else None),
         }
-        if sweep_acc:
-            cross["margin_sweep"] = {
-                str(m): {
-                    "total_regret_sec": round(a["regret_ms"] / 1e3, 4),
-                    "total_chosen_sec": round(a["chosen_ms"] / 1e3, 4),
-                    "oracle_gap_pct": (
-                        round(100.0 * (a["chosen_ms"] - a["best_ms"])
-                              / a["best_ms"], 2) if a["best_ms"] else None),
-                    "timeout_label_picks": int(a["timeout_picks"]),
-                    "picks_changed_vs_main": int(a["picks_changed"]),
-                } for m, a in sorted(sweep_acc.items())}
 
     from ..workload.extract import extract_aliases
 
@@ -551,13 +487,8 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
                        for q, cs in bundles[i + per_batch:i + per_batch + 1]])
         i += per_batch + 1
     print("deployment series...", file=sys.stderr, flush=True)
-    dep_fg = None
-    if enrich_joins:
-        from ..plans.enrich import EnrichedFeatureGenerator
-
-        dep_fg = EnrichedFeatureGenerator()
     deployment = run_deployment(spark, trains, valids, epochs=epochs,
-                                seed=seed, feature_generator=dep_fg,
+                                seed=seed,
                                 pair_weighting=pair_weighting)
 
     def tot(key: str) -> float:
@@ -572,10 +503,7 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
         "seed": seed,
         "pretrain": ({"epochs": pretrain_epochs, "mode": pretrain_mode}
                      if pretrain_epochs else None),
-        "features": "enriched-joins" if enrich_joins else "base",
         "pair_weighting": pair_weighting,
-        "default_margin": float(os.environ.get(
-            "SPARK_GRAFT_DEFAULT_MARGIN", "0")) or None,
         "label_cache": {"enabled": cache_dir is not None,
                         "hits": cache_hits,
                         "misses": cache_lookups - cache_hits},
@@ -632,18 +560,11 @@ def write_results_md(res: dict[str, Any], path: str) -> None:
         + (f"  |  pointwise pretrain: {res['pretrain']['mode']} x "
            f"{res['pretrain']['epochs']} epochs"
            if res.get("pretrain") else "")
-        + ("  |  features: realized-join enriched"
-           if res.get("features") == "enriched-joins" else "")
         + (f"  |  pairwise objective: consequence-weighted "
            f"(`{res['pair_weighting']}` — NON-REFERENCE default, adopted "
            f"after the round-11 A/B; the reference trains equal-weight "
            f"pairs, restored by `SPARK_GRAFT_PAIR_WEIGHTING=none`)"
-           if res.get("pair_weighting") not in (None, "none") else "")
-        + (f"  |  selection: default-prior near-tie guard at relative "
-           f"margin {res['default_margin']} (NON-REFERENCE opt-in, "
-           f"`SPARK_GRAFT_DEFAULT_MARGIN`; the reference argmins "
-           f"unconditionally)"
-           if res.get("default_margin") else ""),
+           if res.get("pair_weighting") not in (None, "none") else ""),
         "",
     ]
     wb = res.get("workload_bias") or {}
@@ -772,21 +693,6 @@ def write_results_md(res: dict[str, Any], path: str) -> None:
             "needs no label censoring).",
             "",
         ]
-        if cs.get("margin_sweep"):
-            lines += [
-                "### Default-prior near-tie guard sweep (same folds, "
-                "same scores — only the pick rule varies)",
-                "",
-                "| relative margin | total regret sec | oracle gap % | "
-                "timeout picks | picks changed |",
-                "|---|---|---|---|---|",
-            ]
-            for m, a in cs["margin_sweep"].items():
-                lines.append(
-                    f"| {m} | {a['total_regret_sec']} | "
-                    f"{a['oracle_gap_pct']} | {a['timeout_label_picks']} | "
-                    f"{a['picks_changed_vs_main']} |")
-            lines.append("")
     lines += [
         "## Per-query (held-out)",
         "",

@@ -92,6 +92,10 @@ def shingle_hashes_expr(text: Column, n: int = 3) -> Column:
 #: one vectorized shingle UDF per n (pandas_udf objects are reusable)
 _SHINGLE_UDFS: dict = {}
 
+#: widest shingle whose int64 dot is exact: each term is below 2^52, so
+#: n terms stay below 2^63 for n <= 2^11
+SHINGLE_MAX_N = 2048
+
 
 def shingle_hashes(text: Column, n: int = 3) -> Column:
     """Distinct polynomial hashes of the character ``n``-grams of ``text``
@@ -108,8 +112,10 @@ def shingle_hashes(text: Column, n: int = 3) -> Column:
       ``hi = max(len - (n-1), 1)`` emits exactly one padded window for
       short/empty strings;
     - the weight vector is PRE-REDUCED mod P (``31^e mod P``), so every
-      term stays below 2^52 and the 12-term dot below 2^56 — no int64
-      overflow for ANY code point / n. By congruence
+      term (code point < 2^21 times weight < 2^31) stays below 2^52 and
+      the n-term dot below n·2^52 — no int64 overflow for any code point
+      as long as ``n <= 2048`` (``SHINGLE_MAX_N``; larger ``n`` raises
+      ``ValueError``). By congruence
       ``Σ cp·31^e ≡ Σ cp·(31^e mod P) (mod P)``, so the result is
       identical to the expression form's end-mod wherever that form is
       defined (its un-reduced fold raises ANSI long overflow first on
@@ -118,6 +124,9 @@ def shingle_hashes(text: Column, n: int = 3) -> Column:
       round-13 ADVICE item, pinned by a non-ASCII n=12 parity test);
     - ``array_distinct`` keeps first-occurrence order: ``np.unique``'s
       first indices, re-sorted by position."""
+    if n > SHINGLE_MAX_N:
+        raise ValueError(f"shingle width n={n} exceeds {SHINGLE_MAX_N}: "
+                         "the int64 window dot could overflow")
     if n not in _SHINGLE_UDFS:
         w = np.array([pow(31, n - 1 - j, HASH_P) for j in range(n)],
                      dtype=np.int64)

@@ -42,24 +42,11 @@ def _model_state(model: LeroModel) -> dict:
 
 
 def _rebuild(state: dict) -> LeroModel:
-    if state["fg"].get("kind") == "enriched":
-        from ..plans.enrich import EnrichedFeatureGenerator
-
-        fg = EnrichedFeatureGenerator.from_state(state["fg"])
-    else:
-        fg = FeatureGenerator.from_state(state["fg"])
+    fg = FeatureGenerator.from_state(state["fg"])
     model = LeroModel(fg)
     model.net = LeroNet(fg.input_feature_dim, hidden=state["hidden"])
     model.net.load_state_arrays(state["weights"])
     return model
-
-
-def _parser_of(fg: FeatureGenerator):
-    """The featurizer's plan-JSON parser: an enriched generator preserves
-    its extended op vocabulary (``parse_plan``); the base generator keeps
-    the reference's Unknown-folding ``from_pg_json``."""
-    custom = getattr(fg, "parse_plan", None)
-    return custom if custom is not None else (lambda p: from_pg_json(p)[0])
 
 
 def score_plans(df: DataFrame, model: LeroModel,
@@ -76,8 +63,8 @@ def score_plans(df: DataFrame, model: LeroModel,
             if s.empty:
                 yield pd.Series([], dtype=float)
                 continue
-            parse = _parser_of(local.fg)
-            trees = [local.fg.transform_tree(parse(p)) for p in s]
+            trees = [local.fg.transform_tree(from_pg_json(p)[0])
+                     for p in s]
             feats, idx, nn = prepare_trees(trees)
             scores, _ = local.net.forward(feats, idx, nn)
             yield pd.Series(np.asarray(scores, dtype=float))
@@ -100,8 +87,8 @@ def plan_embeddings(df: DataFrame, model: LeroModel,
             if s.empty:
                 yield pd.Series([], dtype=object)
                 continue
-            parse = _parser_of(local.fg)
-            trees = [local.fg.transform_tree(parse(p)) for p in s]
+            trees = [local.fg.transform_tree(from_pg_json(p)[0])
+                     for p in s]
             feats, idx, nn = prepare_trees(trees)
             _, emb = local.net.forward(feats, idx, nn)
             yield pd.Series(list(np.asarray(emb, dtype=float)))
@@ -111,44 +98,10 @@ def plan_embeddings(df: DataFrame, model: LeroModel,
 
 def choose_best(df: DataFrame, qid_col: str = "qid",
                 score_col: str = "score",
-                idx_col: str = "candidate_idx",
-                default_margin: float | None = None,
-                variant_col: str = "variant") -> DataFrame:
+                idx_col: str = "candidate_idx") -> DataFrame:
     """One row per query: the candidate with the lowest predicted score
-    (deterministic tie-break on candidate index).
-
-    ``default_margin`` (NON-REFERENCE, opt-in — the reference argmins
-    unconditionally, ``lero_test.py:97``) enables the default-prior
-    near-tie guard from the round-13 q180 anatomy (SCALE.md): when the
-    default plan's predicted score is within the given RELATIVE margin
-    of the argmin candidate's, keep the default plan — the
-    plan-regression posture (don't deviate from Catalyst's own choice
-    without predicted-confidence). Requires ``variant_col``; queries
-    whose bundle has no default row fall back to plain argmin. All
-    window-side, no driver loop — the guard scales with the scoring
-    fan-out."""
+    (deterministic tie-break on candidate index)."""
     w = Window.partitionBy(qid_col).orderBy(F.col(score_col).asc(),
                                             F.col(idx_col).asc())
-    ranked = df.withColumn("__rn", F.row_number().over(w))
-    if not default_margin:
-        return ranked.where(F.col("__rn") == 1).drop("__rn")
-    part = Window.partitionBy(qid_col)
-    is_def = F.col(variant_col) == "default"
-    guarded = (
-        ranked
-        .withColumn("__min_s", F.min(score_col).over(part))
-        .withColumn("__def_s", F.min(F.when(is_def, F.col(score_col)))
-                    .over(part))
-        # relative margin, clamped so a ~0 argmin score can't make the
-        # guard vacuous; scores are latency-scale positives after the
-        # pointwise pretrain
-        .withColumn("__keep_default",
-                    F.col("__def_s").isNotNull()
-                    & (F.col("__def_s") <= F.col("__min_s")
-                       + F.lit(float(default_margin))
-                       * F.greatest(F.abs(F.col("__min_s")),
-                                    F.lit(1e-9)))))
-    return (guarded
-            .where((F.col("__keep_default") & is_def)
-                   | (~F.col("__keep_default") & (F.col("__rn") == 1)))
-            .drop("__rn", "__min_s", "__def_s", "__keep_default"))
+    return (df.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1).drop("__rn"))

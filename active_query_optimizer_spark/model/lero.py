@@ -213,7 +213,6 @@ def train_pairwise_from_bundles(
         pretrain_epochs: int = 0,
         pretrain_mode: str = "latency",
         pretrain_censor_ms: float | None = None,
-        feature_generator: FeatureGenerator | None = None,
         pair_weighting: str = "none",
         ) -> LeroModelPairWise:
     """End-to-end: labeled bundles → fit FeatureGenerator → all-pairs →
@@ -239,11 +238,6 @@ def train_pairwise_from_bundles(
     penalty constant distorts every score. The pairwise pass still sees
     those candidates: their ordering information is valid.
 
-    ``feature_generator`` substitutes the featurizer (e.g.
-    ``plans.enrich.EnrichedFeatureGenerator`` over realized-strategy
-    refined trees — round-10 verdict #4); default is the reference's
-    base ``FeatureGenerator``.
-
     ``pair_weighting="latency_delta"`` weights each training pair by the
     absolute difference of its two NORMALIZED latency labels
     (mean-1-normalized across the pair set): a pair whose mis-ordering
@@ -252,8 +246,7 @@ def train_pairwise_from_bundles(
     replicates the reference's equal-weight objective."""
     plans = [p for _, cands in bundles for p, _ in cands]
     times = [t for _, cands in bundles for _, t in cands]
-    fg = (feature_generator if feature_generator is not None
-          else FeatureGenerator()).fit(plans, times)
+    fg = FeatureGenerator().fit(plans, times)
     model = LeroModelPairWise(fg, seed=seed)
     if pretrain_epochs > 0 and plans:
         keep = [[(p, t) for p, t in cands

@@ -58,7 +58,6 @@ def run_deployment(spark: SparkSession,
                    train_batches: list[list[Bundle]],
                    valid_batches: list[list[Bundle]],
                    epochs: int = 50, seed: int = 0,
-                   feature_generator=None,
                    pair_weighting: str = "none") -> dict:
     """Deployment variant with a dedicated evaluation split
     (``Lero/deployment.py:16-46``): unlike ``run_dynamic`` (which evaluates
@@ -84,11 +83,8 @@ def run_deployment(spark: SparkSession,
     latency_series: list[float] = []
     loss_series: list[float | None] = []
     for i, (train, valid) in enumerate(zip(model_train_sets, valid_batches)):
-        # feature_generator is refit per batch (fit() fully resets state),
-        # so one enriched instance serves the whole series
         model = train_pairwise_from_bundles(
             train, epochs=epochs, seed=seed + i,
-            feature_generator=feature_generator,
             pair_weighting=pair_weighting)
         scored = _score_bundles(spark, valid, model).cache()
         report = selection_report(scored)

@@ -9,8 +9,8 @@ CI-visible: if the committed snapshot's query set no longer matches the
 current HEADLINE list, the load-ratio diagnostics silently degrade to
 the stale intersection, and the fix is a quiet best-of-3 re-run.
 
-Like ``test_driver_rotation``, a red here between a HEADLINE edit and
-the snapshot refresh is the forcing function working, not a regression.
+A red here between a HEADLINE edit and the snapshot refresh is the
+forcing function working, not a regression.
 """
 
 from __future__ import annotations

@@ -60,34 +60,30 @@ def test_choose_best_and_selection_report(spark, trained):
         sum(v for k, v in rep.items() if k != "sum"))
 
 
-def test_choose_best_default_margin_guard(spark):
-    """Round-13 q180 anatomy residue (SCALE.md): with ``default_margin``
-    set, a default plan whose predicted score is within the relative
-    margin of the argmin wins (plan-regression posture); a default far
-    outside it does not; a bundle with no default row falls back to
-    plain argmin; margin=None is byte-identical argmin."""
+def test_choose_best_argmin_tie_break(spark):
+    """Plain argmin, one row per query; equal scores go to the lower
+    ``candidate_idx`` (the reference's argmin takes the first minimum,
+    ``lero_test.py:97``)."""
     rows = [
-        # qa: argmin=idx1 (90) but default (100) within 20% -> default
         ("qa", 0, "default", 100.0),
         ("qa", 1, "rot1", 90.0),
         ("qa", 2, "merge", 300.0),
-        # qb: default (200) far above argmin (90) -> argmin kept
         ("qb", 0, "default", 200.0),
         ("qb", 1, "rot1", 90.0),
-        # qc: no default variant -> plain argmin
         ("qc", 0, "rot1", 50.0),
         ("qc", 1, "rot2", 40.0),
+        # qd: idx 2 and idx 1 tie on the minimum; idx 2 comes first in
+        # the input, so only the index tie-break picks 1
+        ("qd", 0, "default", 80.0),
+        ("qd", 2, "rot2", 70.0),
+        ("qd", 1, "rot1", 70.0),
     ]
     df = spark.createDataFrame(
         rows, "qid string, candidate_idx int, variant string, score double")
-    plain = {r["qid"]: r["candidate_idx"]
-             for r in I.choose_best(df).collect()}
-    assert plain == {"qa": 1, "qb": 1, "qc": 1}
-    guarded = {r["qid"]: r["candidate_idx"]
-               for r in I.choose_best(df, default_margin=0.2).collect()}
-    assert guarded == {"qa": 0, "qb": 1, "qc": 1}
-    # exactly one row per query either way
-    assert I.choose_best(df, default_margin=0.2).count() == 3
+    chosen = I.choose_best(df).collect()
+    plain = {r["qid"]: r["candidate_idx"] for r in chosen}
+    assert len(chosen) == 4
+    assert plain == {"qa": 1, "qb": 1, "qc": 1, "qd": 1}
 
 
 def test_ranking_loss_perfect_and_inverted(spark):

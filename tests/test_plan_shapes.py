@@ -285,7 +285,10 @@ def test_load_for_compute_repartition_is_conditional(spark, tmp_path):
 
     src = spark.range(0, 10_000).selectExpr(
         "id AS doc_id", "repeat('x', 64) AS text")
-    (src.repartition(8).write.mode("overwrite")
+    # at least parallelism files, so the scan alone reaches parallelism/2
+    # whatever core count the session runs with
+    n_files = max(8, spark.sparkContext.defaultParallelism)
+    (src.repartition(n_files).write.mode("overwrite")
         .parquet(os.path.join(str(tmp_path), "documents.parquet")))
 
     wide = load_for_compute(spark, str(tmp_path), "documents", "doc_id")

@@ -42,20 +42,6 @@ def test_rows_only_output_is_driver_hashable(spark, name):
                 f"{name}.{col} holds ndarray cells")
 
 
-def test_driver_order_is_exhaustive():
-    """_reorder() appends unknown registrations at the tail instead of
-    dropping them (fail-safe), but the curated list must still name every
-    query so window placement is deliberate — this assertion is the loud
-    guard (works under ``python -O``, unlike the old bare assert)."""
-    from active_query_optimizer_spark.operators import _DRIVER_ORDER
-
-    assert sorted(_DRIVER_ORDER) == sorted(QUERIES), (
-        "update _DRIVER_ORDER: "
-        f"extra={sorted(set(QUERIES) - set(_DRIVER_ORDER))} "
-        f"stale={sorted(set(_DRIVER_ORDER) - set(QUERIES))}")
-    assert len(set(_DRIVER_ORDER)) == len(_DRIVER_ORDER), "duplicate entries"
-
-
 def test_entry_smoke(spark):
     import __spark_entry__ as entry_mod
 

@@ -131,3 +131,17 @@ def test_shingle12_non_ascii_exact_mod_p(spark):
            .collect()}
     for i, t in enumerate(texts):
         assert got[i] == _shingles_ref(t, 12), f"row {i}"
+
+
+def test_shingle_width_bound_is_enforced(spark):
+    """``shingle_hashes`` is exact only while the n-term int64 dot cannot
+    overflow (``n <= SHINGLE_MAX_N``): at the bound it still matches the
+    arbitrary-precision reference on near-maximal code points, and one
+    past it is rejected."""
+    n = tt.SHINGLE_MAX_N
+    text = "".join(chr(0x10FFFF - (i * 7919) % 4096) for i in range(n + 40))
+    df = spark.createDataFrame([(text,)], "text string")
+    [row] = df.select(tt.shingle_hashes(F.col("text"), n).alias("a")).collect()
+    assert list(row["a"]) == _shingles_ref(text, n)
+    with pytest.raises(ValueError, match="exceeds"):
+        tt.shingle_hashes(F.col("text"), n + 1)

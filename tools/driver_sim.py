@@ -1,41 +1,48 @@
 """Simulate the driver: vanilla session, hostile timezone, run entry() +
-every queries()[name] vs oracle_sql()[name] via DuckDB at sf0.01
-(override with SPARK_GRAFT_SIM_SF_DIR, e.g. sf0.1 for a stronger sweep —
-data-dependent divergence can hide at small SF)."""
-import os, sys, math
-sys.path.insert(0, "/root/repo")
+queries()[name] vs oracle_sql()[name] via DuckDB at sf0.01 (override with
+SPARK_GRAFT_SIM_SF_DIR, e.g. sf0.1 for a stronger sweep — data-dependent
+divergence can hide at small SF).
+
+Usage: python tools/driver_sim.py [<query> ...]   (no names = every query)
+
+Exits non-zero when any checked query fails.
+"""
+import math
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import duckdb
+import pandas as pd
 from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[8]")
-         .appName("driver-sim")
-         .config("spark.sql.session.timeZone", "America/New_York")  # hostile TZ
-         .config("spark.ui.enabled", "false")
-         .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-import __spark_entry__ as E
-df = E.entry(spark)
-rows = df.collect()
-print("entry rows:", rows)
-import duckdb, pandas as pd
-qs, osql = E.queries(), E.oracle_sql()
-print(f"{len(qs)} queries, {len(osql)} oracles")
+
+FAM = {"i": "int", "u": "int", "f": "float", "b": "bool", "M": "dt", "m": "td"}
 sf = os.environ.get("SPARK_GRAFT_SIM_SF_DIR", "/root/testdata/sf0.01")
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+
+
 def canon(df):
     df = df.reindex(sorted(df.columns), axis=1)
+
     def norm(v):
-        if isinstance(v, float) and math.isnan(v): return None
+        if isinstance(v, float) and math.isnan(v):
+            return None
         if hasattr(v, "tolist") and not isinstance(v, (str, bytes)):
-            t = v.tolist(); return tuple(t) if isinstance(t, list) else t
-        if v is pd.NaT or v is None: return None
-        if isinstance(v, pd.Timestamp): return v.to_pydatetime()
+            t = v.tolist()
+            return tuple(t) if isinstance(t, list) else t
+        if v is pd.NaT or v is None:
+            return None
+        if isinstance(v, pd.Timestamp):
+            return v.to_pydatetime()
         return v
+
     out = df.apply(lambda c: c.map(norm))
-    return out.sort_values(by=list(out.columns), key=lambda s: s.map(repr)).reset_index(drop=True)
-bad = []
-status = {}
-for name in sorted(qs):
+    return out.sort_values(
+        by=list(out.columns), key=lambda s: s.map(repr)).reset_index(drop=True)
+
+
+def check(spark, con, qs, osql, name, sf):
+    """Returns ``(ok, status)`` for one query against its oracle."""
     sp = qs[name](spark, sf).toPandas()
     if name not in osql:
         # the real driver canonicalizes rows-only output too, with a plain
@@ -47,44 +54,73 @@ for name in sorted(qs):
             isinstance(v, (str, bytes, bytearray))) for v in sp[c].head(20))]
         if nonscalar:
             print(f"  FAIL[rows-only non-scalar cols {nonscalar}] {name}")
-            bad.append(name)
-            status[name] = f"FAIL:rows-only-nonscalar:{nonscalar}"
-        else:
-            print(f"  {name}: rows-only ({len(sp)})")
-            status[name] = f"rows-only:{len(sp)}"
-        continue
+            return False, f"FAIL:rows-only-nonscalar:{nonscalar}"
+        print(f"  {name}: rows-only ({len(sp)})")
+        return True, f"rows-only:{len(sp)}"
     du = con.execute(osql[name]).fetchdf()
     ok = (sorted(sp.columns) == sorted(du.columns) and len(sp) == len(du))
-    why = "" if ok else "shape"
-    FAM = {"i": "int", "u": "int", "f": "float", "b": "bool", "M": "dt", "m": "td"}
+    why = "" if ok else f"shape {sp.shape} vs {du.shape}"
     if ok and len(sp):  # typed hash: int-vs-float dtype skew is a driver FAIL
         for c in sp.columns:
             fa = FAM.get(sp[c].dtype.kind, "obj")
             fb = FAM.get(du[c].dtype.kind, "obj")
             if fa != "obj" and fb != "obj" and fa != fb:
-                ok = False; why = f"dtype {c}: {sp[c].dtype} vs {du[c].dtype}"
+                ok = False
+                why = f"dtype {c}: {sp[c].dtype} vs {du[c].dtype}"
                 break
     if ok:
         a, b = canon(sp), canon(du)
         ok = all(list(a[c]) == list(b[c]) for c in a.columns)
-        if not ok: why = "values"
+        if not ok:
+            why = "values"
     print(("  OK  " if ok else f"  FAIL[{why}]") + f" {name}")
-    status[name] = f"ok:{len(sp)}" if ok else f"FAIL:{why}"
-    if not ok: bad.append(name)
-print("FAILURES:", bad if bad else "none")
-# machine-readable sweep record (SWEEP_r{N}.json): one status per query,
-# keyed by the sweep's scale factor, merged into an existing file so the
-# sf0.01 and sf0.1 sweeps land side by side
-out_path = os.environ.get("SPARK_GRAFT_SWEEP_OUT")
-if out_path:
-    import json
-    sweep = {}
-    if os.path.exists(out_path):
-        with open(out_path) as fh:
-            sweep = json.load(fh)
-    key = os.path.basename(sf.rstrip("/"))
-    sweep[key] = {"queries": status, "n": len(status),
-                  "failures": bad}
-    with open(out_path, "w") as fh:
-        json.dump(sweep, fh, indent=1, sort_keys=True)
-    print(f"sweep written: {out_path} [{key}]")
+    return ok, f"ok:{len(sp)}" if ok else f"FAIL:{why}"
+
+
+def main() -> None:
+    spark = (SparkSession.builder.master("local[8]")
+             .appName("driver-sim")
+             .config("spark.sql.session.timeZone", "America/New_York")
+             .config("spark.ui.enabled", "false")
+             .getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    import __spark_entry__ as E
+    print("entry rows:", E.entry(spark).collect())
+    qs, osql = E.queries(), E.oracle_sql()
+    print(f"{len(qs)} queries, {len(osql)} oracles")
+    names = sys.argv[1:] or sorted(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+    con = duckdb.connect()
+    for t in ["region", "nation", "customer", "supplier", "part", "orders",
+              "lineitem", "events", "documents", "embeddings"]:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    bad = []
+    status = {}
+    for name in names:
+        ok, status[name] = check(spark, con, qs, osql, name, sf)
+        if not ok:
+            bad.append(name)
+    print("FAILURES:", bad if bad else "none")
+    # machine-readable sweep record (SWEEP_r{N}.json): one status per query,
+    # keyed by the sweep's scale factor, merged into an existing file so the
+    # sf0.01 and sf0.1 sweeps land side by side
+    out_path = os.environ.get("SPARK_GRAFT_SWEEP_OUT")
+    if out_path:
+        import json
+        sweep = {}
+        if os.path.exists(out_path):
+            with open(out_path) as fh:
+                sweep = json.load(fh)
+        key = os.path.basename(sf.rstrip("/"))
+        sweep[key] = {"queries": status, "n": len(status),
+                      "failures": bad}
+        with open(out_path, "w") as fh:
+            json.dump(sweep, fh, indent=1, sort_keys=True)
+        print(f"sweep written: {out_path} [{key}]")
+    sys.exit(1 if bad else 0)
+
+
+if __name__ == "__main__":
+    main()

@@ -53,10 +53,6 @@ def main() -> None:
     probe_default_s = float(probe_env) if probe_env else None
     skip_saturated = os.environ.get("SPARK_GRAFT_SKIP_SATURATED") == "1"
     oversample = float(os.environ.get("SPARK_GRAFT_OVERSAMPLE", "2"))
-    # realized-join feature enrichment (round-10 verdict #4): refine the
-    # PG-projected join ops with each candidate's recorded realized
-    # strategy before featurization — same labels, richer features
-    enrich_joins = os.environ.get("SPARK_GRAFT_ENRICH_JOINS") == "1"
     # consequence-weighted pairwise objective. Default on after the
     # round-11 A/B at sf0.1/288 (FEATURES_AB.md): total cross-fold
     # regret 18.83 -> 3.08 s (-84%, every fold improved; the q64 pick
@@ -78,7 +74,6 @@ def main() -> None:
                             probe_default_s=probe_default_s,
                             skip_saturated=skip_saturated,
                             oversample=oversample,
-                            enrich_joins=enrich_joins,
                             pair_weighting=pair_weighting)
     # SPARK_GRAFT_RESULTS_OUT lets a scale rehearsal (e.g. the sf1 run)
     # write its own artifact instead of clobbering the headline RESULTS.md
