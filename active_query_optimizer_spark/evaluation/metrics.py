@@ -46,14 +46,19 @@ def spearman_by_group(df: DataFrame, qid_col: str = "qid",
     loss 1.48 "worse than random" while picks were oracle-exact)."""
     w_pred = Window.partitionBy(qid_col).orderBy(pred_col)
     w_true = Window.partitionBy(qid_col).orderBy(truth_col)
-    n_pred = Window.partitionBy(qid_col, pred_col)
-    n_true = Window.partitionBy(qid_col, truth_col)
     half = F.lit(1).cast("double") / F.lit(2)
+
+    def ties(w):
+        # peers of the current row: the rank's own spec narrowed to a
+        # zero-width RANGE frame, so rank and tie count share one Window
+        return F.count(F.lit(1)).over(
+            w.rangeBetween(Window.currentRow, Window.currentRow))
+
     ranked = (df
               .withColumn("__rp", F.rank().over(w_pred).cast("double")
-                          + (F.count(F.lit(1)).over(n_pred) - 1) * half)
+                          + (ties(w_pred) - 1) * half)
               .withColumn("__rt", F.rank().over(w_true).cast("double")
-                          + (F.count(F.lit(1)).over(n_true) - 1) * half))
+                          + (ties(w_true) - 1) * half))
     # Pearson over the average ranks, assembled as covar / (sd·sd) with
     # try_divide: a constant side has zero stddev, and try_divide turns
     # that into NULL (scipy's NaN) instead of ANSI mode's DIVIDE_BY_ZERO

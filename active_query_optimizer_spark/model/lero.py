@@ -77,8 +77,6 @@ class LeroModel:
 
     def predict(self, trees: list[VecNode]) -> np.ndarray:
         net = self._ensure_net()
-        # one batch per shared pad-size bucket would be faster; corpora are
-        # small enough to pad globally
         feats, idx, nn = prepare_trees(trees)
         scores, _ = net.forward(feats, idx, nn)
         return scores

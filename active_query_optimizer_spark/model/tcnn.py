@@ -10,21 +10,29 @@ driver-side numpy training is faster than any distributed scheme. Inference
 *is* distributed — the weights broadcast into a pandas UDF
 (``model/infer.py``).
 
-Tree convolution = gather each node's (self, left, right) feature columns
-by precomputed index triples, then a dense map on the 3·C_in concatenation —
-numerically identical to the reference's stride-3 Conv1d over the gathered
-sequence (``tcnn.py:17-26``, ``util.py:64-111``). A zero column at index 0
-stands in for absent children; every layer re-prepends it so the index
-tensor stays valid through the stack.
+Packed layout. ``prepare_trees`` pads a batch to its largest tree;
+``LeroNet.forward`` packs it onto the real nodes before the first layer
+(:func:`pack`). The B trees' nodes become the rows of one ``(T+1, C)``
+matrix — T real nodes, tree after tree, preorder within a tree — whose
+row 0 is the zero row standing in for absent children, and each node's
+(self, left, right) triple holds *global* row indices into it. A tree
+convolution is then one fancy-index gather of the ``(T, 3·C_in)`` triples
+and one gemm with the ``(C_out, 3·C_in)`` weight — numerically the
+reference's stride-3 Conv1d over the gathered sequence (``tcnn.py:17-26``,
+``util.py:64-111``) — and no work is spent on padding (on the benchmark's
+held-out batch the real nodes are a third of the padded columns). Every
+layer keeps row 0 at zero, so the triples stay valid through the stack.
+Per-tree statistics are segment reductions over each tree's contiguous
+row range (``np.add.reduceat`` / ``np.maximum.reduceat``).
 
 **Deliberate deviation from the reference**: its ``TreeLayerNorm`` and
 ``DynamicPooling`` run over the *padded* tensor (``tcnn.py:41-47``), so a
 plan's score depends on which other trees share its batch — harmless in its
 single-process loop, fatal for distributed scoring where Arrow batch
-composition is arbitrary. Every layer here carries a real-node mask:
-normalization statistics and the max-pool consider real nodes only, making
-scores batch-invariant (verified by test: UDF batches == singleton local
-scoring bit-for-bit up to float assoc).
+composition is arbitrary. Here normalization statistics and the max-pool
+read only a tree's own rows, so scores are batch-invariant by construction,
+up to float association in the gemm (tested: UDF batches == singleton local
+scoring).
 """
 
 from __future__ import annotations
@@ -34,22 +42,42 @@ import numpy as np
 LEAKY_SLOPE = 0.01
 
 
-def _gather(x: np.ndarray, idx: np.ndarray) -> np.ndarray:
-    """x (B, C, N+1), idx (B, 3M) → (B, C, 3M)."""
-    return np.take_along_axis(x, idx[:, None, :], axis=2)
+class Segments:
+    """Row ranges of a packed batch: tree b owns rows
+    ``1 + starts[b] … starts[b] + counts[b]`` of the ``(T+1, C)`` matrix;
+    ``ids`` is the tree of each real row."""
+
+    def __init__(self, counts: np.ndarray) -> None:
+        self.counts = np.asarray(counts, dtype=np.int64)
+        # reduceat needs strictly increasing starts: an empty tree would
+        # silently take its neighbour's first row
+        if (self.counts < 1).any():
+            raise ValueError("every tree needs at least one node")
+        self.starts = np.cumsum(self.counts) - self.counts
+        self.ids = np.repeat(np.arange(len(self.counts)), self.counts)
+
+    def sum(self, per_row: np.ndarray) -> np.ndarray:
+        """(T,) → (B,) per-tree sums."""
+        return np.add.reduceat(per_row, self.starts)
 
 
-def make_mask(batch: int, max_nodes: int, n_nodes: np.ndarray) -> np.ndarray:
-    """(B, max_nodes+1) bool — True at real node columns 1..n_b; column 0
-    (the zero row) and padding columns are False."""
-    cols = np.arange(max_nodes + 1)[None, :]
-    return (cols >= 1) & (cols <= np.asarray(n_nodes)[:, None])
+def pack(feats: np.ndarray, idx: np.ndarray, n_nodes: np.ndarray
+         ) -> tuple[np.ndarray, np.ndarray, Segments]:
+    """Padded ``prepare_trees`` batch — feats (B, C, N+1), idx (B, 3N),
+    n_nodes (B,) — → (rows (T+1, C), triples (T, 3), segments)."""
+    seg = Segments(n_nodes)
+    B, C, n1 = feats.shape
+    real = np.arange(n1 - 1)[None, :] < seg.counts[:, None]       # (B, N)
+    rows = np.zeros((len(seg.ids) + 1, C))
+    rows[1:] = feats[:, :, 1:].transpose(0, 2, 1)[real]
+    # local node j ≥ 1 of tree b is global row starts[b] + j; 0 stays 0
+    glob = np.where(idx > 0, idx + seg.starts[:, None], 0)
+    return rows, glob.reshape(B, n1 - 1, 3)[real], seg
 
 
 class BinaryTreeConv:
-    """Stride-3 tree convolution: out[b, :, m] = W @ concat(x[self],
-    x[left], x[right]) + bias, with a zero column re-prepended and padded
-    output columns forced to zero (mask)."""
+    """Stride-3 tree convolution: out[t] = W @ concat(x[self], x[left],
+    x[right]) + bias for every real node t, with the zero row re-prepended."""
 
     def __init__(self, c_in: int, c_out: int, rng: np.random.Generator) -> None:
         self.c_in, self.c_out = c_in, c_out
@@ -60,34 +88,33 @@ class BinaryTreeConv:
         self.dW = np.zeros_like(self.W)
         self.db = np.zeros_like(self.b)
 
-    def forward(self, x: np.ndarray, idx: np.ndarray,
-                mask: np.ndarray) -> np.ndarray:
-        B, C, _ = x.shape
-        M = idx.shape[1] // 3
-        g = _gather(x, idx)                       # (B, C, 3M)
-        g = g.reshape(B, C, M, 3).transpose(0, 2, 3, 1).reshape(B, M, 3 * C)
-        y = g @ self.W.T + self.b                 # (B, M, c_out)
-        out = np.zeros((B, self.c_out, M + 1))
-        out[:, :, 1:] = y.transpose(0, 2, 1)
-        out *= mask[:, None, :]                   # padded cols stay zero
-        self._cache = (x.shape, idx, g, mask)
+    def forward(self, x: np.ndarray, tri: np.ndarray,
+                seg: Segments) -> np.ndarray:
+        """x (T+1, c_in), tri (T, 3) → (T+1, c_out)."""
+        g = x[tri].reshape(len(tri), 3 * self.c_in)   # self | left | right
+        out = np.empty((len(tri) + 1, self.c_out))
+        out[0] = 0.0
+        out[1:] = g @ self.W.T + self.b
+        self._cache = (x.shape, tri, g)
         return out
 
-    def backward(self, dout: np.ndarray) -> np.ndarray:
-        """dout (B, c_out, M+1) → dx (B, c_in, N+1)."""
-        x_shape, idx, g, mask = self._cache
-        B, C, N1 = x_shape
-        dout = dout * mask[:, None, :]
-        dy = dout[:, :, 1:].transpose(0, 2, 1)    # (B, M, c_out)
-        M = dy.shape[1]
-        self.dW += np.einsum("bmo,bmi->oi", dy, g)
-        self.db += dy.sum(axis=(0, 1))
-        dg = dy @ self.W                          # (B, M, 3C)
-        dg = dg.reshape(B, M, 3, C).transpose(0, 3, 1, 2).reshape(B, C, 3 * M)
+    def backward(self, dout: np.ndarray,
+                 input_grad: bool = True) -> np.ndarray | None:
+        """dout (T+1, c_out) → dx (T+1, c_in); row 0 of ``dout`` is the
+        constant zero row and carries no gradient. The first layer passes
+        ``input_grad=False``: nothing consumes the gradient of the input
+        features."""
+        x_shape, tri, g = self._cache
+        dy = dout[1:]
+        self.dW += dy.T @ g
+        self.db += dy.sum(axis=0)
+        if not input_grad:
+            return None
+        dg = (dy @ self.W).reshape(len(tri), 3, self.c_in)
         dx = np.zeros(x_shape)
-        # scatter-add: multiple gathers of the same column accumulate
-        for b in range(B):
-            np.add.at(dx[b].T, idx[b], dg[b].T)
+        # scatter-add per triple slot: a row gathered twice accumulates both
+        for k in range(3):
+            np.add.at(dx, tri[:, k], dg[:, k])
         return dx
 
     def params(self):
@@ -95,38 +122,46 @@ class BinaryTreeConv:
 
 
 class TreeLayerNorm:
-    """Per-sample normalization over real (channel, node) positions only
+    """Per-tree normalization over the tree's own (node, channel) values
     (reference ``tcnn.py:40-45`` includes padding — see module docstring)."""
 
     EPS = 1e-5
 
-    def forward(self, x: np.ndarray, idx: np.ndarray,
-                mask: np.ndarray) -> np.ndarray:
-        m = mask[:, None, :]                       # (B, 1, N+1)
-        n = (x.shape[1] * mask.sum(axis=1))[:, None, None]  # real elements
-        mu = (x * m).sum(axis=(1, 2), keepdims=True) / n
-        var = (((x - mu) * m) ** 2).sum(axis=(1, 2), keepdims=True) / n
+    def forward(self, x: np.ndarray, tri: np.ndarray,
+                seg: Segments) -> np.ndarray:
+        xr = x[1:]
+        n = x.shape[1] * seg.counts                   # real elements per tree
+        mu = seg.sum(xr.sum(axis=1)) / n
+        xc = xr - mu[seg.ids, None]
+        var = seg.sum((xc * xc).sum(axis=1)) / n
         inv = 1.0 / np.sqrt(var + self.EPS)
-        y = (x - mu) * inv * m
-        self._cache = (y, inv, m, n)
-        return y
+        out = np.empty_like(x)
+        out[0] = 0.0
+        out[1:] = xc * inv[seg.ids, None]
+        self._cache = (out[1:], inv, n, seg)
+        return out
 
     def backward(self, dout: np.ndarray) -> np.ndarray:
-        y, inv, m, n = self._cache
-        dout = dout * m
-        dy_sum = dout.sum(axis=(1, 2), keepdims=True)
-        dyy_sum = (dout * y).sum(axis=(1, 2), keepdims=True)
-        return (inv * (dout - m * dy_sum / n - y * dyy_sum / n))
+        y, inv, n, seg = self._cache
+        d = dout[1:]
+        dy_mean = seg.sum(d.sum(axis=1)) / n
+        dyy_mean = seg.sum((d * y).sum(axis=1)) / n
+        dx = np.empty_like(dout)
+        dx[0] = 0.0
+        dx[1:] = inv[seg.ids, None] * (d - dy_mean[seg.ids, None]
+                                       - y * dyy_mean[seg.ids, None])
+        return dx
 
     def params(self):
         return []
 
 
 class TreeActivation:
-    """LeakyReLU (``tcnn.py:31-38`` wraps the activation)."""
+    """LeakyReLU (``tcnn.py:31-38`` wraps the activation); keeps row 0 at
+    zero."""
 
-    def forward(self, x: np.ndarray, idx: np.ndarray,
-                mask: np.ndarray) -> np.ndarray:
+    def forward(self, x: np.ndarray, tri: np.ndarray,
+                seg: Segments) -> np.ndarray:
         self._mask = x >= 0
         return np.where(self._mask, x, LEAKY_SLOPE * x)
 
@@ -138,19 +173,21 @@ class TreeActivation:
 
 
 class DynamicPooling:
-    """Global max-pool over real nodes (``tcnn.py:44-47``)."""
+    """Global max-pool over each tree's rows (``tcnn.py:44-47``). The
+    gradient goes to the first maximal row, ``argmax``'s tie rule."""
 
-    def forward(self, x: np.ndarray, mask: np.ndarray) -> np.ndarray:
-        neg = np.where(mask[:, None, :], x, -np.inf)
-        self._argmax = neg.argmax(axis=2)
+    def forward(self, x: np.ndarray, seg: Segments) -> np.ndarray:
+        xr = x[1:]
+        emb = np.maximum.reduceat(xr, seg.starts, axis=0)        # (B, C)
+        rows = np.arange(1, len(x))[:, None]
+        hit = np.where(xr == emb[seg.ids], rows, len(x))
+        self._rows = np.minimum.reduceat(hit, seg.starts, axis=0)
         self._shape = x.shape
-        return neg.max(axis=2)
+        return emb
 
     def backward(self, dout: np.ndarray) -> np.ndarray:
         dx = np.zeros(self._shape)
-        B, C = dout.shape
-        bi, ci = np.meshgrid(np.arange(B), np.arange(C), indexing="ij")
-        dx[bi, ci, self._argmax] = dout
+        dx[self._rows, np.arange(self._shape[1])] = dout
         return dx
 
     def params(self):
@@ -214,11 +251,10 @@ class LeroNet:
 
     def forward(self, feats: np.ndarray, idx: np.ndarray,
                 n_nodes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        mask = make_mask(feats.shape[0], feats.shape[2] - 1, n_nodes)
-        x = feats
+        x, tri, seg = pack(feats, idx, n_nodes)
         for layer in self.tree:
-            x = layer.forward(x, idx, mask)
-        emb = self.pool.forward(x, mask)
+            x = layer.forward(x, tri, seg)
+        emb = self.pool.forward(x, seg)
         y = emb
         for layer in self.head:
             y = layer.forward(y)
@@ -230,8 +266,9 @@ class LeroNet:
         for layer in reversed(self.head):
             d = layer.backward(d)
         d = self.pool.backward(d)
-        for layer in reversed(self.tree):
+        for layer in reversed(self.tree[1:]):
             d = layer.backward(d)
+        self.tree[0].backward(d, input_grad=False)
 
     def params(self):
         out = []

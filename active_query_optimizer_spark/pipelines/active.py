@@ -53,7 +53,13 @@ def select_next_batch(spark: SparkSession, model: LeroModelPairWise,
                       num_groups: int = 4, seed: int = 42) -> list[str]:
     """Coreset-select ``k``-ish pool queries most distant (in plan-embedding
     space) from everything already labeled (reference ``coreset.py:91-98``:
-    LSH partition → per-group greedy k-center against the labeled set)."""
+    LSH partition → per-group greedy k-center against the labeled set).
+
+    The labeled embeddings go to ``coreset_select`` raw: it standardizes
+    them with the unlabeled pool's (mean, std) and L2-normalizes them with
+    the same helper as the pool, so similarities compare one space. The
+    reference standardizes U∪L jointly (``coreset.py:100-131``); here the
+    pool's stats stand in for the union's."""
     unlabeled = [(q, s) for q, s in pool if q not in labeled_qids]
     if not unlabeled:
         return []
@@ -67,10 +73,7 @@ def select_next_batch(spark: SparkSession, model: LeroModelPairWise,
         ldf = pool_default_plans(spark, labeled_pool)
         lemb = plan_embeddings(ldf, model).select("embedding").collect()
         if lemb:
-            mat = np.stack([np.array(r["embedding"]) for r in lemb])
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            labeled_mat = mat / norms
+            labeled_mat = np.stack([np.array(r["embedding"]) for r in lemb])
 
     k_per_bucket = max(1, round(k / num_groups))
     sel = coreset_select(emb, k_per_bucket=k_per_bucket, labeled=labeled_mat,

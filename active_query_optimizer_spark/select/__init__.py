@@ -1,8 +1,9 @@
 """Active-learning coreset selection (reference ``coreset.py``)."""
 
 from .coreset import (  # noqa: F401
+    column_stats,
     coreset_select,
     greedy_k_center,
     lsh_partition,
-    standardize_and_normalize,
+    zscore_l2,
 )

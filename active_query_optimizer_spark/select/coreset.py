@@ -5,29 +5,36 @@ MinHash + torch matmuls in one process; we reproduce *intent* — its
 ``coreset()`` even has an undefined-variable bug, ``coreset.py:93``,
 SURVEY §2.G):
 
-- ``standardize_and_normalize`` (``coreset.py:100-131``): z-score per
-  feature over the full set, then L2 row normalization. Means/stds come
-  from one Spark aggregate over the exploded vector; the row transform is a
-  vectorized pandas UDF with the tiny (mean, std) state broadcast.
+- standardization (``coreset.py:100-131``): z-score per feature over the
+  full set, then L2 row normalization. ``column_stats`` computes the
+  per-dimension (mean, std) in one Spark aggregate over the exploded
+  vector; ``zscore_l2`` is the numpy row transform, applied where the rows
+  already are — inside the per-bucket greedy — with the tiny stats
+  broadcast.
 - ``lsh_partition`` (``coreset.py:5-46``): MinHash over the *set of
-  positive feature indices* (the reference binarizes exactly this way),
-  via ``pyspark.ml.feature.MinHashLSH`` on a sparse binary vector; bucket
-  id = first hash value mod ``num_groups``.
+  positive feature indices* of the standardized vector (the reference
+  binarizes exactly this way), via ``pyspark.ml.feature.MinHashLSH`` on a
+  sparse binary vector; bucket id = first hash value mod ``num_groups``.
+  Dividing by a positive std and then by a positive row norm keeps the sign
+  of ``v − mean``, so a standardized dimension is positive exactly when
+  ``v > mean``: the binarization runs JVM-side on the raw vector and needs
+  no standardized column.
 - ``greedy_k_center`` (``coreset.py:48-89``): per bucket, repeatedly pick
   the unlabeled point whose max cosine similarity to (labeled ∪ selected)
   is smallest. Greedy selection is sequential *within* a bucket by
   definition — ``applyInPandas`` runs every bucket in parallel, with the
   (small) labeled matrix broadcast; the per-bucket matmuls are numpy.
 
+The whole selection makes one Python pass over the rows (the per-bucket
+``applyInPandas``); the stats aggregate and the hashing stay in the JVM.
+
 Scale: buckets are the unit of parallelism — LSH keeps them
 similarity-coherent and bounded, so 100 M unlabeled plan embeddings spread
 over thousands of buckets, each solved independently. Nothing but the
-selected ids ever reaches the driver.
+selected ids and the per-dimension stats ever reaches the driver.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -37,47 +44,52 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 
-def standardize_and_normalize(df: DataFrame, vec_col: str = "embedding",
-                              out_col: str = "norm_vec") -> DataFrame:
-    """z-score each dimension over the whole set, then L2-normalize each
-    row (``coreset.py:100-131``)."""
-    stats = (df.select(F.posexplode(vec_col).alias("dim", "v"))
-               .groupBy("dim")
-               .agg(F.avg("v").alias("mean"), F.stddev_pop("v").alias("std"))
-               .orderBy("dim").collect())
+def column_stats(df: DataFrame, vec_col: str = "embedding"
+                 ) -> tuple[np.ndarray, np.ndarray]:
+    """Per-dimension (mean, population std) of an array column over the
+    whole set; a zero or undefined std becomes 1.0 so ``zscore_l2`` never
+    divides by zero."""
+    stats = sorted(df.select(F.posexplode(vec_col).alias("dim", "v"))
+                   .groupBy("dim")
+                   .agg(F.avg("v").alias("mean"),
+                        F.stddev_pop("v").alias("std")).collect(),
+                   key=lambda r: r["dim"])
     means = np.array([r["mean"] for r in stats])
     stds = np.array([r["std"] if r["std"] else 1.0 for r in stats])
-    stds[stds == 0] = 1.0
-    b_stats = df.sparkSession.sparkContext.broadcast((means, stds))
-
-    @F.pandas_udf("array<double>")
-    def _norm(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        mu, sd = b_stats.value
-        for s in batches:
-            if s.empty:
-                yield pd.Series([], dtype=object)
-                continue
-            mat = np.stack(s.to_numpy())
-            mat = (mat - mu) / sd
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            yield pd.Series(list(mat / norms))
-
-    return df.withColumn(out_col, _norm(F.col(vec_col)))
+    return means, stds
 
 
-def lsh_partition(df: DataFrame, vec_col: str = "norm_vec",
-                  num_groups: int = 16, num_hash_tables: int = 8,
-                  seed: int = 42, bucket_col: str = "bucket") -> DataFrame:
-    """Bucket rows by MinHash over their positive-dimension index set
-    (``coreset.py:5-46``: MinHash of ``np.where(vec > 0)``)."""
+def zscore_l2(mat: np.ndarray, means: np.ndarray,
+              stds: np.ndarray) -> np.ndarray:
+    """z-score each dimension with the set's (mean, std), then
+    L2-normalize each row (``coreset.py:100-131``); a row equal to the
+    mean stays the zero vector."""
+    z = (mat - means) / stds
+    norms = np.linalg.norm(z, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return z / norms
+
+
+def lsh_partition(df: DataFrame, means: np.ndarray,
+                  vec_col: str = "embedding", num_groups: int = 16,
+                  num_hash_tables: int = 8, seed: int = 42,
+                  bucket_col: str = "bucket") -> DataFrame:
+    """Bucket rows by MinHash over their positive-dimension index set after
+    standardization (``coreset.py:5-46``: MinHash of ``np.where(vec > 0)``),
+    i.e. over the dimensions where ``v > mean``."""
     from pyspark.ml.feature import MinHashLSH
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
-    # binarize JVM-side (positive dims → 1.0) — a higher-order function,
-    # not a Python UDF, so the whole pre-LSH stage stays in codegen
-    binarized = F.transform(
-        F.col(vec_col), lambda v: F.when(v > 0, 1.0).otherwise(0.0))
+    # binarize JVM-side — a higher-order function against a literal means
+    # array, not a Python UDF, so the whole pre-LSH stage stays in codegen.
+    # One SQL string rather than a lit() per dimension (each is a py4j
+    # call); repr() round-trips a double exactly, and the ``D`` suffix
+    # parses it as a double rather than a decimal
+    if not np.isfinite(means).all():
+        raise ValueError("embedding means must be finite")
+    means_sql = ", ".join(f"{float(m)!r}D" for m in means)
+    binarized = F.expr(f"zip_with(`{vec_col}`, array({means_sql}), "
+                       "(v, m) -> IF(v > m, 1.0D, 0.0D))")
     with_bin = df.withColumn("__bin", array_to_vector(binarized))
     mh = MinHashLSH(inputCol="__bin", outputCol="__hashes",
                     numHashTables=num_hash_tables, seed=seed)
@@ -90,22 +102,30 @@ def lsh_partition(df: DataFrame, vec_col: str = "norm_vec",
 
 
 def greedy_k_center(df: DataFrame, labeled: np.ndarray | None,
-                    k_per_bucket: int, id_col: str = "vec_id",
-                    vec_col: str = "norm_vec",
+                    k_per_bucket: int,
+                    stats: tuple[np.ndarray, np.ndarray],
+                    id_col: str = "vec_id", vec_col: str = "embedding",
                     bucket_col: str = "bucket") -> DataFrame:
     """Per-bucket greedy k-center (``coreset.py:48-89``): each step selects
     the unlabeled point minimizing max cosine similarity to
     labeled ∪ already-selected; rows are pre-sorted by id so ties break
-    deterministically (np.argmin takes the first minimum)."""
+    deterministically (np.argmin takes the first minimum).
+
+    ``labeled`` and the rows of ``vec_col`` are raw vectors; both go
+    through ``zscore_l2`` with the same ``stats`` = (means, stds), so the
+    similarities compare vectors of one space."""
     spark = df.sparkSession
-    b_labeled = spark.sparkContext.broadcast(
-        labeled if labeled is not None and len(labeled) else None)
+    means, stds = stats
+    b_state = spark.sparkContext.broadcast((
+        means, stds,
+        zscore_l2(np.asarray(labeled, dtype=float), means, stds)
+        if labeled is not None and len(labeled) else None))
     id_field = df.schema[id_col]
 
     def select(pdf: pd.DataFrame) -> pd.DataFrame:
+        mu, sd, L = b_state.value
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        U = np.stack(pdf[vec_col].to_numpy())        # (n, d), L2-normalized
-        L = b_labeled.value
+        U = zscore_l2(np.stack(pdf[vec_col].to_numpy()), mu, sd)   # (n, d)
         n = len(pdf)
         k = min(k_per_bucket, n)
         # running max cosine similarity of each unlabeled point to the
@@ -131,9 +151,12 @@ def coreset_select(df: DataFrame, k_per_bucket: int,
                    labeled: np.ndarray | None = None,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    num_groups: int = 16, seed: int = 42) -> DataFrame:
-    """Compose: standardize → LSH partition → per-bucket greedy
-    (``coreset.py:91-98``). Returns ``[bucket, id]`` of selected points."""
-    normed = standardize_and_normalize(df, vec_col, "norm_vec")
-    bucketed = lsh_partition(normed, "norm_vec", num_groups, seed=seed)
-    return greedy_k_center(bucketed, labeled, k_per_bucket, id_col,
-                           "norm_vec")
+    """Compose: stats → LSH partition → per-bucket standardize + greedy
+    (``coreset.py:91-98``). ``labeled`` holds raw embeddings, standardized
+    with the pool's stats; the reference instead standardizes U∪L jointly
+    (``coreset.py:100-131``). Returns ``[bucket, id]`` of selected
+    points."""
+    stats = column_stats(df, vec_col)
+    bucketed = lsh_partition(df, stats[0], vec_col, num_groups, seed=seed)
+    return greedy_k_center(bucketed, labeled, k_per_bucket, stats, id_col,
+                           vec_col)

@@ -175,13 +175,54 @@ def test_standardize_and_normalize(spark):
     df = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [3.0, 4.0]), (2, [5.0, 8.0])],
         "vec_id long, embedding array<double>")
-    out = {r["vec_id"]: np.array(r["norm_vec"])
-           for r in CS.standardize_and_normalize(df).collect()}
+    means, stds = CS.column_stats(df)
+    assert means.tolist() == [3.0, 4.0]
+    assert stds == pytest.approx(np.sqrt([8 / 3, 32 / 3]))
+    rows = {r["vec_id"]: r["embedding"] for r in df.collect()}
+    out = {vid: CS.zscore_l2(np.array([v]), means, stds)[0]
+           for vid, v in rows.items()}
     # row 1 is exactly the mean → legitimately the zero vector
     for vid, v in out.items():
         assert np.linalg.norm(v) == pytest.approx(0.0 if vid == 1 else 1.0)
     # z-score: mean of dim0 = 3 → row0 negative, row2 positive
     assert out[0][0] < 0 < out[2][0]
+    # a constant dimension gets std 1.0, never a division by zero
+    const = spark.createDataFrame([(0, [2.0]), (1, [2.0])],
+                                  "vec_id long, embedding array<double>")
+    assert CS.column_stats(const)[1].tolist() == [1.0]
+
+
+def test_lsh_binarization_sign_matches_standardized(spark):
+    """``lsh_partition`` hashes the dimensions where ``v > mean``; the
+    reference hashes the positive dimensions of the z-scored, L2'd vector.
+    The two sets agree on every embeddings row."""
+    from active_query_optimizer_spark.catalog import load_table
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    means, stds = CS.column_stats(emb)
+    mat = np.stack([np.array(r["embedding"]) for r in emb.collect()])
+    assert ((mat > means) == (CS.zscore_l2(mat, means, stds) > 0)).all()
+
+
+#: ``coreset_select_embeddings`` at sf0.001: ``(bucket, vec_id)`` rows
+#: captured before selection moved to one Python pass
+CORESET_PIN_SF0001 = [
+    (2, 107), (2, 221), (3, 122), (3, 147), (3, 185), (3, 470), (4, 2),
+    (4, 63), (4, 323), (4, 343), (5, 0), (5, 121), (5, 130), (5, 447)]
+
+
+def test_coreset_select_embeddings_pinned(spark):
+    import os
+
+    if os.path.basename(os.path.normpath(SF_SMALL)) != "sf0.001":
+        pytest.skip("the pin is for the sf0.001 embeddings table")
+    got = [tuple(r) for r in
+           QUERIES["coreset_select_embeddings"](spark, SF_SMALL).collect()]
+    assert got == CORESET_PIN_SF0001
+
+
+#: identity stats: ``zscore_l2`` then only L2-normalizes
+_ID2 = (np.zeros(2), np.ones(2))
 
 
 def test_greedy_k_center_spreads(spark):
@@ -191,9 +232,10 @@ def test_greedy_k_center_spreads(spark):
         (0, [1.0, 0.0]), (1, [0.999, 0.01]),
         (2, [0.0, 1.0]), (3, [0.01, 0.999]),
     ]
-    df = (spark.createDataFrame(vecs, "vec_id long, norm_vec array<double>")
+    df = (spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
           .withColumn("bucket", F.lit(0)))
-    sel = CS.greedy_k_center(df, labeled=None, k_per_bucket=2).collect()
+    sel = CS.greedy_k_center(df, labeled=None, k_per_bucket=2,
+                             stats=_ID2).collect()
     ids = sorted(r["vec_id"] for r in sel)
     assert len(ids) == 2
     assert not (ids in ([0, 1], [2, 3]))  # not two near-duplicates
@@ -213,10 +255,25 @@ def test_greedy_respects_labeled_matrix(spark):
     # labeled point sits exactly on cluster A → greedy must pick from B first
     df = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
-        "vec_id long, norm_vec array<double>").withColumn("bucket", F.lit(0))
+        "vec_id long, embedding array<double>").withColumn("bucket", F.lit(0))
     labeled = np.array([[1.0, 0.0]])
-    sel = CS.greedy_k_center(df, labeled, k_per_bucket=1).collect()
+    sel = CS.greedy_k_center(df, labeled, k_per_bucket=1,
+                             stats=_ID2).collect()
     assert sel[0]["vec_id"] == 1
+
+
+def test_coreset_labeled_standardized_like_pool(spark):
+    """A raw labeled vector equal to a pool vector must block that point,
+    in a pool whose mean is far from 0. Standardized with the pool's stats
+    it has similarity 1 to its twin; L2-normalized alone (or not at all)
+    it points along the all-ones direction, where its twin (b) has the
+    lowest similarity of the pool and would be picked first."""
+    a, b, c = [102.0, 99.0], [99.0, 101.0], [100.0, 101.0]
+    df = spark.createDataFrame([(0, a), (1, b), (2, c)],
+                               "vec_id long, embedding array<double>")
+    sel = CS.coreset_select(df, k_per_bucket=1, labeled=np.array([b]),
+                            num_groups=1).collect()
+    assert [r["vec_id"] for r in sel] == [0]
 
 
 def test_curation_pipeline_end_to_end(spark, tmp_path):

@@ -105,43 +105,68 @@ def _num_grad(f, x, eps=1e-6):
     return g
 
 
+def _packed_case(counts, C, rng):
+    """Random packed rows (row 0 zero) for trees of ``counts`` nodes."""
+    seg = tcnn.Segments(np.array(counts))
+    x = rng.normal(size=(int(sum(counts)) + 1, C))
+    x[0] = 0.0
+    return x, seg
+
+
 def test_treeconv_gradcheck():
     rng = np.random.default_rng(0)
-    B, C, M = 2, 3, 4
-    x = rng.normal(size=(B, C, M + 1))
-    x[:, :, 0] = 0.0
-    idx = rng.integers(0, M + 1, size=(B, 3 * M))
-    mask = tcnn.make_mask(B, M, np.array([M, M - 1]))  # one padded sample
+    C = 3
+    x, seg = _packed_case([4, 3], C, rng)
+    T = len(x) - 1
+    tri = rng.integers(0, T + 1, size=(T, 3))  # duplicates included
     conv = tcnn.BinaryTreeConv(C, 5, rng)
 
     def loss():
-        return float(conv.forward(x, idx, mask).sum())
+        return float(conv.forward(x, tri, seg).sum())
 
-    conv.forward(x, idx, mask)
-    dx = conv.backward(np.ones((B, 5, M + 1)))
+    conv.forward(x, tri, seg)
+    dx = conv.backward(np.ones((T + 1, 5)))
     assert np.allclose(dx, _num_grad(loss, x), atol=1e-5)
     conv.dW[...] = 0
-    conv.forward(x, idx, mask)
-    conv.backward(np.ones((B, 5, M + 1)))
+    conv.db[...] = 0
+    conv.forward(x, tri, seg)
+    assert conv.backward(np.ones((T + 1, 5)), input_grad=False) is None
     assert np.allclose(conv.dW, _num_grad(loss, conv.W), atol=1e-5)
+    assert np.allclose(conv.db, _num_grad(loss, conv.b), atol=1e-5)
 
 
 def test_layernorm_gradcheck():
     rng = np.random.default_rng(1)
-    B, C, M = 2, 3, 3
-    x = rng.normal(size=(B, C, M + 1))
-    mask = tcnn.make_mask(B, M, np.array([M, M - 1]))
+    x, seg = _packed_case([3, 2], 3, rng)
     ln = tcnn.TreeLayerNorm()
-    w = rng.normal(size=(B, C, M + 1))  # project so grad isn't trivially zero
+    w = rng.normal(size=x.shape)  # project so grad isn't trivially zero
 
     def loss():
-        return float((ln.forward(x, None, mask) * w).sum())
+        return float((ln.forward(x, None, seg) * w).sum())
 
-    ln.forward(x, None, mask)
+    ln.forward(x, None, seg)
     dx = ln.backward(w)
     num = _num_grad(loss, x)
-    # gradient w.r.t. masked-out positions is 0 analytically and numerically
+    # the zero row feeds nothing: 0 analytically and numerically
+    assert not dx[0].any()
     assert np.allclose(dx, num, atol=1e-4)
+
+
+def test_pool_first_max_tie_rule():
+    """Equal maxima inside a tree (identical subtrees score identically)
+    send the gradient to the first row, like ``argmax``."""
+    x = np.array([[0.0, 0.0], [1.0, 5.0], [3.0, 5.0], [3.0, 2.0],
+                  [7.0, 7.0]])
+    pool = tcnn.DynamicPooling()
+    emb = pool.forward(x, tcnn.Segments(np.array([3, 1])))
+    assert emb.tolist() == [[3.0, 5.0], [7.0, 7.0]]
+    dx = pool.backward(np.array([[1.0, 2.0], [3.0, 4.0]]))
+    assert dx.tolist() == [[0, 0], [0, 2], [1, 0], [0, 0], [3, 4]]
+
+
+def test_segments_reject_empty_tree():
+    with pytest.raises(ValueError):
+        tcnn.Segments(np.array([2, 0, 1]))
 
 
 def test_full_net_gradcheck_small():
@@ -182,6 +207,135 @@ def test_scores_are_batch_invariant():
     f2, i2, n2 = FZ.prepare_trees([ts, tb])
     batched, _ = net.forward(f2, i2, n2)
     assert batched[0] == pytest.approx(solo[0], rel=1e-12)
+
+
+# ------------------------------------------- packed vs padded parity
+
+def _padded_ref(net, feats, idx, n_nodes, dscore):
+    """The padded forward/backward the packed net replaced, as a
+    reference: every layer runs on the (B, C, N+1) ``prepare_trees``
+    tensor with a real-node mask, ``dW`` is an einsum and the scatter is a
+    per-sample ``np.add.at``. Uses ``net``'s weights; returns (scores,
+    embeddings, gradients in ``net.params()`` order)."""
+    B, _, n1 = feats.shape
+    cols = np.arange(n1)[None, :]
+    m = ((cols >= 1) & (cols <= np.asarray(n_nodes)[:, None]))[:, None, :]
+    convs = [layer for layer in net.tree if layer.params()]
+    slope = tcnn.LEAKY_SLOPE
+    x, caches = feats, []
+    for k, conv in enumerate(convs):
+        C, M = x.shape[1], idx.shape[1] // 3
+        g = np.take_along_axis(x, idx[:, None, :], axis=2)
+        g = g.reshape(B, C, M, 3).transpose(0, 2, 3, 1).reshape(B, M, 3 * C)
+        y = np.zeros((B, conv.c_out, M + 1))
+        y[:, :, 1:] = (g @ conv.W.T + conv.b).transpose(0, 2, 1)
+        y *= m
+        n = conv.c_out * m.sum(axis=2, keepdims=True)
+        mu = (y * m).sum(axis=(1, 2), keepdims=True) / n
+        var = (((y - mu) * m) ** 2).sum(axis=(1, 2), keepdims=True) / n
+        inv = 1.0 / np.sqrt(var + tcnn.TreeLayerNorm.EPS)
+        z = (y - mu) * inv * m
+        caches.append((x.shape, g, inv, z, n))
+        x = np.where(z >= 0, z, slope * z) if k < len(convs) - 1 else z
+    neg = np.where(m, x, -np.inf)
+    arg = neg.argmax(axis=2)
+    emb = neg.max(axis=2)
+    l1, l2 = net.head[0], net.head[2]
+    h = emb @ l1.W.T + l1.b
+    a = np.where(h >= 0, h, slope * h)
+    scores = (a @ l2.W.T + l2.b)[:, 0]
+
+    d = np.asarray(dscore)[:, None]
+    head = [d.T @ a, d.sum(axis=0)]
+    da = d @ l2.W
+    dh = np.where(h >= 0, da, slope * da)
+    head = [dh.T @ emb, dh.sum(axis=0)] + head
+    dx = np.zeros(x.shape)
+    bi, ci = np.meshgrid(np.arange(B), np.arange(x.shape[1]), indexing="ij")
+    dx[bi, ci, arg] = dh @ l1.W
+    grads = []
+    for k in reversed(range(len(convs))):
+        x_shape, g, inv, z, n = caches[k]
+        if k < len(convs) - 1:
+            dx = np.where(z >= 0, dx, slope * dx)
+        dx = dx * m
+        dz_sum = dx.sum(axis=(1, 2), keepdims=True)
+        dzz_sum = (dx * z).sum(axis=(1, 2), keepdims=True)
+        dout = inv * (dx - m * dz_sum / n - z * dzz_sum / n) * m
+        dy = dout[:, :, 1:].transpose(0, 2, 1)
+        grads[:0] = [np.einsum("bmo,bmi->oi", dy, g), dy.sum(axis=(0, 1))]
+        C, M = x_shape[1], dy.shape[1]
+        dg = (dy @ convs[k].W).reshape(B, M, 3, C).transpose(0, 3, 1, 2)
+        dg = dg.reshape(B, C, 3 * M)
+        dx = np.zeros(x_shape)
+        for b in range(B):
+            np.add.at(dx[b].T, idx[b], dg[b].T)
+    return scores, emb, grads + head
+
+
+def _cache_plans(n):
+    """The first ``n`` plans of the committed label cache, decoded."""
+    import gzip
+    import os
+
+    root = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), ".label_cache")
+    plans = []
+    for f in sorted(os.listdir(root)):
+        if not f.endswith(".json.gz") or f.endswith("-probe.json.gz"):
+            continue
+        with gzip.open(os.path.join(root, f), "rt") as fh:
+            raw = json.load(fh)
+        if isinstance(raw, list):
+            plans += [FZ.from_pg_json(r["plan_json"])[0] for r in raw]
+        if len(plans) >= n:
+            return plans[:n]
+    pytest.skip("label cache holds fewer plans than needed")
+
+
+def _assert_close(got, want, rtol=1e-12):
+    """Equal up to ``rtol`` of the reference's largest magnitude: the
+    packed net sums in another order, so the last digits may differ."""
+    got, want = np.asarray(got), np.asarray(want)
+    assert got.shape == want.shape
+    assert np.abs(got - want).max() <= rtol * max(np.abs(want).max(), 1e-300)
+
+
+@pytest.mark.parametrize("source", ["mixed", "label_cache"])
+def test_packed_net_matches_padded_reference(source):
+    """Scores, embeddings and every conv/head ``dW``/``db`` of the packed
+    net equal the padded reference's on batches whose trees differ in
+    size (a third of the padded columns are real on the cache batch)."""
+    if source == "mixed":
+        plans = []
+        for depth in (0, 1, 5, 2, 9, 3):
+            node = FZ.PlanNode("Seq Scan", relation="a", rows=10.0, width=2)
+            for d in range(depth):
+                kid = FZ.PlanNode("Seq Scan", relation="b", rows=5.0 + d,
+                                  width=2)
+                node = FZ.PlanNode("Hash Join", rows=50.0 + d, width=4,
+                                   children=[node, kid])
+            plans.append(node)
+        hidden = (8, 6, 4)
+    else:
+        plans = _cache_plans(64)
+        hidden = tcnn.LeroNet.HIDDEN
+    fg = FZ.FeatureGenerator().fit(plans, [1.0] * len(plans))
+    feats, idx, n_nodes = FZ.prepare_trees(
+        [fg.transform_tree(p) for p in plans])
+    assert len(set(n_nodes.tolist())) > 1
+    net = tcnn.LeroNet(fg.input_feature_dim, seed=5, hidden=hidden)
+    dscore = np.random.default_rng(6).normal(size=len(plans))
+    want_s, want_e, want_g = _padded_ref(net, feats, idx, n_nodes, dscore)
+    net.zero_grad()
+    scores, emb = net.forward(feats, idx, n_nodes)
+    net.backward(dscore)
+    _assert_close(scores, want_s)
+    _assert_close(emb, want_e)
+    got_g = [g for _, g in net.params()]
+    assert len(got_g) == len(want_g) == 10
+    for got, want in zip(got_g, want_g):
+        _assert_close(got, want)
 
 
 # ------------------------------------------------------------ training
