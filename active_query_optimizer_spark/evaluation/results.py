@@ -29,12 +29,15 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from ..catalog import register_views
-from ..model.infer import choose_best, score_plans
+from ..model.infer import choose_best
 from ..model.lero import train_pairwise_from_bundles
+from ..pipelines.dynamic import (_as_bundles, _score_bundles,
+                                 run_deployment)
 from ..plans.explore import (HINT_STRATEGIES, LABEL_TIMEOUT_PENALTY,
                              Candidate, ZombieExecutionError, label_query,
                              probe_default)
 from ..stats.harvester import harvest_range_dict
+from ..workload.extract import extract_aliases
 from ..workload.generate import generate_workload
 from .metrics import ranking_loss, weighted_ranking_loss
 
@@ -43,6 +46,18 @@ from .metrics import ranking_loss, weighted_ranking_loss
 #: replicate-NL hint degenerating an equi-join) gets cancelled and
 #: penalty-labeled instead of holding the whole artifact run hostage
 LABEL_TIMEOUT_S = 30.0
+
+#: the training recipe every committed artifact records. A pointwise
+#: latency pretrain initializes the net (timeout-penalty labels are
+#: censored out of it; PRETRAIN_AB.md), then the pairwise pass weights
+#: each pair by its normalized latency gap (FEATURES_AB.md). The reference
+#: trains cold, on equal-weight pairs.
+PRETRAIN_EPOCHS = 20
+PRETRAIN_MODE = "latency"
+PAIR_WEIGHTING = "latency_delta"
+#: the generator over-samples this many queries per requested bundle, to
+#: cover the single-plan and skipped queries
+OVERSAMPLE = 2.0
 
 
 def _revive_spark(spark: SparkSession, app: str = "aqo-results-revived",
@@ -99,7 +114,7 @@ def _r4(x: float | None) -> float | None:
 def _clamp_folds(cross_folds: int, n_bundles: int) -> int:
     """Clamp the cross-validation fold count so every fold's held-out
     slice is non-empty (round-6 advice: only >=3 bundles are guaranteed,
-    and an oversized ``SPARK_GRAFT_CROSS_FOLDS`` made ``block == 0`` and
+    and an oversized ``cross_folds`` made ``block == 0`` and
     ``_split_eval`` fail on an empty test set)."""
     if cross_folds > n_bundles:
         print(f"WARNING: cross_folds={cross_folds} > {n_bundles} bundles; "
@@ -115,7 +130,7 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
                              cache_dir: str | None = None,
                              probe_default_s: float | None = None,
                              skip_saturated: bool = False,
-                             oversample: float = 2.0,
+                             oversample: float = OVERSAMPLE,
                              ) -> tuple[list[tuple[str, list[Candidate]]],
                                         tuple[int, int], SparkSession,
                                         dict[str, int]]:
@@ -276,43 +291,41 @@ def _probe_admits(spark: SparkSession, sql: str,
 def _split_eval(spark: SparkSession,
                 train: list[tuple[str, list[Candidate]]],
                 test: list[tuple[str, list[Candidate]]],
-                epochs: int, seed: int,
-                pretrain_epochs: int = 0,
-                pretrain_mode: str = "latency",
-                pretrain_censor_ms: float | None = None,
-                pair_weighting: str = "none") -> dict[str, Any]:
-    """Train on ``train``, score ``test``: returns the ranking losses,
-    the argmin picks and the held-out second totals — one evaluation of
-    one train/held-out split (the main split and every cross-validation
-    fold go through this same path)."""
+                epochs: int, seed: int, penalty_ms: float) -> dict[str, Any]:
+    """Train on ``train`` with the artifact recipe, score ``test``: returns
+    the ranking losses, one row per held-out query (its default, chosen,
+    best and worst labels) and the held-out second totals — one
+    evaluation of one train/held-out split (the main split and every
+    cross-validation fold go through this same path). Labels at or above
+    ``penalty_ms`` are censored out of the pointwise pretrain."""
     model = train_pairwise_from_bundles(
-        [(qid, [(c.plan, float(c.exec_time_ms)) for c in cands])
-         for qid, cands in train], epochs=epochs, seed=seed,
-        pretrain_epochs=pretrain_epochs, pretrain_mode=pretrain_mode,
-        pretrain_censor_ms=pretrain_censor_ms,
-        pair_weighting=pair_weighting)
-    rows = [(qid, i, c.variant, c.to_bundle_json(), float(c.exec_time_ms))
-            for qid, cands in test for i, c in enumerate(cands)]
-    df = spark.createDataFrame(
-        rows,
-        "qid string, candidate_idx int, variant string, "
-        "plan_json string, exec_time_ms double")
-    scored = score_plans(df, model).cache()
+        _as_bundles(train), epochs=epochs, seed=seed,
+        pretrain_epochs=PRETRAIN_EPOCHS, pretrain_mode=PRETRAIN_MODE,
+        pretrain_censor_ms=penalty_ms, pair_weighting=PAIR_WEIGHTING)
+    scored = _score_bundles(spark, _as_bundles(test), model).cache()
     loss = ranking_loss(scored)
     wloss = weighted_ranking_loss(scored)
     picked = {r["qid"]: r["candidate_idx"]
               for r in choose_best(scored).collect()}
     scored.unpersist()
-    tot = {"default": 0.0, "chosen": 0.0, "best": 0.0}
+    rows = []
     for qid, cands in test:
         times = [float(c.exec_time_ms) for c in cands]
-        tot["default"] += next(t for c, t in zip(cands, times)
-                               if c.variant == "default") / 1e3
-        tot["chosen"] += times[picked[qid]] / 1e3
-        tot["best"] += min(times) / 1e3
-    return {"model": model, "loss": loss, "wloss": wloss,
-            "picked": picked,
-            "totals": {k: round(v, 4) for k, v in tot.items()}}
+        ci = picked[qid]
+        rows.append({
+            "qid": qid,
+            "n_candidates": len(cands),
+            "n_tables": len(extract_aliases(cands[0].sql)),
+            "default_ms": next(t for c, t in zip(cands, times)
+                               if c.variant == "default"),
+            "chosen_ms": times[ci],
+            "chosen_variant": cands[ci].variant,
+            "best_ms": min(times),
+            "worst_ms": max(times),
+        })
+    return {"loss": loss, "wloss": wloss, "rows": rows,
+            "totals": {k: round(sum(q[f"{k}_ms"] / 1e3 for q in rows), 4)
+                       for k in ("default", "chosen", "best")}}
 
 
 def optimizer_results(spark: SparkSession, sf_dir: str,
@@ -322,15 +335,9 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
                       cache_dir: str | None = None,
                       cross_folds: int = 0,
                       label_timeout_s: float = LABEL_TIMEOUT_S,
-                      pretrain_epochs: int = 0,
-                      pretrain_mode: str = "latency",
                       probe_default_s: float | None = None,
                       skip_saturated: bool = False,
-                      oversample: float = 2.0,
-                      pair_weighting: str = "none",
                       ) -> dict[str, Any]:
-    # (timeout-penalty labels are censored observations: excluded from
-    # the pointwise pretrain set, kept for the pairwise ordering pass)
     """Label a generated workload, train on the front ``train_frac`` in
     generation order (the drift framing: the past trains, the future
     evaluates), and report held-out chosen-vs-default latencies, the
@@ -343,13 +350,11 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
     split-confounded): fold j holds out the j-th contiguous 1/k block in
     generation order and trains on the rest, so the reported loss carries
     a cross-split spread instead of one split's draw."""
-    from ..pipelines.dynamic import run_deployment
-
     bundles, (cache_hits, cache_lookups), spark, skip_stats = \
         label_generated_workload(
             spark, sf_dir, num_queries, seed, cache_dir=cache_dir,
             timeout_s=label_timeout_s, probe_default_s=probe_default_s,
-            skip_saturated=skip_saturated, oversample=oversample)
+            skip_saturated=skip_saturated)
     if len(bundles) < 3:
         raise ValueError(f"only {len(bundles)} rankable bundles generated")
     n_train = max(1, int(len(bundles) * train_frac))
@@ -358,13 +363,11 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
     print(f"labeling done: {len(bundles)} bundles "
           f"(cache {cache_hits}/{cache_lookups} hits); training main split",
           file=sys.stderr, flush=True)
-    from ..plans.explore import LABEL_TIMEOUT_PENALTY as _PEN
-    censor_ms = _PEN * label_timeout_s * 1000.0
-    main_eval = _split_eval(spark, train, test, epochs, seed,
-                            pretrain_epochs, pretrain_mode, censor_ms,
-                            pair_weighting=pair_weighting)
-    loss, wloss = main_eval["loss"], main_eval["wloss"]
-    picked = main_eval["picked"]
+    # timeout-penalty labels are censored observations: excluded from the
+    # pointwise pretrain set, kept for the pairwise ordering pass
+    penalty_ms = LABEL_TIMEOUT_PENALTY * label_timeout_s * 1000.0
+    main_eval = _split_eval(spark, train, test, epochs, seed, penalty_ms)
+    per_query = main_eval["rows"]
 
     # cross-split error bar: rotate the held-out block through the
     # generation-ordered bundle list (k disjoint held-out blocks)
@@ -381,8 +384,7 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
             f_test = bundles[lo:hi]
             f_train = bundles[:lo] + bundles[hi:]
             ev = _split_eval(spark, f_train, f_test, epochs, seed,
-                             pretrain_epochs, pretrain_mode, censor_ms,
-                             pair_weighting=pair_weighting)
+                             penalty_ms)
             t = ev["totals"]
             gap = (round(100.0 * (t["chosen"] - t["best"]) / t["best"], 2)
                    if t["best"] > 0 else None)
@@ -391,21 +393,15 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
             # denominator — name the query that dominates it and whether
             # any pick landed on a timeout-penalty label, so an outlier
             # fold is explained in the artifact instead of unexplained
-            from ..plans.explore import LABEL_TIMEOUT_PENALTY
-
-            regrets = []
-            timeout_ms = LABEL_TIMEOUT_PENALTY * label_timeout_s * 1000.0
-            for qid, cands in f_test:
-                times = [float(c.exec_time_ms) for c in cands]
-                ci = ev["picked"][qid]
-                regrets.append((times[ci] - min(times), qid, times[ci],
-                                cands[ci].variant, min(times)))
+            regrets = [(q["chosen_ms"] - q["best_ms"], q["qid"],
+                        q["chosen_ms"], q["chosen_variant"], q["best_ms"])
+                       for q in ev["rows"]]
             # true sum for the reported value; a zero-regret fold gets
             # regret_sec 0.0 and top_regret null rather than a share_pct
             # computed against a fabricated 1 ms denominator (r9 advice)
             total_regret = sum(r[0] for r in regrets)
             worst = max(regrets)
-            n_timeout_picks = sum(1 for r in regrets if r[2] >= timeout_ms)
+            n_timeout_picks = sum(1 for r in regrets if r[2] >= penalty_ms)
             fold_rows.append({
                 "fold": j, "n_test": len(f_test),
                 "ranking_loss": _r4(ev["loss"]),
@@ -438,24 +434,6 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
                                       if gaps else None),
         }
 
-    from ..workload.extract import extract_aliases
-
-    per_query = []
-    for qid, cands in test:
-        times = [float(c.exec_time_ms) for c in cands]
-        ci = picked[qid]
-        per_query.append({
-            "qid": qid,
-            "n_candidates": len(cands),
-            "n_tables": len(extract_aliases(cands[0].sql)),
-            "default_ms": next(float(c.exec_time_ms) for c in cands
-                               if c.variant == "default"),
-            "chosen_ms": times[ci],
-            "chosen_variant": cands[ci].variant,
-            "best_ms": min(times),
-            "worst_ms": max(times),
-        })
-
     # per-shape breakdown: the generator's template dimension is the join
     # width (reference workloads group by table count, create_sql.py's
     # weights [1,7,7,7,7,7] over 2-7 joins) — report where the ranker's
@@ -481,15 +459,12 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
     for _ in range(deployment_batches):
         if i + per_batch >= len(bundles):
             break
-        trains.append([(q, [(c.plan, float(c.exec_time_ms)) for c in cs])
-                       for q, cs in bundles[i:i + per_batch]])
-        valids.append([(q, [(c.plan, float(c.exec_time_ms)) for c in cs])
-                       for q, cs in bundles[i + per_batch:i + per_batch + 1]])
+        trains.append(_as_bundles(bundles[i:i + per_batch]))
+        valids.append(_as_bundles(bundles[i + per_batch:i + per_batch + 1]))
         i += per_batch + 1
     print("deployment series...", file=sys.stderr, flush=True)
     deployment = run_deployment(spark, trains, valids, epochs=epochs,
-                                seed=seed,
-                                pair_weighting=pair_weighting)
+                                seed=seed, pair_weighting=PAIR_WEIGHTING)
 
     def tot(key: str) -> float:
         return round(sum(q[key] for q in per_query) / 1000.0, 4)
@@ -501,9 +476,8 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
         "n_test": len(test),
         "epochs": epochs,
         "seed": seed,
-        "pretrain": ({"epochs": pretrain_epochs, "mode": pretrain_mode}
-                     if pretrain_epochs else None),
-        "pair_weighting": pair_weighting,
+        "pretrain": {"epochs": PRETRAIN_EPOCHS, "mode": PRETRAIN_MODE},
+        "pair_weighting": PAIR_WEIGHTING,
         "label_cache": {"enabled": cache_dir is not None,
                         "hits": cache_hits,
                         "misses": cache_lookups - cache_hits},
@@ -515,7 +489,7 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
         "workload_bias": {
             "probe_default_s": probe_default_s,
             "skip_saturated": skip_saturated,
-            "oversample": oversample,
+            "oversample": OVERSAMPLE,
             **skip_stats,
         },
         "saturated_bundles": {
@@ -532,8 +506,8 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
             "best_possible": tot("best_ms"),
             "worst_case": tot("worst_ms"),
         },
-        "ranking_loss": _r4(loss),
-        "ranking_loss_weighted": _r4(wloss),
+        "ranking_loss": _r4(main_eval["loss"]),
+        "ranking_loss_weighted": _r4(main_eval["wloss"]),
         "by_shape": {str(k): v for k, v in sorted(by_shape.items())},
         "deployment_latency_series": [round(x, 4) for x in
                                       deployment["latency_series"]],
@@ -556,15 +530,12 @@ def write_results_md(res: dict[str, Any], path: str) -> None:
         f"- data: `{res['sf_dir']}`  |  labeled queries: "
         f"{res['n_labeled']} (train {res['n_train']} / held-out test "
         f"{res['n_test']}, generation order)  |  epochs: {res['epochs']}, "
-        f"seed: {res['seed']}"
-        + (f"  |  pointwise pretrain: {res['pretrain']['mode']} x "
-           f"{res['pretrain']['epochs']} epochs"
-           if res.get("pretrain") else "")
-        + (f"  |  pairwise objective: consequence-weighted "
-           f"(`{res['pair_weighting']}` — NON-REFERENCE default, adopted "
-           f"after the round-11 A/B; the reference trains equal-weight "
-           f"pairs, restored by `SPARK_GRAFT_PAIR_WEIGHTING=none`)"
-           if res.get("pair_weighting") not in (None, "none") else ""),
+        f"seed: {res['seed']}  |  pointwise pretrain: "
+        f"{res['pretrain']['mode']} x {res['pretrain']['epochs']} epochs"
+        f"  |  pairwise objective: consequence-weighted "
+        f"(`{res['pair_weighting']}` — NON-REFERENCE recipe, adopted "
+        f"after the round-11 A/B in FEATURES_AB.md; the reference trains "
+        f"equal-weight pairs)",
         "",
     ]
     wb = res.get("workload_bias") or {}

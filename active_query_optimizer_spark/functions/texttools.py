@@ -263,30 +263,15 @@ def token_hashes_sql(toks_expr: str) -> str:
 # MinHash signatures
 # ---------------------------------------------------------------------------
 
-def minhash_signature(hashes: Column, k: int = MINHASH_K) -> Column:
-    """k-wide MinHash signature over a (distinct) hash array:
-    ``sig[j] = min_h (a_j*h + b_j) mod P``."""
-    def perm(a: int, b: int):
-        return lambda h: (h * a + b) % HASH_P
-
-    sig = [
-        F.array_min(F.transform(hashes, perm(MINHASH_A[j], MINHASH_B[j])))
-        for j in range(k)
-    ]
-    return F.array(*sig)
-
-
 def minhash_signature_oph(hashes: Column, k: int = MINHASH_K) -> Column:
     """One-permutation-hashing MinHash signature (Li et al., NeurIPS'12):
     ONE universal hash ``g(h) = (a·h+b) mod P`` assigns each shingle to one
     of ``k`` bins; ``sig[j] = min g(h) over bin j``, empty bins filled by
     rotation densification (value of the next non-empty bin + offset).
 
-    Semantics-equivalent use to ``minhash_signature`` (band collisions
-    estimate Jaccard the same way) at **O(N)** per document instead of
-    O(k·N) — the k-traversal Catalyst form allocates k intermediate arrays
-    per row and dominated the dedup pipeline's profile. Vectorized numpy
-    over Arrow batches; pure function of the shingle set (deterministic,
+    Band collisions estimate Jaccard like a k-permutation signature's, at
+    **O(N)** per document instead of O(k·N). Vectorized numpy over Arrow
+    batches; pure function of the shingle set (deterministic,
     batch-invariant)."""
     a, b = MINHASH_A[0], MINHASH_B[0]
 
@@ -322,14 +307,6 @@ def minhash_signature_oph(hashes: Column, k: int = MINHASH_K) -> Column:
             yield pd.Series(list(sig))
 
     return _sig(hashes)
-
-
-def minhash_signature_sql(hashes_expr: str, k: int = MINHASH_K) -> str:
-    sig = [
-        f"list_min([(h * {MINHASH_A[j]} + {MINHASH_B[j]}) % {HASH_P} for h in {hashes_expr}])"
-        for j in range(k)
-    ]
-    return "[" + ", ".join(sig) + "]"
 
 
 # ---------------------------------------------------------------------------

@@ -27,7 +27,15 @@ Bundle = tuple[str, list[tuple[PlanNode, float]]]
 LIVE_LABEL_STRATEGIES = ("BROADCAST", "MERGE")
 
 
+def _as_bundles(labeled) -> list[Bundle]:
+    """Labeled ``(qid, [Candidate, ...])`` pairs as training bundles."""
+    return [(qid, [(c.plan, float(c.exec_time_ms)) for c in cands])
+            for qid, cands in labeled]
+
+
 def _score_bundles(spark: SparkSession, bundles: list[Bundle], model):
+    """The scored candidate frame: one row per (qid, candidate_idx) with its
+    plan JSON, measured ``exec_time_ms`` and the model's ``score``."""
     rows = [(qid, i, to_pg_json(p, t), float(t))
             for qid, cands in bundles for i, (p, t) in enumerate(cands)]
     df = spark.createDataFrame(
@@ -36,22 +44,33 @@ def _score_bundles(spark: SparkSession, bundles: list[Bundle], model):
     return score_plans(df, model)
 
 
+def _train_score_series(spark: SparkSession,
+                        pairs: list[tuple[list[Bundle], list[Bundle]]],
+                        epochs: int, seed: int,
+                        pair_weighting: str = "none") -> dict:
+    """Model ``i`` trains from scratch on ``pairs[i][0]`` (seed ``seed + i``)
+    and is scored on ``pairs[i][1]``: the chosen-plan latency sum and the
+    ranking loss of each valid split, in order."""
+    latency_series: list[float] = []
+    loss_series: list[float | None] = []
+    for i, (train, valid) in enumerate(pairs):
+        model = train_pairwise_from_bundles(
+            train, epochs=epochs, seed=seed + i,
+            pair_weighting=pair_weighting)
+        scored = _score_bundles(spark, valid, model).cache()
+        latency_series.append(selection_report(scored)["sum"])
+        loss_series.append(ranking_loss(scored))
+        scored.unpersist()
+    return {"latency_series": latency_series, "ranking_loss_series": loss_series}
+
+
 def run_dynamic(spark: SparkSession, batches: list[list[Bundle]],
                 epochs: int = 50, seed: int = 0) -> dict:
     """Train on batch i, evaluate on batch i+1 (reference
     ``dynamic.py:27-53``: retrain from scratch each batch). Returns the
     per-transition latency series and ranking losses."""
-    latency_series: list[float] = []
-    loss_series: list[float | None] = []
-    for i in range(len(batches) - 1):
-        model = train_pairwise_from_bundles(batches[i], epochs=epochs,
-                                            seed=seed + i)
-        scored = _score_bundles(spark, batches[i + 1], model).cache()
-        report = selection_report(scored)
-        latency_series.append(report["sum"])
-        loss_series.append(ranking_loss(scored))
-        scored.unpersist()
-    return {"latency_series": latency_series, "ranking_loss_series": loss_series}
+    return _train_score_series(spark, list(zip(batches, batches[1:])),
+                               epochs, seed)
 
 
 def run_deployment(spark: SparkSession,
@@ -78,20 +97,10 @@ def run_deployment(spark: SparkSession,
         raise ValueError("train/valid batch counts must match")
     if not train_batches or not train_batches[0]:
         return {"latency_series": [], "ranking_loss_series": []}
-    bootstrap = [train_batches[0][0]]
-    model_train_sets = [bootstrap] + train_batches[:-1]
-    latency_series: list[float] = []
-    loss_series: list[float | None] = []
-    for i, (train, valid) in enumerate(zip(model_train_sets, valid_batches)):
-        model = train_pairwise_from_bundles(
-            train, epochs=epochs, seed=seed + i,
-            pair_weighting=pair_weighting)
-        scored = _score_bundles(spark, valid, model).cache()
-        report = selection_report(scored)
-        latency_series.append(report["sum"])
-        loss_series.append(ranking_loss(scored))
-        scored.unpersist()
-    return {"latency_series": latency_series, "ranking_loss_series": loss_series}
+    model_train_sets = [[train_batches[0][0]]] + train_batches[:-1]
+    return _train_score_series(spark,
+                               list(zip(model_train_sets, valid_batches)),
+                               epochs, seed, pair_weighting=pair_weighting)
 
 
 def live_deployment_batches(spark: SparkSession, sf_dir: str,
@@ -105,48 +114,31 @@ def live_deployment_batches(spark: SparkSession, sf_dir: str,
                             ) -> tuple[list[list[Bundle]], list[list[Bundle]]]:
     """Generate → explore/label → (train_i, valid_i) splits: the live
     front half of the reference's deployment workflow. The workload comes
-    from the seeded generator (``workload/generate``, the rebuild of
-    ``create_sql.py``), every query is labeled by executing its hint/plan
-    variants (``plans/explore.label_query``), and the labeled bundles are
-    sliced into per-batch train/valid splits in generation order — the
-    drift-over-time framing of ``Lero/deployment.py:16-46``, with real
-    executed plans and wall-clock labels instead of synthetic bundles.
+    from the seeded generator and is labeled by
+    ``evaluation.results.label_generated_workload`` (every query's
+    hint/plan variants executed and timed; single-plan queries skipped),
+    and the labeled bundles are sliced into per-batch train/valid splits
+    in generation order — the drift-over-time framing of
+    ``Lero/deployment.py:16-46``, with real executed plans and wall-clock
+    labels instead of synthetic bundles."""
+    from ..evaluation.results import label_generated_workload
 
-    Queries whose variants collapse to a single physical plan carry no
-    ranking signal and are skipped (the generator is over-sampled 2× to
-    cover the loss)."""
-    from ..catalog import register_views
-    from ..plans.explore import label_query
-    from ..stats.harvester import harvest_range_dict
-    from ..workload.generate import generate_workload
-
-    register_views(spark, sf_dir)
-    rd = harvest_range_dict(spark, sf_dir)
-    total = num_batches * (train_per_batch + valid_per_batch)
-    wl = sorted(generate_workload(spark, rd, num_sql=2 * total,
-                                  seed=seed).collect(),
-                key=lambda r: r["id"])
-    good: list[Bundle] = []
-    for r in wl:
-        cands = label_query(spark, r["sql"], strategies, timeout_s)
-        if len(cands) >= 2:
-            good.append((f"g{r['id']}",
-                         [(c.plan, float(c.exec_time_ms)) for c in cands]))
-        if len(good) >= total:
-            break
-    if len(good) < total:
+    per_batch = train_per_batch + valid_per_batch
+    total = num_batches * per_batch
+    labeled, _, session, _ = label_generated_workload(
+        spark, sf_dir, total, seed, strategies=strategies,
+        timeout_s=timeout_s)
+    if session is not spark:
+        raise RuntimeError("a zombie plan variant forced a Spark restart; "
+                           "rerun on the revived session")
+    if len(labeled) < total:
         raise ValueError(
-            f"workload yielded only {len(good)}/{total} rankable bundles — "
-            "raise num_sql oversampling or loosen strategies")
-    trains: list[list[Bundle]] = []
-    valids: list[list[Bundle]] = []
-    i = 0
-    for _ in range(num_batches):
-        trains.append(good[i:i + train_per_batch])
-        i += train_per_batch
-        valids.append(good[i:i + valid_per_batch])
-        i += valid_per_batch
-    return trains, valids
+            f"workload yielded only {len(labeled)}/{total} rankable bundles "
+            "— raise num_sql oversampling or loosen strategies")
+    good = _as_bundles(labeled)
+    starts = range(0, total, per_batch)
+    return ([good[i:i + train_per_batch] for i in starts],
+            [good[i + train_per_batch:i + per_batch] for i in starts])
 
 
 def run_live_deployment(spark: SparkSession, sf_dir: str,

@@ -25,10 +25,9 @@ import os
 from pyspark.sql import SparkSession
 
 from ..evaluation.metrics import ranking_loss, selection_report
-from ..model.infer import score_plans
-from ..model.lero import LeroModelPairWise, train_pairwise_from_bundles
+from ..model.lero import train_pairwise_from_bundles
 from ..plans.explore import label_workload
-from ..plans.featurize import to_pg_json
+from .dynamic import _as_bundles, _score_bundles
 
 
 def run_stable(spark: SparkSession, train_queries: list[tuple[str, str]],
@@ -38,24 +37,14 @@ def run_stable(spark: SparkSession, train_queries: list[tuple[str, str]],
     """Label + train on ``train_queries`` (``(qid, sql)`` against already
     registered views), evaluate on ``test_queries`` (defaults to the train
     set — the reference evaluates a held-out file when present)."""
-    labeled = label_workload(spark, train_queries)
-    bundles = [(qid, [(c.plan, c.exec_time_ms) for c in cands])
-               for qid, cands in labeled]
+    bundles = _as_bundles(label_workload(spark, train_queries))
     model = train_pairwise_from_bundles(bundles, epochs=epochs, seed=seed)
 
     eval_bundles = bundles
     if test_queries is not None:
-        eval_labeled = label_workload(spark, test_queries)
-        eval_bundles = [(qid, [(c.plan, c.exec_time_ms) for c in cands])
-                        for qid, cands in eval_labeled]
+        eval_bundles = _as_bundles(label_workload(spark, test_queries))
 
-    rows = [(qid, i, to_pg_json(p, t), float(t))
-            for qid, cands in eval_bundles
-            for i, (p, t) in enumerate(cands)]
-    df = spark.createDataFrame(
-        rows,
-        "qid string, candidate_idx int, plan_json string, exec_time_ms double")
-    scored = score_plans(df, model).cache()
+    scored = _score_bundles(spark, eval_bundles, model).cache()
     report = selection_report(scored)
     loss = ranking_loss(scored)
     scored.unpersist()

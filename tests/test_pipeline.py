@@ -376,9 +376,31 @@ def test_probe_and_saturation_bias_in_labeling_loop(spark, monkeypatch):
          Candidate("rot1", "s", "f7", None, exec_time_ms=pen_ms)], 1.0)
 
 
+def test_committed_results_record_the_recipe():
+    """Drift check without Spark: both committed artifacts were produced by
+    the training recipe that ``evaluation/results.py`` fixes as constants
+    (latency pretrain x 20, then the ``latency_delta`` pairwise pass)."""
+    import json
+    import os
+
+    from active_query_optimizer_spark.evaluation import results as R
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    recipe = {"epochs": R.PRETRAIN_EPOCHS, "mode": R.PRETRAIN_MODE}
+    assert recipe == {"epochs": 20, "mode": "latency"}
+    assert R.PAIR_WEIGHTING == "latency_delta"
+    for name in ("RESULTS.json", "RESULTS_SF1.json"):
+        with open(os.path.join(repo, name)) as fh:
+            res = json.load(fh)
+        assert res["pretrain"] == recipe, name
+        assert res["pair_weighting"] == R.PAIR_WEIGHTING, name
+        assert res["workload_bias"]["oversample"] == R.OVERSAMPLE, name
+
+
 def test_optimizer_results_regenerate_sf001(spark, tmp_path):
-    """RESULTS.md regeneration at sf0.01: the end-to-end artifact pipeline
-    (generate -> explore/label -> train -> select -> deployment series)
+    """RESULTS.md regeneration at sf0.001 with the shipped training recipe:
+    the end-to-end artifact pipeline (generate -> explore/label -> latency
+    pretrain + weighted pairwise train -> select -> deployment series)
     must produce a coherent report — totals bracketed by the oracle
     best/worst, loss in range, artifact + JSON sibling written. Also
     exercises the round-6 additions: the label cache (a cold run misses
@@ -391,6 +413,8 @@ def test_optimizer_results_regenerate_sf001(spark, tmp_path):
     res = optimizer_results(spark, SF_SMALL, num_queries=6, epochs=8,
                             seed=11, deployment_batches=2,
                             cache_dir=cache, cross_folds=2)
+    assert res["pretrain"] == {"epochs": 20, "mode": "latency"}
+    assert res["pair_weighting"] == "latency_delta"
     t = res["totals_sec"]
     assert res["n_test"] >= 1 and res["n_train"] >= 1
     assert t["best_possible"] <= t["chosen"] <= t["worst_case"]

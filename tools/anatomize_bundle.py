@@ -21,20 +21,38 @@ Usage::
 from __future__ import annotations
 
 import argparse
+import glob
+import gzip
+import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from active_query_optimizer_spark.catalog import register_views  # noqa: E402
+from active_query_optimizer_spark.plans import labelcache as LC  # noqa: E402
 from active_query_optimizer_spark.session import get_spark  # noqa: E402
 from active_query_optimizer_spark.stats.harvester import (  # noqa: E402
     harvest_range_dict)
 from active_query_optimizer_spark.workload.generate import (  # noqa: E402
     generate_workload)
-from tools.analyze_fold0 import load_cache_by_sql  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def load_cache_by_sql(cache_dir: str) -> dict[str, list]:
+    """Every cached bundle, keyed by its default variant's SQL text."""
+    out: dict[str, list] = {}
+    for path in glob.glob(os.path.join(cache_dir, "*.json.gz")):
+        with gzip.open(path, "rt") as fh:
+            raw = json.load(fh)
+        if not isinstance(raw, list) or not raw:
+            continue  # poison marker / empty bundle
+        cands = LC._decode(raw)
+        default = next((c for c in cands if c.variant == "default"), None)
+        if default is not None:
+            out[default.sql] = cands
+    return out
 
 
 def _render(node, depth: int = 0, out: list[str] | None = None,

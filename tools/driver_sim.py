@@ -17,6 +17,8 @@ import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
+from active_query_optimizer_spark.catalog import TABLES
+
 FAM = {"i": "int", "u": "int", "f": "float", "b": "bool", "M": "dt", "m": "td"}
 sf = os.environ.get("SPARK_GRAFT_SIM_SF_DIR", "/root/testdata/sf0.01")
 
@@ -93,8 +95,7 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
     con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     bad = []
     status = {}
