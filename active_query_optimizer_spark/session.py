@@ -3,7 +3,9 @@
 Local-mode settings mirror what we would set on a real cluster where it
 matters (AQE, adaptive skew handling, Arrow for the pandas-UDF path); the
 shuffle-partition count is sized for local[32] but on a 1000-executor cluster
-AQE coalescing makes the static number mostly irrelevant.
+AQE coalescing makes the static number mostly irrelevant. Python workers
+start from ``pydaemon``, with the package's parent directory on their path,
+so UDFs import the package from any working directory.
 """
 
 from __future__ import annotations
@@ -11,6 +13,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "active_query_optimizer_spark",
@@ -33,14 +37,8 @@ def get_spark(app_name: str = "active_query_optimizer_spark",
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.python.daemon.module", f"{__package__}.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()
 
-
-def tune_for_scale(spark: SparkSession) -> None:
-    """Session tweaks we rely on; safe to call on a session we didn't build
-    (e.g. the driver's). Only sets runtime-mutable confs."""
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -1,83 +1,48 @@
 """Load-robust query measurement: executor run/CPU time + shuffle bytes per
-query execution, via the status REST API of a UI-enabled local session.
+query execution, read in-process from Spark's status store.
 
-Wall clock on a contended host is a lottery; executorCpuTime is not.
+Wall clock on a contended host is a lottery; executorCpuTime is not. Each
+run is its own job group and sums only that group's stages, so totals stay
+right after the store has evicted old stages (``spark.ui.retainedStages``).
 
 Usage: python tools/measure_cpu.py <runs> <query> [<query> ...]
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
 """
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from active_query_optimizer_spark.operators import QUERIES
-
-
-def get_spark_ui(cpus: int):
-    return (SparkSession.builder.master(f"local[{cpus}]")
-            .appName("measure-cpu")
-            .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.driver.memory",
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-            .config("spark.ui.enabled", "true")
-            .config("spark.ui.port", "4050")
-            .config("spark.sql.parquet.filterPushdown", "true")
-            .getOrCreate())
-
-
-def stage_totals(app_id: str) -> dict:
-    url = f"http://localhost:4050/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        stages = json.load(r)
-    out = {"run_ms": 0, "cpu_ms": 0, "shuffle_read_b": 0,
-           "shuffle_write_b": 0, "tasks": 0, "stages": len(stages)}
-    for s in stages:
-        out["run_ms"] += s.get("executorRunTime", 0)
-        out["cpu_ms"] += s.get("executorCpuTime", 0) // 1_000_000
-        out["shuffle_read_b"] += s.get("shuffleReadBytes", 0)
-        out["shuffle_write_b"] += s.get("shuffleWriteBytes", 0)
-        out["tasks"] += s.get("numCompleteTasks", 0)
-    return out
+from active_query_optimizer_spark.session import get_spark
+from perfbench.sparkstats import group_counters
 
 
 def main() -> None:
     runs = int(sys.argv[1])
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    spark = get_spark_ui(cpus)
+    spark = get_spark("measure-cpu")
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
     spark.range(1).count()
     for name in names:
         per_run = []
-        for _ in range(runs):
-            before = stage_totals(app_id)
+        for i in range(runs):
+            group = f"measure-cpu-{name}-{i}"
+            spark.sparkContext.setJobGroup(group, name)
             t0 = time.perf_counter()
             QUERIES[name](spark, sf_dir).count()
             wall = time.perf_counter() - t0
-            after = stage_totals(app_id)
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+            c = group_counters(spark, group)
             per_run.append({
                 "wall_s": round(wall, 3),
-                "run_ms": after["run_ms"] - before["run_ms"],
-                "cpu_ms": after["cpu_ms"] - before["cpu_ms"],
-                "shuf_r_kb": (after["shuffle_read_b"]
-                              - before["shuffle_read_b"]) // 1024,
-                "shuf_w_kb": (after["shuffle_write_b"]
-                              - before["shuffle_write_b"]) // 1024,
-                "tasks": after["tasks"] - before["tasks"],
-                "stages": after["stages"] - before["stages"],
+                "run_ms": round(c["spark.executor_run_s"] * 1e3),
+                "cpu_ms": round(c["spark.executor_cpu_s"] * 1e3),
+                "shuf_w_kb": round(c["spark.shuffle_write_mb"] * 1024),
+                "tasks": int(c["spark.tasks"]),
+                "stages": int(c["spark.stages"]),
             })
         best = min(per_run, key=lambda r: r["run_ms"])
         print(f"{name}: best_run_ms={best['run_ms']} best_cpu_ms={best['cpu_ms']} "
@@ -85,6 +50,7 @@ def main() -> None:
               f"shufW_kb={best['shuf_w_kb']} walls={[r['wall_s'] for r in per_run]} "
               f"cpus={[r['cpu_ms'] for r in per_run]} "
               f"runs={[r['run_ms'] for r in per_run]}")
+    spark.stop()
 
 
 if __name__ == "__main__":
