@@ -3,18 +3,28 @@ and register them as temp views.
 
 Mirrors the reference's catalog introspection over ``information_schema``
 (``pg.py:72-85`` in the reference) — there the schema lives in a running
-PostgreSQL; here it is discovered from parquet footers at read time.
+PostgreSQL; here it is discovered from parquet footers, once per table per
+session: ``load_table`` keeps the DataFrame it built (the file listing and
+footer schema, a metadata handle) and hands it out again while the table's
+files are unchanged.
 
 Scale note: ``spark.read.parquet`` yields a ``FileSourceScanExec`` with
 predicate pushdown + column pruning; at 100 TB the same call simply sees more
-files/row-groups — no code change. We deliberately do NOT cache/persist here:
-correctness queries each read a pruned column subset, and caching would
-materialize full-width rows.
+files/row-groups — no code change. The handle is metadata only; we
+deliberately do NOT cache/persist data here: correctness queries each read a
+pruned column subset, and caching would materialize full-width rows.
+
+The catalog reads the local filesystem: the handle's file signature, the
+scan-task estimate and ``load_tables``' existence check all stat files, so
+``sf_dir`` must be a local directory, not a URI (``s3a://``, ``hdfs://``,
+``file:``); ``_table_path`` rejects one with a ``ValueError``.
 """
 
 from __future__ import annotations
 
 import os
+import re
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,36 +42,84 @@ TABLES = (
 )
 
 
+#: ``{(session, absolute path): (file signature, DataFrame)}`` — the one
+#: handle per table per session that ``load_table`` hands out. Callers pass
+#: only (session, directory), so the handles live here, a few per session
+#: and never evicted; two concurrent misses each build a correct handle
+_HANDLES: dict[tuple[SparkSession, str], tuple[tuple, DataFrame]] = {}
+
+#: a Spark byte-size string: a number, then ``b`` or a k/m/g/t/p unit with
+#: an optional ``b`` (``JavaUtils.byteStringAs``), as a power of 1024
+_BYTE_SIZE = re.compile(r"(\d+(?:\.\d+)?)(?:([kmgtp])b?|b)?")
+_BYTE_POWERS = {None: 0, "k": 1, "m": 2, "g": 3, "t": 4, "p": 5}
+
+
+def _table_path(sf_dir: str, name: str) -> str:
+    """Absolute local path of table ``name`` — the one place that checks the
+    catalog's local-filesystem assumption (module docstring)."""
+    if len(urlsplit(sf_dir).scheme) > 1:  # one letter is a drive, not a URI
+        raise ValueError(
+            f"catalog reads tables from the local filesystem; sf_dir must be "
+            f"a local directory, not a URI: {sf_dir!r}")
+    return os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _file_signature(path: str) -> tuple[tuple[str, int, int], ...]:
+    """``(relative name, size, mtime_ns)`` of each data file of a parquet
+    path (a file, or a directory of part files), sorted; empty if absent."""
+    if os.path.isdir(path):
+        files = [os.path.join(root, f)
+                 for root, _, fs in os.walk(path)
+                 for f in fs if not f.startswith(("_", "."))]
+    else:
+        files = [path]
+    sig = []
+    for f in files:
+        try:
+            st = os.stat(f)
+        except FileNotFoundError:
+            continue
+        sig.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(sig))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table of the star schema as a DataFrame.
+
+    Returns the DataFrame this session already built for the table while its
+    files are unchanged (same names, sizes and mtimes), so the parquet
+    listing and footer reads happen once per session. Two calls therefore
+    return the SAME DataFrame: a self-join must alias both sides.
 
     ``events.ts`` is written as parquet TIMESTAMP(NANOS), which vanilla Spark
     refuses to read; we read nanos as long (legacy conf) and rebuild a
     microsecond TimestampType column — same wall-clock values DuckDB sees.
+    The scan reads that conf again when it runs, so it is set on every call,
+    hit or miss.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = _table_path(sf_dir, name)
     if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    sig = _file_signature(path)
+    hit = _HANDLES.get((spark, path))
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    df = spark.read.parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            # integer division: float division of int64 nanos exceeds the
-            # 53-bit double mantissa and rounds off microseconds
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return spark.read.parquet(path)
+        # integer division: float division of int64 nanos exceeds the
+        # 53-bit double mantissa and rounds off microseconds
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    _HANDLES[(spark, path)] = (sig, df)
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
     """Read several tables; skips names whose parquet file is absent."""
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = load_table(spark, sf_dir, name)
-    return out
+    return {name: load_table(spark, sf_dir, name) for name in names
+            if os.path.exists(_table_path(sf_dir, name))}
 
 
 def register_views(spark: SparkSession, sf_dir: str,
@@ -73,6 +131,16 @@ def register_views(spark: SparkSession, sf_dir: str,
     return dfs
 
 
+def _parse_bytes(value: str, default: int) -> int:
+    """Bytes in a Spark byte-size string (``"134217728"``, ``"4mb"``,
+    ``"1t"``, ``"2PB"``; no suffix means bytes), or ``default`` if it does
+    not parse."""
+    m = _BYTE_SIZE.fullmatch(value.strip().lower())
+    if m is None:
+        return default
+    return int(float(m[1]) * (1 << 10 * _BYTE_POWERS[m[2]]))
+
+
 def _scan_task_estimate(spark: SparkSession, path: str) -> int:
     """Estimate how many scan tasks a parquet path will produce, from the
     same inputs Spark's own file-split packing uses: total bytes plus a
@@ -80,30 +148,13 @@ def _scan_task_estimate(spark: SparkSession, path: str) -> int:
     metadata — no Spark job, no plan construction (a ``df.rdd
     .getNumPartitions()`` probe would cost a physical-plan build per
     query, ~50 ms × every bench invocation)."""
-    def _bytes(conf: str, default: int) -> int:
-        try:
-            v = spark.conf.get(conf)
-        except Exception:
-            return default
-        v = v.strip().lower().removesuffix("b")
-        for suf, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-            if v.endswith(suf):
-                return int(float(v[:-1]) * mult)
-        try:
-            return int(v)
-        except ValueError:
-            return default
-
-    max_part = _bytes("spark.sql.files.maxPartitionBytes", 128 << 20)
-    open_cost = _bytes("spark.sql.files.openCostInBytes", 4 << 20)
-    if os.path.isdir(path):
-        files = [os.path.join(root, f)
-                 for root, _, fs in os.walk(path)
-                 for f in fs if not f.startswith(("_", "."))]
-    else:
-        files = [path]
-    total = sum(os.path.getsize(f) for f in files if os.path.exists(f))
-    padded = total + open_cost * len(files)
+    conf = spark.conf
+    max_part = _parse_bytes(
+        conf.get("spark.sql.files.maxPartitionBytes", "128m"), 128 << 20)
+    open_cost = _parse_bytes(
+        conf.get("spark.sql.files.openCostInBytes", "4m"), 4 << 20)
+    sizes = [size for _, size, _ in _file_signature(path)]
+    padded = sum(sizes) + open_cost * len(sizes)
     # Spark's FilePartition.maxSplitBytes: the split size shrinks toward
     # bytesPerCore so small multi-file tables still fan out
     par = max(1, spark.sparkContext.defaultParallelism)
@@ -134,8 +185,7 @@ def load_for_compute(spark: SparkSession, sf_dir: str, name: str,
     kernels, not the full row)."""
     df = load_table(spark, sf_dir, name)
     par = spark.sparkContext.defaultParallelism
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if _scan_task_estimate(spark, path) >= max(par // 2, 1):
+    if _scan_task_estimate(spark, _table_path(sf_dir, name)) >= max(par // 2, 1):
         return df
     return df.repartition(par, key)
 
