@@ -1,4 +1,4 @@
-"""Ranker evaluation metrics as Spark jobs.
+"""Ranker evaluation metrics.
 
 Rebuilds ``Lero/lero_test.py:25-155``:
 
@@ -7,69 +7,125 @@ Rebuilds ``Lero/lero_test.py:25-155``:
 - ``spearman_by_group`` / ``ranking_loss`` — 1 − mean Spearman correlation
   between predicted scores and true latencies per query
   (``compute_ranking_loss``, ``lero_test.py:115-155``). Spearman =
-  Pearson correlation of the two rank sequences with scipy tie semantics:
-  AVERAGE ranks via ``rank() + (ties − 1)/2`` window expressions, then
-  Pearson assembled as ``try_divide(covar_samp, sd·sd)`` so a
-  constant-side group yields NULL (scipy's NaN) instead of an ANSI
-  divide-by-zero — all JVM-side, one shuffle on qid. NULL-corr groups are
+  Pearson correlation of the two rank sequences with scipy tie semantics
+  (AVERAGE ranks). A group whose scores or whose truths are all tied — or
+  that has a single candidate — has no correlation (scipy's NaN) and is
   skipped from the mean, replicating the reference's NaN-group skip
-  (``lero_test.py:140-143``); when EVERY group is degenerate the loss is
+  (``lero_test.py:140-143``); when EVERY group is skipped the loss is
   ``None``, matching ``compute_ranking_loss``'s no-valid-groups return
   (``lero_test.py:145-147``).
+
+The ranking metrics run on the driver, as the reference's do
+(``scipy.stats.spearmanr`` per query, ``lero_test.py:115-155``): every
+caller reads back one float (or one value per query) computed over a
+few rows per query, so they make ONE collect of ``(qid, score, truth)``
+and rank in numpy, instead of window, group-by and average jobs. Rows are
+sorted by ``(qid, score, truth)`` before any arithmetic, so the value does
+not depend on partition order; values order as Spark orders them (NULL
+first, NaN above every number, ``-0.0 == 0.0``).
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..model.infer import choose_best
 
 
+def _order_key(v):
+    """Sort key giving Spark's ascending order: NULL first, then numbers
+    (``-0.0`` equal to ``0.0``), then NaN, which Spark ranks above every
+    number and equal to itself."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and v != v:
+        return (2,)
+    return (1, v)
+
+
+def _codes(values: list) -> np.ndarray:
+    """Dense integer codes whose order and equality are Spark's."""
+    keys = [_order_key(v) for v in values]
+    pos = {k: i for i, k in enumerate(sorted(set(keys)))}
+    return np.array([pos[k] for k in keys], dtype=np.int64)
+
+
+def _average_ranks(group: np.ndarray, code: np.ndarray,
+                   group_start: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """1-based AVERAGE ranks of ``code`` within each group (``group`` is
+    sorted; ``group_start`` holds each group's first row) and the number of
+    distinct values per group. A tie run at 0-based positions
+    ``first..last`` gets ``(first + last) / 2 + 1`` — scipy's
+    ``rankdata(method="average")`` — exactly, as ranks are half-integers."""
+    n = len(code)
+    order = np.lexsort((code, group))
+    g, c = group[order], code[order]
+    new_run = np.ones(n, dtype=bool)
+    new_run[1:] = (g[1:] != g[:-1]) | (c[1:] != c[:-1])
+    run_first = np.flatnonzero(new_run)
+    run_last = np.append(run_first[1:], n) - 1
+    run = np.cumsum(new_run) - 1
+    ranks = np.empty(n)
+    ranks[order] = ((run_first[run] + run_last[run]) / 2.0
+                    - group_start[g] + 1.0)
+    return ranks, np.add.reduceat(new_run.astype(np.int64), group_start)
+
+
+def _group_spearman(df: DataFrame, qid_col: str, pred_col: str,
+                    truth_col: str) -> tuple[list, np.ndarray, np.ndarray]:
+    """``(qids, sizes, rho)`` per query group, ``qids`` in Spark's order;
+    ``rho`` is NaN where the group is skipped (a constant side, which
+    includes a single candidate)."""
+    rows = df.select(qid_col, pred_col, truth_col).collect()
+    if not rows:
+        return [], np.zeros(0, dtype=np.int64), np.zeros(0)
+    qid, pred, truth = (_codes(list(col)) for col in zip(*rows))
+    order = np.lexsort((truth, pred, qid))
+    qid, pred, truth = qid[order], pred[order], truth[order]
+    first = np.ones(len(qid), dtype=bool)
+    first[1:] = qid[1:] != qid[:-1]
+    start = np.flatnonzero(first)
+    sizes = np.diff(np.append(start, len(qid)))
+    rp, distinct_p = _average_ranks(qid, pred, start)
+    rt, distinct_t = _average_ranks(qid, truth, start)
+    # the mean of a group's average ranks is (n + 1) / 2 whatever the
+    # ties, so deviations, their products and sums stay exact
+    mean = (sizes[qid] + 1) / 2.0
+    dp, dt = rp - mean, rt - mean
+    sxy = np.add.reduceat(dp * dt, start)
+    sxx = np.add.reduceat(dp * dp, start)
+    syy = np.add.reduceat(dt * dt, start)
+    valid = (distinct_p > 1) & (distinct_t > 1)
+    rho = np.full(len(start), np.nan)
+    rho[valid] = sxy[valid] / np.sqrt(sxx[valid] * syy[valid])
+    qids = [rows[i][0] for i in order[start]]
+    return qids, sizes, rho
+
+
 def spearman_by_group(df: DataFrame, qid_col: str = "qid",
                       pred_col: str = "score",
-                      truth_col: str = "exec_time_ms") -> DataFrame:
-    """``[qid, spearman]`` per query over its candidates (NULL when either
-    side is constant within the group).
+                      truth_col: str = "exec_time_ms"
+                      ) -> dict[object, float | None]:
+    """``{qid: rho}`` per query over its candidates; ``None`` when either
+    side is constant within the group (or it has one candidate).
 
-    Ties get AVERAGE ranks — ``rank() + (ties − 1)/2`` — the standard
-    Spearman treatment and what the reference's ``scipy.stats.spearmanr``
-    computes (``Lero/lero_test.py`` evaluation). This matters in
-    penalty-dense regimes (sf1 at the 90 s deadline): a bundle whose
-    candidates ALL saturate to the same timeout-penalty label carries no
-    ranking information, and average ranks make its truth side constant
-    ⇒ NULL corr ⇒ the group drops out of the mean, exactly like scipy's
-    NaN. The pre-round-10 ``row_number(truth, candidate_idx)`` ranking
-    instead manufactured a noise permutation from the arbitrary
-    candidate order and let it pollute the loss (measured: 80-bundle sf1
-    loss 1.48 "worse than random" while picks were oracle-exact)."""
-    w_pred = Window.partitionBy(qid_col).orderBy(pred_col)
-    w_true = Window.partitionBy(qid_col).orderBy(truth_col)
-    half = F.lit(1).cast("double") / F.lit(2)
-
-    def ties(w):
-        # peers of the current row: the rank's own spec narrowed to a
-        # zero-width RANGE frame, so rank and tie count share one Window
-        return F.count(F.lit(1)).over(
-            w.rangeBetween(Window.currentRow, Window.currentRow))
-
-    ranked = (df
-              .withColumn("__rp", F.rank().over(w_pred).cast("double")
-                          + (ties(w_pred) - 1) * half)
-              .withColumn("__rt", F.rank().over(w_true).cast("double")
-                          + (ties(w_true) - 1) * half))
-    # Pearson over the average ranks, assembled as covar / (sd·sd) with
-    # try_divide: a constant side has zero stddev, and try_divide turns
-    # that into NULL (scipy's NaN) instead of ANSI mode's DIVIDE_BY_ZERO
-    # error — F.corr itself throws under ANSI when either side is
-    # constant, which row_number ranks could never produce but average
-    # ranks deliberately do.
-    return (ranked.groupBy(qid_col)
-            .agg(F.try_divide(
-                F.covar_samp("__rp", "__rt"),
-                F.stddev_samp("__rp") * F.stddev_samp("__rt"))
-                .alias("spearman")))
+    Ties get AVERAGE ranks — the standard Spearman treatment and what the
+    reference's ``scipy.stats.spearmanr`` computes (``Lero/lero_test.py``
+    evaluation). This matters in penalty-dense regimes (sf1 at the 90 s
+    deadline): a bundle whose candidates ALL saturate to the same
+    timeout-penalty label carries no ranking information, and average
+    ranks make its truth side constant ⇒ no correlation ⇒ the group drops
+    out of the mean, exactly like scipy's NaN. The pre-round-10
+    ``row_number(truth, candidate_idx)`` ranking instead manufactured a
+    noise permutation from the arbitrary candidate order and let it
+    pollute the loss (measured: 80-bundle sf1 loss 1.48 "worse than
+    random" while picks were oracle-exact)."""
+    qids, _, rho = _group_spearman(df, qid_col, pred_col, truth_col)
+    return {q: None if math.isnan(r) else float(r)
+            for q, r in zip(qids, rho.tolist())}
 
 
 def ranking_loss(df: DataFrame, qid_col: str = "qid",
@@ -79,10 +135,11 @@ def ranking_loss(df: DataFrame, qid_col: str = "qid",
     every group is degenerate (constant on either side — e.g. a fully
     penalty-saturated sf1 batch), matching the reference's
     no-valid-groups return (``lero_test.py:145-147``)."""
-    row = (spearman_by_group(df, qid_col, pred_col, truth_col)
-           .agg(F.avg("spearman").alias("mean_rho")).collect()[0])
-    rho = row["mean_rho"]
-    return None if rho is None else 1.0 - rho
+    _, _, rho = _group_spearman(df, qid_col, pred_col, truth_col)
+    rho = rho[~np.isnan(rho)]
+    if not len(rho):
+        return None
+    return 1.0 - math.fsum(rho.tolist()) / len(rho)
 
 
 def selection_report(df: DataFrame, qid_col: str = "qid",
@@ -100,7 +157,7 @@ def selection_report(df: DataFrame, qid_col: str = "qid",
 
 def weighted_ranking_loss(df: DataFrame, qid_col: str = "qid",
                           pred_col: str = "score",
-                          truth_col: str = "exec_time_ms") -> float:
+                          truth_col: str = "exec_time_ms") -> float | None:
     """1 − candidate-count-weighted mean Spearman: each query group
     contributes in proportion to ``n_candidates − 1`` (its number of
     independent pairwise comparisons), so a 7-candidate query — where
@@ -112,12 +169,10 @@ def weighted_ranking_loss(df: DataFrame, qid_col: str = "qid",
     2–7 per query, where the reference's PG explorer pinned ~3).
     Degenerate (constant-side) groups are skipped, as in the reference.
     """
-    per_q = spearman_by_group(df, qid_col, pred_col, truth_col)
-    sizes = (df.groupBy(qid_col)
-             .agg((F.count(F.lit(1)) - 1).cast("double").alias("__w")))
-    row = (per_q.join(sizes, qid_col)
-           .where(F.col("spearman").isNotNull() & (F.col("__w") > 0))
-           .agg((F.sum(F.col("spearman") * F.col("__w"))
-                 / F.sum("__w")).alias("wrho")).collect()[0])
-    rho = row["wrho"]
-    return None if rho is None else 1.0 - rho
+    _, sizes, rho = _group_spearman(df, qid_col, pred_col, truth_col)
+    valid = ~np.isnan(rho)
+    if not valid.any():
+        return None
+    w = (sizes[valid] - 1).astype(float)
+    return 1.0 - (math.fsum((rho[valid] * w).tolist())
+                  / math.fsum(w.tolist()))

@@ -13,12 +13,18 @@ SURVEY §2.G):
   broadcast.
 - ``lsh_partition`` (``coreset.py:5-46``): MinHash over the *set of
   positive feature indices* of the standardized vector (the reference
-  binarizes exactly this way), via ``pyspark.ml.feature.MinHashLSH`` on a
-  sparse binary vector; bucket id = first hash value mod ``num_groups``.
-  Dividing by a positive std and then by a positive row norm keeps the sign
-  of ``v − mean``, so a standardized dimension is positive exactly when
-  ``v > mean``: the binarization runs JVM-side on the raw vector and needs
-  no standardized column.
+  binarizes exactly this way); bucket id = first hash value mod
+  ``num_groups``. Dividing by a positive std and then by a positive row
+  norm keeps the sign of ``v − mean``, so a standardized dimension is
+  positive exactly when ``v > mean``. The hash is one Spark SQL
+  expression on the raw vector, ``min over {i : v_i > mean_i} of
+  ((1 + i)·a + b) mod HASH_PRIME``: the first hash of
+  ``pyspark.ml.feature.MinHashLSH``'s first table, with ``(a, b)`` drawn
+  as MinHashLSH draws them from ``java.util.Random(seed)``. It needs no
+  vector column and no fitted model. A row with no dimension above the
+  mean (a one-row pool, identical rows) gets the min-hash ``HASH_PRIME``,
+  above every real hash, where MinHashLSH fails with "Must have at least
+  1 non zero entry".
 - ``greedy_k_center`` (``coreset.py:48-89``): per bucket, repeatedly pick
   the unlabeled point whose max cosine similarity to (labeled ∪ selected)
   is smallest. Greedy selection is sequential *within* a bucket by
@@ -70,35 +76,42 @@ def zscore_l2(mat: np.ndarray, means: np.ndarray,
     return z / norms
 
 
+#: MinHashLSH's modulus (``MinHashLSH.HASH_PRIME``); also the min-hash of
+#: an empty index set, above every real hash, so rows with no dimension
+#: above the mean share the bucket ``HASH_PRIME mod num_groups``
+HASH_PRIME = 2038074743
+
+
 def lsh_partition(df: DataFrame, means: np.ndarray,
                   vec_col: str = "embedding", num_groups: int = 16,
-                  num_hash_tables: int = 8, seed: int = 42,
-                  bucket_col: str = "bucket") -> DataFrame:
+                  seed: int = 42, bucket_col: str = "bucket") -> DataFrame:
     """Bucket rows by MinHash over their positive-dimension index set after
     standardization (``coreset.py:5-46``: MinHash of ``np.where(vec > 0)``),
-    i.e. over the dimensions where ``v > mean``."""
-    from pyspark.ml.feature import MinHashLSH
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    i.e. over the dimensions where ``v > mean``.
 
-    # binarize JVM-side — a higher-order function against a literal means
-    # array, not a Python UDF, so the whole pre-LSH stage stays in codegen.
-    # One SQL string rather than a lit() per dimension (each is a py4j
-    # call); repr() round-trips a double exactly, and the ``D`` suffix
-    # parses it as a double rather than a decimal
+    The bucket is ``pmod(min_{i : v_i > mean_i} ((1 + i)·a + b) mod P,
+    num_groups)`` with ``P = HASH_PRIME`` — equal to ``MinHashLSH(seed=
+    seed)``'s first hash mod ``num_groups``, since MinHashLSH hashes the
+    non-zero indices of the binarized vector the same way and draws its
+    first table's ``a = 1 + nextInt(P − 1)``, ``b = nextInt(P − 1)`` from
+    ``java.util.Random(seed)``. An empty index set hashes to ``P``."""
     if not np.isfinite(means).all():
         raise ValueError("embedding means must be finite")
+    rand = df.sparkSession._jvm.java.util.Random(int(seed))
+    a = 1 + rand.nextInt(HASH_PRIME - 1)
+    b = rand.nextInt(HASH_PRIME - 1)
+    # JVM-side — higher-order functions against a literal means array, not
+    # a Python UDF, so the hash never leaves the JVM. One SQL string rather
+    # than a lit() per dimension (each is a py4j call); repr() round-trips
+    # a double exactly, and the ``D`` suffix parses it as a double rather
+    # than a decimal. array_min skips the NULLs of dimensions at or below
+    # the mean, and is NULL when all are
     means_sql = ", ".join(f"{float(m)!r}D" for m in means)
-    binarized = F.expr(f"zip_with(`{vec_col}`, array({means_sql}), "
-                       "(v, m) -> IF(v > m, 1.0D, 0.0D))")
-    with_bin = df.withColumn("__bin", array_to_vector(binarized))
-    mh = MinHashLSH(inputCol="__bin", outputCol="__hashes",
-                    numHashTables=num_hash_tables, seed=seed)
-    hashed = mh.fit(with_bin).transform(with_bin)
-    first_hash = F.element_at(
-        vector_to_array(F.element_at(F.col("__hashes"), 1)), 1).cast("long")
-    return (hashed
-            .withColumn(bucket_col, F.pmod(first_hash, F.lit(num_groups)))
-            .drop("__bin", "__hashes"))
+    above = f"zip_with(`{vec_col}`, array({means_sql}), (v, m) -> v > m)"
+    min_hash = (f"array_min(transform({above}, (p, i) -> "
+                f"IF(p, ((1 + i) * {a}L + {b}L) % {HASH_PRIME}L, NULL)))")
+    return df.withColumn(bucket_col, F.expr(
+        f"pmod(coalesce({min_hash}, {HASH_PRIME}L), {int(num_groups)})"))
 
 
 def greedy_k_center(df: DataFrame, labeled: np.ndarray | None,

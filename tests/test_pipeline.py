@@ -158,8 +158,120 @@ def test_spearman_average_ranks_match_scipy(spark):
     rows = [("q0", i, s, t) for i, (s, t) in enumerate(zip(scores, truths))]
     df = spark.createDataFrame(
         rows, "qid string, candidate_idx int, score double, exec_time_ms double")
-    got = M.spearman_by_group(df).collect()[0]["spearman"]
+    got = M.spearman_by_group(df)["q0"]
     assert got == pytest.approx(want, abs=1e-9)
+
+
+def _spearman_by_group_ref(df):
+    """The window + ``covar_samp`` form the driver-side metrics replaced:
+    average ranks as ``rank() + (ties − 1)/2`` over a per-qid window, then
+    Pearson as ``try_divide(covar_samp, sd·sd)`` (NULL on a constant side
+    or a single candidate). Kept as the reference."""
+    from pyspark.sql.window import Window
+
+    w_pred = Window.partitionBy("qid").orderBy("score")
+    w_true = Window.partitionBy("qid").orderBy("exec_time_ms")
+    half = F.lit(1).cast("double") / F.lit(2)
+
+    def ties(w):
+        return F.count(F.lit(1)).over(
+            w.rangeBetween(Window.currentRow, Window.currentRow))
+
+    ranked = (df
+              .withColumn("__rp", F.rank().over(w_pred).cast("double")
+                          + (ties(w_pred) - 1) * half)
+              .withColumn("__rt", F.rank().over(w_true).cast("double")
+                          + (ties(w_true) - 1) * half))
+    return (ranked.groupBy("qid")
+            .agg(F.try_divide(
+                F.covar_samp("__rp", "__rt"),
+                F.stddev_samp("__rp") * F.stddev_samp("__rt"))
+                .alias("spearman"),
+                (F.count(F.lit(1)) - 1).cast("double").alias("__w")))
+
+
+def _ranking_losses_ref(df):
+    """``(ranking_loss, weighted_ranking_loss)`` of the reference form."""
+    row = (_spearman_by_group_ref(df)
+           .where(F.col("spearman").isNotNull() & (F.col("__w") > 0))
+           .agg(F.avg("spearman").alias("rho"),
+                (F.sum(F.col("spearman") * F.col("__w"))
+                 / F.sum("__w")).alias("wrho")).collect()[0])
+    return tuple(None if r is None else 1.0 - r
+                 for r in (row["rho"], row["wrho"]))
+
+
+def _metrics_frame(spark, seed):
+    """Random candidate frame covering every ranking edge case: ties on
+    both sides, constant-score and constant-truth groups, single-candidate
+    groups and one NaN score."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for q in range(40):
+        n = int(rng.integers(1, 8))
+        kind = q % 5
+        scores = rng.integers(0, 4, n).astype(float)  # ties
+        truths = rng.integers(0, 5, n) * 10.0
+        if kind == 1:
+            scores[:] = 2.5                            # constant score
+        elif kind == 2:
+            truths[:] = 180000.0                       # constant truth
+        elif kind == 3:
+            scores = rng.normal(size=n)                # no score ties
+        rows += [(f"q{q:02d}", i, float(s), float(t))
+                 for i, (s, t) in enumerate(zip(scores, truths))]
+    rows += [("qnan", 0, 1.0, 10.0), ("qnan", 1, float("nan"), 30.0),
+             ("qnan", 2, 2.0, 20.0), ("qone", 0, 3.0, 7.0)]
+    return spark.createDataFrame(
+        rows, "qid string, candidate_idx int, score double, "
+              "exec_time_ms double")
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_ranking_metrics_match_window_reference(spark, seed):
+    df = _metrics_frame(spark, seed)
+    want = {r["qid"]: r["spearman"]
+            for r in _spearman_by_group_ref(df).collect()}
+    got = M.spearman_by_group(df)
+    assert set(got) == set(want)
+    for q in want:
+        # the same skip decisions, and the same value where kept
+        assert (got[q] is None) == (want[q] is None), q
+        if want[q] is not None:
+            assert got[q] == pytest.approx(want[q], abs=1e-12), q
+    assert any(v is None for v in got.values())
+    # NaN ranks above every number, as Spark orders it: qnan is perfect
+    assert got["qnan"] == pytest.approx(1.0, abs=1e-12)
+    assert got["qone"] is None
+    loss, wloss = _ranking_losses_ref(df)
+    assert M.ranking_loss(df) == pytest.approx(loss, abs=1e-12)
+    assert M.weighted_ranking_loss(df) == pytest.approx(wloss, abs=1e-12)
+
+
+def test_ranking_metrics_none_decisions_match_reference(spark):
+    """Every group degenerate (constant side or single candidate): both
+    forms report ``None``."""
+    rows = [("q0", 0, 1.0, 5.0), ("q0", 1, 1.0, 9.0),
+            ("q1", 0, 2.0, 7.0), ("q1", 1, 3.0, 7.0),
+            ("q2", 0, float("nan"), 1.0)]
+    df = spark.createDataFrame(
+        rows, "qid string, candidate_idx int, score double, "
+              "exec_time_ms double")
+    assert _ranking_losses_ref(df) == (None, None)
+    assert M.spearman_by_group(df) == {"q0": None, "q1": None, "q2": None}
+    assert M.ranking_loss(df) is None
+    assert M.weighted_ranking_loss(df) is None
+
+
+def test_ranking_metrics_order_independent(spark):
+    """The same bits for a frame, its reversed rows and a repartition."""
+    df = _metrics_frame(spark, 3)
+    rev = spark.createDataFrame(df.collect()[::-1], df.schema)
+    forms = [df, rev, df.repartition(7)]
+    for fn in (M.spearman_by_group, M.ranking_loss,
+               M.weighted_ranking_loss):
+        got = [repr(fn(d)) for d in forms]
+        assert got[0] == got[1] == got[2], fn.__name__
 
 
 def test_plan_embeddings_udf(spark, trained):
@@ -260,6 +372,61 @@ def test_greedy_respects_labeled_matrix(spark):
     sel = CS.greedy_k_center(df, labeled, k_per_bucket=1,
                              stats=_ID2).collect()
     assert sel[0]["vec_id"] == 1
+
+
+@pytest.fixture(scope="module")
+def random_vectors(spark):
+    rng = np.random.default_rng(7)
+    rows = [(i, v.tolist()) for i, v in enumerate(rng.normal(size=(2000, 64)))]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("seed", [1, 4, 42])
+def test_lsh_partition_matches_minhashlsh(spark, random_vectors, seed):
+    """The SQL bucket equals ``pyspark.ml.feature.MinHashLSH``'s first
+    hash mod ``num_groups`` — the form it replaced, kept as the reference:
+    binarize ``v > mean``, fit MinHashLSH (8 tables) and read hash 1 of
+    table 1. ``num_groups`` above ``HASH_PRIME`` compares the raw hash."""
+    from pyspark.ml.feature import MinHashLSH
+    from pyspark.ml.functions import array_to_vector, vector_to_array
+
+    df = random_vectors
+    means, _ = CS.column_stats(df)
+    means_sql = ", ".join(f"{float(m)!r}D" for m in means)
+    binarized = F.expr(f"zip_with(embedding, array({means_sql}), "
+                       "(v, m) -> IF(v > m, 1.0D, 0.0D))")
+    with_bin = df.withColumn("__bin", array_to_vector(binarized))
+    mh = MinHashLSH(inputCol="__bin", outputCol="__hashes",
+                    numHashTables=8, seed=seed)
+    first_hash = F.element_at(
+        vector_to_array(F.element_at(F.col("__hashes"), 1)), 1).cast("long")
+    want = {r["vec_id"]: r["h"] for r in mh.fit(with_bin).transform(with_bin)
+            .select("vec_id", first_hash.alias("h")).collect()}
+    assert len(want) == 2000
+    for groups in (4, 8, 16, 2 ** 31 - 1):
+        got = {r["vec_id"]: r["bucket"] for r in
+               CS.lsh_partition(df, means, num_groups=groups, seed=seed)
+               .select("vec_id", "bucket").collect()}
+        assert got == {i: h % groups for i, h in want.items()}, groups
+
+
+@pytest.mark.parametrize("pool", [
+    [[1.0, 2.0]],                                  # one row
+    [[1.0, 2.0], [1.0, 2.0]],                      # identical rows
+    [[0.0, 4.0], [4.0, 0.0], [2.0, 2.0]],          # a row equal to the mean
+], ids=["one_row", "identical", "mean_row"])
+def test_coreset_select_degenerate_pools(spark, pool):
+    """A row with no dimension above the pool mean has an empty index set:
+    it gets the min-hash ``HASH_PRIME`` (MinHashLSH raised "Must have at
+    least 1 non zero entry") and selection still returns rows."""
+    df = spark.createDataFrame(list(enumerate(pool)),
+                               "vec_id long, embedding array<double>")
+    means, _ = CS.column_stats(df)
+    buckets = CS.lsh_partition(df, means, num_groups=8).collect()
+    assert CS.HASH_PRIME % 8 in {r["bucket"] for r in buckets}
+    sel = CS.coreset_select(df, k_per_bucket=len(pool),
+                            num_groups=8).collect()
+    assert sorted(r["vec_id"] for r in sel) == list(range(len(pool)))
 
 
 def test_coreset_labeled_standardized_like_pool(spark):
