@@ -76,10 +76,17 @@ def select_next_batch(spark: SparkSession, model: LeroModelPairWise,
             labeled_mat = np.stack([np.array(r["embedding"]) for r in lemb])
 
     k_per_bucket = max(1, round(k / num_groups))
-    sel = coreset_select(emb, k_per_bucket=k_per_bucket, labeled=labeled_mat,
-                         id_col="qid", vec_col="embedding",
-                         num_groups=num_groups, seed=seed)
-    return [r["qid"] for r in sel.collect()]
+    # coreset_select runs two jobs on ``emb`` (column stats, then the
+    # per-bucket selection); cached, each pool plan is embedded once
+    emb.cache()
+    try:
+        sel = coreset_select(emb, k_per_bucket=k_per_bucket,
+                             labeled=labeled_mat, id_col="qid",
+                             vec_col="embedding", num_groups=num_groups,
+                             seed=seed)
+        return [r["qid"] for r in sel.collect()]
+    finally:
+        emb.unpersist()
 
 
 def run_active_loop(spark: SparkSession, pool: list[tuple[str, str]],

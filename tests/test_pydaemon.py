@@ -127,3 +127,23 @@ def test_score_plans_from_another_working_directory(tmp_path):
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert proc.stdout.split()[-1] == "scored"
+
+
+def test_session_skips_dataframe_call_site_capture(spark, monkeypatch):
+    """``get_spark`` turns PySpark's DataFrame debugging off, so building a
+    query never records a Python call site (4-5 py4j round trips each)."""
+    import pyspark.errors.utils as errors_utils
+    from pyspark.sql import functions as F
+
+    conf = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(conf) == "false"
+    captured = []
+    real = errors_utils._capture_call_site
+    monkeypatch.setattr(errors_utils, "_capture_call_site",
+                        lambda depth: captured.append(depth) or real(depth))
+    # pyspark caches the conf per process; make it read this session's
+    monkeypatch.setattr(errors_utils, "_enable_debugging_cache", None)
+    left = spark.range(4).select(F.col("id"), (F.col("id") * 2).alias("x"))
+    right = spark.range(4).withColumn("y", F.col("id") + 1)
+    left.join(right, "id").filter(F.col("y") > 2).select("x", "y")
+    assert captured == []

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pandas as pd
 import pytest
 
 from tests.conftest import SF_SMALL
@@ -222,6 +223,46 @@ def test_active_learning_loop(spark):
     newly = set(out["history"][1])
     assert newly and newly <= {"p2", "p3", "p4", "p5"}
     assert out["labeled_qids"] == {"p0", "p1"} | newly
+
+
+def test_select_next_batch_embeds_each_pool_plan_once(spark, monkeypatch):
+    """``coreset_select`` runs two jobs on the pool embeddings; each pool
+    plan goes through the embedding UDF once, and nothing stays cached."""
+    from pyspark.sql import functions as F
+
+    from active_query_optimizer_spark.catalog import register_views
+    from active_query_optimizer_spark.model.lero import (
+        train_pairwise_from_bundles)
+    from active_query_optimizer_spark.pipelines import active
+    from active_query_optimizer_spark.plans.featurize import from_pg_json
+
+    register_views(spark, SF_SMALL)
+    plans = active.pool_default_plans(spark, TRAIN_QUERIES)
+    bundles = [(r["qid"], [(from_pg_json(r["plan_json"])[0], t)
+                           for t in (1.0, 2.0)])
+               for r in plans.collect()]
+    model = train_pairwise_from_bundles(bundles, epochs=1, seed=3)
+
+    embedded = spark.sparkContext.accumulator(0)
+    real = active.plan_embeddings
+
+    def counted(df, model):
+        @F.pandas_udf("string")
+        def tap(s: pd.Series) -> pd.Series:
+            embedded.add(len(s))
+            return s
+
+        # nondeterministic, so the optimizer cannot inline a second copy
+        tap = tap.asNondeterministic()
+        return real(df.withColumn("plan_json", tap("plan_json")), model)
+
+    monkeypatch.setattr(active, "plan_embeddings", counted)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    picked = active.select_next_batch(spark, model, TRAIN_QUERIES, k=2,
+                                      labeled_qids=set(), num_groups=2)
+    assert picked and set(picked) <= {q for q, _ in TRAIN_QUERIES}
+    assert embedded.value == len(TRAIN_QUERIES)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_stateful_running_totals_matches_batch_agg(spark, tmp_path):
