@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 
 from ..model.infer import plan_embeddings
 from ..model.lero import LeroModelPairWise, train_pairwise_from_bundles
-from ..plans.explore import label_workload, plan_variants
-from ..plans.featurize import to_pg_json
+from ..plans.explore import label_workload
+from ..plans.featurize import capture_plan, to_pg_json
 from ..select.coreset import coreset_select
 
 
@@ -40,10 +40,11 @@ def pool_default_plans(spark: SparkSession,
     representation the embeddings are computed from."""
     rows = []
     for qid, sql in pool:
-        cands = plan_variants(spark, sql, strategies=(),
-                              join_order_rotations=0, conf_variants=())
-        if cands:
-            rows.append((qid, to_pg_json(cands[0].plan)))
+        try:
+            tree = capture_plan(spark.sql(sql), executed=False)
+        except Exception:
+            continue  # a query Catalyst cannot plan has no default plan
+        rows.append((qid, to_pg_json(tree)))
     return spark.createDataFrame(rows, "qid string, plan_json string")
 
 

@@ -2,24 +2,28 @@
 
 The reference's test path scores each query's candidate plans and executes
 the argmin (``Lero/lero_test.py:82-112``); this module is that loop as an
-API: given SQL and a trained ranker, enumerate Spark hint variants
-(``plans/explore``), featurize each *un-executed* physical plan (estimates,
-no timing), score with the tree-conv net, and return/execute the winner.
+API: given SQL and a trained ranker, plan the explorer's forms
+(``plans/explore``) and, when the Catalyst extension is loaded, its mode
+forms (``plans/extension``) in one pass, featurize each *un-executed*
+physical plan (estimates, no timing), score with the tree-conv net, and
+return/execute the winner.
 
-Planning cost is a few Catalyst plan compilations + one tiny net forward —
-milliseconds against queries that run seconds; and unlike the labeling
-path, nothing here executes more than the chosen plan.
+Planning cost is one Catalyst plan compilation per form + one tiny net
+forward (a median 0.24 s for the explorer's forms at sf0.1, comparable to
+running the default plan); unlike the labeling path, nothing here
+executes more than the chosen plan.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Row, SparkSession
 
 from ..model.lero import LeroModel
 from ..plans.explore import (HINT_STRATEGIES, Candidate, _conf_overrides,
-                             plan_variants)
+                             plan_forms, variant_forms)
+from ..plans.extension import extension_forms
 
 
 def choose_plan(spark: SparkSession, sql: str, model: LeroModel,
@@ -33,17 +37,10 @@ def choose_plan(spark: SparkSession, sql: str, model: LeroModel,
     compiled Catalyst extension is loaded in this session, the injected
     rule's whole-plan modes AND its per-join-index strategy deviations
     (``plans/extension.py``, the reference's per-join-operator
-    granularity), deduplicated against the hint variants by plan
+    granularity), all planned in one pass and deduplicated by plan
     fingerprint: one ranker, every steering mechanism."""
-    cands = plan_variants(spark, sql, strategies)
-    from ..plans import extension as _ext
-    if _ext.is_extension_loaded(spark):
-        seen = {c.fingerprint for c in cands}
-        for c in (_ext.plan_mode_candidates(spark, sql)
-                  + _ext.per_join_candidates(spark, sql, seen=set(seen))):
-            if c.fingerprint not in seen:
-                seen.add(c.fingerprint)
-                cands.append(c)
+    cands = plan_forms(spark, variant_forms(sql, strategies)
+                       + extension_forms(spark, sql))
     if not cands:
         raise ValueError("query produced no plannable variants")
     assert model.fg is not None
@@ -54,9 +51,11 @@ def choose_plan(spark: SparkSession, sql: str, model: LeroModel,
 
 
 def run_optimized(spark: SparkSession, sql: str, model: LeroModel,
-                  strategies: tuple[str, ...] = HINT_STRATEGIES) -> DataFrame:
-    """Execute ``sql`` under the learned-best join-strategy hints (and the
-    candidate's session-conf knobs, when the winner is a conf variant)."""
+                  strategies: tuple[str, ...] = HINT_STRATEGIES) -> list[Row]:
+    """Run ``sql`` as the learned-best candidate and return its rows. The
+    action runs inside the candidate's session-conf overrides: Spark plans
+    a query at its action, so a DataFrame handed back from inside them
+    would run under the restored session conf, as Spark's default plan."""
     best, _ = choose_plan(spark, sql, model, strategies)
     with _conf_overrides(spark, best.conf):
-        return spark.sql(best.sql)
+        return spark.sql(best.sql).collect()

@@ -36,12 +36,13 @@ HINT_STRATEGIES = ("BROADCAST", "MERGE", "SHUFFLE_HASH", "SHUFFLE_REPLICATE_NL")
 #: Conf-knob exploration dimensions — the closest Spark analog of Lero's
 #: PG cardinality-scaling knobs (the Lero paper steers the native optimizer
 #: through its tuning GUCs; Spark's equivalents are the join-threshold and
-#: adaptive-execution switches). Each yields a candidate planned under a
+#: runtime-filter switches). Each yields a candidate planned under a
 #: temporarily overridden session conf; the override is re-applied when the
-#: candidate is executed/labeled.
+#: candidate is executed/labeled. Adaptive execution is no knob here: the
+#: fingerprint reads the pre-AQE ``sparkPlan``, which turning AQE off
+#: leaves unchanged, so that form always dedups away.
 CONF_VARIANTS: tuple[tuple[str, dict[str, str]], ...] = (
     ("nobroadcast", {"spark.sql.autoBroadcastJoinThreshold": "-1"}),
-    ("noaqe", {"spark.sql.adaptive.enabled": "false"}),
     # runtime bloom-filter join pushdown off: Spark injects a bloom
     # filter from the build side into the probe scan when stats look
     # favorable — whether that wins is data-dependent, i.e. exactly the
@@ -170,29 +171,32 @@ def reorder_from_clause(sql: str, rotation: int) -> str:
     return sql[:m.start(1)] + ", ".join(rotated) + sql[m.end(1):]
 
 
-def plan_variants(spark: SparkSession, sql: str,
-                  strategies: tuple[str, ...] = HINT_STRATEGIES,
-                  join_order_rotations: int = 2,
-                  conf_variants: tuple[tuple[str, dict[str, str]], ...]
-                  = CONF_VARIANTS) -> list[Candidate]:
-    """Distinct physical-plan candidates for one query: Catalyst default +
-    one variant per hint strategy applied to every relation + FROM-order
-    rotations (join-order exploration) + session-conf knob variants,
-    deduplicated by pre-execution plan fingerprint."""
+#: one planning form: (variant name, SQL text, session-conf overrides)
+Form = tuple[str, str, dict[str, str]]
+
+
+def variant_forms(sql: str,
+                  strategies: tuple[str, ...] = HINT_STRATEGIES) -> list[Form]:
+    """The explorer's forms of one query: Catalyst default + one variant
+    per hint strategy applied to every relation + two FROM-order rotations
+    (join-order exploration) + session-conf knob variants."""
     aliases = sorted(extract_aliases(sql))
+    return ([("default", sql, {})] +
+            [(s.lower(), with_hint(sql, s, aliases), {}) for s in strategies] +
+            [(f"rot{r}", reorder_from_clause(sql, r), {}) for r in (1, 2)] +
+            [(name, sql, conf) for name, conf in CONF_VARIANTS])
+
+
+def plan_forms(spark: SparkSession, forms: list[Form]) -> list[Candidate]:
+    """Plan each form under its conf overrides (not executed) and keep the
+    first candidate per pre-execution plan fingerprint, in form order. A
+    form Catalyst refuses to plan is skipped."""
     seen: set[str] = set()
     out: list[Candidate] = []
-    forms: list[tuple[str, str, dict[str, str]]] = (
-        [("default", sql, {})] +
-        [(s.lower(), with_hint(sql, s, aliases), {}) for s in strategies] +
-        [(f"rot{r}", reorder_from_clause(sql, r), {})
-         for r in range(1, join_order_rotations + 1)] +
-        [(name, sql, conf) for name, conf in conf_variants])
     for name, text, conf in forms:
         try:
             with _conf_overrides(spark, conf):
-                df = spark.sql(text)
-                tree = capture_plan(df, executed=False)
+                tree = capture_plan(spark.sql(text), executed=False)
         except Exception:
             continue  # hint form Catalyst refuses outright
         fp = plan_fingerprint(tree)
@@ -202,6 +206,14 @@ def plan_variants(spark: SparkSession, sql: str,
         out.append(Candidate(variant=name, sql=text, fingerprint=fp,
                              plan=tree, conf=conf))
     return out
+
+
+def plan_variants(spark: SparkSession, sql: str,
+                  strategies: tuple[str, ...] = HINT_STRATEGIES
+                  ) -> list[Candidate]:
+    """Distinct physical-plan candidates of ``variant_forms``, deduplicated
+    by pre-execution plan fingerprint."""
+    return plan_forms(spark, variant_forms(sql, strategies))
 
 
 #: a timed-out candidate is labeled at ``penalty * timeout`` ms — the

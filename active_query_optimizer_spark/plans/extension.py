@@ -1,4 +1,4 @@
-"""Learned plan choice through an injected Catalyst extension.
+"""Plan steering through an injected Catalyst extension.
 
 The reference's baseline description names "Catalyst optimizer extensions"
 as the Spark-native steering mechanism; hint rewriting (``plans/explore``)
@@ -20,19 +20,17 @@ The extension must be loaded at session creation
 on the driver classpath — ``configure_builder`` does both); mode flips are
 then per-query conf changes, no session restart. This is the same
 decision→knob flow as Lero steering PostgreSQL through its GUCs.
+``extension_forms`` lists a query's mode forms; ``pipelines.optimize.
+choose_plan`` plans them with the hint explorer's forms and ranks them all.
 """
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
+from pyspark.sql import SparkSession
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..model.lero import LeroModel
-from .explore import Candidate, _conf_overrides
-from .featurize import capture_plan, plan_fingerprint
+from .explore import Form
 
 EXTENSION_CLASS = "org.aqo.spark.LearnedJoinExtensions"
 MODE_KEY = "spark.learned.join.mode"
@@ -77,27 +75,6 @@ def is_extension_loaded(spark: SparkSession) -> bool:
         return False
 
 
-def plan_mode_candidates(spark: SparkSession, sql: str,
-                         modes: tuple[str, ...] = MODES) -> list[Candidate]:
-    """One candidate per extension mode (planned, not executed),
-    deduplicated by plan fingerprint — the extension-path analog of
-    ``plans.explore.plan_variants``."""
-    seen: set[str] = set()
-    out: list[Candidate] = []
-    for mode in modes:
-        conf = {MODE_KEY: mode}
-        with _conf_overrides(spark, conf):
-            df = spark.sql(sql)
-            tree = capture_plan(df, executed=False)
-        fp = plan_fingerprint(tree)
-        if fp in seen:
-            continue
-        seen.add(fp)
-        out.append(Candidate(variant=f"ext:{mode}", sql=sql,
-                             fingerprint=fp, plan=tree, conf=conf))
-    return out
-
-
 def count_joins(spark: SparkSession, sql: str) -> int:
     """Number of Join nodes in the optimized logical plan — the index
     space ``spark.learned.join.modes`` steers over."""
@@ -112,59 +89,18 @@ def count_joins(spark: SparkSession, sql: str) -> int:
     return walk(jplan)
 
 
-def per_join_candidates(spark: SparkSession, sql: str,
-                        strategies: tuple[str, ...] = PER_JOIN_STRATEGIES,
-                        seen: set[str] | None = None) -> list[Candidate]:
-    """One candidate per (join index, strategy) single deviation — the
-    per-join analog of ``plan_mode_candidates``, matching the granularity
-    of the reference's candidate bundles (strategy chosen per join
-    operator). Single deviations keep the space linear (n_joins × 3) while
-    still letting the ranker pick e.g. broadcast for join 0 and merge for
-    join 1 across *separate* candidates; the realized-plan fingerprint
-    dedups assignments Catalyst maps to the same physical plan."""
-    seen = set() if seen is None else seen
-    out: list[Candidate] = []
-    n = count_joins(spark, sql)
-    for i in range(n):
-        for s in strategies:
-            spec = f"{i}:{s}"
-            conf = {MODES_KEY: spec}
-            with _conf_overrides(spark, conf):
-                df = spark.sql(sql)
-                tree = capture_plan(df, executed=False)
-            fp = plan_fingerprint(tree)
-            if fp in seen:
-                continue
-            seen.add(fp)
-            out.append(Candidate(variant=f"ext-join:{spec}", sql=sql,
-                                 fingerprint=fp, plan=tree, conf=conf))
-    return out
-
-
-def choose_mode(spark: SparkSession, sql: str, model: LeroModel,
-                modes: tuple[str, ...] = MODES,
-                per_join: bool = True,
-                ) -> tuple[Candidate, list[tuple[Candidate, float]]]:
-    """Score each extension mode's plan with the tree-conv ranker; return
-    the predicted-cheapest candidate plus all scored ones. With
-    ``per_join`` (default) the mode space is enlarged from the coarse
-    whole-plan modes to per-join-index strategy deviations."""
-    cands = plan_mode_candidates(spark, sql, modes)
-    if per_join:
-        have = {c.fingerprint for c in cands}
-        cands.extend(per_join_candidates(spark, sql, seen=have))
-    if not cands:
-        raise ValueError("query produced no plannable extension candidates")
-    assert model.fg is not None
-    trees = [model.fg.transform_tree(c.plan) for c in cands]
-    scores = model.predict(trees)
-    best = int(np.argmin(scores))
-    return cands[best], list(zip(cands, [float(s) for s in scores]))
-
-
-def run_optimized(spark: SparkSession, sql: str,
-                  model: LeroModel) -> DataFrame:
-    """Execute ``sql`` under the learned-best extension mode."""
-    best, _ = choose_mode(spark, sql, model)
-    with _conf_overrides(spark, best.conf):
-        return spark.sql(best.sql)
+def extension_forms(spark: SparkSession, sql: str) -> list[Form]:
+    """The extension's planning forms of ``sql`` (none when the extension
+    is not loaded in this session): one per whole-plan mode, then one per
+    (join index, strategy) single deviation — the per-join granularity of
+    the reference's candidate bundles (strategy chosen per join operator).
+    Single deviations keep the space linear (n_joins × 3) while still
+    letting the ranker pick e.g. broadcast for join 0 and merge for join 1
+    across *separate* candidates; ``explore.plan_forms`` plans them and
+    drops assignments Catalyst maps to an already-kept plan."""
+    if not is_extension_loaded(spark):
+        return []
+    specs = [f"{i}:{s}" for i in range(count_joins(spark, sql))
+             for s in PER_JOIN_STRATEGIES]
+    return ([(f"ext:{mode}", sql, {MODE_KEY: mode}) for mode in MODES] +
+            [(f"ext-join:{spec}", sql, {MODES_KEY: spec}) for spec in specs])

@@ -64,8 +64,18 @@ spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
 # learned choice through the extension: mode candidates are plan-distinct,
 # a fitted ranker picks one, and run_optimized executes under its conf
+from active_query_optimizer_spark.pipelines.optimize import (
+    choose_plan, run_optimized)
+from active_query_optimizer_spark.plans.explore import plan_forms
+
+def ext_candidates(sql, prefix):
+    # the extension's forms of sql whose variant starts with prefix,
+    # planned and deduplicated on their own
+    return plan_forms(spark, [f for f in XT.extension_forms(spark, sql)
+                              if f[0].startswith(prefix)])
+
 spark.conf.set(XT.MODE_KEY, "off")
-cands = XT.plan_mode_candidates(spark, plain)
+cands = ext_candidates(plain, "ext:")
 assert len(cands) >= 2, [c.variant for c in cands]
 assert len({c.fingerprint for c in cands}) == len(cands)
 
@@ -76,10 +86,10 @@ fg.fit([c.plan for c in cands])
 model = LeroModel(fg)
 model.fit([fg.transform_tree(c.plan) for c in cands],
           [float(i + 1) for i in range(len(cands))], epochs=5)
-best, scored = XT.choose_mode(spark, plain, model)
+best, scored = choose_plan(spark, plain, model)
 assert len(scored) >= len(cands)  # per-join deviations join the space
 assert {c.fingerprint for c in cands} <= {c.fingerprint for c, _ in scored}
-rows = XT.run_optimized(spark, plain, model).collect()
+rows = run_optimized(spark, plain, model)
 assert rows[0][0] > 0
 # the mode override did not leak into the session
 assert spark.conf.get(XT.MODE_KEY) == "off"
@@ -98,8 +108,8 @@ spark.conf.unset(XT.MODES_KEY)
 assert strat == ["BroadcastHashJoin", "ShuffledHashJoin"], strat
 
 # the learned ranker scores the enlarged per-join space end-to-end
-mode_cands2 = XT.plan_mode_candidates(spark, two)
-pj = XT.per_join_candidates(spark, two)
+mode_cands2 = ext_candidates(two, "ext:")
+pj = ext_candidates(two, "ext-join:")
 assert pj and all(c.variant.startswith("ext-join:") for c in pj)
 all_plans = [c.plan for c in mode_cands2 + pj]
 from active_query_optimizer_spark.plans.featurize import FeatureGenerator as FG2
@@ -108,15 +118,14 @@ fg2.fit(all_plans)
 m2 = LeroModel(fg2)
 m2.fit([fg2.transform_tree(p) for p in all_plans],
        [float(i + 1) for i in range(len(all_plans))], epochs=5)
-best2, scored2 = XT.choose_mode(spark, two, m2)
+best2, scored2 = choose_plan(spark, two, m2)
 assert any(c.variant.startswith("ext-join:") for c, _ in scored2), (
     [c.variant for c, _ in scored2])
-assert XT.run_optimized(spark, two, m2).collect()[0][0] > 0
+assert run_optimized(spark, two, m2)[0][0] > 0
 assert spark.conf.get(XT.MODES_KEY, None) in (None, "")
 
 # unified candidate space: with the extension loaded, choose_plan scores
 # hint variants AND extension modes together (deduped by fingerprint)
-from active_query_optimizer_spark.pipelines.optimize import choose_plan
 _, all_scored = choose_plan(spark, plain, model)
 variants = {c.variant for c, _ in all_scored}
 assert any(v.startswith("ext:") for v in variants), variants

@@ -197,9 +197,46 @@ def test_learned_plan_choice_runs_best_variant(spark):
     best, scored = choose_plan(spark, sql, model)
     assert len(scored) >= 2
     assert best.fingerprint in {c.fingerprint for c, _ in scored}
-    got = run_optimized(spark, sql, model).collect()[0][0]
+    got = run_optimized(spark, sql, model)[0][0]
     expect = spark.sql(sql).collect()[0][0]
     assert got == expect
+
+
+def _last_execution_plan(spark) -> str:
+    """Physical-plan text of the session's most recent SQL execution, from
+    the SQL status store (AQE-final once the execution has finished)."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).physicalPlanDescription()
+
+
+def test_run_optimized_runs_conf_winner_under_its_conf(spark, monkeypatch):
+    """A conf-knob winner runs under its conf. Spark plans a query at its
+    action, so ``run_optimized`` runs the action inside the candidate's
+    overrides: with the ``nobroadcast`` candidate chosen, the executed join
+    is a sort-merge join, although the session's threshold broadcasts
+    ``nation``, and the threshold is back to its old value afterwards."""
+    from active_query_optimizer_spark.catalog import register_views
+    from active_query_optimizer_spark.pipelines import optimize
+    from active_query_optimizer_spark.plans import explore as EX
+
+    register_views(spark, SF_SMALL)
+    sql = ("SELECT COUNT(*) FROM customer c JOIN nation n "
+           "ON c.c_nationkey = n.n_nationkey")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.sql(sql).collect()
+    assert "BroadcastHashJoin" in _last_execution_plan(spark)
+
+    [nobroadcast] = EX.plan_forms(spark, [
+        f for f in EX.variant_forms(sql) if f[0] == "nobroadcast"])
+    assert nobroadcast.conf == {key: "-1"}
+    monkeypatch.setattr(optimize, "choose_plan",
+                        lambda *a, **k: (nobroadcast, [(nobroadcast, 0.0)]))
+    rows = optimize.run_optimized(spark, sql, model=None)
+    plan = _last_execution_plan(spark)
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, plan
+    assert spark.conf.get(key) == before
+    assert rows == spark.sql(sql).collect()
 
 
 def test_connected_components_deep_chain_converges_logarithmically(spark):

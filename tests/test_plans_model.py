@@ -446,32 +446,84 @@ def test_join_order_rotation_variants(spark):
     # rotated SQL is still the same query
     assert spark.sql(rot1).collect() == spark.sql(sql).collect()
     # rotations widen the distinct-candidate set beyond hints alone
-    only_hints = EX.plan_variants(spark, sql, join_order_rotations=0)
-    with_rots = EX.plan_variants(spark, sql, join_order_rotations=2)
+    only_hints = EX.plan_forms(spark, [f for f in EX.variant_forms(sql)
+                                       if not f[0].startswith("rot")])
+    with_rots = EX.plan_variants(spark, sql)
     assert len(with_rots) >= len(only_hints)
     assert any(c.variant.startswith("rot") for c in with_rots)
+    assert len({c.fingerprint for c in with_rots}) == len(with_rots)
 
 
 def test_conf_knob_variants_widen_candidates(spark):
     """SURVEY §7.3c / Lero knob analog: session-conf dimensions
-    (autoBroadcastJoinThreshold, AQE) add genuinely distinct plans and
-    the overrides never leak out of planning."""
+    (autoBroadcastJoinThreshold, runtime bloom filter) add genuinely
+    distinct plans and the overrides never leak out of planning."""
     from active_query_optimizer_spark.catalog import register_views
 
     register_views(spark, SF_SMALL)
     sql = ("SELECT COUNT(*) FROM customer c, nation n "
            "WHERE c.c_nationkey = n.n_nationkey")
     before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    no_knobs = EX.plan_variants(spark, sql, strategies=(),
-                                join_order_rotations=0, conf_variants=())
-    with_knobs = EX.plan_variants(spark, sql, strategies=(),
-                                  join_order_rotations=0)
+    # the default form plus the conf forms: no hints, no rotations
+    forms = [f for f in EX.variant_forms(sql, strategies=())
+             if not f[0].startswith("rot")]
+    no_knobs = EX.plan_forms(spark, [f for f in forms if not f[2]])
+    with_knobs = EX.plan_forms(spark, forms)
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
     assert len(with_knobs) > len(no_knobs)  # -1 threshold forces a non-
     assert any(c.variant == "nobroadcast" and c.conf for c in with_knobs)
     # broadcast join plan distinct from the default broadcast one
     fps = {c.fingerprint for c in with_knobs}
     assert len(fps) == len(with_knobs)
+
+
+def _join_fp(join: str, *tables: str) -> str:
+    """Fingerprint of a COUNT(*)/GROUP BY over a left-deep chain of
+    ``join`` nodes scanning ``tables`` in order."""
+    tree = f"Seq Scan[{tables[0]}]()"
+    for t in tables[1:]:
+        tree = f"{join}[]({tree},Seq Scan[{t}]())"
+    return f"Aggregate[](Aggregate[]({tree}))"
+
+
+#: ``plan_variants``' (variant, fingerprint) lists for three sf0.001 joins:
+#: a change to how forms are listed or planned must not move a candidate
+_PINNED_VARIANTS = [
+    ("SELECT COUNT(*) FROM customer c, nation n "
+     "WHERE c.c_nationkey = n.n_nationkey",
+     [("default", _join_fp("Hash Join", "customer", "nation")),
+      ("merge", _join_fp("Merge Join", "customer", "nation")),
+      ("shuffle_replicate_nl", _join_fp("Nested Loop", "customer", "nation")),
+      ("rot1", _join_fp("Hash Join", "nation", "customer"))]),
+    ("SELECT COUNT(*) FROM lineitem l, orders o, customer c "
+     "WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey "
+     "AND l.l_quantity > 10",
+     [("default", _join_fp("Hash Join", "lineitem", "orders", "customer")),
+      ("merge", _join_fp("Merge Join", "lineitem", "orders", "customer")),
+      ("shuffle_replicate_nl",
+       _join_fp("Nested Loop", "lineitem", "orders", "customer")),
+      ("rot1", _join_fp("Hash Join", "orders", "customer", "lineitem")),
+      ("rot2", _join_fp("Hash Join", "customer", "orders", "lineitem"))]),
+    ("SELECT n.n_name, COUNT(*) FROM supplier s, nation n, region r "
+     "WHERE s.s_nationkey = n.n_nationkey AND n.n_regionkey = r.r_regionkey "
+     "AND r.r_name = 'ASIA' GROUP BY n.n_name",
+     [("default", _join_fp("Hash Join", "supplier", "nation", "region")),
+      ("merge", _join_fp("Merge Join", "supplier", "nation", "region")),
+      ("shuffle_replicate_nl",
+       _join_fp("Nested Loop", "supplier", "nation", "region")),
+      ("rot1", _join_fp("Hash Join", "nation", "region", "supplier")),
+      ("rot2", _join_fp("Hash Join", "region", "nation", "supplier"))]),
+]
+
+
+def test_plan_variants_pinned_candidates(spark):
+    from active_query_optimizer_spark.catalog import register_views
+
+    register_views(spark, SF_SMALL)
+    for sql, expect in _PINNED_VARIANTS:
+        got = [(c.variant, c.fingerprint)
+               for c in EX.plan_variants(spark, sql)]
+        assert got == expect, sql
 
 
 def test_label_query_realized_strategies(spark):
