@@ -21,7 +21,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -49,27 +49,34 @@ def _rebuild(state: dict) -> LeroModel:
     return model
 
 
+def _net_column(df: DataFrame, model: LeroModel, plan_col: str,
+                out_col: str, embed: bool) -> DataFrame:
+    """Append the net's output for each plan-JSON row: the pooled
+    embedding when ``embed``, else the score. One Arrow-batched UDF body
+    serves both."""
+    b_state = df.sparkSession.sparkContext.broadcast(_model_state(model))
+
+    @F.pandas_udf("array<double>" if embed else "double")
+    def _apply(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        local = _rebuild(b_state.value)
+        for s in batches:
+            if s.empty:
+                yield pd.Series([], dtype=object if embed else float)
+                continue
+            trees = [local.fg.transform_tree(from_pg_json(p)[0])
+                     for p in s]
+            scores, emb = local.net.forward(*prepare_trees(trees))
+            yield (pd.Series(list(np.asarray(emb, dtype=float))) if embed
+                   else pd.Series(np.asarray(scores, dtype=float)))
+
+    return df.withColumn(out_col, _apply(F.col(plan_col)))
+
+
 def score_plans(df: DataFrame, model: LeroModel,
                 plan_col: str = "plan_json",
                 score_col: str = "score") -> DataFrame:
     """Append ``score_col`` = learned cost of each plan-JSON row."""
-    spark = df.sparkSession
-    b_state = spark.sparkContext.broadcast(_model_state(model))
-
-    @F.pandas_udf("double")
-    def _score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        local = _rebuild(b_state.value)
-        for s in batches:
-            if s.empty:
-                yield pd.Series([], dtype=float)
-                continue
-            trees = [local.fg.transform_tree(from_pg_json(p)[0])
-                     for p in s]
-            feats, idx, nn = prepare_trees(trees)
-            scores, _ = local.net.forward(feats, idx, nn)
-            yield pd.Series(np.asarray(scores, dtype=float))
-
-    return df.withColumn(score_col, _score(F.col(plan_col)))
+    return _net_column(df, model, plan_col, score_col, embed=False)
 
 
 def plan_embeddings(df: DataFrame, model: LeroModel,
@@ -77,23 +84,7 @@ def plan_embeddings(df: DataFrame, model: LeroModel,
                     emb_col: str = "embedding") -> DataFrame:
     """Append the 64-d pooled plan embedding (feeds coreset selection —
     reference ``lero_train.py:224-241``)."""
-    spark = df.sparkSession
-    b_state = spark.sparkContext.broadcast(_model_state(model))
-
-    @F.pandas_udf("array<double>")
-    def _embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        local = _rebuild(b_state.value)
-        for s in batches:
-            if s.empty:
-                yield pd.Series([], dtype=object)
-                continue
-            trees = [local.fg.transform_tree(from_pg_json(p)[0])
-                     for p in s]
-            feats, idx, nn = prepare_trees(trees)
-            _, emb = local.net.forward(feats, idx, nn)
-            yield pd.Series(list(np.asarray(emb, dtype=float)))
-
-    return df.withColumn(emb_col, _embed(F.col(plan_col)))
+    return _net_column(df, model, plan_col, emb_col, embed=True)
 
 
 def choose_best(df: DataFrame, qid_col: str = "qid",

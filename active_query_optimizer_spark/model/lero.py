@@ -6,8 +6,8 @@ Rebuilds ``Lero/model.py:128-319`` and ``Lero/lero_train.py:26-73``:
 - ``LeroModelPairWise`` — the reference's main mode: for each query's
   candidate set, all ordered pairs (i, j), label ``1.0 if t_i >= t_j``,
   loss = BCE(sigmoid(s_i − s_j), label) (``model.py:267-299``); a single
-  shared net scores both sides, so the pair gradient is
-  ``(p − y)`` into side 1 and ``−(p − y)`` into side 2;
+  shared net scores both sides in one batch, so one backward pass takes
+  the pair gradient ``(p − y)`` into side 1 and ``−(p − y)`` into side 2;
 - rank-score label variants (rank², rank⁴, eʳᵃⁿᵏ — ``lero_train.py:43-73``)
   via ``compute_rank_scores``.
 
@@ -25,7 +25,8 @@ import os
 
 import numpy as np
 
-from ..plans.featurize import FeatureGenerator, PlanNode, VecNode, prepare_trees
+from ..plans.featurize import (FeatureGenerator, FlatTree, PlanNode,
+                                prepare_trees)
 from .tcnn import Adam, LeroNet
 
 
@@ -49,7 +50,7 @@ class LeroModel:
             self.net = LeroNet(self.fg.input_feature_dim, seed=self._seed)
         return self.net
 
-    def fit(self, trees: list[VecNode], labels: list[float],
+    def fit(self, trees: list[FlatTree], labels: list[float],
             epochs: int = 100, batch_size: int = 64, lr: float = 1e-3,
             seed: int = 0) -> list[float]:
         """Returns per-epoch mean losses. Defaults mirror the reference
@@ -64,9 +65,9 @@ class LeroModel:
             total, nb = 0.0, 0
             for s in range(0, len(order), batch_size):
                 sel = order[s:s + batch_size]
-                feats, idx, nn = prepare_trees([trees[i] for i in sel])
                 net.zero_grad()
-                scores, _ = net.forward(feats, idx, nn)
+                scores, _ = net.forward(
+                    *prepare_trees([trees[i] for i in sel]))
                 diff = scores - y[sel]
                 total += float((diff ** 2).mean())
                 nb += 1
@@ -75,19 +76,13 @@ class LeroModel:
             losses.append(total / max(nb, 1))
         return losses
 
-    def predict(self, trees: list[VecNode]) -> np.ndarray:
-        net = self._ensure_net()
-        feats, idx, nn = prepare_trees(trees)
-        scores, _ = net.forward(feats, idx, nn)
-        return scores
+    def predict(self, trees: list[FlatTree]) -> np.ndarray:
+        return self._ensure_net().forward(*prepare_trees(trees))[0]
 
-    def embeddings(self, trees: list[VecNode]) -> np.ndarray:
+    def embeddings(self, trees: list[FlatTree]) -> np.ndarray:
         """64-d pooled plan embeddings (``lero_train.py:224-241`` —
         ``get_feaure`` (sic)); feeds coreset selection."""
-        net = self._ensure_net()
-        feats, idx, nn = prepare_trees(trees)
-        _, emb = net.forward(feats, idx, nn)
-        return emb
+        return self._ensure_net().forward(*prepare_trees(trees))[1]
 
     # ---- persistence (reference: torch state dict + joblib'd generator,
     #      ``model.py:100-126``; here: npz + json)
@@ -115,7 +110,7 @@ class LeroModel:
 class LeroModelPairWise(LeroModel):
     """Pairwise trainer (``Lero/model.py:216-319``)."""
 
-    def fit_pairs(self, x1: list[VecNode], x2: list[VecNode],
+    def fit_pairs(self, x1: list[FlatTree], x2: list[FlatTree],
                   y1: list[float], y2: list[float],
                   epochs: int = 100, batch_size: int = 64, lr: float = 1e-3,
                   seed: int = 0,
@@ -139,15 +134,11 @@ class LeroModelPairWise(LeroModel):
             total, nb = 0.0, 0
             for s in range(0, len(order), batch_size):
                 sel = order[s:s + batch_size]
-                f1, i1, n1 = prepare_trees([x1[i] for i in sel])
-                f2, i2, n2 = prepare_trees([x2[i] for i in sel])
                 net.zero_grad()
-                s1, _ = net.forward(f1, i1, n1)
-                # forward side 1 caches are overwritten by side 2's forward,
-                # so backprop side 1 first, then side 2
-                p_tmp = s1.copy()
-                s2, _ = net.forward(f2, i2, n2)
-                p = _sigmoid(p_tmp - s2)
+                # both sides in one batch: side 1 rows, then side 2 rows
+                s, _ = net.forward(*prepare_trees(
+                    [x1[i] for i in sel] + [x2[i] for i in sel]))
+                p = _sigmoid(s[:len(sel)] - s[len(sel):])
                 yb = labels[sel]
                 wb = w_all[sel]
                 eps = 1e-12
@@ -156,9 +147,7 @@ class LeroModelPairWise(LeroModel):
                                  ).mean())
                 nb += 1
                 g = wb * (p - yb) / len(sel)
-                net.backward(-g)        # side 2 (cached last)
-                _, _ = net.forward(f1, i1, n1)
-                net.backward(g)         # side 1 (re-forward to rebuild caches)
+                net.backward(np.concatenate([g, -g]))
                 opt.step()
             losses.append(total / max(nb, 1))
         return losses
@@ -246,11 +235,14 @@ def train_pairwise_from_bundles(
     times = [t for _, cands in bundles for _, t in cands]
     fg = FeatureGenerator().fit(plans, times)
     model = LeroModelPairWise(fg, seed=seed)
+    # featurize each plan once: the pretrain set and the pairs share trees
+    featurized = [[(fg.transform_tree(p), t) for p, t in cands]
+                  for _, cands in bundles]
     if pretrain_epochs > 0 and plans:
-        keep = [[(p, t) for p, t in cands
+        keep = [[(x, t) for x, t in cands
                  if pretrain_censor_ms is None or t < pretrain_censor_ms]
-                for _, cands in bundles]
-        p_plans = [p for cands in keep for p, _ in cands]
+                for cands in featurized]
+        p_trees = [x for cands in keep for x, _ in cands]
         p_times = [t for cands in keep for _, t in cands]
         if pretrain_mode == "latency":
             labels = [fg.label_norm.norm(t) for t in p_times]
@@ -262,14 +254,13 @@ def train_pairwise_from_bundles(
             # squash to the same unit scale the pointwise MSE expects
             mx = max(labels, default=0.0) or 1.0
             labels = [v / mx for v in labels]
-        if p_plans:
-            trees = [fg.transform_tree(p) for p in p_plans]
-            model.fit(trees, labels, epochs=pretrain_epochs, seed=seed)
+        if p_trees:
+            model.fit(p_trees, labels, epochs=pretrain_epochs, seed=seed)
     x1, x2, y1, y2 = [], [], [], []
-    for _, cands in bundles:
-        for (pa, ta), (pb, tb) in all_pairs(cands):
-            x1.append(fg.transform_tree(pa))
-            x2.append(fg.transform_tree(pb))
+    for cands in featurized:
+        for (xa, ta), (xb, tb) in all_pairs(cands):
+            x1.append(xa)
+            x2.append(xb)
             y1.append(fg.label_norm.norm(ta))
             y2.append(fg.label_norm.norm(tb))
     weights = None

@@ -10,18 +10,18 @@ driver-side numpy training is faster than any distributed scheme. Inference
 *is* distributed — the weights broadcast into a pandas UDF
 (``model/infer.py``).
 
-Packed layout. ``prepare_trees`` pads a batch to its largest tree;
-``LeroNet.forward`` packs it onto the real nodes before the first layer
-(:func:`pack`). The B trees' nodes become the rows of one ``(T+1, C)``
-matrix — T real nodes, tree after tree, preorder within a tree — whose
-row 0 is the zero row standing in for absent children, and each node's
-(self, left, right) triple holds *global* row indices into it. A tree
-convolution is then one fancy-index gather of the ``(T, 3·C_in)`` triples
-and one gemm with the ``(C_out, 3·C_in)`` weight — numerically the
+Packed layout. ``prepare_trees`` hands ``LeroNet.forward`` the batch
+packed on its real nodes: the B trees' nodes are the rows of one
+``(T+1, C)`` matrix — T real nodes, tree after tree, preorder within a
+tree — whose row 0 is the zero row standing in for absent children, and
+each node's (self, left, right) triple holds *global* row indices into it.
+A tree convolution is then one fancy-index gather of the ``(T, 3·C_in)``
+triples and one gemm with the ``(C_out, 3·C_in)`` weight — numerically the
 reference's stride-3 Conv1d over the gathered sequence (``tcnn.py:17-26``,
 ``util.py:64-111``) — and no work is spent on padding (on the benchmark's
-held-out batch the real nodes are a third of the padded columns). Every
-layer keeps row 0 at zero, so the triples stay valid through the stack.
+held-out batch the real nodes are a third of what the reference's padded
+batch holds). Every layer keeps row 0 at zero, so the triples stay valid
+through the stack.
 Per-tree statistics are segment reductions over each tree's contiguous
 row range (``np.add.reduceat`` / ``np.maximum.reduceat``).
 
@@ -59,20 +59,6 @@ class Segments:
     def sum(self, per_row: np.ndarray) -> np.ndarray:
         """(T,) → (B,) per-tree sums."""
         return np.add.reduceat(per_row, self.starts)
-
-
-def pack(feats: np.ndarray, idx: np.ndarray, n_nodes: np.ndarray
-         ) -> tuple[np.ndarray, np.ndarray, Segments]:
-    """Padded ``prepare_trees`` batch — feats (B, C, N+1), idx (B, 3N),
-    n_nodes (B,) — → (rows (T+1, C), triples (T, 3), segments)."""
-    seg = Segments(n_nodes)
-    B, C, n1 = feats.shape
-    real = np.arange(n1 - 1)[None, :] < seg.counts[:, None]       # (B, N)
-    rows = np.zeros((len(seg.ids) + 1, C))
-    rows[1:] = feats[:, :, 1:].transpose(0, 2, 1)[real]
-    # local node j ≥ 1 of tree b is global row starts[b] + j; 0 stays 0
-    glob = np.where(idx > 0, idx + seg.starts[:, None], 0)
-    return rows, glob.reshape(B, n1 - 1, 3)[real], seg
 
 
 class BinaryTreeConv:
@@ -249,9 +235,11 @@ class LeroNet:
         self.pool = DynamicPooling()
         self.head = [Linear(h3, 32, rng), LeakyReLU(), Linear(32, 1, rng)]
 
-    def forward(self, feats: np.ndarray, idx: np.ndarray,
+    def forward(self, rows: np.ndarray, tri: np.ndarray,
                 n_nodes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        x, tri, seg = pack(feats, idx, n_nodes)
+        """A ``prepare_trees`` batch: rows (T+1, C), triples (T, 3),
+        n_nodes (B,)."""
+        x, seg = rows, Segments(n_nodes)
         for layer in self.tree:
             x = layer.forward(x, tri, seg)
         emb = self.pool.forward(x, seg)

@@ -17,8 +17,11 @@ Rebuilds ``Lero/feature.py:10-255`` + ``Lero/TreeConvolution/util.py:19-157``
 - **binarization**: every unary node gets a zero-vector ``Unknown`` right
   child so stride-3 1-D convolution over (self,left,right) gathers is a
   tree convolution (``feature.py:203,211-212``; ``util.py:64-111``);
-- ``prepare_trees``: preorder-flatten with a zero row at index 0, build
-  (self,left,right) index triples, pad the batch (``util.py:113-157``).
+- ``transform_tree`` emits each plan flat: its node vectors in preorder
+  and 1-based local (self,left,right) index triples (``util.py:19-111``);
+  ``prepare_trees`` stacks a batch under one zero row and shifts each
+  tree's triples by its row offset, the packed batch ``LeroNet`` reads
+  (no padding, unlike ``util.py:113-157``).
 
 Scale note: featurization is embarrassingly parallel over plans (trees are
 ≤ ~50 nodes); the distributed path wraps ``FeatureGenerator.transform`` in a
@@ -252,6 +255,11 @@ def plan_fingerprint(tree: PlanNode) -> str:
 
 # ---------------------------------------------------------- featurization
 
+#: one featurized plan: (node vectors (n, C) in preorder, local 1-based
+#: (self, left, right) triples (n, 3)) — see ``transform_tree``
+FlatTree = tuple[np.ndarray, np.ndarray]
+
+
 class Normalizer:
     """``(log(x+1) − min) / (max − min)`` with inverse
     (``Lero/feature.py:161-179``)."""
@@ -314,30 +322,43 @@ class FeatureGenerator:
         return np.concatenate(
             [one_hot, rel_counts, [n.width, self.row_norm.norm(n.rows)]])
 
-    def transform_tree(self, tree: PlanNode) -> "VecNode":
-        """Vector tree with bottom-up relation multisets
-        (``feature.py:196-246``) and phantom Unknown right children for
-        unary nodes (``feature.py:211-212``)."""
+    def transform_tree(self, tree: PlanNode) -> FlatTree:
+        """Flat tree of ``(n, C)`` node vectors in preorder, with
+        bottom-up relation multisets (``feature.py:196-246``) and a
+        zero-vector phantom right child for every unary node
+        (``feature.py:211-212``), plus ``(n, 3)`` 1-based local
+        (self, left, right) triples, 0 for an absent child."""
         n_rel = len(self.relations) + 1  # +1 unknown slot
+        zero = np.zeros(self.input_feature_dim)
+        vecs: list[np.ndarray] = []
+        triples: list[tuple[int, int, int]] = []
 
-        def walk(n: PlanNode) -> tuple[VecNode, np.ndarray]:
+        def walk(n: PlanNode) -> np.ndarray:
+            me = len(vecs)
+            vecs.append(zero)           # set once the subtree is counted
+            triples.append((me + 1, 0, 0))
             rel_counts = np.zeros(n_rel)
             if n.relation:
                 rel_counts[self._rel_index.get(n.relation, n_rel - 1)] += 1
-            kids: list[VecNode] = []
+            kids: list[int] = []
             for c in n.children:
-                v, rc = walk(c)
-                kids.append(v)
-                rel_counts += rc
+                kids.append(len(vecs) + 1)
+                rel_counts += walk(c)
             if len(kids) == 1:  # binarize: phantom zero-feature right child
-                kids.append(VecNode(np.zeros(self.input_feature_dim), []))
-            return VecNode(self._node_vec(n, rel_counts), kids), rel_counts
+                kids.append(len(vecs) + 1)
+                vecs.append(zero)
+                triples.append((len(vecs), 0, 0))
+            if kids:
+                triples[me] = (me + 1, kids[0], kids[1])
+            vecs[me] = self._node_vec(n, rel_counts)
+            return rel_counts
 
-        return walk(tree)[0]
+        walk(tree)
+        return np.array(vecs), np.array(triples, dtype=np.int64)
 
     def transform(self, plans: list[PlanNode],
                   exec_times: list[float | None] | None = None
-                  ) -> tuple[list["VecNode"], list[float]]:
+                  ) -> tuple[list[FlatTree], list[float]]:
         trees = [self.transform_tree(p) for p in plans]
         assert self.label_norm is not None
         labels = [self.label_norm.norm(t) if t is not None else 0.0
@@ -364,54 +385,17 @@ class FeatureGenerator:
         return fg
 
 
-@dataclass
-class VecNode:
-    vec: np.ndarray
-    children: list["VecNode"]
+# ------------------------------------------------ flat trees → one batch
 
-
-# ------------------------------------------------- tree → padded tensors
-
-def _flatten_preorder(tree: VecNode) -> tuple[list[np.ndarray], list[tuple[int, int, int]]]:
-    """Preorder flatten + (self,left,right) index triples, 1-based with a
-    zero row at index 0 for missing children (``util.py:19-111``)."""
-    vecs: list[np.ndarray] = []
-    triples: list[tuple[int, int, int]] = []
-
-    def walk(n: VecNode) -> int:
-        idx = len(vecs) + 1  # 1-based; 0 is the zero row
-        vecs.append(n.vec)
-        triples.append((idx, 0, 0))
-        my = idx - 1
-        kids = [walk(c) for c in n.children]
-        if kids:
-            left = kids[0]
-            right = kids[1] if len(kids) > 1 else 0
-            triples[my] = (idx, left, right)
-        return idx
-
-    walk(tree)
-    return vecs, triples
-
-
-def prepare_trees(trees: list[VecNode]
+def prepare_trees(trees: list[FlatTree]
                   ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch of vector trees → (features (B, C, N+1), indexes (B, 3*N),
-    n_nodes (B,)) padded to the largest tree (``util.py:113-157``). Feature
-    row 0 is the zero vector; index 0 therefore gathers zeros for absent
-    children. ``n_nodes`` drives the real-node mask so padding never leaks
-    into normalization/pooling (see ``model.tcnn`` module docstring)."""
-    flat = [_flatten_preorder(t) for t in trees]
-    dim = flat[0][0][0].shape[0]
-    max_n = max(len(v) for v, _ in flat)
-    feats = np.zeros((len(trees), dim, max_n + 1))
-    idx = np.zeros((len(trees), 3 * max_n), dtype=np.int64)
-    n_nodes = np.zeros(len(trees), dtype=np.int64)
-    for b, (vecs, triples) in enumerate(flat):
-        for i, v in enumerate(vecs):
-            feats[b, :, i + 1] = v
-        tri = np.asarray(triples, dtype=np.int64)
-        # pad with (0,0,0) triples → they convolve the zero row
-        idx[b, : 3 * len(triples)] = tri.reshape(-1)
-        n_nodes[b] = len(vecs)
-    return feats, idx, n_nodes
+    """Batch of flat trees → (rows (T+1, C), triples (T, 3), n_nodes (B,)):
+    the T real nodes stacked tree after tree under a zero row 0, so index
+    0 gathers zeros for absent children, and each tree's triples shifted
+    by its row offset into global row indices (see ``model.tcnn``)."""
+    n_nodes = np.array([len(v) for v, _ in trees], dtype=np.int64)
+    offsets = np.repeat(np.cumsum(n_nodes) - n_nodes, n_nodes)[:, None]
+    local = np.concatenate([t for _, t in trees])
+    rows = np.concatenate([np.zeros((1, trees[0][0].shape[1]))]
+                          + [v for v, _ in trees])
+    return rows, np.where(local > 0, local + offsets, 0), n_nodes

@@ -58,23 +58,32 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
     return out.sort_values(by=list(out.columns), key=lambda s: s.map(repr)).reset_index(drop=True)
 
 
-def compare(spark_df, oracle_df: pd.DataFrame, name: str = "?") -> None:
-    sp = spark_df.toPandas()
-    assert sorted(sp.columns) == sorted(oracle_df.columns), (
-        f"{name}: column mismatch {sorted(sp.columns)} vs {sorted(oracle_df.columns)}")
-    assert len(sp) == len(oracle_df), (
-        f"{name}: row count {len(sp)} vs {len(oracle_df)}")
+def mismatch(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> str | None:
+    """Why ``spark_pdf`` differs from the oracle's frame — column names,
+    row count, per-column dtype family, then canonical values — or
+    ``None`` when they match."""
+    sp, du = spark_pdf, oracle_pdf
+    if sorted(sp.columns) != sorted(du.columns):
+        return f"column mismatch {sorted(sp.columns)} vs {sorted(du.columns)}"
+    if len(sp) != len(du):
+        return f"row count {len(sp)} vs {len(du)}"
     for col in sorted(sp.columns):
-        fa, fb = dtype_family(sp[col].dtype), dtype_family(oracle_df[col].dtype)
+        fa, fb = dtype_family(sp[col].dtype), dtype_family(du[col].dtype)
         # an all-NULL column may surface as object on one side — only flag
         # genuine int-vs-float / numeric-vs-object skew on non-empty data
-        if len(sp) and fa != "object" and fb != "object":
-            assert fa == fb, (
-                f"{name}: dtype-kind mismatch in column {col}: "
-                f"spark {sp[col].dtype} ({fa}) vs duckdb {oracle_df[col].dtype} ({fb})")
-    a, b = _canon(sp), _canon(oracle_df)
+        if len(sp) and fa != "object" and fb != "object" and fa != fb:
+            return (f"dtype-kind mismatch in column {col}: "
+                    f"spark {sp[col].dtype} ({fa}) vs duckdb "
+                    f"{du[col].dtype} ({fb})")
+    a, b = _canon(sp), _canon(du)
     for col in a.columns:
         av, bv = list(a[col]), list(b[col])
-        assert av == bv, (
-            f"{name}: value mismatch in column {col}:\n"
-            f" spark : {av[:5]}...\n duckdb: {bv[:5]}...")
+        if av != bv:
+            return (f"value mismatch in column {col}:\n"
+                    f" spark : {av[:5]}...\n duckdb: {bv[:5]}...")
+    return None
+
+
+def compare(spark_df, oracle_df: pd.DataFrame, name: str = "?") -> None:
+    why = mismatch(spark_df.toPandas(), oracle_df)
+    assert why is None, f"{name}: {why}"

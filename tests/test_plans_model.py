@@ -5,6 +5,8 @@ for the hand-written backprop."""
 from __future__ import annotations
 
 import json
+from collections import Counter
+from dataclasses import dataclass
 
 import numpy as np
 import pytest
@@ -46,12 +48,12 @@ def test_pg_json_roundtrip_and_binarize():
     fg = FZ.FeatureGenerator().fit([tree], [ms])
     # 15 ops + 2 relations + 1 unknown + width + rows
     assert fg.input_feature_dim == 15 + 2 + 1 + 2
-    vt = fg.transform_tree(tree)
+    vecs, tri = fg.transform_tree(tree)
     # unary Aggregate got a phantom right child (zero vector)
-    assert len(vt.children) == 2
-    assert not vt.children[1].vec.any()
+    assert tri[0, 1] > 0 and tri[0, 2] > 0
+    assert not vecs[tri[0, 2] - 1].any()
     # root relation multiset counts both scans
-    rel_slice = vt.vec[15:18]
+    rel_slice = vecs[0, 15:18]
     assert rel_slice.tolist() == [1.0, 1.0, 0.0]
 
 
@@ -61,9 +63,9 @@ def test_unknown_ops_and_relations_map_to_unknown_slots():
     assert tree.op == "Unknown"
     fg = FZ.FeatureGenerator().fit(
         [FZ.from_pg_json(json.dumps({"Plan": _pg_plan()}))[0]], [1.0])
-    vt = fg.transform_tree(tree)
-    assert vt.vec[FZ.OP_TYPES.index("Unknown")] == 1.0
-    assert vt.vec[15 + 1] == 1.0  # unknown-relation slot
+    vecs, _ = fg.transform_tree(tree)
+    assert vecs[0, FZ.OP_TYPES.index("Unknown")] == 1.0
+    assert vecs[0, 15 + 1] == 1.0  # unknown-relation slot
 
 
 def test_prepare_trees_shapes_and_indexes():
@@ -72,13 +74,16 @@ def test_prepare_trees_shapes_and_indexes():
     tree, _ = FZ.from_pg_json(json.dumps(plan))
     fg = FZ.FeatureGenerator().fit([tree], [1.0])
     trees, labels = fg.transform([tree, tree], [1.0, None])
-    feats, idx, n_nodes = FZ.prepare_trees(trees)
-    assert feats.shape == (2, fg.input_feature_dim, 4)  # 3 nodes + zero row
-    assert idx.shape == (2, 9)
+    rows, tri, n_nodes = FZ.prepare_trees(trees)
+    assert rows.shape == (7, fg.input_feature_dim)  # 2 x 3 nodes + zero row
+    assert tri.shape == (6, 3)
     assert n_nodes.tolist() == [3, 3]
     # root triple references children; zero row is all zeros
-    assert idx[0, :3].tolist() == [1, 2, 3]
-    assert not feats[0, :, 0].any()
+    assert tri[0].tolist() == [1, 2, 3]
+    assert not rows[0].any()
+    # the second tree's triples are shifted by its row offset
+    assert tri[3:].tolist() == [[4, 5, 6], [5, 0, 0], [6, 0, 0]]
+    assert (rows[4:] == rows[1:4]).all()
 
 
 def test_normalizer_inverse():
@@ -172,26 +177,28 @@ def test_segments_reject_empty_tree():
 def test_full_net_gradcheck_small():
     rng = np.random.default_rng(2)
     B, C, M = 2, 4, 3
-    feats = rng.normal(size=(B, C, M + 1))
-    feats[:, :, 0] = 0
-    idx = np.tile(np.array([[1, 2, 3, 2, 0, 0, 3, 0, 0]]), (B, 1))
+    rows = rng.normal(size=(B * M + 1, C))
+    rows[0] = 0
+    local = np.array([[1, 2, 3], [2, 0, 0], [3, 0, 0]])
+    tri = np.concatenate([np.where(local > 0, local + b * M, 0)
+                          for b in range(B)])
     n_nodes = np.array([M, M])
     net = tcnn.LeroNet(C, seed=3, hidden=(6, 5, 4))
 
     def loss():
-        s, _ = net.forward(feats, idx, n_nodes)
+        s, _ = net.forward(rows, tri, n_nodes)
         return float(s.sum())
 
     net.zero_grad()
-    net.forward(feats, idx, n_nodes)
+    net.forward(rows, tri, n_nodes)
     net.backward(np.ones(B))
     p, g = net.params()[0]  # first conv W
     assert np.allclose(g, _num_grad(loss, p), atol=1e-4)
 
 
 def test_scores_are_batch_invariant():
-    """Padding must not leak: a tree scores identically alone and batched
-    with a much larger tree (the distributed-scoring invariant)."""
+    """Batch mates must not leak: a tree scores identically alone and
+    batched with a much larger tree (the distributed-scoring invariant)."""
     small = FZ.PlanNode("Seq Scan", relation="a", rows=10, width=2)
     big = small
     for _ in range(6):
@@ -211,9 +218,85 @@ def test_scores_are_batch_invariant():
 
 # ------------------------------------------- packed vs padded parity
 
+@dataclass
+class _VecNode:
+    vec: np.ndarray
+    children: list
+
+
+def _ref_vec_tree(fg, tree):
+    """The object-tree transform the flat trees replaced, as a
+    reference: one ``_VecNode`` per plan node, a zero-vector phantom right
+    child under every unary node."""
+    n_rel = len(fg.relations) + 1
+
+    def walk(n):
+        rel_counts = np.zeros(n_rel)
+        if n.relation:
+            rel_counts[fg._rel_index.get(n.relation, n_rel - 1)] += 1
+        kids = []
+        for c in n.children:
+            v, rc = walk(c)
+            kids.append(v)
+            rel_counts += rc
+        if len(kids) == 1:
+            kids.append(_VecNode(np.zeros(fg.input_feature_dim), []))
+        return _VecNode(fg._node_vec(n, rel_counts), kids), rel_counts
+
+    return walk(tree)[0]
+
+
+def _ref_flatten(tree):
+    """Preorder vectors and 1-based (self, left, right) triples of a
+    ``_VecNode`` tree."""
+    vecs, triples = [], []
+
+    def walk(n):
+        idx = len(vecs) + 1
+        vecs.append(n.vec)
+        triples.append((idx, 0, 0))
+        kids = [walk(c) for c in n.children]
+        if kids:
+            triples[idx - 1] = (idx, kids[0], kids[1] if len(kids) > 1 else 0)
+        return idx
+
+    walk(tree)
+    return vecs, triples
+
+
+def _ref_padded(fg, plans):
+    """The padded batch the packed one replaced: (features (B, C, N+1)
+    with a zero column 0, indexes (B, 3N) padded with (0, 0, 0) triples,
+    n_nodes (B,))."""
+    flat = [_ref_flatten(_ref_vec_tree(fg, p)) for p in plans]
+    max_n = max(len(v) for v, _ in flat)
+    feats = np.zeros((len(plans), fg.input_feature_dim, max_n + 1))
+    idx = np.zeros((len(plans), 3 * max_n), dtype=np.int64)
+    n_nodes = np.zeros(len(plans), dtype=np.int64)
+    for b, (vecs, triples) in enumerate(flat):
+        for i, v in enumerate(vecs):
+            feats[b, :, i + 1] = v
+        idx[b, : 3 * len(triples)] = np.asarray(triples).reshape(-1)
+        n_nodes[b] = len(vecs)
+    return feats, idx, n_nodes
+
+
+def _ref_pack(feats, idx, n_nodes):
+    """The padded batch packed onto its real nodes, as the net once did
+    before its first layer: (rows (T+1, C), global triples (T, 3),
+    n_nodes)."""
+    B, C, n1 = feats.shape
+    starts = np.cumsum(n_nodes) - n_nodes
+    real = np.arange(n1 - 1)[None, :] < n_nodes[:, None]
+    rows = np.zeros((int(n_nodes.sum()) + 1, C))
+    rows[1:] = feats[:, :, 1:].transpose(0, 2, 1)[real]
+    glob = np.where(idx > 0, idx + starts[:, None], 0)
+    return rows, glob.reshape(B, n1 - 1, 3)[real], n_nodes
+
+
 def _padded_ref(net, feats, idx, n_nodes, dscore):
     """The padded forward/backward the packed net replaced, as a
-    reference: every layer runs on the (B, C, N+1) ``prepare_trees``
+    reference: every layer runs on the (B, C, N+1) ``_ref_padded``
     tensor with a real-node mask, ``dW`` is an einsum and the scatter is a
     per-sample ``np.add.at``. Uses ``net``'s weights; returns (scores,
     embeddings, gradients in ``net.params()`` order)."""
@@ -301,11 +384,9 @@ def _assert_close(got, want, rtol=1e-12):
     assert np.abs(got - want).max() <= rtol * max(np.abs(want).max(), 1e-300)
 
 
-@pytest.mark.parametrize("source", ["mixed", "label_cache"])
-def test_packed_net_matches_padded_reference(source):
-    """Scores, embeddings and every conv/head ``dW``/``db`` of the packed
-    net equal the padded reference's on batches whose trees differ in
-    size (a third of the padded columns are real on the cache batch)."""
+def _parity_plans(source):
+    """(plans, hidden widths): trees of mixed depth, or the first 64 plans
+    of the label cache (a third of the padded columns are real)."""
     if source == "mixed":
         plans = []
         for depth in (0, 1, 5, 2, 9, 3):
@@ -316,19 +397,41 @@ def test_packed_net_matches_padded_reference(source):
                 node = FZ.PlanNode("Hash Join", rows=50.0 + d, width=4,
                                    children=[node, kid])
             plans.append(node)
-        hidden = (8, 6, 4)
-    else:
-        plans = _cache_plans(64)
-        hidden = tcnn.LeroNet.HIDDEN
+        return plans, (8, 6, 4)
+    return _cache_plans(64), tcnn.LeroNet.HIDDEN
+
+
+@pytest.mark.parametrize("source", ["mixed", "label_cache"])
+def test_prepare_trees_matches_padded_then_packed_reference(source):
+    """Flat trees stacked by ``prepare_trees`` are bit-equal to the object
+    tree → flatten → pad → pack path they replaced: rows, triples and
+    node counts."""
+    plans, _ = _parity_plans(source)
     fg = FZ.FeatureGenerator().fit(plans, [1.0] * len(plans))
-    feats, idx, n_nodes = FZ.prepare_trees(
+    rows, tri, n_nodes = FZ.prepare_trees(
         [fg.transform_tree(p) for p in plans])
+    want_rows, want_tri, want_n = _ref_pack(*_ref_padded(fg, plans))
+    assert rows.dtype == want_rows.dtype and tri.dtype == want_tri.dtype
+    assert np.array_equal(rows, want_rows)
+    assert np.array_equal(tri, want_tri)
+    assert np.array_equal(n_nodes, want_n)
+
+
+@pytest.mark.parametrize("source", ["mixed", "label_cache"])
+def test_packed_net_matches_padded_reference(source):
+    """Scores, embeddings and every conv/head ``dW``/``db`` of the packed
+    net equal the padded reference's on batches whose trees differ in
+    size (a third of the padded columns are real on the cache batch)."""
+    plans, hidden = _parity_plans(source)
+    fg = FZ.FeatureGenerator().fit(plans, [1.0] * len(plans))
+    feats, idx, n_nodes = _ref_padded(fg, plans)
     assert len(set(n_nodes.tolist())) > 1
     net = tcnn.LeroNet(fg.input_feature_dim, seed=5, hidden=hidden)
     dscore = np.random.default_rng(6).normal(size=len(plans))
     want_s, want_e, want_g = _padded_ref(net, feats, idx, n_nodes, dscore)
     net.zero_grad()
-    scores, emb = net.forward(feats, idx, n_nodes)
+    scores, emb = net.forward(*FZ.prepare_trees(
+        [fg.transform_tree(p) for p in plans]))
     net.backward(dscore)
     _assert_close(scores, want_s)
     _assert_close(emb, want_e)
@@ -340,13 +443,13 @@ def test_packed_net_matches_padded_reference(source):
 
 # ------------------------------------------------------------ training
 
-def _synthetic_bundles(n_queries=30, seed=4):
+def _synthetic_bundles(n_queries=30, seed=4, depths=(1, 3)):
     """Bundles where deeper join trees are slower — a learnable signal."""
     rng = np.random.default_rng(seed)
     bundles = []
     for q in range(n_queries):
         cands = []
-        for depth in (1, 3):
+        for depth in depths:
             node = FZ.PlanNode("Seq Scan", relation="t1",
                                rows=float(rng.integers(10, 1000)), width=4)
             for _ in range(depth):
@@ -378,6 +481,101 @@ def test_pairwise_learns_to_rank(tmp_path):
     back = L.LeroModelPairWise.load(str(tmp_path / "m"))
     t0 = [model.fg.transform_tree(bundles[0][1][0][0])]
     assert np.allclose(back.predict(t0), model.predict(t0))
+
+
+def _pair_set(bundles):
+    """Featurized all-pairs of ``bundles``: (fg, x1, x2, y1, y2)."""
+    fg = FZ.FeatureGenerator().fit([p for _, c in bundles for p, _ in c],
+                                   [t for _, c in bundles for _, t in c])
+    x1, x2, y1, y2 = [], [], [], []
+    for _, cands in bundles:
+        for (pa, ta), (pb, tb) in L.all_pairs(cands):
+            x1.append(fg.transform_tree(pa))
+            x2.append(fg.transform_tree(pb))
+            y1.append(fg.label_norm.norm(ta))
+            y2.append(fg.label_norm.norm(tb))
+    return fg, x1, x2, y1, y2
+
+
+def _three_pass_grads(net, x1, x2, labels, weights, sel):
+    """The pairwise step the single pass replaced, as a reference: side 1
+    forward, side 2 forward, side 2 backward, then side 1 forward again
+    (side 2's forward overwrote its layer caches) and backward. Returns
+    the gradients in ``net.params()`` order."""
+    b1 = FZ.prepare_trees([x1[i] for i in sel])
+    b2 = FZ.prepare_trees([x2[i] for i in sel])
+    net.zero_grad()
+    s1, _ = net.forward(*b1)
+    s1 = s1.copy()
+    s2, _ = net.forward(*b2)
+    p = L._sigmoid(s1 - s2)
+    g = weights[sel] * (p - labels[sel]) / len(sel)
+    net.backward(-g)
+    net.forward(*b1)
+    net.backward(g)
+    return [grad.copy() for _, grad in net.params()]
+
+
+def test_pairwise_step_matches_three_pass_reference(monkeypatch):
+    """One ``fit_pairs`` batch — both sides in one forward, one backward
+    with ``[g, -g]`` — gives the conv and head ``dW``/``db`` of the
+    three-forward/two-backward step, up to gemm summation order."""
+    fg, x1, x2, y1, y2 = _pair_set(
+        _synthetic_bundles(n_queries=6, depths=(1, 2, 3)))
+    # each pair in both orders, so both labels occur
+    x1, x2, y1, y2 = x1 + x2, x2 + x1, y1 + y2, y2 + y1
+    weights = np.random.default_rng(8).uniform(0.2, 2.0, size=len(x1))
+    steps = []
+    # record the batch's gradients; skipping the update keeps the weights
+    monkeypatch.setattr(tcnn.Adam, "step", lambda self: steps.append(
+        [grad.copy() for _, grad in self.params]))
+    model = L.LeroModelPairWise(fg, seed=3)
+    model.fit_pairs(x1, x2, y1, y2, epochs=1, batch_size=len(x1), seed=9,
+                    weights=list(weights))
+    assert len(steps) == 1
+    labels = (np.asarray(y1) >= np.asarray(y2)).astype(float)
+    assert 0 < labels.sum() < len(labels)
+    sel = np.random.default_rng(9).permutation(len(x1))
+    want = _three_pass_grads(model.net, x1, x2, labels, weights, sel)
+    assert len(steps[0]) == len(want) == 10
+    # per layer (dW, db) within 1e-12 of the layer's largest magnitude: the
+    # output bias's gradient is zero, as the two sides cancel exactly
+    for k in range(0, len(want), 2):
+        scale = max(np.abs(want[k]).max(), np.abs(want[k + 1]).max())
+        assert scale > 0
+        for got, ref in zip(steps[0][k:k + 2], want[k:k + 2]):
+            assert np.abs(got - ref).max() <= 1e-12 * scale
+
+
+def _count_calls(monkeypatch, cls, attr, counts):
+    fn = cls.__dict__[attr]
+
+    def counted(*args, **kwargs):
+        counts[attr] += 1
+        return fn(*args, **kwargs)
+    monkeypatch.setattr(cls, attr, counted)
+
+
+def test_one_forward_and_backward_per_pairwise_batch(monkeypatch):
+    fg, x1, x2, y1, y2 = _pair_set(_synthetic_bundles(n_queries=5,
+                                                      depths=(1, 2, 3)))
+    counts = Counter()
+    for attr in ("forward", "backward"):
+        _count_calls(monkeypatch, tcnn.LeroNet, attr, counts)
+    assert len(x1) == 15
+    L.LeroModelPairWise(fg).fit_pairs(x1, x2, y1, y2, epochs=2,
+                                      batch_size=4)
+    assert counts == {"forward": 8, "backward": 8}  # 2 epochs x 4 batches
+
+
+def test_one_transform_per_plan_in_pairwise_training(monkeypatch):
+    """The pretrain set and the pairs reuse each plan's flat tree."""
+    bundles = _synthetic_bundles(n_queries=4, depths=(1, 2, 3))
+    counts = Counter()
+    _count_calls(monkeypatch, FZ.FeatureGenerator, "transform_tree", counts)
+    L.train_pairwise_from_bundles(bundles, epochs=1, pretrain_epochs=1,
+                                  pair_weighting="latency_delta")
+    assert counts["transform_tree"] == sum(len(c) for _, c in bundles) == 12
 
 
 def test_rank_scores():

@@ -94,18 +94,27 @@ def test_plan_roundtrip_and_binarization(seed, depth):
     assert ms == 12.5
     assert FZ.plan_fingerprint(back) == FZ.plan_fingerprint(tree)
     fg = FZ.FeatureGenerator().fit([tree], [1.0])
-    vt = fg.transform_tree(tree)
+    vecs, tri = fg.transform_tree(tree)
 
-    def check(v):
-        assert len(v.children) in (0, 2)  # strictly binarized
-        assert v.vec.shape == (fg.input_feature_dim,)
-        for c in v.children:
-            check(c)
+    def walk(n):
+        yield n
+        for c in n.children:
+            yield from walk(c)
 
-    check(vt)
-    feats, idx, n_nodes = FZ.prepare_trees([vt])
-    assert feats.shape[2] == n_nodes[0] + 1
-    assert (idx[0] <= n_nodes[0]).all()
+    n_plan = sum(1 for _ in walk(tree))
+    n_unary = sum(len(n.children) == 1 for n in walk(tree))
+    assert vecs.shape == (n_plan + n_unary, fg.input_feature_dim)
+    assert tri[:, 0].tolist() == list(range(1, len(vecs) + 1))
+    # strictly binarized: left and right are both 0 or both non-zero
+    assert ((tri[:, 1] > 0) == (tri[:, 2] > 0)).all()
+    # one phantom per unary node: a zero-vector leaf in a right slot
+    phantom = ~vecs.any(axis=1)
+    assert phantom.sum() == n_unary
+    assert set(np.flatnonzero(phantom) + 1) <= set(tri[:, 2].tolist())
+    assert not tri[phantom, 1:].any()
+    rows, idx, n_nodes = FZ.prepare_trees([(vecs, tri)])
+    assert rows.shape[0] == n_nodes[0] + 1
+    assert (idx <= n_nodes[0]).all()
 
 
 @settings(max_examples=15, deadline=None)

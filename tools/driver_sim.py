@@ -7,40 +7,18 @@ Usage: python tools/driver_sim.py [<query> ...]   (no names = every query)
 
 Exits non-zero when any checked query fails.
 """
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-import pandas as pd
 from pyspark.sql import SparkSession
 
 from active_query_optimizer_spark.catalog import TABLES
+from tests.oracle_util import mismatch
 
-FAM = {"i": "int", "u": "int", "f": "float", "b": "bool", "M": "dt", "m": "td"}
 sf = os.environ.get("SPARK_GRAFT_SIM_SF_DIR", "/root/testdata/sf0.01")
-
-
-def canon(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-
-    def norm(v):
-        if isinstance(v, float) and math.isnan(v):
-            return None
-        if hasattr(v, "tolist") and not isinstance(v, (str, bytes)):
-            t = v.tolist()
-            return tuple(t) if isinstance(t, list) else t
-        if v is pd.NaT or v is None:
-            return None
-        if isinstance(v, pd.Timestamp):
-            return v.to_pydatetime()
-        return v
-
-    out = df.apply(lambda c: c.map(norm))
-    return out.sort_values(
-        by=list(out.columns), key=lambda s: s.map(repr)).reset_index(drop=True)
 
 
 def check(spark, con, qs, osql, name, sf):
@@ -60,21 +38,10 @@ def check(spark, con, qs, osql, name, sf):
         print(f"  {name}: rows-only ({len(sp)})")
         return True, f"rows-only:{len(sp)}"
     du = con.execute(osql[name]).fetchdf()
-    ok = (sorted(sp.columns) == sorted(du.columns) and len(sp) == len(du))
-    why = "" if ok else f"shape {sp.shape} vs {du.shape}"
-    if ok and len(sp):  # typed hash: int-vs-float dtype skew is a driver FAIL
-        for c in sp.columns:
-            fa = FAM.get(sp[c].dtype.kind, "obj")
-            fb = FAM.get(du[c].dtype.kind, "obj")
-            if fa != "obj" and fb != "obj" and fa != fb:
-                ok = False
-                why = f"dtype {c}: {sp[c].dtype} vs {du[c].dtype}"
-                break
-    if ok:
-        a, b = canon(sp), canon(du)
-        ok = all(list(a[c]) == list(b[c]) for c in a.columns)
-        if not ok:
-            why = "values"
+    why = mismatch(sp, du)
+    ok = why is None
+    if not ok:
+        why = why.splitlines()[0]
     print(("  OK  " if ok else f"  FAIL[{why}]") + f" {name}")
     return ok, f"ok:{len(sp)}" if ok else f"FAIL:{why}"
 
