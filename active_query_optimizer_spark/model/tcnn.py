@@ -98,9 +98,12 @@ class BinaryTreeConv:
             return None
         dg = (dy @ self.W).reshape(len(tri), 3, self.c_in)
         dx = np.zeros(x_shape)
-        # scatter-add per triple slot: a row gathered twice accumulates both
+        # scatter per triple slot: within a slot every real row appears at
+        # most once (self is unique, a row has at most one parent), so the
+        # buffered add is exact there; only the zero row 0 repeats, and its
+        # gradient is never read (TreeLayerNorm.backward drops row 0)
         for k in range(3):
-            np.add.at(dx, tri[:, k], dg[:, k])
+            dx[tri[:, k]] += dg[:, k]
         return dx
 
     def params(self):

@@ -3,10 +3,10 @@
 The reference's test path scores each query's candidate plans and executes
 the argmin (``Lero/lero_test.py:82-112``); this module is that loop as an
 API: given SQL and a trained ranker, plan the explorer's forms
-(``plans/explore``) and, when the Catalyst extension is loaded, its mode
-forms (``plans/extension``) in one pass, featurize each *un-executed*
-physical plan (estimates, no timing), score with the tree-conv net, and
-return/execute the winner.
+(``plans/explore``) and, when the Catalyst extension is loaded, its
+per-join forms (``plans/extension``) in one pass, featurize each
+*un-executed* physical plan (estimates, no timing), score with the
+tree-conv net, and return/execute the winner.
 
 Planning cost is one Catalyst plan compilation per form + one tiny net
 forward (a median 0.24 s for the explorer's forms at sf0.1, comparable to
@@ -35,10 +35,10 @@ def choose_plan(spark: SparkSession, sql: str, model: LeroModel,
 
     The candidate space is hints + rotations + conf knobs — and, when the
     compiled Catalyst extension is loaded in this session, the injected
-    rule's whole-plan modes AND its per-join-index strategy deviations
-    (``plans/extension.py``, the reference's per-join-operator
-    granularity), all planned in one pass and deduplicated by plan
-    fingerprint: one ranker, every steering mechanism."""
+    rule's per-join-index strategy deviations (``plans/extension.py``, the
+    reference's per-join-operator granularity), all planned in one pass and
+    deduplicated by plan fingerprint: one ranker, every steering
+    mechanism."""
     cands = plan_forms(spark, variant_forms(sql, strategies)
                        + extension_forms(spark, sql))
     if not cands:

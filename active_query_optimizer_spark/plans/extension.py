@@ -5,22 +5,18 @@ as the Spark-native steering mechanism; hint rewriting (``plans/explore``)
 is the portable fallback. This module is the extension path: a compiled
 ``SparkSessionExtensionsProvider`` (``jvmext/src/org/aqo/spark/
 LearnedJoinExtensions.java``) injects a config-gated optimizer rule, and
-the Python side steers it per-query through ``spark.learned.join.mode``:
-
-- ``off``            — Catalyst untouched;
-- ``strip-hints``    — user join hints cleared (the learned optimizer owns
-  strategy choice);
-- ``force-broadcast`` / ``force-merge`` / ``force-shuffle-hash`` — the
-  named strategy requested for the build side of hint-less joins (the
-  learned decision applied without touching SQL, same strategy space as
-  the hint explorer).
+the Python side steers it per query through one conf,
+``spark.learned.join.modes = "idx:strategy,..."``: join ``idx`` (Join nodes
+numbered bottom-up) gets a ``broadcast`` / ``merge`` / ``shuffle-hash``
+hint on its build (right) side, without touching the SQL; unlisted joins
+are left as Catalyst planned them.
 
 The extension must be loaded at session creation
 (``spark.sql.extensions=org.aqo.spark.LearnedJoinExtensions`` with the jar
-on the driver classpath — ``configure_builder`` does both); mode flips are
-then per-query conf changes, no session restart. This is the same
+on the driver classpath — ``configure_builder`` does both); steering is
+then a per-query conf change, no session restart. This is the same
 decision→knob flow as Lero steering PostgreSQL through its GUCs.
-``extension_forms`` lists a query's mode forms; ``pipelines.optimize.
+``extension_forms`` lists a query's per-join forms; ``pipelines.optimize.
 choose_plan`` plans them with the hint explorer's forms and ranks them all.
 """
 
@@ -33,13 +29,10 @@ from pyspark.sql import SparkSession
 from .explore import Form
 
 EXTENSION_CLASS = "org.aqo.spark.LearnedJoinExtensions"
-MODE_KEY = "spark.learned.join.mode"
-MODES = ("off", "strip-hints", "force-broadcast", "force-merge",
-         "force-shuffle-hash")
-#: per-join steering conf (takes precedence over MODE_KEY in the rule):
-#: "idx:strategy,..." — indices number Join nodes bottom-up (transformUp
-#: order), matching the reference's per-join-operator candidate granularity
-#: (Lero/feature.py:12 encodes Hash/Merge/Nested-Loop per node).
+#: the rule's only steering conf: "idx:strategy,..." — indices number Join
+#: nodes bottom-up (transformUp order), matching the reference's
+#: per-join-operator candidate granularity (Lero/feature.py:12 encodes
+#: Hash/Merge/Nested-Loop per node).
 MODES_KEY = "spark.learned.join.modes"
 PER_JOIN_STRATEGIES = ("broadcast", "merge", "shuffle-hash")
 
@@ -91,16 +84,15 @@ def count_joins(spark: SparkSession, sql: str) -> int:
 
 def extension_forms(spark: SparkSession, sql: str) -> list[Form]:
     """The extension's planning forms of ``sql`` (none when the extension
-    is not loaded in this session): one per whole-plan mode, then one per
-    (join index, strategy) single deviation — the per-join granularity of
-    the reference's candidate bundles (strategy chosen per join operator).
-    Single deviations keep the space linear (n_joins × 3) while still
-    letting the ranker pick e.g. broadcast for join 0 and merge for join 1
-    across *separate* candidates; ``explore.plan_forms`` plans them and
-    drops assignments Catalyst maps to an already-kept plan."""
+    is not loaded in this session): one per (join index, strategy) single
+    deviation — the per-join granularity of the reference's candidate
+    bundles (strategy chosen per join operator). Single deviations keep the
+    space linear (n_joins × 3) while still letting the ranker pick e.g.
+    broadcast for join 0 and merge for join 1 across *separate* candidates;
+    ``explore.plan_forms`` plans them and drops assignments Catalyst maps
+    to an already-kept plan."""
     if not is_extension_loaded(spark):
         return []
-    specs = [f"{i}:{s}" for i in range(count_joins(spark, sql))
-             for s in PER_JOIN_STRATEGIES]
-    return ([(f"ext:{mode}", sql, {MODE_KEY: mode}) for mode in MODES] +
-            [(f"ext-join:{spec}", sql, {MODES_KEY: spec}) for spec in specs])
+    return [(f"ext-join:{i}:{s}", sql, {MODES_KEY: f"{i}:{s}"})
+            for i in range(count_joins(spark, sql))
+            for s in PER_JOIN_STRATEGIES]

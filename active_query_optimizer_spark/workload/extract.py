@@ -2,9 +2,9 @@
 
 Rebuilds the reference's workload analysis (``create_sql.py:12-92``
 free-form condition mining, ``pg.py:189-315`` alias extraction + conjunct
-classification, ``pg.py:317-364`` filter-column harvesting) with the same
-regex-first approach the reference uses (it mines join conditions with
-``\\w+\\.\\w+ = \\w+\\.\\w+``) — no SQL parser dependency.
+classification) with the same regex-first approach the reference uses (it
+mines join conditions with ``\\w+\\.\\w+ = \\w+\\.\\w+``) — no SQL parser
+dependency.
 
 Two execution shapes:
 - pure-Python helpers (``mine_conditions``, ``build_join_graph``) for
@@ -114,16 +114,6 @@ def build_join_graph(join_conds: list[tuple[str, str]]
         if (t1, c2, c1) not in graph[t2]:
             graph[t2].append((t1, c2, c1))
     return dict(graph)
-
-
-def filter_columns_by_table(sqls: list[str]) -> dict[str, set[str]]:
-    """Workload-wide ``{table: {filter columns}}`` (reference
-    ``pg.py:317-364``) — feeds the restricted stats harvest."""
-    out: dict[str, set[str]] = defaultdict(set)
-    for sql in sqls:
-        for table, col in mine_conditions(sql)[1]:
-            out[table].add(col)
-    return dict(out)
 
 
 def count_distributions(sqls: list[str]) -> tuple[Counter, Counter]:

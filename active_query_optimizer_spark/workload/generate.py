@@ -22,7 +22,6 @@ parallel, no shuffle); the join graph and range_dict ride along as broadcast
 from __future__ import annotations
 
 import random
-from collections import Counter
 from collections.abc import Iterator
 
 import pandas as pd
@@ -310,7 +309,3 @@ def generate_workload(spark: SparkSession,
 
     return spark.range(num_sql).mapInPandas(gen, "id long, sql string")
 
-
-def empirical_populations(seeds: list[str]) -> tuple[Counter, Counter]:
-    """Expose the mined distributions (for tests / inspection)."""
-    return count_distributions(seeds)

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.plans.logical.BROADCAST$;
 import org.apache.spark.sql.catalyst.plans.logical.HintInfo;
 import org.apache.spark.sql.catalyst.plans.logical.Join;
 import org.apache.spark.sql.catalyst.plans.logical.JoinHint;
-import org.apache.spark.sql.catalyst.plans.logical.JoinHint$;
 import org.apache.spark.sql.catalyst.plans.logical.JoinStrategyHint;
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan;
 import org.apache.spark.sql.catalyst.plans.logical.SHUFFLE_HASH$;
@@ -24,33 +23,20 @@ import scala.runtime.BoxedUnit;
  * {@code SparkSessionExtensions} rule instead of SQL hint rewriting —
  * the "Catalyst optimizer extensions" approach named by the reference's
  * baseline description (the Python side scores candidates with the
- * tree-conv ranker and steers this rule through session confs; see
+ * tree-conv ranker and steers this rule through a session conf; see
  * {@code active_query_optimizer_spark/plans/extension.py}).
  *
- * Config-gated by {@code spark.learned.join.mode}:
- * <ul>
- *   <li>{@code off} (default) — no-op;</li>
- *   <li>{@code strip-hints} — clear user join-strategy hints from every
- *       Join node, returning strategy choice to Catalyst + the learned
- *       conf knobs (the learned optimizer overrides manual hints);</li>
- *   <li>{@code force-broadcast} / {@code force-merge} /
- *       {@code force-shuffle-hash} — request that strategy for every
- *       hint-less join (build side = right): the learned choice applied
- *       without touching query text, covering the same strategy space as
- *       the SQL-hint explorer.</li>
- * </ul>
- *
- * Per-join steering via {@code spark.learned.join.modes} (takes precedence
- * over the global mode when non-empty): a comma-separated
- * {@code index:strategy} list, e.g. {@code 0:broadcast,1:merge}. Indices
- * number every {@code Join} node in bottom-up (transformUp) visit order —
- * the same granularity as the reference's candidate bundles, which pick
- * Hash/Merge/Nested-Loop per join operator, not per plan. Strategies:
- * {@code broadcast | merge | shuffle-hash} (build side = right; append
- * {@code -left} to hint the left side), {@code none} (strip that join's
- * hint), {@code default} (leave untouched). The rewrite is idempotent —
- * a join already carrying the requested hint is returned unchanged — so
- * the rule is fixpoint-safe inside the operator-optimization batch.
+ * Config-gated by {@code spark.learned.join.modes} (empty or unset: no-op):
+ * a comma-separated {@code index:strategy} list, e.g.
+ * {@code 0:broadcast,1:merge}. Indices number every {@code Join} node in
+ * bottom-up (transformUp) visit order — the same granularity as the
+ * reference's candidate bundles, which pick Hash/Merge/Nested-Loop per join
+ * operator, not per plan. Strategies: {@code broadcast | merge |
+ * shuffle-hash}, requested on the build (right) side; the join's previous
+ * hint, a user's included, is replaced. Malformed or unknown entries are
+ * ignored, never failing a query. The rewrite is idempotent — a join
+ * already carrying the requested hint is returned unchanged — so the rule
+ * is fixpoint-safe inside the operator-optimization batch.
  *
  * Load with:
  * {@code spark.sql.extensions=org.aqo.spark.LearnedJoinExtensions} and
@@ -59,7 +45,6 @@ import scala.runtime.BoxedUnit;
  */
 public class LearnedJoinExtensions implements SparkSessionExtensionsProvider {
 
-    public static final String MODE_KEY = "spark.learned.join.mode";
     public static final String MODES_KEY = "spark.learned.join.modes";
 
     @Override
@@ -75,53 +60,37 @@ public class LearnedJoinExtensions implements SparkSessionExtensionsProvider {
     }
 
     /** Runs in the operator-optimization batch (after EliminateResolvedHint
-     *  folded user hints into {@link Join#hint()}, so both modes only need
-     *  to rewrite Join nodes). */
+     *  folded user hints into {@link Join#hint()}, so it only needs to
+     *  rewrite Join nodes). */
     public static class LearnedJoinStrategyRule extends Rule<LogicalPlan> {
 
+        /** The conf is "idx:strategy,idx:strategy,..."; joins are numbered
+         *  in transformUp (bottom-up, left-to-right) visit order, counting
+         *  EVERY Join node — hinted or not — so indices stay stable across
+         *  fixpoint re-applications. */
         @Override
         public LogicalPlan apply(LogicalPlan plan) {
-            String perJoin = conf().getConfString(MODES_KEY, "");
-            if (!perJoin.isEmpty()) {
-                return rewritePerJoin(plan, perJoin);
-            }
-            String mode = conf().getConfString(MODE_KEY, "off");
-            switch (mode) {
-                case "strip-hints":
-                    return rewriteJoins(plan, null);
-                case "force-broadcast":
-                    return rewriteJoins(plan, BROADCAST$.MODULE$);
-                case "force-merge":
-                    return rewriteJoins(plan, SHUFFLE_MERGE$.MODULE$);
-                case "force-shuffle-hash":
-                    return rewriteJoins(plan, SHUFFLE_HASH$.MODULE$);
-                default:
-                    return plan;
-            }
-        }
-
-        /** {@code spec} is "idx:strategy,idx:strategy,..."; joins are
-         *  numbered in transformUp (bottom-up, left-to-right) visit order,
-         *  counting EVERY Join node — hinted or not — so indices stay
-         *  stable across fixpoint re-applications. */
-        private static LogicalPlan rewritePerJoin(LogicalPlan plan,
-                                                  String spec) {
-            final java.util.Map<Integer, String> modes = new java.util.HashMap<>();
+            String spec = conf().getConfString(MODES_KEY, "");
+            final java.util.Map<Integer, JoinHint> hints =
+                new java.util.HashMap<>();
             for (String part : spec.split(",")) {
-                String p = part.trim();
-                if (p.isEmpty()) {
-                    continue;
-                }
-                int colon = p.indexOf(':');
-                if (colon <= 0) {
-                    continue;  // malformed entry: ignore, never fail a query
+                int colon = part.indexOf(':');
+                JoinStrategyHint strategy = colon < 0 ? null
+                    : strategyFor(part.substring(colon + 1).trim());
+                if (strategy == null) {
+                    continue;  // malformed or unknown entry: ignore
                 }
                 try {
-                    modes.put(Integer.parseInt(p.substring(0, colon).trim()),
-                              p.substring(colon + 1).trim());
+                    int index = Integer.parseInt(
+                        part.substring(0, colon).trim());
+                    hints.put(index, new JoinHint(Option.empty(), new Some<>(
+                        new HintInfo(new Some<>(strategy)))));
                 } catch (NumberFormatException e) {
                     // malformed index: ignore
                 }
+            }
+            if (hints.isEmpty()) {
+                return plan;
             }
             final int[] idx = {0};
             return (LogicalPlan) plan.transformUp(
@@ -134,30 +103,9 @@ public class LearnedJoinExtensions implements SparkSessionExtensionsProvider {
                     @Override
                     public LogicalPlan apply(LogicalPlan p) {
                         Join j = (Join) p;
-                        String token = modes.get(idx[0]++);
-                        if (token == null || token.equals("default")) {
-                            return j;
-                        }
-                        JoinHint newHint;
-                        if (token.equals("none")) {
-                            newHint = JoinHint$.MODULE$.NONE();
-                        } else {
-                            boolean left = token.endsWith("-left");
-                            String name = left
-                                ? token.substring(0, token.length() - 5)
-                                : token;
-                            JoinStrategyHint strategy = strategyFor(name);
-                            if (strategy == null) {
-                                return j;  // unknown token: leave untouched
-                            }
-                            Option<HintInfo> side =
-                                new Some<>(new HintInfo(new Some<>(strategy)));
-                            newHint = left
-                                ? new JoinHint(side, Option.empty())
-                                : new JoinHint(Option.empty(), side);
-                        }
-                        if (newHint.equals(j.hint())) {
-                            return j;  // idempotent: fixpoint-safe
+                        JoinHint newHint = hints.get(idx[0]++);
+                        if (newHint == null || newHint.equals(j.hint())) {
+                            return j;  // unsteered, or already steered
                         }
                         return j.copy(j.left(), j.right(), j.joinType(),
                                       j.condition(), newHint);
@@ -176,37 +124,6 @@ public class LearnedJoinExtensions implements SparkSessionExtensionsProvider {
                 default:
                     return null;
             }
-        }
-
-        /** strategy == null means strip hints; otherwise request that
-         *  strategy on the right (build) side of hint-less joins. */
-        private static LogicalPlan rewriteJoins(LogicalPlan plan,
-                                                JoinStrategyHint strategy) {
-            return (LogicalPlan) plan.transformUp(
-                new AbstractPartialFunction<LogicalPlan, LogicalPlan>() {
-                    @Override
-                    public boolean isDefinedAt(LogicalPlan p) {
-                        if (!(p instanceof Join)) {
-                            return false;
-                        }
-                        JoinHint h = ((Join) p).hint();
-                        boolean hasHint = !h.equals(JoinHint$.MODULE$.NONE());
-                        return strategy == null ? hasHint : !hasHint;
-                    }
-
-                    @Override
-                    public LogicalPlan apply(LogicalPlan p) {
-                        Join j = (Join) p;
-                        JoinHint newHint = strategy == null
-                            ? JoinHint$.MODULE$.NONE()
-                            : new JoinHint(
-                                Option.empty(),
-                                new Some<>(new HintInfo(
-                                    new Some<>(strategy))));
-                        return j.copy(j.left(), j.right(), j.joinType(),
-                                      j.condition(), newHint);
-                    }
-                });
         }
     }
 }

@@ -1,42 +1,12 @@
-"""Bucketed co-located joins: the ingest-time answer to the workload's
-biggest exchange (SCALE.md). The assertion is the whole point: the spine
-join over bucketed tables plans with NO Exchange."""
+"""The storage sinks and layout maintenance of ``sources/``: the curated
+publish sink (parquet, ORC, JSONL), sorted export, compaction, day-partition
+overwrite and JSONL corrupt-record quarantine. The bucketed co-located
+join is covered by
+``test_streaming_pipelines.py::test_bucketed_join_is_shuffle_free``."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from active_query_optimizer_spark.sources.bucketed import (bucketed_join,
-                                                           write_bucketed)
-
 from .conftest import SF_SMALL
-
-
-def test_bucketed_spine_join_has_no_exchange(spark):
-    lt = write_bucketed(spark, SF_SMALL, "lineitem", "l_orderkey", 8)
-    rt = write_bucketed(spark, SF_SMALL, "orders", "o_orderkey", 8)
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # at sf0.001 orders broadcasts, hiding the bucketed path; at 100 TB it
-    # cannot — disable auto-broadcast to assert the shape that matters there
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, lt, rt, "l_orderkey", "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        # same result as the plain-parquet join
-        from active_query_optimizer_spark.catalog import load_table
-        li = load_table(spark, SF_SMALL, "lineitem")
-        o = load_table(spark, SF_SMALL, "orders")
-        expected = li.join(o, li.l_orderkey == o.o_orderkey).count()
-        assert joined.count() == expected
-        # bucket pruning composes: a key-filtered read touches one bucket
-        one = (spark.table(lt).filter(F.col("l_orderkey") == 1)
-               .select(F.count(F.lit(1))).collect()[0][0])
-        assert one >= 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        spark.sql(f"DROP TABLE IF EXISTS {lt}")
-        spark.sql(f"DROP TABLE IF EXISTS {rt}")
 
 
 def test_curated_sink_round_trip_prunes_partitions(spark, tmp_path):

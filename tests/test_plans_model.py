@@ -121,9 +121,13 @@ def _packed_case(counts, C, rng):
 def test_treeconv_gradcheck():
     rng = np.random.default_rng(0)
     C = 3
-    x, seg = _packed_case([4, 3], C, rng)
+    x, seg = _packed_case([5, 3], C, rng)
     T = len(x) - 1
-    tri = rng.integers(0, T + 1, size=(T, 3))  # duplicates included
+    # (self, left, right) rows of two binary trees in preorder, as
+    # prepare_trees packs them; 0 is the zero row standing in for an
+    # absent child, whose gradient backward does not compute
+    tri = np.array([[1, 2, 5], [2, 3, 4], [3, 0, 0], [4, 0, 0], [5, 0, 0],
+                    [6, 7, 8], [7, 0, 0], [8, 0, 0]])
     conv = tcnn.BinaryTreeConv(C, 5, rng)
 
     def loss():
@@ -131,7 +135,7 @@ def test_treeconv_gradcheck():
 
     conv.forward(x, tri, seg)
     dx = conv.backward(np.ones((T + 1, 5)))
-    assert np.allclose(dx, _num_grad(loss, x), atol=1e-5)
+    assert np.allclose(dx[1:], _num_grad(loss, x)[1:], atol=1e-5)
     conv.dW[...] = 0
     conv.db[...] = 0
     conv.forward(x, tri, seg)
@@ -439,6 +443,35 @@ def test_packed_net_matches_padded_reference(source):
     assert len(got_g) == len(want_g) == 10
     for got, want in zip(got_g, want_g):
         _assert_close(got, want)
+
+
+def test_treeconv_scatter_matches_add_at_on_label_cache():
+    """``BinaryTreeConv.backward``'s buffered per-slot scatter equals
+    ``np.add.at`` on every real row of 400 label-cache plans: within a
+    triple slot a real row appears at most once; only the zero row 0
+    repeats, and its gradient is never read."""
+    plans = _cache_plans(400)
+    fg = FZ.FeatureGenerator().fit(plans, [1.0] * len(plans))
+    rows, tri, n_nodes = FZ.prepare_trees(
+        [fg.transform_tree(p) for p in plans])
+    assert (tri[:, 1:] == 0).any()
+    for k in range(3):
+        real = tri[:, k][tri[:, k] > 0]
+        assert len(np.unique(real)) == len(real)
+    net = tcnn.LeroNet(fg.input_feature_dim, seed=3)
+    net.forward(rows, tri, n_nodes)
+    rng = np.random.default_rng(8)
+    convs = [layer for layer in net.tree
+             if isinstance(layer, tcnn.BinaryTreeConv)]
+    for conv in convs:
+        dout = rng.normal(size=(len(tri) + 1, conv.c_out))
+        dout[0] = 0.0
+        dx = conv.backward(dout)
+        dg = (dout[1:] @ conv.W).reshape(len(tri), 3, conv.c_in)
+        want = np.zeros_like(dx)
+        for k in range(3):
+            np.add.at(want, tri[:, k], dg[:, k])
+        assert np.array_equal(dx[1:], want[1:])
 
 
 # ------------------------------------------------------------ training
