@@ -34,8 +34,8 @@ from ..model.lero import train_pairwise_from_bundles
 from ..pipelines.dynamic import (_as_bundles, _score_bundles,
                                  run_deployment)
 from ..plans.explore import (HINT_STRATEGIES, LABEL_TIMEOUT_PENALTY,
-                             Candidate, ZombieExecutionError, label_query,
-                             probe_default)
+                             Candidate, ZombieExecutionError)
+from ..plans.labelcache import cached_label_query
 from ..stats.harvester import harvest_range_dict
 from ..workload.extract import extract_aliases
 from ..workload.generate import generate_workload
@@ -180,53 +180,33 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
         print(f"labeling: q{r['id']} (kept {len(out)}/{num_queries})",
               file=sys.stderr, flush=True)
         try:
-            from ..plans.labelcache import _NOT_PREREAD
-
-            preread = _NOT_PREREAD
-            if probe_default_s is not None:
-                admits, preread = _probe_admits(
-                    spark, r["sql"], strategies, timeout_s, sf_dir,
-                    cache_dir, probe_default_s)
-                if not admits:
-                    skip_stats["probe_skipped"] += 1
-                    print(f"labeling: q{r['id']} probe-skipped (default > "
-                          f"{probe_default_s}s)", file=sys.stderr, flush=True)
-                    continue
-            if cache_dir is not None:
-                from ..plans.labelcache import cached_label_query
-
-                lookups += 1
-                # hit accounting comes from the cache itself (round-8
-                # advice: an under-budget poison marker that relabels
-                # live must count as a miss, not a hit)
-                cands, was_hit = cached_label_query(
-                    spark, r["sql"], strategies, timeout_s, sf_dir,
-                    cache_dir, preread=preread)
-                hits += was_hit
-            else:
-                cands = label_query(spark, r["sql"], strategies, timeout_s)
+            # hit accounting comes from the cache itself: an under-budget
+            # poison marker that relabels live is a miss
+            cands, was_hit = cached_label_query(
+                spark, r["sql"], strategies, timeout_s, sf_dir, cache_dir,
+                probe_default_s)
         except ZombieExecutionError as e:
             # one variant ignored the full cancellation escalation: the
             # query is poisoned — drop it for this run (the generator
             # over-samples 2x for exactly this kind of loss), tear the
             # JVM down so the runaway threads actually die, and move on.
-            # With the cache on, record a POISONED marker with a cross-run
-            # retry budget (round-6 advice: a transient machine condition
-            # must not exclude the query from every future round); only a
-            # repeat offender gets the permanent plan-collapse skip.
+            # With the cache on, the cache has recorded a POISONED marker
+            # with a cross-run retry budget (a transient machine condition
+            # must not exclude the query from every future run); an
+            # admitted query still counts as a lookup.
             print(f"WARNING: q{r['id']} poisoned ({e}); reviving session",
                   file=sys.stderr)
+            lookups += cache_dir is not None and e.admitted
             spark = _revive_spark(spark)
             register_views(spark, sf_dir)
-            if cache_dir is not None:
-                from ..plans.labelcache import bundle_key, record_poisoned
-
-                key = bundle_key(r["sql"], strategies, timeout_s, sf_dir)
-                n = record_poisoned(cache_dir, key, error=str(e),
-                                    sql=r["sql"])
-                print(f"WARNING: q{r['id']} poison attempts: {n}",
-                      file=sys.stderr)
             continue
+        if cands is None:
+            skip_stats["probe_skipped"] += 1
+            print(f"labeling: q{r['id']} probe-skipped (default > "
+                  f"{probe_default_s}s)", file=sys.stderr, flush=True)
+            continue
+        lookups += cache_dir is not None
+        hits += was_hit
         if len(cands) >= 2:
             if skip_saturated and timeout_s is not None and _is_saturated(
                     cands, timeout_s):
@@ -254,38 +234,6 @@ def _is_saturated(cands: list[Candidate], timeout_s: float) -> bool:
         c.timed_out if c.timed_out is not None
         else float(c.exec_time_ms) >= pen_ms
         for c in cands)
-
-
-def _probe_admits(spark: SparkSession, sql: str,
-                  strategies: tuple[str, ...], timeout_s: float | None,
-                  sf_dir: str, cache_dir: str | None,
-                  probe_s: float) -> tuple[bool, object]:
-    """Admission test for one generated query: ``(admits, preread)`` —
-    ``admits`` True = proceed to full labeling, ``preread`` is whatever
-    ``read_bundle`` returned here so the caller can hand it through to
-    ``cached_label_query`` instead of decompressing the bundle twice
-    (round-12 advice #4). Cached bundles and poison markers bypass the
-    probe (their admission was already paid for / is owned by the poison
-    budget); a never-seen query runs its default plan once under
-    ``probe_s`` and the outcome is cached — with its SQL, so the marker
-    survives future cache re-keys — when a cache is in use."""
-    from ..plans.labelcache import _NOT_PREREAD
-
-    if cache_dir is not None:
-        from ..plans.labelcache import (bundle_key, read_bundle,
-                                        read_probe, record_probe)
-
-        key = bundle_key(sql, strategies, timeout_s, sf_dir)
-        raw = read_bundle(cache_dir, key)
-        if raw is not None:
-            return True, raw  # full bundle or poison marker owns this query
-        marker = read_probe(cache_dir, key, probe_s)
-        if marker is not None:
-            return bool(marker["passed"]), raw
-        ms = probe_default(spark, sql, probe_s)
-        record_probe(cache_dir, key, probe_s, ms is not None, ms, sql=sql)
-        return ms is not None, raw
-    return probe_default(spark, sql, probe_s) is not None, _NOT_PREREAD
 
 
 def _split_eval(spark: SparkSession,

@@ -13,9 +13,8 @@ Rebuilds ``Lero/model.py:128-319`` and ``Lero/lero_train.py:26-73``:
 
 Training is driver-local numpy (corpora are ≤ a few thousand plans — the
 reference trains 2511 pairs in ~3 CPU-minutes; this net is the same size).
-Pair *construction* at scale is a Spark self-join on qid
-(``pipelines/stable.py``); scoring at scale is a pandas UDF
-(``model/infer.py``).
+Pairs are built on the driver too (``all_pairs`` over each query's
+bundle); scoring at scale is a pandas UDF (``model/infer.py``).
 """
 
 from __future__ import annotations
@@ -176,22 +175,6 @@ def compute_rank_scores(times: list[float], mode: str = "rank") -> list[float]:
     if mode == "exp_rank":
         return np.exp(order.astype(float)).tolist()
     raise ValueError(f"unknown rank mode {mode}")
-
-
-def pretrain_on_cost(bundles: list[tuple[str, list[PlanNode]]],
-                     epochs: int = 50, seed: int = 0) -> LeroModel:
-    """Pretraining mode: pointwise fit on the *optimizer's cost estimate*
-    instead of measured runtime (``lero_train.py:49-52,91-94`` — useful
-    before any labels exist; the Spark analog labels with CBO cost /
-    estimated cardinality). Plans must carry ``total_cost`` (PG bundles
-    do; Spark plans can use the root cardinality estimate)."""
-    plans = [p for _, cands in bundles for p in cands]
-    costs = [p.total_cost if p.total_cost is not None else 0.0 for p in plans]
-    fg = FeatureGenerator().fit(plans, costs)
-    model = LeroModel(fg, seed=seed)
-    trees, labels = fg.transform(plans, costs)
-    model.fit(trees, labels, epochs=epochs, seed=seed)
-    return model
 
 
 def train_pairwise_from_bundles(

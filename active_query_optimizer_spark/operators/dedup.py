@@ -945,33 +945,6 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_shared")))
 
 
-def dedup_incremental(new_docs: DataFrame, store: DataFrame,
-                      lane: str = "content") -> tuple[DataFrame, DataFrame]:
-    """Incremental ingest dedup: dedup a NEW batch against itself, then
-    anti-join its fingerprints against the already-published store — the
-    shape a daily pipeline actually runs (the corpus-wide groupBy runs
-    once at bootstrap; every day after, only the delta is hashed and only
-    (fp_a, fp_b) pairs are compared against the store).
-
-    Returns ``(fresh, updated_store)``: ``fresh`` is the new batch's
-    survivors whose content is genuinely unseen; ``updated_store`` is the
-    store with their fingerprints appended (write it back with
-    ``sources.maintenance.write_day_partitions``-style incremental
-    publish, or let the caller union-dedup periodically).
-
-    Scale: the store never rescans its documents — it IS the fingerprint
-    table (16 bytes + doc_id per distinct content); the join is
-    fp-to-fp. At 100 TB the store is bucketed by fp so the daily
-    anti-join co-locates without a shuffle of the store side."""
-    surv = fingerprint_survivors(new_docs, lane=lane)
-    fresh_fps = surv.join(store.select("fp_a", "fp_b"),
-                          ["fp_a", "fp_b"], "left_anti")
-    fresh = new_docs.join(fresh_fps.select("doc_id"), "doc_id", "left_semi")
-    updated = store.select("fp_a", "fp_b").unionByName(
-        fresh_fps.select("fp_a", "fp_b"))
-    return fresh, updated
-
-
 #: integer PageRank: rank scale (1e6), damping 0.85, fixed 5 iterations —
 #: every update is integer arithmetic (`//`), so the trajectory is exact
 #: and identical in any engine; truncation loss is deterministic

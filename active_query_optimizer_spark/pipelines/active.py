@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..model.infer import plan_embeddings
@@ -33,11 +33,16 @@ from ..plans.featurize import capture_plan, to_pg_json
 from ..select.coreset import coreset_select
 
 
+#: schema of the ``(qid, plan_json)`` rows ``pool_default_plans`` returns
+_PLAN_ROWS = "qid string, plan_json string"
+
+
 def pool_default_plans(spark: SparkSession,
-                       pool: list[tuple[str, str]]) -> DataFrame:
-    """Each pool query's Catalyst-default plan as a bundle row
-    ``[qid, plan_json]`` — the cheap (un-executed, estimate-based)
-    representation the embeddings are computed from."""
+                       pool: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Each pool query's Catalyst-default plan as a driver-side bundle row
+    ``(qid, plan_json)`` — the cheap (un-executed, estimate-based)
+    representation the embeddings are computed from. The plans do not
+    depend on the model, so the active loop captures them once."""
     rows = []
     for qid, sql in pool:
         try:
@@ -45,36 +50,36 @@ def pool_default_plans(spark: SparkSession,
         except Exception:
             continue  # a query Catalyst cannot plan has no default plan
         rows.append((qid, to_pg_json(tree)))
-    return spark.createDataFrame(rows, "qid string, plan_json string")
+    return rows
 
 
 def select_next_batch(spark: SparkSession, model: LeroModelPairWise,
-                      pool: list[tuple[str, str]], k: int,
+                      pool_plans: list[tuple[str, str]], k: int,
                       labeled_qids: set[str],
                       num_groups: int = 4, seed: int = 42) -> list[str]:
     """Coreset-select ``k``-ish pool queries most distant (in plan-embedding
     space) from everything already labeled (reference ``coreset.py:91-98``:
     LSH partition → per-group greedy k-center against the labeled set).
+    ``pool_plans`` are ``pool_default_plans`` rows.
 
     The labeled embeddings go to ``coreset_select`` raw: it standardizes
     them with the unlabeled pool's (mean, std) and L2-normalizes them with
     the same helper as the pool, so similarities compare one space. The
     reference standardizes U∪L jointly (``coreset.py:100-131``); here the
     pool's stats stand in for the union's."""
-    unlabeled = [(q, s) for q, s in pool if q not in labeled_qids]
+    unlabeled = [row for row in pool_plans if row[0] not in labeled_qids]
     if not unlabeled:
         return []
-    pool_df = pool_default_plans(spark, unlabeled)
+    pool_df = spark.createDataFrame(unlabeled, _PLAN_ROWS)
     emb = plan_embeddings(pool_df, model).select(
         F.col("qid"), F.col("embedding"))
 
-    labeled_pool = [(q, s) for q, s in pool if q in labeled_qids]
+    labeled_rows = [row for row in pool_plans if row[0] in labeled_qids]
     labeled_mat = None
-    if labeled_pool:
-        ldf = pool_default_plans(spark, labeled_pool)
+    if labeled_rows:
+        ldf = spark.createDataFrame(labeled_rows, _PLAN_ROWS)
         lemb = plan_embeddings(ldf, model).select("embedding").collect()
-        if lemb:
-            labeled_mat = np.stack([np.array(r["embedding"]) for r in lemb])
+        labeled_mat = np.stack([np.array(r["embedding"]) for r in lemb])
 
     k_per_bucket = max(1, round(k / num_groups))
     # coreset_select runs two jobs on ``emb`` (column stats, then the
@@ -94,7 +99,8 @@ def run_active_loop(spark: SparkSession, pool: list[tuple[str, str]],
                     seed_batch: int = 4, batch_size: int = 4,
                     rounds: int = 2, epochs: int = 15,
                     seed: int = 0) -> dict:
-    """Bootstrap-label ``seed_batch`` queries, then for each round: train,
+    """Bootstrap-label ``seed_batch`` queries and capture every pool
+    query's default plan once, then for each round: train,
     embed the pool, coreset-select ``batch_size`` new queries, label them,
     fold into the training set. Returns the model + labeling history."""
     by_qid = dict(pool)
@@ -106,13 +112,14 @@ def run_active_loop(spark: SparkSession, pool: list[tuple[str, str]],
     labeled_qids |= set(first)
     history = [sorted(first)]
 
+    pool_plans = pool_default_plans(spark, pool)
     model = None
     for r in range(rounds):
         bundles = [(qid, [(c.plan, c.exec_time_ms) for c in cands])
                    for qid, cands in labeled if len(cands) >= 2]
         model = train_pairwise_from_bundles(bundles, epochs=epochs,
                                             seed=seed + r)
-        picked = select_next_batch(spark, model, pool, batch_size,
+        picked = select_next_batch(spark, model, pool_plans, batch_size,
                                    labeled_qids, seed=seed)
         if not picked:
             break

@@ -60,7 +60,8 @@ import json
 import os
 from typing import TYPE_CHECKING
 
-from .explore import Candidate, label_query
+from .explore import (Candidate, ZombieExecutionError, label_query,
+                      probe_default)
 from .featurize import from_pg_json, to_pg_json
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -339,46 +340,68 @@ def read_bundle(cache_dir: str, key: str):
     return raw
 
 
-#: sentinel distinguishing "caller did not pre-read the cache" from a
-#: pre-read that legitimately returned ``None`` (a cache miss)
-_NOT_PREREAD = object()
-
-
 def cached_label_query(spark: "SparkSession", sql: str,
                        strategies: tuple[str, ...],
                        timeout_s: float | None, sf_dir: str,
-                       cache_dir: str,
-                       preread=_NOT_PREREAD) -> tuple[list[Candidate], bool]:
-    """``label_query`` with a read-through, write-behind bundle cache.
-    Hits rebuild the Candidate list from the stored bundle without
-    touching the cluster; misses label live and persist the result. A
-    poison marker under its retry budget is treated as a miss (the query
-    relabels live — the caller records a new marker if it zombies again);
-    an exhausted marker returns ``[]``, the same skip semantics as a
-    plan-collapse bundle.
+                       cache_dir: str | None, probe_s: float | None = None,
+                       ) -> tuple[list[Candidate] | None, bool]:
+    """Label one generated query through the cache: the only place the
+    labeling path computes a bundle key or reads/writes a cache file.
 
-    Returns ``(candidates, hit)``. ``hit`` is True only when the result
-    came from the cache — a stored candidate list or an EXHAUSTED poison
-    marker; an under-budget marker that relabels live is a miss (round-8
-    advice: counting any existing file as a hit let RESULTS.md overstate
-    'N bundles from the committed label cache').
+    In order: the stored bundle is read once — a candidate list is a hit
+    (decoded without touching the cluster), an EXHAUSTED poison marker
+    returns ``[]`` as a hit (the plan-collapse skip), an under-budget
+    marker relabels live. A never-seen query with ``probe_s`` set first
+    passes the default-plan probe: a stored probe marker at that budget
+    answers it, otherwise ``probe_default`` runs once and its outcome is
+    recorded (with the SQL, so the marker survives re-keys). Then the
+    query labels live, the bundle is written and the now-redundant probe
+    marker cleared. A ``ZombieExecutionError`` records a poison marker
+    (with the SQL) and propagates; its ``admitted`` attribute says
+    whether the query had passed admission (False when the probe itself
+    zombied).
 
-    ``preread`` lets a caller that already called ``read_bundle`` for
-    this key (the probe admission path) hand the result through instead
-    of paying a second decompress+parse (round-12 advice #4)."""
-    key = bundle_key(sql, strategies, timeout_s, sf_dir)
-    raw = read_bundle(cache_dir, key) if preread is _NOT_PREREAD else preread
-    if isinstance(raw, list):
-        return _decode(raw), True
-    if isinstance(raw, dict) and raw.get("poisoned"):
-        if int(raw.get("attempts", 1)) >= MAX_POISON_ATTEMPTS:
+    Returns ``(candidates, hit)``; ``candidates is None`` means the probe
+    rejected the query. ``hit`` is True only when the result came from
+    the cache: an under-budget marker that relabels live is a miss, so
+    RESULTS.md cannot overstate how many bundles came from the cache. With ``cache_dir=None`` the query is probed (when asked)
+    and labeled live with no file I/O."""
+    key = raw = None
+    if cache_dir is not None:
+        key = bundle_key(sql, strategies, timeout_s, sf_dir)
+        raw = read_bundle(cache_dir, key)
+        if isinstance(raw, list):
+            return _decode(raw), True
+        if (isinstance(raw, dict) and raw.get("poisoned")
+                and int(raw.get("attempts", 1)) >= MAX_POISON_ATTEMPTS):
             return [], True
-        # under budget: fall through and retry live
-    cands = label_query(spark, sql, strategies, timeout_s)
-    write_bundle(cache_dir, key, cands)
-    # the probe marker (if any) is now redundant — the bundle owns
-    # admission from here on (round-12 advice #4)
-    clear_probe(cache_dir, key)
+    admitted = False
+    try:
+        # stored bundles and poison markers own their query's admission
+        if probe_s is not None and raw is None:
+            marker = (read_probe(cache_dir, key, probe_s)
+                      if cache_dir is not None else None)
+            if marker is not None:
+                passed = bool(marker["passed"])
+            else:
+                ms = probe_default(spark, sql, probe_s)
+                passed = ms is not None
+                if cache_dir is not None:
+                    record_probe(cache_dir, key, probe_s, passed, ms,
+                                 sql=sql)
+            if not passed:
+                return None, False
+        admitted = True
+        cands = label_query(spark, sql, strategies, timeout_s)
+    except ZombieExecutionError as e:
+        if cache_dir is not None:
+            record_poisoned(cache_dir, key, error=str(e), sql=sql)
+        e.admitted = admitted
+        raise
+    if cache_dir is not None:
+        write_bundle(cache_dir, key, cands)
+        # the bundle owns admission from here on
+        clear_probe(cache_dir, key)
     return cands, False
 
 

@@ -77,32 +77,3 @@ def read_curated(spark: SparkSession, path: str, format: str = "parquet",
     if schema is not None:
         reader = reader.schema(schema)
     return reader.format(format).load(path)
-
-
-def read_jsonl_quarantine(spark: SparkSession, path: str, schema):
-    """Ingest JSONL with corrupt-record quarantine: rows that fail to
-    parse under ``schema`` land in a ``_corrupt_record`` column instead
-    of aborting the job (PERMISSIVE mode) — at 100 TB a single mangled
-    line must not kill a multi-hour ingest, and silently dropping it
-    (DROPMALFORMED) loses the evidence. Returns ``(good, bad)``
-    DataFrames: ``good`` carries exactly ``schema``'s columns; ``bad``
-    carries the raw offending lines for the quarantine sink.
-
-    The corrupt column must be part of the read schema (Spark ignores it
-    otherwise), and filtering on it requires the cached parse — hence the
-    explicit ``cache()`` on the split point (both halves read the parse
-    once; the caller unpersists via ``good.unpersist()`` when done)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    full = StructType(list(schema.fields)
-                      + [StructField("_corrupt_record", StringType())])
-    raw = (spark.read.schema(full)
-           .option("mode", "PERMISSIVE")
-           .option("columnNameOfCorruptRecord", "_corrupt_record")
-           .json(path))
-    raw = raw.cache()
-    good = (raw.filter(F.col("_corrupt_record").isNull())
-            .select(*[f.name for f in schema.fields]))
-    bad = (raw.filter(F.col("_corrupt_record").isNotNull())
-           .select(F.col("_corrupt_record").alias("raw_line")))
-    return good, bad

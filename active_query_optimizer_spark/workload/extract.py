@@ -38,17 +38,28 @@ FROM_RE = re.compile(
     re.IGNORECASE | re.DOTALL)
 ALIAS_RE = re.compile(r"([A-Za-z_]\w*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?\s*$",
                       re.IGNORECASE)
+# ``[INNER|CROSS|LEFT|RIGHT|FULL [OUTER]] JOIN`` between FROM relations, and
+# the ``ON``/``USING`` condition that follows a joined relation
+JOIN_SEP_RE = re.compile(
+    r"\b(?:(?:INNER|CROSS|(?:LEFT|RIGHT|FULL)(?:\s+OUTER)?)\s+)?JOIN\b",
+    re.IGNORECASE)
+JOIN_COND_TAIL_RE = re.compile(r"\b(?:ON|USING)\b.*",
+                               re.IGNORECASE | re.DOTALL)
 
 
 def extract_aliases(sql: str) -> dict[str, str]:
-    """``{alias: table}`` from a comma-FROM clause (reference
-    ``pg.py:189-258`` walks sqlparse tokens; comma-FROM is the only form its
-    workloads contain)."""
+    """``{alias: table}`` from a FROM clause of comma-separated and/or
+    ``JOIN … ON``/``USING`` relations (reference ``pg.py:189-258`` walks
+    sqlparse tokens; comma-FROM is the only form its workloads contain)."""
     m = FROM_RE.search(sql)
     if not m:
         return {}
     out: dict[str, str] = {}
-    for part in m.group(1).split(","):
+    # cut each joined relation's condition before splitting on commas: an
+    # ON condition may itself hold commas (function arguments, IN lists)
+    parts = [p for rel in JOIN_SEP_RE.split(m.group(1))
+             for p in JOIN_COND_TAIL_RE.sub("", rel).split(",")]
+    for part in parts:
         part = part.strip()
         if not part or "(" in part:
             continue

@@ -14,9 +14,6 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from .extract import mine_conditions
 
 
@@ -54,15 +51,3 @@ def find_matching_template(sql: str, templates: list[str]) -> int | None:
         if fingerprint(t, include_filters=False) == fp:
             return i
     return None
-
-
-def fingerprint_workload(workload: DataFrame, sql_col: str = "sql") -> DataFrame:
-    """Distributed fingerprinting of a workload DataFrame: adds a
-    ``template_fp`` column (JVM-side regex extraction of the join-condition
-    set → sha2), so template grouping/dedup is a plain groupBy — no Python
-    in the hot path, no collect."""
-    pat = r"[A-Za-z_]\w*\.[A-Za-z_]\w*\s*=\s*[A-Za-z_]\w*\.[A-Za-z_]\w*"
-    joins = F.array_sort(F.regexp_extract_all(F.col(sql_col), F.lit(pat),
-                                              F.lit(0)))
-    return workload.withColumn(
-        "template_fp", F.sha2(F.array_join(joins, "|"), 256))

@@ -194,41 +194,3 @@ def test_dynamic_day_partition_overwrite(spark, tmp_path):
             r["cnt"] * (2 if r["day"] == days[1] else 1)
             for r in base.collect()}
     assert got == want, "overwrite duplicated or lost rows"
-
-
-def test_jsonl_corrupt_record_quarantine(spark, tmp_path):
-    """A mangled JSONL line must be quarantined, not abort the read and
-    not silently vanish: good rows parse exactly, bad rows surface with
-    their raw text."""
-    import glob
-
-    from active_query_optimizer_spark.catalog import load_table
-    from active_query_optimizer_spark.sources.curated import (
-        read_jsonl_quarantine, write_curated)
-
-    docs = load_table(spark, SF_SMALL, "documents") \
-        .select("doc_id", "lang", "n_chars").limit(50)
-    out = str(tmp_path / "jsonl")
-    docs.coalesce(1).write.mode("overwrite").json(out)
-    # corrupt two lines in place
-    f = [p for p in glob.glob(out + "/part-*") if not p.endswith(".crc")][0]
-    lines = open(f).read().splitlines()
-    lines[3] = '{"doc_id": 123, "lang": "en", "n_chars":'   # truncated
-    lines[7] = 'not json at all'
-    open(f, "w").write("\n".join(lines) + "\n")
-    # drop Hadoop checksum sidecars — the in-place corruption above would
-    # otherwise fail the .crc check before the JSON parser ever runs
-    import os
-    for crc in glob.glob(out + "/.*.crc"):
-        os.remove(crc)
-
-    good, bad = read_jsonl_quarantine(spark, out, docs.schema)
-    assert good.count() == len(lines) - 2
-    bad_rows = [r["raw_line"] for r in bad.collect()]
-    assert len(bad_rows) == 2
-    assert "not json at all" in bad_rows
-    # good rows are the original content minus the corrupted ids
-    good_ids = {r["doc_id"] for r in good.collect()}
-    all_ids = {r["doc_id"] for r in docs.collect()}
-    assert good_ids < all_ids and len(all_ids - good_ids) == 2
-    good.unpersist()

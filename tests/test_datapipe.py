@@ -380,39 +380,6 @@ def test_ann_ivf_pq_recall_and_determinism(spark):
     assert run1 == run2, "IVF-PQ is not deterministic across runs"
 
 
-def test_dedup_incremental_matches_batch_rerun(spark):
-    """Incremental ingest dedup must converge to the same survivor
-    content set as a from-scratch batch dedup over the union: feeding a
-    corpus in two batches (with overlap) yields stores and survivors
-    identical to one-shot dedup of everything."""
-    from active_query_optimizer_spark.catalog import load_table
-    from active_query_optimizer_spark.functions import texttools as tt
-    from active_query_optimizer_spark.operators.dedup import (
-        dedup_incremental, fingerprint_survivors)
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    b1 = docs.filter(F.col("doc_id") % 3 != 0)
-    b2 = docs.filter(F.col("doc_id") % 2 == 0)      # overlaps b1
-
-    empty_store = (fingerprint_survivors(docs.limit(0))
-                   .select("fp_a", "fp_b"))
-    fresh1, store1 = dedup_incremental(b1, empty_store)
-    fresh2, store2 = dedup_incremental(b2, store1)
-
-    # the two-step store equals the one-shot fingerprint set of b1 ∪ b2
-    batch = fingerprint_survivors(b1.unionByName(b2))
-    got = {(r["fp_a"], r["fp_b"]) for r in store2.collect()}
-    want = {(r["fp_a"], r["fp_b"]) for r in batch.collect()}
-    assert got == want
-    # batch-2 freshness: no batch-2 survivor's content exists in batch 1
-    fp = [tt.content_fingerprint_hi(F.col("text")).alias("a"),
-          tt.content_fingerprint_lo(F.col("text")).alias("b")]
-    b1_fps = {(r["a"], r["b"]) for r in b1.select(*fp).collect()}
-    f2_fps = {(r["a"], r["b"]) for r in fresh2.select(*fp).collect()}
-    assert not (f2_fps & b1_fps)
-    assert fresh1.count() > 0 and fresh2.count() >= 0
-
-
 def test_connected_components_local_fastpath_equals_loop(spark):
     """The driver-side union-find fast path must produce EXACTLY the
     distributed loop's labeling (min reachable id per node), including

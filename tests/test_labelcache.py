@@ -14,6 +14,8 @@ import gzip
 import json
 import os
 
+import pytest
+
 from active_query_optimizer_spark.plans.explore import Candidate
 from active_query_optimizer_spark.plans.featurize import PlanNode
 from active_query_optimizer_spark.plans import labelcache as LC
@@ -252,37 +254,125 @@ def test_probe_marker_roundtrip(tmp_path):
     assert m["passed"] is True and m["ms"] == 123.0
 
 
-def test_probe_admits_cached_paths_no_cluster(tmp_path):
+def test_probe_admits_cached_paths_no_cluster(tmp_path, monkeypatch):
     """Every cached admission decision must resolve without a
     SparkSession: a stored bundle bypasses the probe entirely (and is
-    handed back as the preread so the caller never decompresses it a
-    second time — round-12 advice #4), and a stored probe marker answers
-    pass/fail directly."""
-    from active_query_optimizer_spark.evaluation.results import _probe_admits
+    decompressed exactly once), and a stored probe
+    marker answers pass/fail directly."""
+    reads = []
+    real_read = LC.read_bundle
 
+    def counting_read(cache_dir, key):
+        reads.append(key)
+        return real_read(cache_dir, key)
+
+    def no_probe(*a):
+        raise AssertionError("a cached decision must not probe")
+
+    monkeypatch.setattr(LC, "read_bundle", counting_read)
+    monkeypatch.setattr(LC, "probe_default", no_probe)
     cache = str(tmp_path)
     key = LC.bundle_key("SELECT 1", ("A",), 30.0, "/data/sf0.1")
     with gzip.open(os.path.join(cache, f"{key}.json.gz"), "wt") as fh:
         json.dump(LC._encode([_cand()]), fh)
-    admits, preread = _probe_admits(None, "SELECT 1", ("A",), 30.0,
-                                    "/data/sf0.1", cache, 15.0)
-    assert admits is True
-    # the preread IS the stored bundle: cached_label_query must resolve
-    # from it without re-reading (file removed to prove it)
-    os.remove(os.path.join(cache, f"{key}.json.gz"))
     out, hit = LC.cached_label_query(None, "SELECT 1", ("A",), 30.0,
-                                     "/data/sf0.1", cache, preread=preread)
+                                     "/data/sf0.1", cache, 15.0)
     assert hit is True and len(out) == 1
+    assert reads == [key]  # one decompress + parse of the stored bundle
     key2 = LC.bundle_key("SELECT 2", ("A",), 30.0, "/data/sf0.1")
     LC.record_probe(cache, key2, 15.0, False)
-    admits, preread = _probe_admits(None, "SELECT 2", ("A",), 30.0,
-                                    "/data/sf0.1", cache, 15.0)
-    assert admits is False and preread is None
+    out, hit = LC.cached_label_query(None, "SELECT 2", ("A",), 30.0,
+                                     "/data/sf0.1", cache, 15.0)
+    assert out is None and hit is False
     key3 = LC.bundle_key("SELECT 3", ("A",), 30.0, "/data/sf0.1")
     LC.record_probe(cache, key3, 15.0, True, ms=1.0)
-    admits, preread = _probe_admits(None, "SELECT 3", ("A",), 30.0,
-                                    "/data/sf0.1", cache, 15.0)
-    assert admits is True and preread is None
+    monkeypatch.setattr(LC, "label_query", lambda *a: [_cand()])
+    out, hit = LC.cached_label_query(None, "SELECT 3", ("A",), 30.0,
+                                     "/data/sf0.1", cache, 15.0)
+    assert hit is False and len(out) == 1
+
+
+def test_cached_label_query_outcomes_no_cluster(tmp_path, monkeypatch):
+    """The one labeling call owns every cache outcome: hit, under-budget
+    poison (relabels), exhausted poison (skip), probe reject from a
+    stored and from a fresh probe, and a zombie (poison marker with the
+    SQL recorded, error propagated)."""
+    from active_query_optimizer_spark.plans.explore import (
+        ZombieExecutionError)
+
+    cache = str(tmp_path)
+    args = (("A",), 30.0, "/data/sf0.1")
+    labeled = []
+
+    def fake_label(spark, sql, strategies, timeout_s):
+        labeled.append(sql)
+        if sql == "ZOMBIE":
+            raise ZombieExecutionError("stuck")
+        return [_cand()]
+
+    probed = []
+
+    def fake_probe(spark, sql, probe_s):
+        probed.append(sql)
+        if sql == "PZOMBIE":
+            raise ZombieExecutionError("stuck default")
+        return None  # every other fresh probe times out
+
+    monkeypatch.setattr(LC, "label_query", fake_label)
+    monkeypatch.setattr(LC, "probe_default", fake_probe)
+    key = lambda sql: LC.bundle_key(sql, *args)  # noqa: E731
+
+    # hit: a stored candidate list, no labeling, no probe
+    LC.write_bundle(cache, key("HIT"), [_cand()])
+    out, hit = LC.cached_label_query(None, "HIT", *args, cache, 15.0)
+    assert hit is True and len(out) == 1 and labeled == probed == []
+
+    # under-budget poison: relabels live without probing, a miss
+    LC.record_poisoned(cache, key("RETRY"), error="z", sql="RETRY")
+    out, hit = LC.cached_label_query(None, "RETRY", *args, cache, 15.0)
+    assert hit is False and len(out) == 1
+    assert labeled == ["RETRY"] and probed == []
+    assert isinstance(LC.read_bundle(cache, key("RETRY")), list)
+
+    # exhausted poison: the plan-collapse skip, counted as a hit
+    for _ in range(LC.MAX_POISON_ATTEMPTS):
+        LC.record_poisoned(cache, key("DEAD"), sql="DEAD")
+    out, hit = LC.cached_label_query(None, "DEAD", *args, cache, 15.0)
+    assert out == [] and hit is True and labeled == ["RETRY"]
+
+    # probe reject, stored marker: no probe run, no labeling
+    LC.record_probe(cache, key("SLOW"), 15.0, False, sql="SLOW")
+    out, hit = LC.cached_label_query(None, "SLOW", *args, cache, 15.0)
+    assert out is None and hit is False and probed == []
+
+    # probe reject, fresh: probes once and records the marker with its SQL
+    out, hit = LC.cached_label_query(None, "FRESH", *args, cache, 15.0)
+    assert out is None and hit is False and probed == ["FRESH"]
+    m = LC.read_probe(cache, key("FRESH"), 15.0)
+    assert m["passed"] is False and m["sql"] == "FRESH"
+    assert labeled == ["RETRY"]
+
+    # zombie: poison marker written with the SQL, the error propagates
+    with pytest.raises(ZombieExecutionError) as err:
+        LC.cached_label_query(None, "ZOMBIE", *args, cache, None)
+    assert err.value.admitted is True
+    raw = LC.read_bundle(cache, key("ZOMBIE"))
+    assert raw == {"poisoned": True, "attempts": 1, "error": "stuck",
+                   "sql": "ZOMBIE"}
+    # a zombie in the probe itself: poisoned too, but never admitted
+    with pytest.raises(ZombieExecutionError) as err:
+        LC.cached_label_query(None, "PZOMBIE", *args, cache, 15.0)
+    assert err.value.admitted is False
+    assert LC.read_bundle(cache, key("PZOMBIE"))["attempts"] == 1
+    assert LC.read_probe(cache, key("PZOMBIE"), 15.0) is None
+
+    # no cache: probe (when asked) and label live, no file I/O
+    before = sorted(os.listdir(cache))
+    out, hit = LC.cached_label_query(None, "LIVE", *args, None, None)
+    assert hit is False and len(out) == 1 and labeled[-1] == "LIVE"
+    assert LC.cached_label_query(None, "LIVE", *args, None, 15.0) == (
+        None, False) and probed[-1] == "LIVE"
+    assert sorted(os.listdir(cache)) == before
 
 
 def test_probe_marker_stores_sql_and_clears_on_bundle_write(tmp_path,

@@ -491,6 +491,7 @@ def test_probe_and_saturation_bias_in_labeling_loop(spark, monkeypatch):
     for determinism — the filters, accounting, and loop control are what
     this pins."""
     from active_query_optimizer_spark.evaluation import results as R
+    from active_query_optimizer_spark.plans import labelcache as LC
     from active_query_optimizer_spark.plans.explore import (
         Candidate, LABEL_TIMEOUT_PENALTY)
 
@@ -510,8 +511,8 @@ def test_probe_and_saturation_bias_in_labeling_loop(spark, monkeypatch):
         return None if n % 3 == 0 else 1.0  # every 3rd default saturates
     fake_probe.n = 0
 
-    monkeypatch.setattr(R, "label_query", fake_label)
-    monkeypatch.setattr(R, "probe_default", fake_probe)
+    monkeypatch.setattr(LC, "label_query", fake_label)
+    monkeypatch.setattr(LC, "probe_default", fake_probe)
     bundles, (hits, lookups), _, stats = R.label_generated_workload(
         spark, SF_SMALL, num_queries=2, seed=3, timeout_s=1.0,
         cache_dir=None, probe_default_s=0.5, skip_saturated=True,

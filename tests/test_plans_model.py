@@ -757,6 +757,20 @@ def test_plan_variants_pinned_candidates(spark):
         assert got == expect, sql
 
 
+def test_plan_variants_hints_join_on_relations(spark):
+    """A ``JOIN … ON`` query's hint forms name its real aliases, so at
+    least one hint strategy plans differently from the default (with a
+    condition column read as a relation, every hint form collapsed)."""
+    from active_query_optimizer_spark.catalog import register_views
+
+    from tests.test_stats_workload import JOIN_ON_SQL
+
+    register_views(spark, SF_SMALL)
+    hints = {s.lower() for s in EX.HINT_STRATEGIES}
+    variants = [c.variant for c in EX.plan_variants(spark, JOIN_ON_SQL)]
+    assert hints & set(variants), variants
+
+
 def test_label_query_realized_strategies(spark):
     """The executed plan, not the hint, is the label: candidates record
     realized join nodes, hint_realized is checked against them, and

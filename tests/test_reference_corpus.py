@@ -79,18 +79,6 @@ def test_feature_dim_matches_reference_on_stats():
     assert fg.input_feature_dim == 15 + len(fg.relations) + 1 + 2
 
 
-def test_pretrain_on_cost_from_reference_bundles():
-    """The pretrain mode consumes the PG optimizer's Total Cost as labels
-    (no runtime needed) — costs parse from the corpus and a model fits."""
-    bundles = _load_bundles(CORPUS, limit=20)
-    cost_bundles = [(q, [p for p, _ in c]) for q, c in bundles]
-    assert all(p.total_cost and p.total_cost > 0
-               for _, c in cost_bundles for p in c)
-    model = L.pretrain_on_cost(cost_bundles, epochs=5, seed=1)
-    trees = [model.fg.transform_tree(cost_bundles[0][1][0])]
-    assert model.predict(trees).shape == (1,)
-
-
 def test_train_and_rank_on_reference_corpus():
     """Pairwise model trained on real reference bundles must beat random
     plan choice on its training distribution (sanity anchor, not a

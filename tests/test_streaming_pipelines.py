@@ -238,9 +238,8 @@ def test_select_next_batch_embeds_each_pool_plan_once(spark, monkeypatch):
 
     register_views(spark, SF_SMALL)
     plans = active.pool_default_plans(spark, TRAIN_QUERIES)
-    bundles = [(r["qid"], [(from_pg_json(r["plan_json"])[0], t)
-                           for t in (1.0, 2.0)])
-               for r in plans.collect()]
+    bundles = [(qid, [(from_pg_json(plan_json)[0], t) for t in (1.0, 2.0)])
+               for qid, plan_json in plans]
     model = train_pairwise_from_bundles(bundles, epochs=1, seed=3)
 
     embedded = spark.sparkContext.accumulator(0)
@@ -258,11 +257,53 @@ def test_select_next_batch_embeds_each_pool_plan_once(spark, monkeypatch):
 
     monkeypatch.setattr(active, "plan_embeddings", counted)
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
-    picked = active.select_next_batch(spark, model, TRAIN_QUERIES, k=2,
+    picked = active.select_next_batch(spark, model, plans, k=2,
                                       labeled_qids=set(), num_groups=2)
     assert picked and set(picked) <= {q for q, _ in TRAIN_QUERIES}
     assert embedded.value == len(TRAIN_QUERIES)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_active_loop_plans_each_pool_query_once(spark, monkeypatch):
+    """Pool default plans do not depend on the model: a two-round loop
+    captures each pool query's plan once, not once per round. Labels are
+    stubbed (two candidates on the default plan, timed by a hash of the
+    qid) so only the pool planning is counted."""
+    from active_query_optimizer_spark.catalog import register_views
+    from active_query_optimizer_spark.pipelines import active
+    from active_query_optimizer_spark.plans import featurize as FZ
+    from active_query_optimizer_spark.plans.explore import Candidate
+
+    register_views(spark, SF_SMALL)
+    tables = [("customer c", "c.c_acctbal > {}"),
+              ("orders o", "o.o_totalprice > {}000"),
+              ("supplier s", "s.s_acctbal > {}")]
+    pool = [(f"p{k}", f"SELECT COUNT(*) FROM {t} WHERE {p.format(k)}")
+            for k, (t, p) in enumerate(tables * 4)]
+
+    def fake_label(spark_, queries):
+        out = []
+        for qid, sql in queries:
+            plan = FZ.capture_plan(spark_.sql(sql), executed=False)
+            ms = float(sum(map(ord, qid)) % 7 + 1)
+            out.append((qid, [
+                Candidate("default", sql, "fa", plan, exec_time_ms=ms),
+                Candidate("rot1", sql, "fb", plan, exec_time_ms=ms + 1)]))
+        return out
+
+    captured = []
+    real = active.capture_plan
+
+    def counting(df, **kw):
+        captured.append(df)
+        return real(df, **kw)
+
+    monkeypatch.setattr(active, "label_workload", fake_label)
+    monkeypatch.setattr(active, "capture_plan", counting)
+    out = active.run_active_loop(spark, pool, seed_batch=2, batch_size=2,
+                                 rounds=2, epochs=2)
+    assert len(out["history"]) == 3  # both rounds selected a batch
+    assert len(captured) == len(pool)
 
 
 def test_stateful_running_totals_matches_batch_agg(spark, tmp_path):

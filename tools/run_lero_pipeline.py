@@ -5,7 +5,8 @@ Runs the full Layer-B loop the reference orchestrates across ``pg.py`` →
 
   1. harvest statistics from the parquet tables        (stats/harvester)
   2. generate a seeded SQL workload                    (workload/generate)
-  3. select which queries to label via coreset         (select/coreset)
+  3. take the first n generated queries to label       (no selection;
+     coreset selection needs a model: pipelines/active)
   4. label: explore hint-variant plans, time them      (plans/explore)
   5. train the pairwise tree-conv ranker               (model/lero)
   6. evaluate: chosen-plan latency + ranking loss      (evaluation/metrics)
@@ -45,10 +46,9 @@ def main() -> None:
         tables=("region", "nation", "customer", "supplier", "orders"))
     wl = generate_workload(spark, rd, num_sql=n_queries * 3, seed=7).collect()
 
-    # 3. cheap workload thinning stand-in for embedding-based coreset
-    # (plan embeddings need a first model; the reference bootstraps the
-    # same way — coreset selection over *plan* embeddings is exercised in
-    # pipelines once a model exists, see select/coreset.py)
+    # 3. the first n generated queries (plan embeddings need a first
+    # model; coreset selection over *plan* embeddings runs in the active
+    # loop once a model exists, see pipelines/active.py)
     queries = [(f"q{r['id']}", r["sql"]) for r in wl[:n_queries]]
 
     # 4-6. label → train → evaluate
