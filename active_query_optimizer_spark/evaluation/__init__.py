@@ -1,3 +1,4 @@
 """Evaluation metrics for the plan ranker (reference ``Lero/lero_test.py``)."""
 
-from .metrics import ranking_loss, selection_report, spearman_by_group  # noqa: F401
+from .metrics import (evaluate_bundles, ranking_loss,  # noqa: F401
+                      selection_report, spearman_by_group)

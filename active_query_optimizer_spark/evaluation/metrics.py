@@ -13,7 +13,10 @@ Rebuilds ``Lero/lero_test.py:25-155``:
   skipped from the mean, replicating the reference's NaN-group skip
   (``lero_test.py:140-143``); when EVERY group is skipped the loss is
   ``None``, matching ``compute_ranking_loss``'s no-valid-groups return
-  (``lero_test.py:145-147``).
+  (``lero_test.py:145-147``);
+- ``evaluate_bundles`` — the reference's whole test pass over labeled
+  bundles (score, argmin, chosen latency, both ranking losses) in one call:
+  every pipeline evaluates a model through it.
 
 The ranking metrics run on the driver, as the reference's do
 (``scipy.stats.spearmanr`` per query, ``lero_test.py:115-155``): every
@@ -30,9 +33,14 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-from ..model.infer import choose_best
+from ..model.infer import choose_best, score_plans
+from ..model.lero import LeroModel
+from ..plans.featurize import PlanNode, to_pg_json
+
+#: a labeled query: ``(qid, [(plan, exec_time_ms), ...])``
+Bundle = tuple[str, list[tuple[PlanNode, float]]]
 
 
 def _order_key(v):
@@ -135,7 +143,10 @@ def ranking_loss(df: DataFrame, qid_col: str = "qid",
     every group is degenerate (constant on either side — e.g. a fully
     penalty-saturated sf1 batch), matching the reference's
     no-valid-groups return (``lero_test.py:145-147``)."""
-    _, _, rho = _group_spearman(df, qid_col, pred_col, truth_col)
+    return _mean_loss(_group_spearman(df, qid_col, pred_col, truth_col)[2])
+
+
+def _mean_loss(rho: np.ndarray) -> float | None:
     rho = rho[~np.isnan(rho)]
     if not len(rho):
         return None
@@ -149,7 +160,12 @@ def selection_report(df: DataFrame, qid_col: str = "qid",
     ``lero_dict.json`` shape (``lero_test.py:99-112``; it divides ms by
     1000 once — root ``stable.py:24-26`` divides twice, a catalogued bug we
     do not replicate)."""
-    chosen = choose_best(df, qid_col, score_col).collect()
+    return _lero_dict(choose_best(df, qid_col, score_col).collect(),
+                      qid_col, truth_col)
+
+
+def _lero_dict(chosen: list, qid_col: str,
+               truth_col: str) -> dict[str, float]:
     out = {r[qid_col]: r[truth_col] / 1000.0 for r in chosen}
     out["sum"] = sum(out.values())
     return out
@@ -170,9 +186,45 @@ def weighted_ranking_loss(df: DataFrame, qid_col: str = "qid",
     Degenerate (constant-side) groups are skipped, as in the reference.
     """
     _, sizes, rho = _group_spearman(df, qid_col, pred_col, truth_col)
+    return _weighted_loss(sizes, rho)
+
+
+def _weighted_loss(sizes: np.ndarray, rho: np.ndarray) -> float | None:
     valid = ~np.isnan(rho)
     if not valid.any():
         return None
     w = (sizes[valid] - 1).astype(float)
     return 1.0 - (math.fsum((rho[valid] * w).tolist())
                   / math.fsum(w.tolist()))
+
+
+def as_bundles(labeled) -> list[Bundle]:
+    """Labeled ``(qid, [Candidate, ...])`` pairs as bundles."""
+    return [(qid, [(c.plan, float(c.exec_time_ms)) for c in cands])
+            for qid, cands in labeled]
+
+
+def evaluate_bundles(spark: SparkSession, model: LeroModel,
+                     bundles: list[Bundle]) -> dict:
+    """Evaluate ``model`` on labeled ``bundles`` as the reference's test
+    pass does (``lero_test.py:82-155``): score every candidate, take each
+    query's argmin (``choose_best``) and compare with the measured
+    latencies. Returns ``picks`` (``{qid: candidate_idx}``), ``lero_dict``
+    (the ``selection_report`` shape), and ``loss``/``wloss`` (the
+    ``ranking_loss``/``weighted_ranking_loss`` values). The scored frame is
+    cached for its two collects (the argmin rows, the Spearman rows)."""
+    rows = [(qid, i, to_pg_json(p, t), float(t))
+            for qid, cands in bundles for i, (p, t) in enumerate(cands)]
+    scored = score_plans(spark.createDataFrame(
+        rows,
+        "qid string, candidate_idx int, plan_json string, exec_time_ms double"
+    ), model).cache()
+    try:
+        chosen = choose_best(scored).collect()
+        _, sizes, rho = _group_spearman(scored, "qid", "score",
+                                        "exec_time_ms")
+    finally:
+        scored.unpersist()
+    return {"picks": {r["qid"]: r["candidate_idx"] for r in chosen},
+            "lero_dict": _lero_dict(chosen, "qid", "exec_time_ms"),
+            "loss": _mean_loss(rho), "wloss": _weighted_loss(sizes, rho)}

@@ -7,8 +7,9 @@ produces the same headline on Spark, from this repo's own machinery
 end-to-end: seeded workload generation (``workload/generate``), candidate
 exploration + wall-clock labeling (``plans/explore``), pairwise tree-conv
 training (``model/lero``), distributed scoring + argmin selection
-(``model/infer``), and the reference's deployment-series loop
-(``pipelines/dynamic``). The numbers reported per held-out query:
+(``evaluation.metrics.evaluate_bundles``), and the reference's
+deployment-series loop (``pipelines/dynamic``). The numbers reported per
+held-out query:
 
 - **default_ms** — Catalyst's unhinted plan (what Spark runs today);
 - **chosen_ms** — the plan the learned ranker picks from the candidate set;
@@ -29,17 +30,15 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from ..catalog import register_views
-from ..model.infer import choose_best
 from ..model.lero import train_pairwise_from_bundles
-from ..pipelines.dynamic import (_as_bundles, _score_bundles,
-                                 run_deployment)
+from ..pipelines.dynamic import run_deployment
 from ..plans.explore import (HINT_STRATEGIES, LABEL_TIMEOUT_PENALTY,
                              Candidate, ZombieExecutionError)
 from ..plans.labelcache import cached_label_query
 from ..stats.harvester import harvest_range_dict
 from ..workload.extract import extract_aliases
 from ..workload.generate import generate_workload
-from .metrics import ranking_loss, weighted_ranking_loss
+from .metrics import as_bundles, evaluate_bundles
 
 
 #: per-candidate labeling deadline (sec): a pathological variant (e.g. a
@@ -125,7 +124,6 @@ def _clamp_folds(cross_folds: int, n_bundles: int) -> int:
 
 def label_generated_workload(spark: SparkSession, sf_dir: str,
                              num_queries: int, seed: int,
-                             strategies: tuple[str, ...] = HINT_STRATEGIES,
                              timeout_s: float | None = LABEL_TIMEOUT_S,
                              cache_dir: str | None = None,
                              probe_default_s: float | None = None,
@@ -135,7 +133,8 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
                                         tuple[int, int], SparkSession,
                                         dict[str, int]]:
     """Generate a seeded workload against ``sf_dir``'s views and label each
-    query by executing its plan variants. Queries whose variants collapse
+    query by executing its plan variants (every ``HINT_STRATEGIES`` hint
+    plus the other explorer forms). Queries whose variants collapse
     to one physical plan carry no ranking signal and are skipped (the
     generator over-samples ``oversample``x to cover the loss).
 
@@ -183,8 +182,8 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
             # hit accounting comes from the cache itself: an under-budget
             # poison marker that relabels live is a miss
             cands, was_hit = cached_label_query(
-                spark, r["sql"], strategies, timeout_s, sf_dir, cache_dir,
-                probe_default_s)
+                spark, r["sql"], HINT_STRATEGIES, timeout_s, sf_dir,
+                cache_dir, probe_default_s)
         except ZombieExecutionError as e:
             # one variant ignored the full cancellation escalation: the
             # query is poisoned — drop it for this run (the generator
@@ -247,19 +246,14 @@ def _split_eval(spark: SparkSession,
     cross-validation fold go through this same path). Labels at or above
     ``penalty_ms`` are censored out of the pointwise pretrain."""
     model = train_pairwise_from_bundles(
-        _as_bundles(train), epochs=epochs, seed=seed,
+        as_bundles(train), epochs=epochs, seed=seed,
         pretrain_epochs=PRETRAIN_EPOCHS, pretrain_mode=PRETRAIN_MODE,
         pretrain_censor_ms=penalty_ms, pair_weighting=PAIR_WEIGHTING)
-    scored = _score_bundles(spark, _as_bundles(test), model).cache()
-    loss = ranking_loss(scored)
-    wloss = weighted_ranking_loss(scored)
-    picked = {r["qid"]: r["candidate_idx"]
-              for r in choose_best(scored).collect()}
-    scored.unpersist()
+    ev = evaluate_bundles(spark, model, as_bundles(test))
     rows = []
     for qid, cands in test:
         times = [float(c.exec_time_ms) for c in cands]
-        ci = picked[qid]
+        ci = ev["picks"][qid]
         rows.append({
             "qid": qid,
             "n_candidates": len(cands),
@@ -271,7 +265,7 @@ def _split_eval(spark: SparkSession,
             "best_ms": min(times),
             "worst_ms": max(times),
         })
-    return {"loss": loss, "wloss": wloss, "rows": rows,
+    return {"loss": ev["loss"], "wloss": ev["wloss"], "rows": rows,
             "totals": {k: round(sum(q[f"{k}_ms"] / 1e3 for q in rows), 4)
                        for k in ("default", "chosen", "best")}}
 
@@ -407,8 +401,8 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
     for _ in range(deployment_batches):
         if i + per_batch >= len(bundles):
             break
-        trains.append(_as_bundles(bundles[i:i + per_batch]))
-        valids.append(_as_bundles(bundles[i + per_batch:i + per_batch + 1]))
+        trains.append(as_bundles(bundles[i:i + per_batch]))
+        valids.append(as_bundles(bundles[i + per_batch:i + per_batch + 1]))
         i += per_batch + 1
     print("deployment series...", file=sys.stderr, flush=True)
     deployment = run_deployment(spark, trains, valids, epochs=epochs,

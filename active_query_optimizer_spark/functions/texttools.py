@@ -2,30 +2,31 @@
 DuckDB SQL snippets (for the driver's oracle check). Both renderings share
 constants and evaluation order, so double/long outputs are bit-identical.
 
-Round-13 optimization: the per-character kernels (shingle/token hashes,
-SimHash voting, positional fingerprints) run as VECTORIZED pandas UDFs —
-numpy over Arrow batches (guide §4.2). The original Catalyst-expression
-forms are CodegenFallback (``transform``/``aggregate``/``filter`` higher-
-order functions interpret per element with boxing): measured ~10-20 µs per
+The per-character kernels (shingle/token hashes, SimHash voting,
+positional fingerprints) run as VECTORIZED pandas UDFs — numpy over Arrow
+batches (guide §4.2). The Catalyst-expression forms they replaced were
+CodegenFallback (``transform``/``aggregate``/``filter`` higher-order
+functions interpret per element with boxing): measured ~10-20 µs per
 character (~9 MB/s/core) at sf0.1, i.e. shingling 1.5 MB of text cost 14-28 s
-of CPU — the single largest CPU sink in the engine, and the difference
-between ~10^8 and ~10^6 core-seconds at 100 TB. The vectorized kernels are
-43-85× cheaper and BIT-IDENTICAL; every expression form is kept (``*_expr``)
-and equality-swept against its twin in ``tests/test_texttools_vectorized.py``
-(real corpus + adversarial edges). Scalar/array outputs are unchanged, so
-all DuckDB oracles hold verbatim.
+of CPU — the single largest CPU sink in the engine. The vectorized kernels
+are 43-85× cheaper and return the same values; each is swept against a
+pure-Python reference of its arithmetic in
+``tests/test_texttools_vectorized.py`` (real corpus + adversarial edges,
+NULL and empty inputs pinned), and the DuckDB oracles replay the same
+arithmetic in SQL.
 
 These generalize the reference's active-learning machinery (MinHash-LSH
 partitioning in ``coreset.py:5-46``) into the LLM-data-pipeline operator set:
 shingling, MinHash signatures, SimHash fingerprints, token statistics.
 
 Edge-case parity notes (verified empirically):
-- Spark ``ascii('') = 0`` vs DuckDB ``ord('') = -1`` → SQL side wraps ords in
+- A position past the end reads code point 0 in the kernels (Spark's
+  ``ascii('') = 0``) vs DuckDB ``ord('') = -1`` → SQL side wraps ords in
   ``greatest(…, 0)``.
-- Spark ``sequence(1, 0)`` descends → position sequences clamp hi to ≥ 1;
+- Short strings get one zero-padded shingle window (hi clamped to ≥ 1);
   DuckDB ``range(1, 1)`` is empty → sums wrapped in ``coalesce(…, 0)``.
 - DuckDB int32 arithmetic overflows loudly → SQL folds cast acc to BIGINT;
-  Spark folds start from ``lit(0).cast('long')``.
+  the kernels compute in int64.
 """
 
 from __future__ import annotations
@@ -68,27 +69,6 @@ LANG_MARKERS = {
 # Character n-gram shingle hashes (set semantics)
 # ---------------------------------------------------------------------------
 
-def shingle_hashes_expr(text: Column, n: int = 3) -> Column:
-    """Catalyst-expression form of :func:`shingle_hashes` (the original
-    implementation, kept as the semantics reference its vectorized twin is
-    equality-tested against): the hash of the shingle at 1-based position i
-    is ``sum_j ord(text[i+j]) * 31^(n-1-j) mod P``, distinct, first
-    occurrence order.
-
-    NOT the hot-path form: ``transform``/``aggregate`` higher-order
-    functions are CodegenFallback — interpreted per element with boxing.
-    Measured ~10-20 µs per character (≈9 MB/s/core) at sf0.1, which made
-    shingling the single largest CPU sink in the dedup/decontam family."""
-    def one(i: Column) -> Column:
-        h = F.lit(0).cast("long")
-        for j in range(n):
-            h = h * 31 + F.ascii(text.substr(i + j, F.lit(1)))
-        return h % HASH_P
-
-    hi = F.greatest(F.length(text) - (n - 1), F.lit(1))
-    return F.array_distinct(F.transform(F.sequence(F.lit(1), hi), one))
-
-
 #: one vectorized shingle UDF per n (pandas_udf objects are reusable)
 _SHINGLE_UDFS: dict = {}
 
@@ -99,12 +79,11 @@ SHINGLE_MAX_N = 2048
 
 def shingle_hashes(text: Column, n: int = 3) -> Column:
     """Distinct polynomial hashes of the character ``n``-grams of ``text``
-    — vectorized over Arrow batches (numpy sliding-window dot), bit-exact
-    to :func:`shingle_hashes_expr` (guide §4.2: batches to native code
-    beat interpreted JVM higher-order expressions; measured ~50× less CPU
-    at sf0.1).
+    — vectorized over Arrow batches (numpy sliding-window dot; guide
+    §4.2: batches to native code beat interpreted JVM higher-order
+    expressions; measured ~50× less CPU at sf0.1).
 
-    Exactness contract (equality-tested against the expression form,
+    Exactness contract (tested against an arbitrary-precision reference,
     including edge cases):
 
     - code points via UTF-32 (= Spark ``ascii``'s code-point semantics);
@@ -116,12 +95,10 @@ def shingle_hashes(text: Column, n: int = 3) -> Column:
       the n-term dot below n·2^52 — no int64 overflow for any code point
       as long as ``n <= 2048`` (``SHINGLE_MAX_N``; larger ``n`` raises
       ``ValueError``). By congruence
-      ``Σ cp·31^e ≡ Σ cp·(31^e mod P) (mod P)``, so the result is
-      identical to the expression form's end-mod wherever that form is
-      defined (its un-reduced fold raises ANSI long overflow first on
-      e.g. 12-wide shingles over wide CJK text; there this kernel now
-      returns the true mod-P residue instead of a wrapped value —
-      round-13 ADVICE item, pinned by a non-ASCII n=12 parity test);
+      ``Σ cp·31^e ≡ Σ cp·(31^e mod P) (mod P)``, so the result is the
+      exact mod-P residue even where an un-reduced 64-bit fold would
+      overflow (e.g. 12-wide shingles over wide CJK text — pinned by a
+      non-ASCII n=12 test);
     - ``array_distinct`` keeps first-occurrence order: ``np.unique``'s
       first indices, re-sorted by position."""
     if n > SHINGLE_MAX_N:
@@ -138,8 +115,8 @@ def shingle_hashes(text: Column, n: int = 3) -> Column:
                 out = []
                 for t in s:
                     if t is None:
-                        # expression-form parity: greatest(NULL-(n-1), 1)
-                        # = 1 → one window whose hash is NULL
+                        # greatest(NULL - (n-1), 1) = 1 → one window
+                        # whose hash is NULL
                         out.append([None])
                         continue
                     cp = np.frombuffer(
@@ -185,30 +162,13 @@ def tokens_sql(expr: str) -> str:
     return rf"list_filter(string_split_regex({expr}, '\s+'), x -> x <> '')"
 
 
-def token_hashes_expr(toks: Column) -> Column:
-    """Catalyst-expression form of :func:`token_hashes` (semantics
-    reference for the vectorized twin; interpreted per char — not the
-    hot path)."""
-    def tok_hash(tok: Column) -> Column:
-        ords = F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(tok), F.lit(1))),
-            lambda i: F.ascii(tok.substr(i, F.lit(1))),
-        )
-        return F.aggregate(
-            ords, F.lit(0).cast("long"),
-            lambda acc, o: (acc * 31 + o) % HASH_P)
-
-    return F.transform(toks, tok_hash)
-
-
 def _token_hashes_np(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     """Vectorized :func:`token_hashes` kernel: all tokens of a row are
     packed into one code-point buffer (NUL-separated — separators are
     never read because per-token LENGTHS drive the indexing) and the
     per-char fold ``acc·31 + cp mod P`` runs as a Horner loop vectorized
     ACROSS tokens, masked by token length. Every intermediate stays
-    < 2^36, so the per-step mod is exact — bit-identical to the
-    expression form (empty token → hash 0, same as its padded fold)."""
+    < 2^36, so the per-step mod is exact (empty token → hash 0)."""
     for s in batches:
         out = []
         for toks in s:
@@ -247,8 +207,7 @@ def _np_udf(name: str, ret: str, fn) -> Column:
 
 def token_hashes(toks: Column) -> Column:
     """Polynomial hash of each token: fold ``acc*31 + ord(char) mod P``
-    — vectorized over Arrow batches (guide §4.2), bit-exact to
-    :func:`token_hashes_expr` (equality-tested)."""
+    — vectorized over Arrow batches (guide §4.2)."""
     return _np_udf("token_hashes", "array<long>", _token_hashes_np)(toks)
 
 
@@ -313,29 +272,10 @@ def minhash_signature_oph(hashes: Column, k: int = MINHASH_K) -> Column:
 # SimHash fingerprint (32-bit)
 # ---------------------------------------------------------------------------
 
-def simhash_expr(tok_hashes: Column) -> Column:
-    """Catalyst-expression form of :func:`simhash` (semantics reference
-    for the vectorized twin). NOT the hot path: each of the 32 bit
-    branches re-evaluates the ``g`` transform inside an interpreted
-    ``filter`` — 32× the per-token work, all CodegenFallback."""
-    g = F.transform(tok_hashes, lambda h: (h * SIMHASH_A + SIMHASH_B) % _SIMHASH_M)
-    n = F.size(tok_hashes)
-
-    def bit_set(i: int):
-        return lambda x: F.shiftright(x, i).bitwiseAND(F.lit(1)) == 1
-
-    out = F.lit(0).cast("long")
-    for i in range(SIMHASH_BITS):
-        votes = F.size(F.filter(g, bit_set(i)))
-        out = out + F.when(votes * 2 > n, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return out
-
-
 def _simhash_np(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Vectorized :func:`simhash` kernel: one ``g`` evaluation per token
-    (the expression form pays 32), bit votes as a single (tokens × 32)
-    matrix reduction. NULL/empty hash arrays yield 0, matching the
-    expression form's ``when(NULL) → otherwise(0)`` collapse."""
+    """Vectorized :func:`simhash` kernel: one ``g`` evaluation per token,
+    bit votes as a single (tokens × 32) matrix reduction. NULL/empty hash
+    arrays yield 0."""
     bits = np.arange(SIMHASH_BITS, dtype=np.int64)
     for s in batches:
         out = np.zeros(len(s), np.int64)
@@ -352,8 +292,7 @@ def _simhash_np(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
 def simhash(tok_hashes: Column) -> Column:
     """32-bit SimHash over token hashes (multiset voting): bit i of
     ``g(h) = (a*h+b) mod 2^32`` votes; bit set iff strictly more than
-    half the tokens vote 1. Vectorized over Arrow batches (guide §4.2),
-    bit-exact to :func:`simhash_expr` (equality-tested)."""
+    half the tokens vote 1. Vectorized over Arrow batches (guide §4.2)."""
     return _np_udf("simhash", "long", _simhash_np)(tok_hashes)
 
 
@@ -371,22 +310,9 @@ def simhash_sql(tok_hashes_expr: str) -> str:
 # Positional fingerprint (rolling checksum)
 # ---------------------------------------------------------------------------
 
-def fingerprint_expr(text: Column) -> Column:
-    """Catalyst-expression form of :func:`fingerprint` (semantics
-    reference for the vectorized twin; interpreted per char)."""
-    chars = F.split(text, '')
-    weighted = F.transform(
-        chars,
-        lambda x, i: F.ascii(x).cast("long") * ((i % 97) + 1),
-    )
-    return F.aggregate(weighted, F.lit(0).cast("long"),
-                       lambda acc, x: acc + x) % (1 << 31)
-
-
 def _fingerprint_np(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     """Vectorized :func:`fingerprint` kernel: one code-point·weight dot
-    product per document. Empty text → 0 (the expression form's
-    ``[''] → ascii 0`` path), NULL → NULL."""
+    product per document. Empty text → 0, NULL → NULL."""
     for s in batches:
         out = []
         for t in s:
@@ -403,8 +329,7 @@ def _fingerprint_np(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
 def fingerprint(text: Column) -> Column:
     """Position-weighted checksum mod 2^31 — a cheap whole-document
     fingerprint (exact-dup detection without carrying full text around).
-    Vectorized over Arrow batches (guide §4.2), bit-exact to
-    :func:`fingerprint_expr` (equality-tested)."""
+    Vectorized over Arrow batches (guide §4.2)."""
     return _np_udf("fingerprint", "long", _fingerprint_np)(text)
 
 
@@ -425,20 +350,6 @@ FP_LANES = ((1103515245, 12345, 2147483647),
             (1000003, 8191, 2147483629))
 
 
-def fingerprint_lane_expr(text: Column, lane: int) -> Column:
-    """Catalyst-expression form of :func:`fingerprint_lane` (semantics
-    reference for the vectorized twin; interpreted per char)."""
-    a, c, p = FP_LANES[lane]
-    chars = F.split(text, '')
-    weighted = F.transform(
-        chars,
-        lambda x, i: (F.ascii(x).cast("long")
-                      * (((i.cast("long") + 1) * a + c) % p)),
-    )
-    return F.aggregate(weighted, F.lit(0).cast("long"),
-                       lambda acc, x: acc + x) % p
-
-
 #: one vectorized fingerprint-lane UDF per lane
 _FP_LANE_UDFS: dict = {}
 
@@ -446,10 +357,8 @@ _FP_LANE_UDFS: dict = {}
 def fingerprint_lane(text: Column, lane: int) -> Column:
     """One 31-bit lane of the dual-lane document fingerprint: position
     ``i`` (1-based) carries weight ``(i·a + c) mod p``. Vectorized over
-    Arrow batches (guide §4.2), bit-exact to
-    :func:`fingerprint_lane_expr` (equality-tested; int64 headroom
-    analysis in the ``FP_LANES`` note holds unchanged — numpy int64
-    arithmetic matches Java long)."""
+    Arrow batches (guide §4.2); the int64 headroom analysis in the
+    ``FP_LANES`` note bounds every product and sum."""
     if lane not in _FP_LANE_UDFS:
         a, c, p = FP_LANES[lane]
 

@@ -1,13 +1,13 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata,
 processed with Arrow-batched ``mapInPandas``.
 
-The container has no image/audio codecs, so the decode step is stubbed: the
-default ``fake`` decoder derives deterministic per-payload features (so the
-Spark-side plumbing — schema, batching, partitioning — is real and tested);
-``real`` raises ``NotImplementedError`` at the exact point a codec would
-plug in. The oracle-checked query covers the deterministic byte-level
-features; the mapInPandas pipeline is exercised by tests and the rows-only
-driver check.
+The package depends on no image/audio codec, so every decode step is a
+deterministic fake: it derives per-payload features from the bytes, so the
+Spark-side plumbing — schema, batching, partitioning — is real and tested,
+and the ``kind`` output column says ``"fake"``. A codec (PIL/librosa/pyav)
+would replace the byte arithmetic inside the batch functions. The
+oracle-checked queries cover the deterministic byte-level features; the
+mapInPandas pipeline is exercised by tests and the rows-only query check.
 """
 
 from __future__ import annotations
@@ -49,13 +49,8 @@ def binary_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_payload(payload: bytes, kind: str = "fake"):
-    """Decode stub. ``real`` is where PIL/librosa/pyav would decode into an
-    ndarray — unavailable in this container by design."""
-    if kind == "real":
-        raise NotImplementedError(
-            "media codecs are not installed; plug PIL/librosa/pyav in here")
-    # deterministic fake: byte-level summary features
+def decode_payload(payload: bytes):
+    """Fake decode: byte-level summary features of the payload."""
     return {
         "n_bytes": len(payload),
         "first_byte": payload[0] if payload else -1,
@@ -64,7 +59,7 @@ def decode_payload(payload: bytes, kind: str = "fake"):
     }
 
 
-def extract_features(df: DataFrame, kind: str = "fake") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads. This is the
     pattern for any decode/resize/frame-sample stage: ``mapInPandas`` keeps
     the transfer vectorized and the operation partition-parallel — no
@@ -72,10 +67,10 @@ def extract_features(df: DataFrame, kind: str = "fake") -> DataFrame:
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            feats = [decode_payload(p, kind) for p in pdf["payload"]]
+            feats = [decode_payload(p) for p in pdf["payload"]]
             out = pd.DataFrame({
                 "doc_id": pdf["doc_id"].astype("int64"),
-                "kind": kind,
+                "kind": "fake",
                 "n_bytes": [f["n_bytes"] for f in feats],
                 "first_byte": [f["first_byte"] for f in feats],
                 "last_byte": [f["last_byte"] for f in feats],
@@ -134,7 +129,7 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ASCII corpus ⇒ per-char ``ord`` == per-byte value), so DuckDB expresses
     it exactly: a lambda over a generated char index replays ``byte_sum_mod``
     and the first/last-byte features — exact oracle, not rows-only."""
-    return extract_features(binary_table(spark, sf_dir), kind="fake")
+    return extract_features(binary_table(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -156,17 +151,14 @@ FRAME_SCHEMA = T.StructType([
 ])
 
 
-def resize_images(df: DataFrame, width: int = 8, height: int = 8,
-                  kind: str = "fake") -> DataFrame:
+def resize_images(df: DataFrame, width: int = 8,
+                  height: int = 8) -> DataFrame:
     """Image-resize stage shape: binary payload → fixed (width×height)
-    float grid. ``real`` is the PIL/cv2 plug point; the ``fake`` decoder
-    derives a deterministic grid from payload bytes so the batch shape,
-    schema, and partition-parallelism are fully exercised. One output row
-    per image; array column sized width·height (Arrow keeps it columnar).
+    float grid. The fake decoder derives a deterministic grid from payload
+    bytes so the batch shape, schema, and partition-parallelism are fully
+    exercised. One output row per image; array column sized width·height
+    (Arrow keeps it columnar).
     """
-    if kind == "real":
-        raise NotImplementedError(
-            "image codecs are not installed; plug PIL/cv2 in here")
     n_px = width * height
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -196,16 +188,13 @@ def resize_images(df: DataFrame, width: int = 8, height: int = 8,
     return df.mapInPandas(batches, RESIZE_SCHEMA)
 
 
-def sample_frames(df: DataFrame, every_ms: int = 1000, max_frames: int = 4,
-                  kind: str = "fake") -> DataFrame:
+def sample_frames(df: DataFrame, every_ms: int = 1000,
+                  max_frames: int = 4) -> DataFrame:
     """Video frame-sampling stage shape: one input row (video payload) →
     up to ``max_frames`` output rows, each a (frame_idx, timestamp, bytes)
     — the row-expanding mapInPandas pattern (output cardinality ≠ input
-    cardinality is why this is mapInPandas, not a UDF). ``real`` is the
-    pyav plug point; ``fake`` slices the payload deterministically."""
-    if kind == "real":
-        raise NotImplementedError(
-            "video codecs are not installed; plug pyav in here")
+    cardinality is why this is mapInPandas, not a UDF). The fake decoder
+    slices the payload deterministically."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

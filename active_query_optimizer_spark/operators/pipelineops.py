@@ -127,4 +127,4 @@ def coreset_select_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     sel = coreset_select(emb, k_per_bucket=4, id_col="vec_id",
                          vec_col="embedding", num_groups=8, seed=42)
-    return sel.orderBy("bucket", "vec_id")
+    return sel.drop("rank").orderBy("bucket", "vec_id")

@@ -2,7 +2,6 @@
 ``Lero/dynamic.py``, ``Lero/deployment.py``)."""
 
 from .stable import run_stable  # noqa: F401
-from .dynamic import (live_deployment_batches, run_deployment,  # noqa: F401
-                      run_dynamic, run_live_deployment)
+from .dynamic import run_deployment, run_dynamic  # noqa: F401
 from .active import run_active_loop, select_next_batch  # noqa: F401
 from .optimize import choose_plan, run_optimized  # noqa: F401

@@ -26,6 +26,7 @@ import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..evaluation.metrics import as_bundles
 from ..model.infer import plan_embeddings
 from ..model.lero import LeroModelPairWise, train_pairwise_from_bundles
 from ..plans.explore import label_workload
@@ -57,10 +58,13 @@ def select_next_batch(spark: SparkSession, model: LeroModelPairWise,
                       pool_plans: list[tuple[str, str]], k: int,
                       labeled_qids: set[str],
                       num_groups: int = 4, seed: int = 42) -> list[str]:
-    """Coreset-select ``k``-ish pool queries most distant (in plan-embedding
-    space) from everything already labeled (reference ``coreset.py:91-98``:
-    LSH partition → per-group greedy k-center against the labeled set).
-    ``pool_plans`` are ``pool_default_plans`` rows.
+    """Coreset-select ``min(k, |unlabeled|)`` pool queries most distant (in
+    plan-embedding space) from everything already labeled (reference
+    ``coreset.py:91-98``: LSH partition → per-group greedy k-center against
+    the labeled set). Every bucket proposes up to ``k`` in greedy order and
+    the batch takes them round-robin: each bucket's first pick (by bucket
+    id), then each bucket's second, until ``k`` are taken — so every round
+    labels the same budget. ``pool_plans`` are ``pool_default_plans`` rows.
 
     The labeled embeddings go to ``coreset_select`` raw: it standardizes
     them with the unlabeled pool's (mean, std) and L2-normalizes them with
@@ -81,16 +85,15 @@ def select_next_batch(spark: SparkSession, model: LeroModelPairWise,
         lemb = plan_embeddings(ldf, model).select("embedding").collect()
         labeled_mat = np.stack([np.array(r["embedding"]) for r in lemb])
 
-    k_per_bucket = max(1, round(k / num_groups))
     # coreset_select runs two jobs on ``emb`` (column stats, then the
     # per-bucket selection); cached, each pool plan is embedded once
     emb.cache()
     try:
-        sel = coreset_select(emb, k_per_bucket=k_per_bucket,
-                             labeled=labeled_mat, id_col="qid",
-                             vec_col="embedding", num_groups=num_groups,
-                             seed=seed)
-        return [r["qid"] for r in sel.collect()]
+        sel = coreset_select(emb, k_per_bucket=k, labeled=labeled_mat,
+                             id_col="qid", vec_col="embedding",
+                             num_groups=num_groups, seed=seed).collect()
+        sel.sort(key=lambda r: (r["rank"], r["bucket"]))
+        return [r["qid"] for r in sel[:k]]
     finally:
         emb.unpersist()
 
@@ -115,8 +118,7 @@ def run_active_loop(spark: SparkSession, pool: list[tuple[str, str]],
     pool_plans = pool_default_plans(spark, pool)
     model = None
     for r in range(rounds):
-        bundles = [(qid, [(c.plan, c.exec_time_ms) for c in cands])
-                   for qid, cands in labeled if len(cands) >= 2]
+        bundles = [b for b in as_bundles(labeled) if len(b[1]) >= 2]
         model = train_pairwise_from_bundles(bundles, epochs=epochs,
                                             seed=seed + r)
         picked = select_next_batch(spark, model, pool_plans, batch_size,

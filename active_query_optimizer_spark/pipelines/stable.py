@@ -8,10 +8,9 @@ plan-explorer stage replaced by Spark hint-variant exploration
 1. label each training query's candidate plans (timed execution);
 2. fit ``FeatureGenerator`` + pairwise tree-conv ranker on all candidate
    pairs;
-3. score the test queries' candidates (distributed pandas-UDF path when
-   given a bundle DataFrame; driver path for lists);
-4. report chosen-plan latency dict (``lero_dict.json`` shape) and the
-   Spearman ranking loss.
+3. score the test queries' candidates and report the chosen-plan latency
+   dict (``lero_dict.json`` shape) and the Spearman ranking loss, both
+   from ``evaluation.metrics.evaluate_bundles``.
 
 The reference's root ``stable.py:24-26`` divides the summed seconds by 1000
 twice (catalogued bug, SURVEY §2.G) — not replicated.
@@ -24,10 +23,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-from ..evaluation.metrics import ranking_loss, selection_report
+from ..evaluation.metrics import as_bundles, evaluate_bundles
 from ..model.lero import train_pairwise_from_bundles
 from ..plans.explore import label_workload
-from .dynamic import _as_bundles, _score_bundles
 
 
 def run_stable(spark: SparkSession, train_queries: list[tuple[str, str]],
@@ -37,21 +35,17 @@ def run_stable(spark: SparkSession, train_queries: list[tuple[str, str]],
     """Label + train on ``train_queries`` (``(qid, sql)`` against already
     registered views), evaluate on ``test_queries`` (defaults to the train
     set — the reference evaluates a held-out file when present)."""
-    bundles = _as_bundles(label_workload(spark, train_queries))
+    bundles = as_bundles(label_workload(spark, train_queries))
     model = train_pairwise_from_bundles(bundles, epochs=epochs, seed=seed)
 
     eval_bundles = bundles
     if test_queries is not None:
-        eval_bundles = _as_bundles(label_workload(spark, test_queries))
-
-    scored = _score_bundles(spark, eval_bundles, model).cache()
-    report = selection_report(scored)
-    loss = ranking_loss(scored)
-    scored.unpersist()
+        eval_bundles = as_bundles(label_workload(spark, test_queries))
+    ev = evaluate_bundles(spark, model, eval_bundles)
 
     if model_dir:
         model.save(model_dir)
         with open(os.path.join(model_dir, "lero_dict.json"), "w") as f:
-            json.dump(report, f)
-    return {"model": model, "lero_dict": report, "ranking_loss": loss,
-            "bundles": eval_bundles}
+            json.dump(ev["lero_dict"], f)
+    return {"model": model, "lero_dict": ev["lero_dict"],
+            "ranking_loss": ev["loss"], "bundles": eval_bundles}

@@ -47,8 +47,8 @@ Storage: one gzipped JSON file per bundle under ``.label_cache/`` at the
 repo root (committed — that is what makes the NEXT round's growth
 incremental). Plans round-trip through the reference bundle JSON
 (``to_pg_json``/``from_pg_json``); ``total_cost`` is not preserved, which
-is fine for this pipeline — pairwise training consumes (plan, wall-ms)
-only (cost pretraining labels its own corpus separately).
+is fine for this pipeline — the latency pretrain and the pairwise pass
+consume (plan, wall-ms) only.
 """
 
 from __future__ import annotations

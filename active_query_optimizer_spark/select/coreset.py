@@ -47,7 +47,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def column_stats(df: DataFrame, vec_col: str = "embedding"
@@ -122,7 +122,9 @@ def greedy_k_center(df: DataFrame, labeled: np.ndarray | None,
     """Per-bucket greedy k-center (``coreset.py:48-89``): each step selects
     the unlabeled point minimizing max cosine similarity to
     labeled ∪ already-selected; rows are pre-sorted by id so ties break
-    deterministically (np.argmin takes the first minimum).
+    deterministically (np.argmin takes the first minimum). Returns
+    ``[bucket, id, rank]``, ``rank`` being the 0-based step that picked
+    the row within its bucket.
 
     ``labeled`` and the rows of ``vec_col`` are raw vectors; both go
     through ``zscore_l2`` with the same ``stats`` = (means, stds), so the
@@ -153,10 +155,12 @@ def greedy_k_center(df: DataFrame, labeled: np.ndarray | None,
             mask[pick] = True
             chosen.append(pick)
             max_sim = np.maximum(max_sim, U @ U[pick])
-        return pdf.iloc[chosen][[bucket_col, id_col]]
+        out = pdf.iloc[chosen][[bucket_col, id_col]]
+        return out.assign(rank=np.arange(len(chosen), dtype=np.int32))
 
     schema = StructType([df.schema[bucket_col], StructField(
-        id_col, id_field.dataType, id_field.nullable)])
+        id_col, id_field.dataType, id_field.nullable),
+        StructField("rank", IntegerType(), False)])
     return df.groupBy(bucket_col).applyInPandas(select, schema)
 
 
@@ -167,8 +171,8 @@ def coreset_select(df: DataFrame, k_per_bucket: int,
     """Compose: stats → LSH partition → per-bucket standardize + greedy
     (``coreset.py:91-98``). ``labeled`` holds raw embeddings, standardized
     with the pool's stats; the reference instead standardizes U∪L jointly
-    (``coreset.py:100-131``). Returns ``[bucket, id]`` of selected
-    points."""
+    (``coreset.py:100-131``). Returns ``[bucket, id, rank]`` of selected
+    points (``rank``: greedy pick order within the bucket)."""
     stats = column_stats(df, vec_col)
     bucketed = lsh_partition(df, stats[0], vec_col, num_groups, seed=seed)
     return greedy_k_center(bucketed, labeled, k_per_bucket, stats, id_col,

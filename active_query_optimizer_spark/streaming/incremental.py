@@ -11,12 +11,9 @@ train-on-i / eval-on-i+1 protocol continuously.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame
 
-from ..evaluation.metrics import ranking_loss
-from ..model.infer import score_plans
+from ..evaluation.metrics import evaluate_bundles
 from ..model.lero import LeroModelPairWise, train_pairwise_from_bundles
 from ..plans.featurize import from_pg_json
 
@@ -36,29 +33,20 @@ class IncrementalTrainer:
         rows = batch_df.select("qid", "candidate_idx", "plan_json").collect()
         if not rows:
             return
-        if self.model is not None:
-            # evaluate yesterday's model on today's data first (drift metric)
-            scored = score_plans(
-                batch_df.withColumn(
-                    "exec_time_ms", _exec_time_col()(batch_df.plan_json)),
-                self.model)
-            self.loss_series.append(ranking_loss(scored))
         by_qid: dict[str, list] = {}
         for r in rows:
             tree, ms = from_pg_json(r["plan_json"])
             by_qid.setdefault(r["qid"], []).append((tree, ms or 0.0))
         bundles = [(q, cands) for q, cands in by_qid.items()
                    if len(cands) >= 2]
+        if self.model is not None:
+            # evaluate yesterday's model on today's data first (drift metric)
+            self.loss_series.append(evaluate_bundles(
+                batch_df.sparkSession, self.model, bundles)["loss"])
         if bundles:
             self.model = train_pairwise_from_bundles(
                 bundles, epochs=self.epochs, seed=self.seed + batch_id)
         self.batches_seen += 1
-
-
-def _exec_time_col() -> Callable:
-    from pyspark.sql import functions as F
-
-    return lambda c: F.get_json_object(c, "$['Execution Time']").cast("double")
 
 
 def incremental_retrain_stream(bundle_stream: DataFrame,

@@ -114,19 +114,10 @@ def test_multimodal_pipeline_matches_column_twin(spark):
     assert p == t and len(p) > 0
 
 
-def test_multimodal_real_decoder_is_gated():
-    from active_query_optimizer_spark.operators.multimodal import decode_payload
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        decode_payload(b"\x00", kind="real")
-
-
 def test_multimodal_resize_grid_shape_and_determinism(spark):
     from active_query_optimizer_spark.operators.multimodal import (
         binary_table, resize_images)
     import numpy as np
-    import pytest as _pt
 
     b = binary_table(spark, SF_SMALL).limit(20)
     out = {r["doc_id"]: r for r in resize_images(b, 8, 8).collect()}
@@ -137,8 +128,6 @@ def test_multimodal_resize_grid_shape_and_determinism(spark):
              for r in resize_images(b, 8, 8).collect()}
     some = next(iter(out))
     assert np.allclose(out[some]["pixels"], again[some])
-    with _pt.raises(NotImplementedError):
-        resize_images(b, kind="real")
 
 
 def test_multimodal_frame_sample_expansion(spark):

@@ -591,7 +591,11 @@ def test_optimizer_results_regenerate_sf001(spark, tmp_path):
     for q in res["per_query"]:
         assert q["best_ms"] <= q["chosen_ms"] <= q["worst_ms"]
         assert q["n_candidates"] >= 2
-    assert res["deployment_latency_series"]
+    # one reference-shaped deployment batch per requested batch, each
+    # with a positive chosen-plan latency
+    assert len(res["deployment_latency_series"]) == 2
+    assert len(res["deployment_loss_series"]) == 2
+    assert all(v > 0 for v in res["deployment_latency_series"])
 
     # label cache: cold run missed everything...
     assert res["label_cache"]["enabled"] is True

@@ -78,12 +78,12 @@ def test_deployment_pipeline_live_bundles(spark):
     (hint/conf variants executed and timed on the star schema), not
     synthetic trees — train/valid splits flow through the same series."""
     from active_query_optimizer_spark.catalog import register_views
+    from active_query_optimizer_spark.evaluation.metrics import as_bundles
     from active_query_optimizer_spark.plans.explore import label_workload
 
     register_views(spark, SF_SMALL)
     labeled = label_workload(spark, TRAIN_QUERIES[:2])
-    bundles = [(qid, [(c.plan, float(c.exec_time_ms)) for c in cands])
-               for qid, cands in labeled if len(cands) >= 2]
+    bundles = [b for b in as_bundles(labeled) if len(b[1]) >= 2]
     assert bundles, "explorer produced no multi-candidate bundles"
     out = run_deployment(spark, [bundles, bundles], [bundles, bundles],
                          epochs=5)
@@ -264,33 +264,38 @@ def test_select_next_batch_embeds_each_pool_plan_once(spark, monkeypatch):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
-def test_active_loop_plans_each_pool_query_once(spark, monkeypatch):
-    """Pool default plans do not depend on the model: a two-round loop
-    captures each pool query's plan once, not once per round. Labels are
-    stubbed (two candidates on the default plan, timed by a hash of the
-    qid) so only the pool planning is counted."""
-    from active_query_optimizer_spark.catalog import register_views
-    from active_query_optimizer_spark.pipelines import active
+#: twelve single-table pool queries over three tables
+_STUB_POOL = [(f"p{k}", f"SELECT COUNT(*) FROM {t} WHERE {p.format(k)}")
+              for k, (t, p) in enumerate([
+                  ("customer c", "c.c_acctbal > {}"),
+                  ("orders o", "o.o_totalprice > {}000"),
+                  ("supplier s", "s.s_acctbal > {}")] * 4)]
+
+
+def _stub_label(spark_, queries):
+    """Stub labels: two candidates on the default plan, timed by a hash
+    of the qid."""
     from active_query_optimizer_spark.plans import featurize as FZ
     from active_query_optimizer_spark.plans.explore import Candidate
 
+    out = []
+    for qid, sql in queries:
+        plan = FZ.capture_plan(spark_.sql(sql), executed=False)
+        ms = float(sum(map(ord, qid)) % 7 + 1)
+        out.append((qid, [
+            Candidate("default", sql, "fa", plan, exec_time_ms=ms),
+            Candidate("rot1", sql, "fb", plan, exec_time_ms=ms + 1)]))
+    return out
+
+
+def test_active_loop_plans_each_pool_query_once(spark, monkeypatch):
+    """Pool default plans do not depend on the model: a two-round loop
+    captures each pool query's plan once, not once per round. Labels are
+    stubbed so only the pool planning is counted."""
+    from active_query_optimizer_spark.catalog import register_views
+    from active_query_optimizer_spark.pipelines import active
+
     register_views(spark, SF_SMALL)
-    tables = [("customer c", "c.c_acctbal > {}"),
-              ("orders o", "o.o_totalprice > {}000"),
-              ("supplier s", "s.s_acctbal > {}")]
-    pool = [(f"p{k}", f"SELECT COUNT(*) FROM {t} WHERE {p.format(k)}")
-            for k, (t, p) in enumerate(tables * 4)]
-
-    def fake_label(spark_, queries):
-        out = []
-        for qid, sql in queries:
-            plan = FZ.capture_plan(spark_.sql(sql), executed=False)
-            ms = float(sum(map(ord, qid)) % 7 + 1)
-            out.append((qid, [
-                Candidate("default", sql, "fa", plan, exec_time_ms=ms),
-                Candidate("rot1", sql, "fb", plan, exec_time_ms=ms + 1)]))
-        return out
-
     captured = []
     real = active.capture_plan
 
@@ -298,12 +303,33 @@ def test_active_loop_plans_each_pool_query_once(spark, monkeypatch):
         captured.append(df)
         return real(df, **kw)
 
-    monkeypatch.setattr(active, "label_workload", fake_label)
+    monkeypatch.setattr(active, "label_workload", _stub_label)
     monkeypatch.setattr(active, "capture_plan", counting)
-    out = active.run_active_loop(spark, pool, seed_batch=2, batch_size=2,
-                                 rounds=2, epochs=2)
+    out = active.run_active_loop(spark, _STUB_POOL, seed_batch=2,
+                                 batch_size=2, rounds=2, epochs=2)
     assert len(out["history"]) == 3  # both rounds selected a batch
-    assert len(captured) == len(pool)
+    assert len(captured) == len(_STUB_POOL)
+
+
+def test_active_loop_labels_batch_size_per_round(spark, monkeypatch):
+    """Every round labels exactly ``batch_size`` queries however many LSH
+    buckets are occupied (buckets propose up to ``batch_size`` each and
+    the round takes them round-robin), and a batch larger than the
+    unlabeled pool takes all of it."""
+    from active_query_optimizer_spark.catalog import register_views
+    from active_query_optimizer_spark.pipelines import active
+
+    register_views(spark, SF_SMALL)
+    monkeypatch.setattr(active, "label_workload", _stub_label)
+    out = active.run_active_loop(spark, _STUB_POOL, seed_batch=2,
+                                 batch_size=2, rounds=2, epochs=2)
+    assert [len(h) for h in out["history"]] == [2, 2, 2]
+    assert len(out["labeled_qids"]) == 6
+    rest = active.select_next_batch(
+        spark, out["model"], active.pool_default_plans(spark, _STUB_POOL),
+        k=20, labeled_qids=out["labeled_qids"])
+    assert sorted(rest) == sorted(
+        q for q, _ in _STUB_POOL if q not in out["labeled_qids"])
 
 
 def test_stateful_running_totals_matches_batch_agg(spark, tmp_path):
@@ -363,21 +389,6 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS orders_b")
         spark.sql("DROP TABLE IF EXISTS customer_b")
-
-
-def test_live_deployment_end_to_end(spark):
-    """VERDICT r2 #5: the full generate → explore/label → deploy loop with
-    NO synthetic bundles — the workload generator supplies the queries, the
-    explorer executes + times their plan variants, and the 10-batch
-    ``Lero/deployment.py:16-46`` series comes out the other end."""
-    from active_query_optimizer_spark.pipelines import run_live_deployment
-
-    n = 10
-    out = run_live_deployment(spark, SF_SMALL, num_batches=n, epochs=5,
-                              train_per_batch=1, valid_per_batch=1)
-    assert len(out["latency_series"]) == n
-    assert len(out["ranking_loss_series"]) == n
-    assert all(v > 0 for v in out["latency_series"])
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):

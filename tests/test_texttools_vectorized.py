@@ -1,18 +1,19 @@
-"""Round-13 optimization net: the vectorized (Arrow/numpy) text kernels
-must stay bit-identical to the Catalyst-expression forms they replaced.
+"""The vectorized (Arrow/numpy) text kernels against pure-Python
+references of their semantics.
 
-The expression forms (``*_expr``) are kept in ``texttools`` exactly as the
-semantics reference; these tests sweep them against the vectorized twins
-over the real corpus and an adversarial edge set (empty/short strings,
-whitespace runs, non-ASCII code points, NULs, 3k-char docs, NULL).
+Each reference spells out the per-character arithmetic the kernel
+vectorizes (Python ints never overflow, so it is exact). The sweeps run
+every kernel over the real corpus and an adversarial edge set
+(empty/short strings, whitespace runs, non-ASCII code points, NULs,
+3k-char docs, NULL). Tokens always come from Spark's ``tt.tokens``, so
+the whitespace split under test is Spark's. NULL and empty inputs are
+asserted explicitly: shingles of NULL are ``[NULL]``, token hashes and
+fingerprints of NULL are NULL, and SimHash of NULL or of no tokens is 0.
 
-One deliberate divergence, pinned here: on inputs where the expression
-form RAISES (ANSI long overflow — e.g. 12-char shingles of wide CJK code
-points), the vectorized form returns the true mod-P residue instead of
-raising (its weights are pre-reduced mod P, so the dot never overflows —
-round-13 ADVICE fix; ``test_shingle12_non_ascii_exact_mod_p`` pins the
-values against an arbitrary-precision reference). All real corpus rows
-are well inside int64 either way, so behavior there is identical.
+The shingle kernel reduces its weights mod P, so it returns the exact
+mod-P residue even where an un-reduced 64-bit fold would overflow (e.g.
+12-char shingles of wide CJK code points —
+``test_shingle12_non_ascii_exact_mod_p``).
 """
 
 from __future__ import annotations
@@ -37,63 +38,13 @@ def _edge_df(spark):
     return spark.createDataFrame(rows, "doc_id int, text string")
 
 
-def _pairs():
-    toks = tt.tokens(F.col("text"))
-    return {
-        "shingle3": (tt.shingle_hashes(F.col("text"), 3),
-                     tt.shingle_hashes_expr(F.col("text"), 3)),
-        "shingle5": (tt.shingle_hashes(F.col("text"), 5),
-                     tt.shingle_hashes_expr(F.col("text"), 5)),
-        "token_hashes": (tt.token_hashes(toks), tt.token_hashes_expr(toks)),
-        "simhash": (tt.simhash(tt.token_hashes(toks)),
-                    tt.simhash_expr(tt.token_hashes_expr(toks))),
-        "fingerprint": (tt.fingerprint(F.col("text")),
-                        tt.fingerprint_expr(F.col("text"))),
-        "fp_lane0": (tt.fingerprint_lane(F.col("text"), 0),
-                     tt.fingerprint_lane_expr(F.col("text"), 0)),
-        "fp_lane1": (tt.fingerprint_lane(F.col("text"), 1),
-                     tt.fingerprint_lane_expr(F.col("text"), 1)),
-    }
-
-
-KERNELS = ["shingle3", "shingle5", "token_hashes", "simhash",
-           "fingerprint", "fp_lane0", "fp_lane1"]
-
-
-@pytest.mark.parametrize("kernel", KERNELS)
-def test_vectorized_kernel_matches_expression_on_edges(spark, kernel):
-    a, b = _pairs()[kernel]
-    bad = (_edge_df(spark).select(a.alias("a"), b.alias("b"))
-           .filter("a IS DISTINCT FROM b").count())
-    assert bad == 0
-
-
-def test_vectorized_kernels_match_expressions_on_corpus(spark):
-    d = load_for_compute(spark, SF_SMALL, "documents", "doc_id")
-    for kernel, (a, b) in _pairs().items():
-        bad = (d.select(a.alias("a"), b.alias("b"))
-               .filter("a IS DISTINCT FROM b").count())
-        assert bad == 0, kernel
-
-
-def test_shingle12_matches_on_ascii(spark):
-    """n=12 separately on ASCII-only rows: the expression form raises
-    ANSI overflow on wide code points at this width (where the
-    vectorized form wraps) — on ASCII both are defined and must agree,
-    including the short-text padded-window path."""
-    rows = [(i, t) for i, t in enumerate(
-        ["", "a", "short", "abcdefghijklmnop", "word " * 200, None])]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    bad = (df.select(tt.shingle_hashes(F.col("text"), 12).alias("a"),
-                     tt.shingle_hashes_expr(F.col("text"), 12).alias("b"))
-           .filter("a IS DISTINCT FROM b").count())
-    assert bad == 0
-
-
-def _shingles_ref(text: str, n: int) -> list[int]:
+def _shingles_ref(text: str | None, n: int) -> list[int | None]:
     """Arbitrary-precision reference: exact ``Σ cp·31^e mod P`` per
     window (Python ints never overflow), zero-padded like the kernel,
-    distinct in first-occurrence order."""
+    distinct in first-occurrence order. NULL text has one window whose
+    hash is NULL."""
+    if text is None:
+        return [None]
     cp = [ord(ch) for ch in text]
     hi = max(len(cp) - (n - 1), 1)
     cp = cp + [0] * (hi + n - 1 - len(cp))
@@ -108,6 +59,124 @@ def _shingles_ref(text: str, n: int) -> list[int]:
             seen.add(r)
             out.append(r)
     return out
+
+
+def _token_hashes_ref(toks: list[str] | None) -> list[int] | None:
+    """Per token, the fold ``acc·31 + code point mod P``."""
+    if toks is None:
+        return None
+    out = []
+    for tok in toks:
+        h = 0
+        for ch in tok:
+            h = (h * 31 + ord(ch)) % tt.HASH_P
+        out.append(h)
+    return out
+
+
+def _simhash_ref(hashes: list[int] | None) -> int:
+    """Bit i is set iff strictly more than half the tokens' ``g(h) =
+    (a·h + b) mod 2^32`` have bit i set; no tokens give 0."""
+    if not hashes:
+        return 0
+    g = [(h * tt.SIMHASH_A + tt.SIMHASH_B) % (1 << 32) for h in hashes]
+    return sum(1 << i for i in range(tt.SIMHASH_BITS)
+               if 2 * sum((x >> i) & 1 for x in g) > len(g))
+
+
+def _fingerprint_ref(text: str | None) -> int | None:
+    """``Σ cp_i · (i mod 97 + 1) mod 2^31`` over 0-based positions."""
+    if text is None:
+        return None
+    return sum(ord(ch) * (i % 97 + 1) for i, ch in enumerate(text)) % (1 << 31)
+
+
+def _lane_ref(text: str | None, lane: int) -> int | None:
+    """``Σ cp_i · ((i·a + c) mod p) mod p`` over 1-based positions, with
+    ``(a, c, p) = FP_LANES[lane]``."""
+    if text is None:
+        return None
+    a, c, p = tt.FP_LANES[lane]
+    return sum(ord(ch) * ((i * a + c) % p)
+               for i, ch in enumerate(text, 1)) % p
+
+
+def _kernels():
+    """``{name: (column over text, reference over (text, tokens))}``."""
+    text = F.col("text")
+    toks = tt.tokens(text)
+    return {
+        "shingle3": (tt.shingle_hashes(text, 3),
+                     lambda t, _: _shingles_ref(t, 3)),
+        "shingle5": (tt.shingle_hashes(text, 5),
+                     lambda t, _: _shingles_ref(t, 5)),
+        "token_hashes": (tt.token_hashes(toks),
+                         lambda _, k: _token_hashes_ref(k)),
+        "simhash": (tt.simhash(tt.token_hashes(toks)),
+                    lambda _, k: _simhash_ref(_token_hashes_ref(k))),
+        "fingerprint": (tt.fingerprint(text),
+                        lambda t, _: _fingerprint_ref(t)),
+        "fp_lane0": (tt.fingerprint_lane(text, 0),
+                     lambda t, _: _lane_ref(t, 0)),
+        "fp_lane1": (tt.fingerprint_lane(text, 1),
+                     lambda t, _: _lane_ref(t, 1)),
+    }
+
+
+KERNELS = ["shingle3", "shingle5", "token_hashes", "simhash",
+           "fingerprint", "fp_lane0", "fp_lane1"]
+
+#: each kernel's output on NULL text and on the empty string
+NULL_AND_EMPTY = {
+    "shingle3": ([None], [0]),
+    "shingle5": ([None], [0]),
+    "token_hashes": (None, []),
+    "simhash": (0, 0),
+    "fingerprint": (None, 0),
+    "fp_lane0": (None, 0),
+    "fp_lane1": (None, 0),
+}
+
+
+def _mismatches(df, kernel: str) -> list:
+    """``(text, kernel value, reference value)`` for every row of ``df``
+    where the kernel disagrees with its reference."""
+    col, ref = _kernels()[kernel]
+    rows = df.select("text", tt.tokens(F.col("text")).alias("toks"),
+                     col.alias("got")).collect()
+    assert rows
+    return [(r["text"], r["got"], want) for r in rows
+            if r["got"] != (want := ref(r["text"], r["toks"]))]
+
+
+@pytest.mark.parametrize("kernel", KERNELS)
+def test_vectorized_kernel_matches_expression_on_edges(spark, kernel):
+    df = _edge_df(spark)
+    assert _mismatches(df, kernel) == []
+    col, _ = _kernels()[kernel]
+    got = {r["text"]: r["got"] for r in df.where(
+        F.col("text").isNull() | (F.col("text") == ""))
+        .select("text", col.alias("got")).collect()}
+    assert (got[None], got[""]) == NULL_AND_EMPTY[kernel]
+
+
+def test_vectorized_kernels_match_expressions_on_corpus(spark):
+    d = load_for_compute(spark, SF_SMALL, "documents", "doc_id")
+    for kernel in KERNELS:
+        assert _mismatches(d, kernel) == [], kernel
+
+
+def test_shingle12_matches_on_ascii(spark):
+    """n=12 on ASCII rows, including the short-text padded-window path
+    and NULL."""
+    rows = [(i, t) for i, t in enumerate(
+        ["", "a", "short", "abcdefghijklmnop", "word " * 200, None])]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    got = {r["doc_id"]: r["a"] for r in df.select(
+        "doc_id", tt.shingle_hashes(F.col("text"), 12).alias("a")).collect()}
+    for i, t in rows:
+        assert got[i] == _shingles_ref(t, 12), f"row {i}"
+    assert got[5] == [None]
 
 
 def test_shingle12_non_ascii_exact_mod_p(spark):
