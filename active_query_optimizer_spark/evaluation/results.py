@@ -110,16 +110,16 @@ def _r4(x: float | None) -> float | None:
     return None if x is None else round(x, 4)
 
 
-def _clamp_folds(cross_folds: int, n_bundles: int) -> int:
+def _clamp_folds(folds: int, n_bundles: int) -> int:
     """Clamp the cross-validation fold count so every fold's held-out
     slice is non-empty (round-6 advice: only >=3 bundles are guaranteed,
-    and an oversized ``cross_folds`` made ``block == 0`` and
-    ``_split_eval`` fail on an empty test set)."""
-    if cross_folds > n_bundles:
-        print(f"WARNING: cross_folds={cross_folds} > {n_bundles} bundles; "
-              f"clamping", file=sys.stderr)
+    and an oversized fold count made ``block == 0`` and ``_split_eval``
+    fail on an empty test set)."""
+    if folds > n_bundles:
+        print(f"WARNING: folds={folds} > {n_bundles} bundles; clamping",
+              file=sys.stderr)
         return n_bundles
-    return cross_folds
+    return folds
 
 
 def label_generated_workload(spark: SparkSession, sf_dir: str,
@@ -128,7 +128,6 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
                              cache_dir: str | None = None,
                              probe_default_s: float | None = None,
                              skip_saturated: bool = False,
-                             oversample: float = OVERSAMPLE,
                              ) -> tuple[list[tuple[str, list[Candidate]]],
                                         tuple[int, int], SparkSession,
                                         dict[str, int]]:
@@ -136,7 +135,7 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
     query by executing its plan variants (every ``HINT_STRATEGIES`` hint
     plus the other explorer forms). Queries whose variants collapse
     to one physical plan carry no ranking signal and are skipped (the
-    generator over-samples ``oversample``x to cover the loss).
+    generator over-samples ``OVERSAMPLE``x to cover the loss).
 
     With ``cache_dir`` set, bundles come from the label cache when their
     (sql, strategies, timeout, sf_dir, code+data-fingerprint) key is present
@@ -169,7 +168,7 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
     rd = harvest_range_dict(spark, sf_dir)
     print("labeling: generating workload...", file=sys.stderr, flush=True)
     wl = sorted(generate_workload(spark, rd,
-                                  num_sql=int(oversample * num_queries),
+                                  num_sql=int(OVERSAMPLE * num_queries),
                                   seed=seed).collect(),
                 key=lambda r: r["id"])
     hits = lookups = 0
@@ -242,8 +241,8 @@ def _split_eval(spark: SparkSession,
     """Train on ``train`` with the artifact recipe, score ``test``: returns
     the ranking losses, one row per held-out query (its default, chosen,
     best and worst labels) and the held-out second totals — one
-    evaluation of one train/held-out split (the main split and every
-    cross-validation fold go through this same path). Labels at or above
+    evaluation of one train/held-out split (every cross-validation fold
+    goes through this same path). Labels at or above
     ``penalty_ms`` are censored out of the pointwise pretrain."""
     model = train_pairwise_from_bundles(
         as_bundles(train), epochs=epochs, seed=seed,
@@ -271,27 +270,29 @@ def _split_eval(spark: SparkSession,
 
 
 def optimizer_results(spark: SparkSession, sf_dir: str,
-                      num_queries: int = 24, train_frac: float = 2 / 3,
-                      epochs: int = 30, seed: int = 7,
+                      num_queries: int = 24, epochs: int = 30, seed: int = 7,
                       deployment_batches: int = 5,
                       cache_dir: str | None = None,
-                      cross_folds: int = 0,
+                      folds: int = 3,
                       label_timeout_s: float = LABEL_TIMEOUT_S,
                       probe_default_s: float | None = None,
                       skip_saturated: bool = False,
                       ) -> dict[str, Any]:
-    """Label a generated workload, train on the front ``train_frac`` in
-    generation order (the drift framing: the past trains, the future
-    evaluates), and report held-out chosen-vs-default latencies, the
-    Spearman ranking loss, and the reference-shaped deployment series
-    (same explorer labels sliced into per-batch train/valid splits —
-    ``run_deployment`` is the ``Lero/deployment.py:16-46`` loop).
+    """Label a generated workload, evaluate ``folds`` rotated
+    train/held-out splits over the same labels, and report held-out
+    chosen-vs-default latencies, the Spearman ranking loss, and the
+    reference-shaped deployment series (same explorer labels sliced into
+    per-batch train/valid splits — ``run_deployment`` is the
+    ``Lero/deployment.py:16-46`` loop).
 
-    ``cross_folds`` > 0 additionally evaluates k rotated train/held-out
-    splits over the SAME labels (round-5 verdict #3: the loss series was
-    split-confounded): fold j holds out the j-th contiguous 1/k block in
-    generation order and trains on the rest, so the reported loss carries
-    a cross-split spread instead of one split's draw."""
+    Fold j holds out the j-th contiguous 1/k block in generation order
+    and trains on the rest, so the reported loss carries a cross-split
+    spread instead of one split's draw (``cross_split``). The last fold
+    is the headline held-out split (``per_query``, ``totals_sec``, the
+    losses, ``by_shape``): the drift framing — the past trains, the
+    future evaluates."""
+    if folds < 2:
+        raise ValueError(f"folds={folds}: need at least 2")
     bundles, (cache_hits, cache_lookups), spark, skip_stats = \
         label_generated_workload(
             spark, sf_dir, num_queries, seed, cache_dir=cache_dir,
@@ -299,82 +300,76 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
             skip_saturated=skip_saturated)
     if len(bundles) < 3:
         raise ValueError(f"only {len(bundles)} rankable bundles generated")
-    n_train = max(1, int(len(bundles) * train_frac))
-    train, test = bundles[:n_train], bundles[n_train:]
-
     print(f"labeling done: {len(bundles)} bundles "
-          f"(cache {cache_hits}/{cache_lookups} hits); training main split",
+          f"(cache {cache_hits}/{cache_lookups} hits)",
           file=sys.stderr, flush=True)
     # timeout-penalty labels are censored observations: excluded from the
     # pointwise pretrain set, kept for the pairwise ordering pass
     penalty_ms = LABEL_TIMEOUT_PENALTY * label_timeout_s * 1000.0
-    main_eval = _split_eval(spark, train, test, epochs, seed, penalty_ms)
-    per_query = main_eval["rows"]
 
-    # cross-split error bar: rotate the held-out block through the
-    # generation-ordered bundle list (k disjoint held-out blocks)
-    cross: dict[str, Any] | None = None
-    if cross_folds > 1:
-        cross_folds = _clamp_folds(cross_folds, len(bundles))
-        fold_rows = []
-        block = len(bundles) // cross_folds
-        for j in range(cross_folds):
-            print(f"cross-split fold {j}/{cross_folds}", file=sys.stderr,
-                  flush=True)
-            lo, hi = j * block, (j + 1) * block if j < cross_folds - 1 \
-                else len(bundles)
-            f_test = bundles[lo:hi]
-            f_train = bundles[:lo] + bundles[hi:]
-            ev = _split_eval(spark, f_train, f_test, epochs, seed,
-                             penalty_ms)
-            t = ev["totals"]
-            gap = (round(100.0 * (t["chosen"] - t["best"]) / t["best"], 2)
-                   if t["best"] > 0 else None)
-            # regret attribution (round-8 verdict item #5): the oracle-gap
-            # PERCENTAGE is a heavy-tailed statistic over a small
-            # denominator — name the query that dominates it and whether
-            # any pick landed on a timeout-penalty label, so an outlier
-            # fold is explained in the artifact instead of unexplained
-            regrets = [(q["chosen_ms"] - q["best_ms"], q["qid"],
-                        q["chosen_ms"], q["chosen_variant"], q["best_ms"])
-                       for q in ev["rows"]]
-            # true sum for the reported value; a zero-regret fold gets
-            # regret_sec 0.0 and top_regret null rather than a share_pct
-            # computed against a fabricated 1 ms denominator (r9 advice)
-            total_regret = sum(r[0] for r in regrets)
-            worst = max(regrets)
-            n_timeout_picks = sum(1 for r in regrets if r[2] >= penalty_ms)
-            fold_rows.append({
-                "fold": j, "n_test": len(f_test),
-                "ranking_loss": _r4(ev["loss"]),
-                "ranking_loss_weighted": _r4(ev["wloss"]),
-                "totals_sec": t, "oracle_gap_pct": gap,
-                "regret_sec": round(total_regret / 1e3, 4),
-                "timeout_label_picks": n_timeout_picks,
-                "top_regret": None if total_regret <= 0 else {
-                    "qid": worst[1],
-                    "chosen_ms": round(worst[2], 1),
-                    "chosen_variant": worst[3],
-                    "best_ms": round(worst[4], 1),
-                    "share_pct": round(100.0 * worst[0] / total_regret, 1),
-                },
-            })
-        losses = [f["ranking_loss"] for f in fold_rows
-                  if f["ranking_loss"] is not None]
-        gaps = [f["oracle_gap_pct"] for f in fold_rows
-                if f["oracle_gap_pct"] is not None]
-        cross = {
-            "k": cross_folds,
-            "folds": fold_rows,
-            "loss_mean": (round(sum(losses) / len(losses), 4)
-                          if losses else None),
-            "loss_spread": (round(max(losses) - min(losses), 4)
-                            if losses else None),
-            "oracle_gap_mean_pct": (round(sum(gaps) / len(gaps), 2)
-                                    if gaps else None),
-            "oracle_gap_spread_pct": (round(max(gaps) - min(gaps), 2)
-                                      if gaps else None),
-        }
+    # rotate the held-out block through the generation-ordered bundle
+    # list (k disjoint held-out blocks)
+    folds = _clamp_folds(folds, len(bundles))
+    fold_rows = []
+    block = len(bundles) // folds
+    for j in range(folds):
+        print(f"cross-split fold {j}/{folds}", file=sys.stderr, flush=True)
+        lo, hi = j * block, (j + 1) * block if j < folds - 1 \
+            else len(bundles)
+        test = bundles[lo:hi]
+        train = bundles[:lo] + bundles[hi:]
+        ev = _split_eval(spark, train, test, epochs, seed, penalty_ms)
+        t = ev["totals"]
+        gap = (round(100.0 * (t["chosen"] - t["best"]) / t["best"], 2)
+               if t["best"] > 0 else None)
+        # regret attribution (round-8 verdict item #5): the oracle-gap
+        # PERCENTAGE is a heavy-tailed statistic over a small
+        # denominator — name the query that dominates it and whether
+        # any pick landed on a timeout-penalty label, so an outlier
+        # fold is explained in the artifact instead of unexplained
+        regrets = [(q["chosen_ms"] - q["best_ms"], q["qid"],
+                    q["chosen_ms"], q["chosen_variant"], q["best_ms"])
+                   for q in ev["rows"]]
+        # true sum for the reported value; a zero-regret fold gets
+        # regret_sec 0.0 and top_regret null rather than a share_pct
+        # computed against a fabricated 1 ms denominator (r9 advice)
+        total_regret = sum(r[0] for r in regrets)
+        worst = max(regrets)
+        n_timeout_picks = sum(1 for r in regrets if r[2] >= penalty_ms)
+        fold_rows.append({
+            "fold": j, "n_test": len(test),
+            "ranking_loss": _r4(ev["loss"]),
+            "ranking_loss_weighted": _r4(ev["wloss"]),
+            "totals_sec": t, "oracle_gap_pct": gap,
+            "regret_sec": round(total_regret / 1e3, 4),
+            "timeout_label_picks": n_timeout_picks,
+            "top_regret": None if total_regret <= 0 else {
+                "qid": worst[1],
+                "chosen_ms": round(worst[2], 1),
+                "chosen_variant": worst[3],
+                "best_ms": round(worst[4], 1),
+                "share_pct": round(100.0 * worst[0] / total_regret, 1),
+            },
+        })
+    losses = [f["ranking_loss"] for f in fold_rows
+              if f["ranking_loss"] is not None]
+    gaps = [f["oracle_gap_pct"] for f in fold_rows
+            if f["oracle_gap_pct"] is not None]
+    cross = {
+        "k": folds,
+        "folds": fold_rows,
+        "loss_mean": (round(sum(losses) / len(losses), 4)
+                      if losses else None),
+        "loss_spread": (round(max(losses) - min(losses), 4)
+                        if losses else None),
+        "oracle_gap_mean_pct": (round(sum(gaps) / len(gaps), 2)
+                                if gaps else None),
+        "oracle_gap_spread_pct": (round(max(gaps) - min(gaps), 2)
+                                  if gaps else None),
+    }
+    # ``train``/``test``/``ev`` are left at the last fold: it is the
+    # headline held-out split
+    per_query = ev["rows"]
 
     # per-shape breakdown: the generator's template dimension is the join
     # width (reference workloads group by table count, create_sql.py's
@@ -448,8 +443,8 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
             "best_possible": tot("best_ms"),
             "worst_case": tot("worst_ms"),
         },
-        "ranking_loss": _r4(main_eval["loss"]),
-        "ranking_loss_weighted": _r4(main_eval["wloss"]),
+        "ranking_loss": _r4(ev["loss"]),
+        "ranking_loss_weighted": _r4(ev["wloss"]),
         "by_shape": {str(k): v for k, v in sorted(by_shape.items())},
         "deployment_latency_series": [round(x, 4) for x in
                                       deployment["latency_series"]],
@@ -480,47 +475,40 @@ def write_results_md(res: dict[str, Any], path: str) -> None:
         f"equal-weight pairs)",
         "",
     ]
-    wb = res.get("workload_bias") or {}
-    probe_biased = bool(wb.get("probe_default_s")
-                        and wb.get("probe_skipped", 0))
-    if res.get("cross_split"):
-        # the quotable numbers live here, NOT in the single-split table
-        # below: with a probe-biased workload (slow-default queries
-        # skipped at generation) the chosen-vs-default ratio on one
-        # held-out block undersells the picker; cross-fold regret /
-        # oracle gap / timeout picks are stable under that bias
-        # (round-12 verdict item #5)
-        cs = res["cross_split"]
-        regrets = [f.get("regret_sec") for f in cs["folds"]
-                   if f.get("regret_sec") is not None]
-        tpicks = sum(f.get("timeout_label_picks") or 0
-                     for f in cs["folds"])
+    wb = res["workload_bias"]
+    cs = res["cross_split"]
+    # the quotable numbers live here, NOT in the single-split table
+    # below: with a probe-biased workload (slow-default queries skipped
+    # at generation) the chosen-vs-default ratio on one held-out block
+    # undersells the picker; cross-fold regret / oracle gap / timeout
+    # picks are stable under that bias (round-12 verdict item #5)
+    regrets = [f["regret_sec"] for f in cs["folds"]]
+    tpicks = sum(f["timeout_label_picks"] for f in cs["folds"])
+    lines += [
+        "## Headline decision metrics (cross-fold — cite these "
+        "across rounds)",
+        "",
+        f"- per-fold regret (chosen - oracle best, held-out): "
+        f"max **{max(regrets)} s**, mean "
+        f"{_r4(sum(regrets) / len(regrets))} s over k={cs['k']} folds",
+        f"- oracle gap: mean **{cs['oracle_gap_mean_pct']}%** ± "
+        f"spread {cs['oracle_gap_spread_pct']}%",
+        f"- timeout-label picks: **{tpicks}** across all folds",
+        f"- ranking loss: mean {cs['loss_mean']} ± spread "
+        f"{cs['loss_spread']} (not comparable across pairwise "
+        "objectives)",
+        "",
+    ]
+    if wb["probe_default_s"] and wb["probe_skipped"]:
         lines += [
-            "## Headline decision metrics (cross-fold — cite these "
-            "across rounds)",
-            "",
-            f"- per-fold regret (chosen - oracle best, held-out): "
-            f"max **{max(regrets)} s**, mean "
-            f"{_r4(sum(regrets) / len(regrets))} s over k={cs['k']} folds"
-            if regrets else "- per-fold regret: n/a",
-            f"- oracle gap: mean **{cs['oracle_gap_mean_pct']}%** ± "
-            f"spread {cs['oracle_gap_spread_pct']}%",
-            f"- timeout-label picks: **{tpicks}** across all folds",
-            f"- ranking loss: mean {cs['loss_mean']} ± spread "
-            f"{cs['loss_spread']} (not comparable across pairwise "
-            "objectives)",
+            f"The single-split chosen-vs-default table below is "
+            f"diluted by workload bias: {wb['probe_skipped']} "
+            f"slow-default queries (> {wb['probe_default_s']}s) were "
+            "probe-skipped at generation, so the held-out default "
+            "total is dominated by already-fast queries. Use the "
+            "cross-fold metrics above for round-over-round claims.",
             "",
         ]
-        if probe_biased:
-            lines += [
-                f"The single-split chosen-vs-default table below is "
-                f"diluted by workload bias: {wb['probe_skipped']} "
-                f"slow-default queries (> {wb['probe_default_s']}s) were "
-                "probe-skipped at generation, so the held-out default "
-                "total is dominated by already-fast queries. Use the "
-                "cross-fold metrics above for round-over-round claims.",
-                "",
-            ]
     lines += [
         "## Held-out totals (seconds, sum over test queries)",
         "",
@@ -533,11 +521,11 @@ def write_results_md(res: dict[str, Any], path: str) -> None:
         "",
         f"Spearman ranking loss (1 - mean rho) on test: "
         f"**{res['ranking_loss']}** (candidate-count-weighted: "
-        f"{res.get('ranking_loss_weighted', 'n/a')})",
+        f"{res['ranking_loss_weighted']})",
         "",
     ]
-    lc = res.get("label_cache") or {}
-    if lc.get("enabled"):
+    lc = res["label_cache"]
+    if lc["enabled"]:
         lines += [
             f"Labels: cache-mixed measurement sessions — {lc['hits']} "
             f"bundle(s) from the committed label cache, {lc['misses']} "
@@ -546,66 +534,63 @@ def write_results_md(res: dict[str, Any], path: str) -> None:
             "the labeling code).",
             "",
         ]
-    sat = res.get("saturated_bundles")
-    if wb.get("probe_default_s") or wb.get("skip_saturated") or (
-            sat and (sat["labeled"] or sat["held_out"])):
+    sat = res["saturated_bundles"]
+    if wb["probe_default_s"] or wb["skip_saturated"] or sat["labeled"] \
+            or sat["held_out"]:
         parts = []
-        if wb.get("probe_default_s"):
+        if wb["probe_default_s"]:
             parts.append(
-                f"{wb.get('probe_skipped', 0)} generated queries "
+                f"{wb['probe_skipped']} generated queries "
                 f"probe-skipped (default plan exceeded "
                 f"{wb['probe_default_s']}s)")
-        if wb.get("skip_saturated"):
-            parts.append(f"{wb.get('saturated_skipped', 0)} labeled "
+        if wb["skip_saturated"]:
+            parts.append(f"{wb['saturated_skipped']} labeled "
                          "bundles dropped as fully timeout-saturated")
         bias_txt = ("Workload bias toward sub-deadline queries: "
                     + "; ".join(parts) + ". " if parts else "")
         lines += [
             bias_txt
-            + (f"Fully saturated bundles KEPT: {sat['labeled']}"
-               f"/{res['n_labeled']} labeled, {sat['held_out']}"
-               f"/{res['n_test']} held-out (a saturated bundle's truth "
-               "side is constant, so it carries zero ranking signal and "
-               "the tie-aware Spearman drops it from the loss)."
-               if sat else ""),
+            + f"Fully saturated bundles KEPT: {sat['labeled']}"
+              f"/{res['n_labeled']} labeled, {sat['held_out']}"
+              f"/{res['n_test']} held-out (a saturated bundle's truth "
+              "side is constant, so it carries zero ranking signal and "
+              "the tie-aware Spearman drops it from the loss).",
             "",
         ]
-    if res.get("cross_split"):
-        cs = res["cross_split"]
-        lines += [
-            f"## Cross-split error bar (k={cs['k']} rotated held-out "
-            "blocks, same labels)",
-            "",
-            "| fold | held-out | ranking loss | oracle gap % | "
-            "regret sec | timeout-label picks | top regret contributor |",
-            "|---|---|---|---|---|---|---|",
-        ]
-        for f in cs["folds"]:
-            tr = f.get("top_regret")
-            tr_txt = (f"{tr['qid']}: chosen {tr['chosen_ms']}ms "
-                      f"({tr['chosen_variant']}) vs best {tr['best_ms']}ms "
-                      f"= {tr['share_pct']}% of fold regret" if tr else "-")
-            lines.append(
-                f"| {f['fold']} | {f['n_test']} | {f['ranking_loss']} | "
-                f"{f['oracle_gap_pct']} | {f.get('regret_sec', '-')} | "
-                f"{f.get('timeout_label_picks', '-')} | {tr_txt} |")
-        lines += [
-            "",
-            f"Loss mean **{cs['loss_mean']}** ± spread "
-            f"{cs['loss_spread']}; oracle gap mean "
-            f"**{cs['oracle_gap_mean_pct']}%** ± spread "
-            f"{cs['oracle_gap_spread_pct']}%. The single-split headline "
-            "above is one draw from this distribution — trajectory claims "
-            "across rounds should cite the spread, not the draw. The "
-            "oracle-gap PERCENTAGE is heavy-tailed: a fold whose held-out "
-            "block has a small oracle-best total can show a large gap from "
-            "a single imperfect pick on one expensive query — the regret "
-            "attribution column names that query, and 'timeout-label "
-            "picks' counts choices that landed on a timeout-penalty label "
-            "(0 everywhere means the gap is NOT timeout saturation and "
-            "needs no label censoring).",
-            "",
-        ]
+    lines += [
+        f"## Cross-split error bar (k={cs['k']} rotated held-out "
+        "blocks, same labels)",
+        "",
+        "| fold | held-out | ranking loss | oracle gap % | "
+        "regret sec | timeout-label picks | top regret contributor |",
+        "|---|---|---|---|---|---|---|",
+    ]
+    for f in cs["folds"]:
+        tr = f["top_regret"]
+        tr_txt = (f"{tr['qid']}: chosen {tr['chosen_ms']}ms "
+                  f"({tr['chosen_variant']}) vs best {tr['best_ms']}ms "
+                  f"= {tr['share_pct']}% of fold regret" if tr else "-")
+        lines.append(
+            f"| {f['fold']} | {f['n_test']} | {f['ranking_loss']} | "
+            f"{f['oracle_gap_pct']} | {f['regret_sec']} | "
+            f"{f['timeout_label_picks']} | {tr_txt} |")
+    lines += [
+        "",
+        f"Loss mean **{cs['loss_mean']}** ± spread "
+        f"{cs['loss_spread']}; oracle gap mean "
+        f"**{cs['oracle_gap_mean_pct']}%** ± spread "
+        f"{cs['oracle_gap_spread_pct']}%. The single-split headline "
+        "above is one draw from this distribution — trajectory claims "
+        "across rounds should cite the spread, not the draw. The "
+        "oracle-gap PERCENTAGE is heavy-tailed: a fold whose held-out "
+        "block has a small oracle-best total can show a large gap from "
+        "a single imperfect pick on one expensive query — the regret "
+        "attribution column names that query, and 'timeout-label "
+        "picks' counts choices that landed on a timeout-penalty label "
+        "(0 everywhere means the gap is NOT timeout saturation and "
+        "needs no label censoring).",
+        "",
+    ]
     lines += [
         "## Per-query (held-out)",
         "",
@@ -615,23 +600,22 @@ def write_results_md(res: dict[str, Any], path: str) -> None:
     ]
     for q in res["per_query"]:
         lines.append(
-            f"| {q['qid']} | {q.get('n_tables', '?')} | "
+            f"| {q['qid']} | {q['n_tables']} | "
             f"{q['n_candidates']} | "
             f"{q['default_ms']:.1f} | {q['chosen_ms']:.1f} | "
             f"{q['chosen_variant']} | {q['best_ms']:.1f} | "
             f"{q['worst_ms']:.1f} |")
-    if res.get("by_shape"):
-        lines += [
-            "",
-            "## By join width (held-out totals, sec)",
-            "",
-            "| tables joined | queries | default | chosen | oracle best |",
-            "|---|---|---|---|---|",
-        ]
-        for k, s in res["by_shape"].items():
-            lines.append(
-                f"| {k} | {s['n_queries']} | {s['default_sec']} | "
-                f"{s['chosen_sec']} | {s['best_sec']} |")
+    lines += [
+        "",
+        "## By join width (held-out totals, sec)",
+        "",
+        "| tables joined | queries | default | chosen | oracle best |",
+        "|---|---|---|---|---|",
+    ]
+    for k, s in res["by_shape"].items():
+        lines.append(
+            f"| {k} | {s['n_queries']} | {s['default_sec']} | "
+            f"{s['chosen_sec']} | {s['best_sec']} |")
     lines += [
         "",
         "## Deployment series (reference `deployment.py` loop)",

@@ -1,4 +1,4 @@
-"""Plan-ranker training: pointwise, pairwise, and rank-score labels.
+"""Plan-ranker training: pointwise and pairwise.
 
 Rebuilds ``Lero/model.py:128-319`` and ``Lero/lero_train.py:26-73``:
 
@@ -7,9 +7,11 @@ Rebuilds ``Lero/model.py:128-319`` and ``Lero/lero_train.py:26-73``:
   candidate set, all ordered pairs (i, j), label ``1.0 if t_i >= t_j``,
   loss = BCE(sigmoid(s_i − s_j), label) (``model.py:267-299``); a single
   shared net scores both sides in one batch, so one backward pass takes
-  the pair gradient ``(p − y)`` into side 1 and ``−(p − y)`` into side 2;
-- rank-score label variants (rank², rank⁴, eʳᵃⁿᵏ — ``lero_train.py:43-73``)
-  via ``compute_rank_scores``.
+  the pair gradient ``(p − y)`` into side 1 and ``−(p − y)`` into side 2.
+
+The reference's rank-score pretrain labels (rank², rank⁴, eʳᵃⁿᵏ —
+``lero_train.py:43-73``) are not rebuilt: rank² and eʳᵃⁿᵏ lost to the
+latency pretrain (PRETRAIN_AB.md).
 
 Training is driver-local numpy (corpora are ≤ a few thousand plans — the
 reference trains 2511 pairs in ~3 CPU-minutes; this net is the same size).
@@ -162,21 +164,6 @@ def all_pairs(items: list) -> list[tuple]:
     return out
 
 
-def compute_rank_scores(times: list[float], mode: str = "rank") -> list[float]:
-    """Alternative label transforms over a query's candidate latencies
-    (``lero_train.py:43-73``): rank, rank², rank⁴, eʳᵃⁿᵏ."""
-    order = np.argsort(np.argsort(times)) + 1  # 1-based ranks
-    if mode == "rank":
-        return order.astype(float).tolist()
-    if mode == "rank2":
-        return (order.astype(float) ** 2).tolist()
-    if mode == "rank4":
-        return (order.astype(float) ** 4).tolist()
-    if mode == "exp_rank":
-        return np.exp(order.astype(float)).tolist()
-    raise ValueError(f"unknown rank mode {mode}")
-
-
 def train_pairwise_from_bundles(
         bundles: list[tuple[str, list[tuple[PlanNode, float]]]],
         epochs: int = 100, seed: int = 0,
@@ -195,11 +182,9 @@ def train_pairwise_from_bundles(
     initialization. The pairwise cross-entropy only sees plan ORDER
     within a bundle; a heavy-tailed workload (one 19.7 s mis-pick
     dominating a fold's regret — round-9 verdict item #6) benefits from
-    the net also carrying latency MAGNITUDE. ``pretrain_mode``:
-    ``latency`` fits normalized measured latency; ``rank``/``rank2``/
-    ``rank4``/``exp_rank`` fit :func:`compute_rank_scores` transforms of
-    each bundle's latencies (scale-free across bundles — the reference's
-    rank-score label family).
+    the net also carrying latency MAGNITUDE. ``pretrain_mode`` must be
+    ``latency`` (fit normalized measured latency); the reference's
+    rank-score label family lost to it (PRETRAIN_AB.md).
 
     ``pretrain_censor_ms`` excludes candidates at/above that label from
     the PRETRAIN SET ONLY: a timeout-penalty label is a censored
@@ -214,6 +199,8 @@ def train_pairwise_from_bundles(
     costs 4x pulls harder than a near-tie, concentrating capacity on the
     picks that dominate regret (the q64-class experiment). ``"none"``
     replicates the reference's equal-weight objective."""
+    if pretrain_mode != "latency":
+        raise ValueError(f"unknown pretrain_mode {pretrain_mode!r}")
     plans = [p for _, cands in bundles for p, _ in cands]
     times = [t for _, cands in bundles for _, t in cands]
     fg = FeatureGenerator().fit(plans, times)
@@ -226,17 +213,7 @@ def train_pairwise_from_bundles(
                  if pretrain_censor_ms is None or t < pretrain_censor_ms]
                 for cands in featurized]
         p_trees = [x for cands in keep for x, _ in cands]
-        p_times = [t for cands in keep for _, t in cands]
-        if pretrain_mode == "latency":
-            labels = [fg.label_norm.norm(t) for t in p_times]
-        else:
-            labels = [s for cands in keep if cands
-                      for s in compute_rank_scores(
-                          [t for _, t in cands], mode=pretrain_mode)]
-            # rank scores are per-bundle magnitudes (1..n, squared, …);
-            # squash to the same unit scale the pointwise MSE expects
-            mx = max(labels, default=0.0) or 1.0
-            labels = [v / mx for v in labels]
+        labels = [fg.label_norm.norm(t) for cands in keep for _, t in cands]
         if p_trees:
             model.fit(p_trees, labels, epochs=pretrain_epochs, seed=seed)
     x1, x2, y1, y2 = [], [], [], []

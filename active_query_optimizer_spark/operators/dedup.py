@@ -40,7 +40,6 @@ MINHASH_SHINGLE_N = 5     # 5-gram shingles: 3-grams of same-language text
                           # 5-grams push typical similarity to ~0.2 so LSH
                           # candidates approximate true near-dups
 LSH_BANDS = 21            # bands (uses 126 of the 128 minhash perms)
-COSINE_THRESHOLD = 0.45
 COSINE_SAMPLED_THRESHOLD = 0.3  # looser threshold for the sampled baseline
                                 # (like EXACT_THRESHOLD for the n-gram one)
                                 # so the 10% sample still yields pairs

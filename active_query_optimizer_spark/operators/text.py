@@ -18,7 +18,6 @@ from .registry import register
 
 BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 PUNCT_PATTERN = r"[^A-Za-z0-9\s]"
-UPPER_PATTERN = r"[A-Z]"
 
 _STOP_IN = ", ".join(f"'{w}'" for w in tt.STOPWORDS)
 

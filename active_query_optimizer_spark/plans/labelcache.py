@@ -113,28 +113,6 @@ def _walk_parquet(root: str):
                 yield os.path.join(dirpath, f)
 
 
-def _fingerprint_entries(root: str, mid_samples: int) -> str:
-    entries = []
-    for full in _walk_parquet(root):
-        st = os.stat(full)
-        ch = hashlib.sha256()
-        with open(full, "rb") as fh:
-            ch.update(fh.read(_SAMPLE_BYTES))
-            if mid_samples and st.st_size > 2 * _SAMPLE_BYTES:
-                interior = st.st_size - 2 * _SAMPLE_BYTES
-                for k in range(mid_samples):
-                    off = _SAMPLE_BYTES + (interior * k) // mid_samples
-                    fh.seek(off)
-                    ch.update(fh.read(_MID_SAMPLE_BYTES))
-            if st.st_size > 2 * _SAMPLE_BYTES:
-                fh.seek(-_SAMPLE_BYTES, os.SEEK_END)
-            ch.update(fh.read(_SAMPLE_BYTES))
-        entries.append((os.path.relpath(full, root),
-                        st.st_size, ch.hexdigest()[:16]))
-    entries.sort()
-    return hashlib.sha256(json.dumps(entries).encode()).hexdigest()[:16]
-
-
 @functools.lru_cache(maxsize=None)
 def data_fingerprint(sf_dir: str) -> str:
     """Hash of (relative path, size, head + 8 evenly-spaced interior
@@ -147,17 +125,25 @@ def data_fingerprint(sf_dir: str) -> str:
     mid-file data pages). Memoized per (normalized) path: the dataset
     cannot change mid-run by design — tests that rewrite fixture data
     call ``cache_clear()``."""
-    return _fingerprint_entries(os.path.normpath(sf_dir), _MID_SAMPLES)
-
-
-@functools.lru_cache(maxsize=None)
-def data_fingerprint_legacy_v1(sf_dir: str) -> str:
-    """The pre-round-10 head+tail-only fingerprint. Kept ONLY so
-    ``tools/rekey_label_cache.py`` can establish the provenance of
-    bundles keyed under the old schema and migrate them to the current
-    key for the SAME (sf_dir, timeout) configuration. Never used for new
-    keys."""
-    return _fingerprint_entries(os.path.normpath(sf_dir), 0)
+    root = os.path.normpath(sf_dir)
+    entries = []
+    for full in _walk_parquet(root):
+        st = os.stat(full)
+        ch = hashlib.sha256()
+        with open(full, "rb") as fh:
+            ch.update(fh.read(_SAMPLE_BYTES))
+            if st.st_size > 2 * _SAMPLE_BYTES:
+                interior = st.st_size - 2 * _SAMPLE_BYTES
+                for k in range(_MID_SAMPLES):
+                    off = _SAMPLE_BYTES + (interior * k) // _MID_SAMPLES
+                    fh.seek(off)
+                    ch.update(fh.read(_MID_SAMPLE_BYTES))
+                fh.seek(-_SAMPLE_BYTES, os.SEEK_END)
+            ch.update(fh.read(_SAMPLE_BYTES))
+        entries.append((os.path.relpath(full, root),
+                        st.st_size, ch.hexdigest()[:16]))
+    entries.sort()
+    return hashlib.sha256(json.dumps(entries).encode()).hexdigest()[:16]
 
 
 def _key_from(sql: str, strategies: tuple[str, ...],
@@ -178,14 +164,6 @@ def bundle_key(sql: str, strategies: tuple[str, ...],
                      data_fingerprint(sf_dir))
 
 
-def bundle_key_legacy_v1(sql: str, strategies: tuple[str, ...],
-                         timeout_s: float | None, sf_dir: str) -> str:
-    """The pre-round-10 key (head+tail-only data fingerprint) — see
-    :func:`data_fingerprint_legacy_v1`; migration use only."""
-    return _key_from(sql, strategies, timeout_s, sf_dir,
-                     data_fingerprint_legacy_v1(sf_dir))
-
-
 def bundle_key_at_code(sql: str, strategies: tuple[str, ...],
                        timeout_s: float | None, sf_dir: str,
                        code_fp: str) -> str:
@@ -193,8 +171,7 @@ def bundle_key_at_code(sql: str, strategies: tuple[str, ...],
     only (``tools/rekey_label_cache.py --legacy-code-rev``): when a
     fingerprinted source file changes in a way verified not to alter
     label semantics (e.g. a purely additive helper), the old fingerprint
-    recomputed from git establishes each stored bundle's provenance
-    exactly like the legacy data-fingerprint matchers do."""
+    recomputed from git establishes each stored bundle's provenance."""
     return _key_from(sql, strategies, timeout_s, sf_dir,
                      data_fingerprint(sf_dir), code_fp)
 

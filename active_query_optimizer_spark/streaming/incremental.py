@@ -29,14 +29,16 @@ class IncrementalTrainer:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body. ``batch_df``: [qid, candidate_idx, plan_json]
-        (exploded bundles with Execution Time embedded in the JSON)."""
+        (exploded bundles with Execution Time embedded in the JSON; a
+        candidate without one is unlabeled and skipped)."""
         rows = batch_df.select("qid", "candidate_idx", "plan_json").collect()
         if not rows:
             return
         by_qid: dict[str, list] = {}
         for r in rows:
             tree, ms = from_pg_json(r["plan_json"])
-            by_qid.setdefault(r["qid"], []).append((tree, ms or 0.0))
+            if ms is not None:
+                by_qid.setdefault(r["qid"], []).append((tree, ms))
         bundles = [(q, cands) for q, cands in by_qid.items()
                    if len(cands) >= 2]
         if self.model is not None:

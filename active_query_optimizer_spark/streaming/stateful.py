@@ -34,8 +34,6 @@ STATE_SCHEMA = StructType([
     StructField("last_ts", LongType()),
 ])
 
-_US = 1_000_000
-
 
 def _update_user_totals(key: Tuple[Any, ...],
                         batches: Iterable[pd.DataFrame],

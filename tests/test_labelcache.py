@@ -132,26 +132,19 @@ def test_data_fingerprint_samples_file_tail(tmp_path):
 def test_data_fingerprint_samples_interior(tmp_path):
     """Round-9 advice: a same-size regeneration that differs ONLY in
     mid-file bytes (outside both the head and tail samples) must re-key
-    under the round-10 fingerprint; the legacy v1 fingerprint is blind
-    to it by design (that blindness is what the migration tool uses to
-    establish old-key provenance)."""
+    under the round-10 fingerprint."""
     sf = tmp_path / "sf"
     sf.mkdir()
     big = bytearray(6 * LC._SAMPLE_BYTES)
     f = sf / "lineitem.parquet"
     f.write_bytes(bytes(big))
     LC.data_fingerprint.cache_clear()
-    LC.data_fingerprint_legacy_v1.cache_clear()
     base = LC.data_fingerprint(str(sf))
-    legacy_base = LC.data_fingerprint_legacy_v1(str(sf))
     big[3 * LC._SAMPLE_BYTES] = 0xFF  # dead middle, same size/head/tail
     f.write_bytes(bytes(big))
     LC.data_fingerprint.cache_clear()
-    LC.data_fingerprint_legacy_v1.cache_clear()
     assert LC.data_fingerprint(str(sf)) != base
-    assert LC.data_fingerprint_legacy_v1(str(sf)) == legacy_base
     LC.data_fingerprint.cache_clear()
-    LC.data_fingerprint_legacy_v1.cache_clear()
 
 def test_poisoned_marker_retries_then_expires(tmp_path, monkeypatch):
     """A zombie-poisoned query keeps a cross-run retry budget instead of

@@ -513,10 +513,10 @@ def test_probe_and_saturation_bias_in_labeling_loop(spark, monkeypatch):
 
     monkeypatch.setattr(LC, "label_query", fake_label)
     monkeypatch.setattr(LC, "probe_default", fake_probe)
+    monkeypatch.setattr(R, "OVERSAMPLE", 6.0)
     bundles, (hits, lookups), _, stats = R.label_generated_workload(
         spark, SF_SMALL, num_queries=2, seed=3, timeout_s=1.0,
-        cache_dir=None, probe_default_s=0.5, skip_saturated=True,
-        oversample=6.0)
+        cache_dir=None, probe_default_s=0.5, skip_saturated=True)
     assert len(bundles) == 2
     assert all(not R._is_saturated(cs, 1.0) for _, cs in bundles)
     assert stats["probe_skipped"] >= 1
@@ -580,7 +580,7 @@ def test_optimizer_results_regenerate_sf001(spark, tmp_path):
     cache = str(tmp_path / "label_cache")
     res = optimizer_results(spark, SF_SMALL, num_queries=6, epochs=8,
                             seed=11, deployment_batches=2,
-                            cache_dir=cache, cross_folds=2)
+                            cache_dir=cache, folds=2)
     assert res["pretrain"] == {"epochs": 20, "mode": "latency"}
     assert res["pair_weighting"] == "latency_delta"
     t = res["totals_sec"]
@@ -625,16 +625,79 @@ def test_optimizer_results_regenerate_sf001(spark, tmp_path):
     blob = _json.load(open(str(tmp_path / "RESULTS.json")))
     assert blob["totals_sec"] == t
 
-    # ...and a warm rerun hits everything: identical labels -> identical
-    # per-query wall-ms and totals (the incremental-growth property)
+    # ...and a warm rerun hits everything: identical labels -> an
+    # identical artifact (the incremental-growth property)
     res2 = optimizer_results(spark, SF_SMALL, num_queries=6, epochs=8,
                              seed=11, deployment_batches=2,
-                             cache_dir=cache, cross_folds=0)
+                             cache_dir=cache, folds=2)
     assert res2["label_cache"]["hits"] > 0
     assert res2["label_cache"]["misses"] == 0
     assert res2["totals_sec"] == t
     assert res2["per_query"] == res["per_query"]
-    assert res2["cross_split"] is None
+    assert ({k: v for k, v in res2.items() if k != "label_cache"}
+            == {k: v for k, v in res.items() if k != "label_cache"})
+
+
+def test_optimizer_results_is_one_fold_loop(monkeypatch):
+    """Spark-free: labeling, the split evaluation and the deployment
+    series are stubbed. ``optimizer_results`` evaluates each of the
+    ``folds`` contiguous held-out blocks once, and the headline held-out
+    split (rows, totals, losses, train/test sizes) is the last fold."""
+    from active_query_optimizer_spark.evaluation import results as R
+    from active_query_optimizer_spark.plans.explore import Candidate
+
+    bundles = [(f"q{i}", [
+        Candidate("default", f"SELECT {i}", f"d{i}", None,
+                  exec_time_ms=10.0 + i),
+        Candidate("rot1", f"SELECT {i}", f"r{i}", None,
+                  exec_time_ms=5.0 + 2 * i)]) for i in range(8)]
+    monkeypatch.setattr(
+        R, "label_generated_workload",
+        lambda spark, sf_dir, num_queries, seed, **kw: (
+            bundles, (0, 0), spark,
+            {"probe_skipped": 0, "saturated_skipped": 0}))
+    calls = []
+
+    def fake_split_eval(spark, train, test, epochs, seed, penalty_ms):
+        calls.append(([q for q, _ in train], [q for q, _ in test]))
+        rows = [{"qid": q, "n_candidates": 2, "n_tables": 1,
+                 "default_ms": cs[0].exec_time_ms,
+                 "chosen_ms": cs[len(calls) % 2].exec_time_ms,
+                 "chosen_variant": cs[len(calls) % 2].variant,
+                 "best_ms": min(c.exec_time_ms for c in cs),
+                 "worst_ms": max(c.exec_time_ms for c in cs)}
+                for q, cs in test]
+        return {"loss": 0.1 * len(calls), "wloss": 0.2 * len(calls),
+                "rows": rows,
+                "totals": {k: round(sum(r[f"{k}_ms"] for r in rows) / 1e3, 4)
+                           for k in ("default", "chosen", "best")}}
+
+    monkeypatch.setattr(R, "_split_eval", fake_split_eval)
+    monkeypatch.setattr(
+        R, "run_deployment",
+        lambda spark, trains, valids, **kw: {
+            "latency_series": [1.0] * len(trains),
+            "ranking_loss_series": [0.5] * len(trains)})
+
+    with pytest.raises(ValueError):
+        R.optimizer_results(None, "sf", num_queries=8, folds=1)
+    assert calls == []
+
+    res = R.optimizer_results(None, "sf", num_queries=8, folds=3)
+    q = [f"q{i}" for i in range(8)]
+    # fold j holds out the j-th block; the last block takes the remainder
+    assert calls == [(q[2:], q[:2]), (q[:2] + q[4:], q[2:4]),
+                     (q[:4], q[4:])]
+    last = res["cross_split"]["folds"][-1]
+    assert res["cross_split"]["k"] == 3
+    assert [r["qid"] for r in res["per_query"]] == q[4:]
+    assert res["n_train"] == 4 and res["n_test"] == last["n_test"] == 4
+    assert res["ranking_loss"] == last["ranking_loss"] == 0.3
+    assert res["ranking_loss_weighted"] == last["ranking_loss_weighted"]
+    assert res["totals_sec"]["chosen"] == last["totals_sec"]["chosen"]
+    assert res["totals_sec"]["best_possible"] == last["totals_sec"]["best"]
+    assert res["saturated_bundles"] == {"labeled": 0, "held_out": 0}
+    assert sum(s["n_queries"] for s in res["by_shape"].values()) == 4
 
 
 def test_repetition_top_token_run_scan_matches_explode(spark):

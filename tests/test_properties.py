@@ -131,13 +131,3 @@ def test_net_scores_batch_invariant_random_trees(seed):
         f1, i1, n1 = FZ.prepare_trees([vt])
         solo, _ = net.forward(f1, i1, n1)
         assert np.isclose(solo[0], batched[k], rtol=1e-10)
-
-
-@settings(max_examples=30, deadline=None)
-@given(vals=st.lists(st.floats(allow_nan=False, allow_infinity=False,
-                               width=32), min_size=1, max_size=20))
-def test_rank_scores_are_permutation_of_ranks(vals):
-    from active_query_optimizer_spark.model.lero import compute_rank_scores
-
-    ranks = compute_rank_scores(vals)
-    assert sorted(ranks) == [float(i) for i in range(1, len(vals) + 1)]

@@ -36,6 +36,16 @@ def test_bare_dry_run_moves_nothing():
     assert "re-keyed 0," in summary[0], summary[0]
 
 
+def _old_key(sql: str, sf) -> str:
+    """The key ``sql`` had under a retired code fingerprint: an orphan
+    the tool moves only when ``--orphans-from`` names its provenance."""
+    from active_query_optimizer_spark.plans import labelcache as LC
+    from active_query_optimizer_spark.plans.explore import HINT_STRATEGIES
+
+    return LC.bundle_key_at_code(sql, HINT_STRATEGIES, 30.0, str(sf),
+                                 "0" * 16)
+
+
 def _load_tool():
     import importlib.util
 
@@ -60,10 +70,7 @@ def test_markers_with_sql_migrate_and_sqlless_are_preserved(tmp_path):
     cache.mkdir()
     sf = tmp_path / "sf"
     sf.mkdir()
-    # big enough that the current (interior-sampled) and legacy
-    # (head+tail-only) data fingerprints actually diverge
-    (sf / "t.parquet").write_bytes(
-        bytes(range(256)) * (3 * 65536 // 256))
+    (sf / "t.parquet").write_bytes(bytes(range(256)))
     sql1, sql2, sql3 = ("SELECT 1 FROM t", "SELECT 2 FROM t",
                         "SELECT 3 FROM t")
 
@@ -74,13 +81,12 @@ def test_markers_with_sql_migrate_and_sqlless_are_preserved(tmp_path):
         with gzip.open(cache / f"{key}.json.gz", "wt") as fh:
             json.dump(payload, fh)
 
-    leg = lambda s: LC.bundle_key_legacy_v1(  # noqa: E731
-        s, HINT_STRATEGIES, 30.0, str(sf))
+    leg = lambda s: _old_key(s, sf)  # noqa: E731
     cur = lambda s: LC.bundle_key(  # noqa: E731
         s, HINT_STRATEGIES, 30.0, str(sf))
     # bundle + its probe marker, a bundle-less probe marker, a SQL-less
-    # probe marker, and a poison marker — all keyed under the legacy
-    # data-fingerprint schema except the SQL-less one
+    # probe marker, and a poison marker — all keyed under a retired
+    # code fingerprint except the SQL-less one
     put(leg(sql1), [{"variant": "default", "sql": sql1,
                      "fingerprint": "f", "plan_json": "{}",
                      "exec_time_ms": 1.0, "conf": {},
@@ -94,7 +100,7 @@ def test_markers_with_sql_migrate_and_sqlless_are_preserved(tmp_path):
     put(leg(sql3), {"poisoned": True, "attempts": 1, "error": "z",
                     "sql": sql3})
 
-    args = ["--cache-dir", str(cache), "--known", f"{sf}:30",
+    args = ["--cache-dir", str(cache), "--orphans-from", f"{sf}:30",
             "--force-code-ok"]
     rk.main(args)
     rk.main(args)  # second pass GCs probes superseded by migrated bundles
@@ -144,10 +150,9 @@ def test_bundle_replaces_poison_marker_at_target(tmp_path):
     cache.mkdir()
     sf = tmp_path / "sf"
     sf.mkdir()
-    (sf / "t.parquet").write_bytes(
-        bytes(range(256)) * (3 * 65536 // 256))
+    (sf / "t.parquet").write_bytes(bytes(range(256)))
     sql = "SELECT 4 FROM t"
-    leg = LC.bundle_key_legacy_v1(sql, HINT_STRATEGIES, 30.0, str(sf))
+    leg = _old_key(sql, sf)
     cur = LC.bundle_key(sql, HINT_STRATEGIES, 30.0, str(sf))
     import gzip
     import json
@@ -161,11 +166,11 @@ def test_bundle_replaces_poison_marker_at_target(tmp_path):
             json.dump(payload, fh)
 
     # the poison marker already sits at the CURRENT key (as if it
-    # migrated earlier in the pass); the real bundle is still at the
-    # legacy key and sorts after it in directory order
+    # migrated earlier in the pass); the real bundle is still at its
+    # old key
     put(cur, {"poisoned": True, "attempts": 1, "error": "z", "sql": sql})
     put(leg, bundle)
-    rk.main(["--cache-dir", str(cache), "--known", f"{sf}:30",
+    rk.main(["--cache-dir", str(cache), "--orphans-from", f"{sf}:30",
              "--force-code-ok"])
     assert not (cache / f"{leg}.json.gz").exists()
     raw = LC.read_bundle(str(cache), cur)
@@ -183,20 +188,14 @@ def test_flag_parsing_rejects_missing_value():
 
 def test_marker_migration_is_idempotent_and_dry_run_safe(tmp_path):
     """A --dry-run over a marker-bearing cache must not touch a file."""
-    from active_query_optimizer_spark.plans import labelcache as LC
-    from active_query_optimizer_spark.plans.explore import HINT_STRATEGIES
-
     rk = _load_tool()
     cache = tmp_path / "cache"
     cache.mkdir()
     sf = tmp_path / "sf"
     sf.mkdir()
-    # big enough that the current (interior-sampled) and legacy
-    # (head+tail-only) data fingerprints actually diverge
-    (sf / "t.parquet").write_bytes(
-        bytes(range(256)) * (3 * 65536 // 256))
+    (sf / "t.parquet").write_bytes(bytes(range(256)))
     sql = "SELECT 9 FROM t"
-    key = LC.bundle_key_legacy_v1(sql, HINT_STRATEGIES, 30.0, str(sf))
+    key = _old_key(sql, sf)
     import gzip
     import json
 
@@ -204,6 +203,6 @@ def test_marker_migration_is_idempotent_and_dry_run_safe(tmp_path):
         json.dump({"probe": True, "probe_s": 45.0, "passed": True,
                    "ms": 5.0, "sql": sql}, fh)
     before = sorted(os.listdir(cache))
-    rk.main(["--cache-dir", str(cache), "--known", f"{sf}:30",
+    rk.main(["--cache-dir", str(cache), "--orphans-from", f"{sf}:30",
              "--force-code-ok", "--dry-run"])
     assert sorted(os.listdir(cache)) == before

@@ -193,6 +193,45 @@ def test_incremental_retrain_foreachbatch(spark, tmp_path):
     assert score.shape == (1,)
 
 
+def test_incremental_trainer_skips_unlabeled_candidates(monkeypatch):
+    """A bundle line whose plan JSON has no Execution Time is an
+    unlabeled candidate: it must not reach training (read as 0 ms it
+    would train as its query's fastest plan), and a query left with one
+    labeled candidate carries no pair."""
+    from tests.test_plans_model import _synthetic_bundles
+    from active_query_optimizer_spark.plans.featurize import to_pg_json
+    from active_query_optimizer_spark.streaming import incremental as INC
+
+    (_, a_cands), (_, b_cands) = _synthetic_bundles(2, depths=(1, 2, 3))
+    rows = ([{"qid": "A", "candidate_idx": i, "plan_json": to_pg_json(p, t)}
+             for i, (p, t) in enumerate(a_cands[:2])]
+            + [{"qid": "A", "candidate_idx": 2,
+                "plan_json": to_pg_json(a_cands[2][0])},
+               {"qid": "B", "candidate_idx": 0,
+                "plan_json": to_pg_json(*b_cands[0])},
+               {"qid": "B", "candidate_idx": 1,
+                "plan_json": to_pg_json(b_cands[1][0])}])
+
+    class _Batch:
+        sparkSession = None
+
+        def select(self, *cols):
+            return self
+
+        def collect(self):
+            return rows
+
+    seen = []
+    monkeypatch.setattr(INC, "train_pairwise_from_bundles",
+                        lambda bundles, **kw: seen.append(bundles) or "m")
+    trainer = INC.IncrementalTrainer(epochs=1)
+    trainer.process_batch(_Batch(), 0)
+    assert len(seen) == 1
+    assert [(q, [t for _, t in cands]) for q, cands in seen[0]] == [
+        ("A", [t for _, t in a_cands[:2]])]
+    assert trainer.model == "m"
+
+
 def test_active_learning_loop(spark):
     """The reference's core workflow: label seed batch → train → embed pool
     → coreset-select next batch → label → retrain (SURVEY §0 step 6)."""

@@ -29,12 +29,15 @@ silently move labels onto keys claiming a different dataset/deadline
 * treats any file whose name already equals ``bundle_key`` under ANY
   known configuration (``_KNOWN_CONFIGS`` + ``--known SF_DIR:TIMEOUT``)
   as current and never touches it;
-* auto-migrates bundles keyed under a KNOWN legacy schema
-  (``bundle_key_legacy_v1`` — the pre-round-10 head+tail-only data
-  fingerprint): the legacy-key match itself establishes which
+* auto-migrates bundles keyed under a HISTORICAL code fingerprint when
+  ``--legacy-code-rev REV`` names the git revision whose labeling
+  sources the cache was measured under (use with ``--force-code-ok``
+  after verifying the diff since REV does not alter label semantics —
+  e.g. a purely additive helper): the old fingerprint is recomputed
+  from ``git show REV:path`` and a key match under it establishes which
   (sf_dir, timeout) the bundle was measured under, and the bundle moves
   to the current key for that SAME configuration;
-* only moves other ORPHANS (files matching no known schema at all) when
+* only moves ORPHANS (files matching neither key) when
   ``--orphans-from SF_DIR:TIMEOUT`` states their measurement provenance
   explicitly; without that flag orphans are listed and left in place;
 * never overwrites an existing candidate-list bundle at the target key
@@ -45,15 +48,6 @@ silently move labels onto keys claiming a different dataset/deadline
 * treats the empty-list payload (``[]``) as what ``read_bundle`` takes
   it for — a SQL-less poison marker with one retry attempt spent — and
   leaves it in place as a marker orphan instead of deleting it.
-
-* auto-migrates bundles keyed under a HISTORICAL code fingerprint when
-  ``--legacy-code-rev REV`` names the git revision whose labeling
-  sources the cache was measured under (use with ``--force-code-ok``
-  after verifying the diff since REV does not alter label semantics —
-  e.g. a purely additive helper): the old fingerprint is recomputed
-  from ``git show REV:path`` and a key match under it establishes the
-  bundle's (sf_dir, timeout) provenance exactly like the legacy
-  data-fingerprint matcher.
 
 Usage::
 
@@ -176,24 +170,21 @@ def main(argv: list[str] | None = None) -> None:
     def provenance(sql: str, old_key: str, suffix: str = ""):
         """Classify ``old_key`` for ``sql``: ``"current"`` (already the
         live key under a known configuration), a ``(sf_dir, timeout)``
-        pair (keyed under a KNOWN legacy schema — the key match itself
-        establishes the measurement provenance), or ``None`` (unknown).
+        pair (keyed under the ``--legacy-code-rev`` code fingerprint —
+        the key match itself establishes the measurement provenance), or
+        ``None`` (unknown).
         ``suffix`` handles probe markers, keyed ``<bundle_key>-probe``."""
         if any(LC.bundle_key(sql, HINT_STRATEGIES, t, d) + suffix
                == old_key for d, t in configs):
             return "current"
-        cfg = next(
+        if legacy_code_fp is None:
+            return None
+        # keyed under the verified historical code fingerprint
+        return next(
             ((d, t) for d, t in configs
-             if LC.bundle_key_legacy_v1(sql, HINT_STRATEGIES, t, d)
-             + suffix == old_key), None)
-        if cfg is None and legacy_code_fp is not None:
-            # keyed under the verified historical code fingerprint
-            cfg = next(
-                ((d, t) for d, t in configs
-                 if LC.bundle_key_at_code(sql, HINT_STRATEGIES, t, d,
-                                          legacy_code_fp) + suffix
-                 == old_key), None)
-        return cfg
+             if LC.bundle_key_at_code(sql, HINT_STRATEGIES, t, d,
+                                      legacy_code_fp) + suffix
+             == old_key), None)
 
     for path in sorted(glob.glob(os.path.join(cache_dir, "*.json.gz"))):
         old_key = os.path.basename(path)[: -len(".json.gz")]
