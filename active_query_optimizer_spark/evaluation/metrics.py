@@ -82,12 +82,12 @@ def _average_ranks(group: np.ndarray, code: np.ndarray,
     return ranks, np.add.reduceat(new_run.astype(np.int64), group_start)
 
 
-def _group_spearman(df: DataFrame, qid_col: str, pred_col: str,
-                    truth_col: str) -> tuple[list, np.ndarray, np.ndarray]:
-    """``(qids, sizes, rho)`` per query group, ``qids`` in Spark's order;
-    ``rho`` is NaN where the group is skipped (a constant side, which
-    includes a single candidate)."""
-    rows = df.select(qid_col, pred_col, truth_col).collect()
+def _group_spearman(df: DataFrame) -> tuple[list, np.ndarray, np.ndarray]:
+    """``(qids, sizes, rho)`` per ``qid`` group of ``score`` against
+    ``exec_time_ms``, ``qids`` in Spark's order; ``rho`` is NaN where the
+    group is skipped (a constant side, which includes a single
+    candidate)."""
+    rows = df.select("qid", "score", "exec_time_ms").collect()
     if not rows:
         return [], np.zeros(0, dtype=np.int64), np.zeros(0)
     qid, pred, truth = (_codes(list(col)) for col in zip(*rows))
@@ -113,12 +113,10 @@ def _group_spearman(df: DataFrame, qid_col: str, pred_col: str,
     return qids, sizes, rho
 
 
-def spearman_by_group(df: DataFrame, qid_col: str = "qid",
-                      pred_col: str = "score",
-                      truth_col: str = "exec_time_ms"
-                      ) -> dict[object, float | None]:
-    """``{qid: rho}`` per query over its candidates; ``None`` when either
-    side is constant within the group (or it has one candidate).
+def spearman_by_group(df: DataFrame) -> dict[object, float | None]:
+    """``{qid: rho}`` per query over its candidates (predicted ``score``
+    against measured ``exec_time_ms``); ``None`` when either side is
+    constant within the group (or it has one candidate).
 
     Ties get AVERAGE ranks — the standard Spearman treatment and what the
     reference's ``scipy.stats.spearmanr`` computes (``Lero/lero_test.py``
@@ -131,19 +129,17 @@ def spearman_by_group(df: DataFrame, qid_col: str = "qid",
     noise permutation from the arbitrary candidate order and let it
     pollute the loss (measured: 80-bundle sf1 loss 1.48 "worse than
     random" while picks were oracle-exact)."""
-    qids, _, rho = _group_spearman(df, qid_col, pred_col, truth_col)
+    qids, _, rho = _group_spearman(df)
     return {q: None if math.isnan(r) else float(r)
             for q, r in zip(qids, rho.tolist())}
 
 
-def ranking_loss(df: DataFrame, qid_col: str = "qid",
-                 pred_col: str = "score",
-                 truth_col: str = "exec_time_ms") -> float | None:
+def ranking_loss(df: DataFrame) -> float | None:
     """1 − mean Spearman over non-degenerate query groups; ``None`` when
     every group is degenerate (constant on either side — e.g. a fully
     penalty-saturated sf1 batch), matching the reference's
     no-valid-groups return (``lero_test.py:145-147``)."""
-    return _mean_loss(_group_spearman(df, qid_col, pred_col, truth_col)[2])
+    return _mean_loss(_group_spearman(df)[2])
 
 
 def _mean_loss(rho: np.ndarray) -> float | None:
@@ -153,27 +149,21 @@ def _mean_loss(rho: np.ndarray) -> float | None:
     return 1.0 - math.fsum(rho.tolist()) / len(rho)
 
 
-def selection_report(df: DataFrame, qid_col: str = "qid",
-                     score_col: str = "score",
-                     truth_col: str = "exec_time_ms") -> dict[str, float]:
+def selection_report(df: DataFrame) -> dict[str, float]:
     """``{qid: chosen-plan seconds, …, "sum": total}`` — the reference's
     ``lero_dict.json`` shape (``lero_test.py:99-112``; it divides ms by
     1000 once — root ``stable.py:24-26`` divides twice, a catalogued bug we
     do not replicate)."""
-    return _lero_dict(choose_best(df, qid_col, score_col).collect(),
-                      qid_col, truth_col)
+    return _lero_dict(choose_best(df).collect())
 
 
-def _lero_dict(chosen: list, qid_col: str,
-               truth_col: str) -> dict[str, float]:
-    out = {r[qid_col]: r[truth_col] / 1000.0 for r in chosen}
+def _lero_dict(chosen: list) -> dict[str, float]:
+    out = {r["qid"]: r["exec_time_ms"] / 1000.0 for r in chosen}
     out["sum"] = sum(out.values())
     return out
 
 
-def weighted_ranking_loss(df: DataFrame, qid_col: str = "qid",
-                          pred_col: str = "score",
-                          truth_col: str = "exec_time_ms") -> float | None:
+def weighted_ranking_loss(df: DataFrame) -> float | None:
     """1 − candidate-count-weighted mean Spearman: each query group
     contributes in proportion to ``n_candidates − 1`` (its number of
     independent pairwise comparisons), so a 7-candidate query — where
@@ -185,7 +175,7 @@ def weighted_ranking_loss(df: DataFrame, qid_col: str = "qid",
     2–7 per query, where the reference's PG explorer pinned ~3).
     Degenerate (constant-side) groups are skipped, as in the reference.
     """
-    _, sizes, rho = _group_spearman(df, qid_col, pred_col, truth_col)
+    _, sizes, rho = _group_spearman(df)
     return _weighted_loss(sizes, rho)
 
 
@@ -221,10 +211,9 @@ def evaluate_bundles(spark: SparkSession, model: LeroModel,
     ), model).cache()
     try:
         chosen = choose_best(scored).collect()
-        _, sizes, rho = _group_spearman(scored, "qid", "score",
-                                        "exec_time_ms")
+        _, sizes, rho = _group_spearman(scored)
     finally:
         scored.unpersist()
     return {"picks": {r["qid"]: r["candidate_idx"] for r in chosen},
-            "lero_dict": _lero_dict(chosen, "qid", "exec_time_ms"),
+            "lero_dict": _lero_dict(chosen),
             "loss": _mean_loss(rho), "wloss": _weighted_loss(sizes, rho)}

@@ -222,11 +222,12 @@ def token_hashes_sql(toks_expr: str) -> str:
 # MinHash signatures
 # ---------------------------------------------------------------------------
 
-def minhash_signature_oph(hashes: Column, k: int = MINHASH_K) -> Column:
+def minhash_signature_oph(hashes: Column) -> Column:
     """One-permutation-hashing MinHash signature (Li et al., NeurIPS'12):
     ONE universal hash ``g(h) = (a·h+b) mod P`` assigns each shingle to one
-    of ``k`` bins; ``sig[j] = min g(h) over bin j``, empty bins filled by
-    rotation densification (value of the next non-empty bin + offset).
+    of ``k = MINHASH_K`` bins; ``sig[j] = min g(h) over bin j``, empty bins
+    filled by rotation densification (value of the next non-empty bin +
+    offset).
 
     Band collisions estimate Jaccard like a k-permutation signature's, at
     **O(N)** per document instead of O(k·N). Vectorized numpy over Arrow
@@ -246,16 +247,16 @@ def minhash_signature_oph(hashes: Column, k: int = MINHASH_K) -> Column:
             H = np.concatenate([np.asarray(v, dtype=np.int64) for v in s]) \
                 if offs[-1] else np.zeros(0, dtype=np.int64)
             G = (H * a + b) % HASH_P
-            bins = G % k
+            bins = G % MINHASH_K
             doc = np.repeat(np.arange(len(s), dtype=np.int64), lens)
-            sig = np.full((len(s), k), np.iinfo(np.int64).max)
+            sig = np.full((len(s), MINHASH_K), np.iinfo(np.int64).max)
             np.minimum.at(sig, (doc, bins), G)
             # rotation densification: empty bin j borrows bin (j+d)'s min
             # plus d·P (keeps borrowed values distinct from native ones)
             empty = sig == np.iinfo(np.int64).max
             if empty.any():
                 filled = sig.copy()
-                for d in range(1, k):
+                for d in range(1, MINHASH_K):
                     if not empty.any():
                         break
                     rot = np.roll(filled, -d, axis=1)

@@ -1,6 +1,3 @@
 """Learned plan ranker (reference ``Lero/model.py`` +
 ``Lero/TreeConvolution`` re-implemented in numpy — torch is not available
 in this environment)."""
-
-from .tcnn import LeroNet  # noqa: F401
-from .lero import LeroModel, LeroModelPairWise  # noqa: F401

@@ -49,9 +49,9 @@ def _rebuild(state: dict) -> LeroModel:
     return model
 
 
-def _net_column(df: DataFrame, model: LeroModel, plan_col: str,
-                out_col: str, embed: bool) -> DataFrame:
-    """Append the net's output for each plan-JSON row: the pooled
+def _net_column(df: DataFrame, model: LeroModel, out_col: str,
+                embed: bool) -> DataFrame:
+    """Append the net's output for each ``plan_json`` row: the pooled
     embedding when ``embed``, else the score. One Arrow-batched UDF body
     serves both."""
     b_state = df.sparkSession.sparkContext.broadcast(_model_state(model))
@@ -69,30 +69,25 @@ def _net_column(df: DataFrame, model: LeroModel, plan_col: str,
             yield (pd.Series(list(np.asarray(emb, dtype=float))) if embed
                    else pd.Series(np.asarray(scores, dtype=float)))
 
-    return df.withColumn(out_col, _apply(F.col(plan_col)))
+    return df.withColumn(out_col, _apply(F.col("plan_json")))
 
 
-def score_plans(df: DataFrame, model: LeroModel,
-                plan_col: str = "plan_json",
-                score_col: str = "score") -> DataFrame:
-    """Append ``score_col`` = learned cost of each plan-JSON row."""
-    return _net_column(df, model, plan_col, score_col, embed=False)
+def score_plans(df: DataFrame, model: LeroModel) -> DataFrame:
+    """Append ``score`` = learned cost of each ``plan_json`` row."""
+    return _net_column(df, model, "score", embed=False)
 
 
-def plan_embeddings(df: DataFrame, model: LeroModel,
-                    plan_col: str = "plan_json",
-                    emb_col: str = "embedding") -> DataFrame:
-    """Append the 64-d pooled plan embedding (feeds coreset selection —
-    reference ``lero_train.py:224-241``)."""
-    return _net_column(df, model, plan_col, emb_col, embed=True)
+def plan_embeddings(df: DataFrame, model: LeroModel) -> DataFrame:
+    """Append ``embedding``, the 64-d pooled plan embedding of each
+    ``plan_json`` row (feeds coreset selection — reference
+    ``lero_train.py:224-241``)."""
+    return _net_column(df, model, "embedding", embed=True)
 
 
-def choose_best(df: DataFrame, qid_col: str = "qid",
-                score_col: str = "score",
-                idx_col: str = "candidate_idx") -> DataFrame:
-    """One row per query: the candidate with the lowest predicted score
-    (deterministic tie-break on candidate index)."""
-    w = Window.partitionBy(qid_col).orderBy(F.col(score_col).asc(),
-                                            F.col(idx_col).asc())
+def choose_best(df: DataFrame) -> DataFrame:
+    """One row per ``qid``: the candidate with the lowest predicted
+    ``score`` (deterministic tie-break on ``candidate_idx``)."""
+    w = Window.partitionBy("qid").orderBy(F.col("score").asc(),
+                                          F.col("candidate_idx").asc())
     return (df.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1).drop("__rn"))

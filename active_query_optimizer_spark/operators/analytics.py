@@ -26,11 +26,11 @@ from .registry import register
 FUNNEL_STAGES = ("signup", "view", "click", "purchase")
 
 
-def funnel_stage_times(ev: DataFrame,
-                       stages: tuple[str, ...] = FUNNEL_STAGES) -> DataFrame:
-    """Per-user stage-completion times ``[user_id, t_1 .. t_n]`` where
-    ``t_i`` is the first time the user completed stage i at-or-after their
-    ``t_{i-1}`` (NULL once a stage is never reached).
+def funnel_stage_times(ev: DataFrame) -> DataFrame:
+    """Per-user completion times ``[user_id, t_1 .. t_n]`` of the
+    ``FUNNEL_STAGES`` where ``t_i`` is the first time the user completed
+    stage i at-or-after their ``t_{i-1}`` (NULL once a stage is never
+    reached).
 
     ONE pass, ONE shuffle: funnel-relevant events are filtered at the scan
     (the predicate pushes down to parquet), shuffled once by ``user_id``,
@@ -40,7 +40,7 @@ def funnel_stage_times(ev: DataFrame,
     table four times; this reads it once). Per-user arrays are bounded by
     per-user event counts — cap with a slice if a bot user can emit
     millions of rows."""
-    relevant = ev.filter(F.col("event_type").isin(*stages))
+    relevant = ev.filter(F.col("event_type").isin(*FUNNEL_STAGES))
     per_user = relevant.groupBy("user_id").agg(
         F.sort_array(F.collect_list(F.struct("ts", "event_type")))
         .alias("evs"))
@@ -55,7 +55,7 @@ def funnel_stage_times(ev: DataFrame,
                            F.lit(None).cast("timestamp"), fold)
 
     prev = None
-    for i, stage in enumerate(stages):
+    for i, stage in enumerate(FUNNEL_STAGES):
         per_user = per_user.withColumn(f"t{i + 1}", _first_at(stage, prev))
         prev = F.col(f"t{i + 1}")
     return per_user.drop("evs")

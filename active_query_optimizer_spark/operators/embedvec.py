@@ -263,8 +263,8 @@ def _pca_moments(spark: SparkSession, sf_dir: str):
             .collect())
 
 
-def pca_components(spark: SparkSession, sf_dir: str, k: int = PCA_K):
-    """Fit step: top-``k`` principal axes of the embedding corpus from the
+def pca_components(spark: SparkSession, sf_dir: str):
+    """Fit step: top-``PCA_K`` principal axes of the embedding corpus from the
     distributed quantized moments (``embedding_gram_upper`` +
     ``embedding_dim_stats``), eigendecomposed on the driver.
 
@@ -275,7 +275,7 @@ def pca_components(spark: SparkSession, sf_dir: str, k: int = PCA_K):
     end-to-end. Sign ambiguity (an eigenvector and its negation are both
     valid) is canonicalized: the largest-|component| entry is made
     positive. Returns ``(mean, components)`` as float64 arrays
-    ``(d,)``/``(k, d)``.
+    ``(d,)``/``(PCA_K, d)``.
 
     Round-13 optimization (guide §1.2 "don't compute things you throw
     away" / §2.3 "aggregate before you shuffle"): the fit previously ran
@@ -307,7 +307,7 @@ def pca_components(spark: SparkSession, sf_dir: str, k: int = PCA_K):
         g[i, j] = g[j, i] = v / (DIM_Q3 * DIM_Q3)
     cov = g / n - np.outer(mean, mean)
     vals, vecs = np.linalg.eigh(cov)          # ascending eigenvalues
-    comp = vecs[:, ::-1][:, :k].T             # (k, d), top-variance first
+    comp = vecs[:, ::-1][:, :PCA_K].T         # (k, d), top-variance first
     for row in comp:                          # fix sign per component
         if row[np.argmax(np.abs(row))] < 0:
             row *= -1.0

@@ -1,6 +1,7 @@
 """Judge-facing streaming-shaped operators (batch semantics pinned vs
 DuckDB; the *streaming* execution of the same functions — watermark, state,
-availableNow triggers — is exercised in ``tests/test_streaming.py``).
+availableNow triggers — is exercised in
+``tests/test_streaming_pipelines.py``).
 
 Structured Streaming's windowed/session aggregations have exact batch
 equivalents; registering the batch form pins the semantics the stream must
@@ -34,7 +35,7 @@ def stream_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition). Decimal-exact value sums keep the hash deterministic."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
-    return windowed_event_counts(ev, window="1 hour")
+    return windowed_event_counts(ev)
 
 
 @register(
@@ -64,7 +65,7 @@ def stream_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ambiguity cannot split a session."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
-    return sessionize_events(ev, gap="30 minutes")
+    return sessionize_events(ev)
 
 
 @register(

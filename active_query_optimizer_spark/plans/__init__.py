@@ -1,14 +1,3 @@
 """Physical-plan capture, featurization, and candidate exploration
 (reference ``Lero/feature.py``, ``Lero/TreeConvolution/util.py``, and the
 absent-from-repo Lero plan explorer rebuilt on Spark join hints)."""
-
-from .featurize import (  # noqa: F401
-    OP_TYPES,
-    FeatureGenerator,
-    Normalizer,
-    PlanNode,
-    capture_plan,
-    from_pg_json,
-    prepare_trees,
-)
-from .explore import plan_variants, label_query  # noqa: F401

@@ -31,8 +31,8 @@ marker (``{"poisoned": true, "attempts": n, "error": ...}``), not an
 empty bundle: reruns retry the query up to ``MAX_POISON_ATTEMPTS`` times
 (a transient machine condition should not exclude a query from every
 future measurement round), and only a repeat offender is skipped
-permanently. Legacy empty-list bundles written by the round-6 scheme are
-read as poison markers with one attempt spent, so they too get a retry.
+permanently. An empty bundle is the stored outcome of a query with no
+plannable form, which reruns serve as a hit.
 
 MEASUREMENT-PROTOCOL NOTE (the deliberate decision the round-5 verdict
 asked for): with the cache on, a grown workload's totals mix measurement
@@ -305,16 +305,12 @@ def read_probe(cache_dir: str, key: str, probe_s: float):
 
 def read_bundle(cache_dir: str, key: str):
     """Raw cache read: ``None`` (miss), a poison-marker dict, or the
-    encoded candidate list. A legacy empty-list bundle (the round-6
-    poisoned encoding) is normalized to a marker with one attempt spent."""
+    encoded candidate list (empty for a query with no plannable form)."""
     path = os.path.join(cache_dir, f"{key}.json.gz")
     if not os.path.exists(path):
         return None
     with gzip.open(path, "rt") as fh:
-        raw = json.load(fh)
-    if raw == []:
-        return {"poisoned": True, "attempts": 1, "error": "legacy"}
-    return raw
+        return json.load(fh)
 
 
 def cached_label_query(spark: "SparkSession", sql: str,
@@ -326,7 +322,8 @@ def cached_label_query(spark: "SparkSession", sql: str,
     labeling path computes a bundle key or reads/writes a cache file.
 
     In order: the stored bundle is read once — a candidate list is a hit
-    (decoded without touching the cluster), an EXHAUSTED poison marker
+    (decoded without touching the cluster; an empty list is the stored
+    no-plannable-form outcome), an EXHAUSTED poison marker
     returns ``[]`` as a hit (the plan-collapse skip), an under-budget
     marker relabels live. A never-seen query with ``probe_s`` set first
     passes the default-plan probe: a stored probe marker at that budget

@@ -84,10 +84,10 @@ HASH_PRIME = 2038074743
 
 def lsh_partition(df: DataFrame, means: np.ndarray,
                   vec_col: str = "embedding", num_groups: int = 16,
-                  seed: int = 42, bucket_col: str = "bucket") -> DataFrame:
-    """Bucket rows by MinHash over their positive-dimension index set after
-    standardization (``coreset.py:5-46``: MinHash of ``np.where(vec > 0)``),
-    i.e. over the dimensions where ``v > mean``.
+                  seed: int = 42) -> DataFrame:
+    """Append ``bucket``: MinHash of each row's positive-dimension index
+    set after standardization (``coreset.py:5-46``: MinHash of
+    ``np.where(vec > 0)``), i.e. over the dimensions where ``v > mean``.
 
     The bucket is ``pmod(min_{i : v_i > mean_i} ((1 + i)·a + b) mod P,
     num_groups)`` with ``P = HASH_PRIME`` — equal to ``MinHashLSH(seed=
@@ -110,16 +110,16 @@ def lsh_partition(df: DataFrame, means: np.ndarray,
     above = f"zip_with(`{vec_col}`, array({means_sql}), (v, m) -> v > m)"
     min_hash = (f"array_min(transform({above}, (p, i) -> "
                 f"IF(p, ((1 + i) * {a}L + {b}L) % {HASH_PRIME}L, NULL)))")
-    return df.withColumn(bucket_col, F.expr(
+    return df.withColumn("bucket", F.expr(
         f"pmod(coalesce({min_hash}, {HASH_PRIME}L), {int(num_groups)})"))
 
 
 def greedy_k_center(df: DataFrame, labeled: np.ndarray | None,
                     k_per_bucket: int,
                     stats: tuple[np.ndarray, np.ndarray],
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    bucket_col: str = "bucket") -> DataFrame:
-    """Per-bucket greedy k-center (``coreset.py:48-89``): each step selects
+                    id_col: str = "vec_id",
+                    vec_col: str = "embedding") -> DataFrame:
+    """Per-``bucket`` greedy k-center (``coreset.py:48-89``): each step selects
     the unlabeled point minimizing max cosine similarity to
     labeled ∪ already-selected; rows are pre-sorted by id so ties break
     deterministically (np.argmin takes the first minimum). Returns
@@ -155,13 +155,13 @@ def greedy_k_center(df: DataFrame, labeled: np.ndarray | None,
             mask[pick] = True
             chosen.append(pick)
             max_sim = np.maximum(max_sim, U @ U[pick])
-        out = pdf.iloc[chosen][[bucket_col, id_col]]
+        out = pdf.iloc[chosen][["bucket", id_col]]
         return out.assign(rank=np.arange(len(chosen), dtype=np.int32))
 
-    schema = StructType([df.schema[bucket_col], StructField(
+    schema = StructType([df.schema["bucket"], StructField(
         id_col, id_field.dataType, id_field.nullable),
         StructField("rank", IntegerType(), False)])
-    return df.groupBy(bucket_col).applyInPandas(select, schema)
+    return df.groupBy("bucket").applyInPandas(select, schema)
 
 
 def coreset_select(df: DataFrame, k_per_bucket: int,

@@ -1,7 +1,1 @@
 """Sources/sinks for the engine's file formats."""
-
-from .workload_text import (  # noqa: F401
-    read_plan_bundles,
-    read_workload_text,
-    write_workload_text,
-)

@@ -37,10 +37,10 @@ def read_workload_text(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_workload_text(df: DataFrame, path: str,
-                        qid_col: str = "id", sql_col: str = "sql") -> None:
-    """Persist a workload DataFrame in the reference's line format."""
-    (df.select(F.concat_ws(SEP, F.col(qid_col).cast("string"), F.col(sql_col))
+def write_workload_text(df: DataFrame, path: str) -> None:
+    """Persist a workload DataFrame's ``id`` and ``sql`` columns in the
+    reference's line format."""
+    (df.select(F.concat_ws(SEP, F.col("id").cast("string"), F.col("sql"))
                .alias("value"))
        .write.mode("overwrite").text(path))
 

@@ -1,12 +1,1 @@
 """Statistics / metadata harvesting (reference ``pg.py`` rebuilt as Spark jobs)."""
-
-from .harvester import (  # noqa: F401
-    epoch_seconds_view,
-    find_timestamp_columns,
-    harvest_range_dict,
-    harvest_table_stats,
-    numeric_ranges,
-    read_infos,
-    string_value_stats,
-    write_infos,
-)

@@ -142,30 +142,6 @@ def approx_column_cardinalities(df: DataFrame,
     return {c: int(row[c]) for c in columns}
 
 
-def numeric_percentiles(df: DataFrame, columns: list[str] | None = None,
-                        probs: tuple[float, ...] = (0.5, 0.9, 0.99),
-                        approx: bool = False,
-                        accuracy: int = 10_000) -> dict[str, dict[str, float]]:
-    """``{col: {"p50": .., ...}}`` for numeric columns, in ONE aggregate
-    pass. ``approx=False`` uses exact ``percentile`` (sorts each column's
-    values — fine for harvest-sized tables and for anchoring tests);
-    ``approx=True`` uses the ``percentile_approx`` sketch — the 100 TB
-    path: mergeable per-partition sketches, no global sort, error bounded
-    by 1/``accuracy`` of rank (the anchor test pins drift vs exact)."""
-    if columns is None:
-        columns = [f.name for f in df.schema.fields
-                   if isinstance(f.dataType, NUMERIC_TYPES)]
-    if not columns:
-        return {}
-    fn = ((lambda c: F.percentile_approx(c, list(probs), accuracy))
-          if approx else (lambda c: F.percentile(c, F.array(
-              *[F.lit(p) for p in probs]))))
-    row = df.agg(*[fn(c).alias(c) for c in columns]).collect()[0].asDict()
-    return {c: {f"p{int(p * 100)}": _jsonable(v)
-                for p, v in zip(probs, row[c])}
-            for c in columns if row[c] is not None}
-
-
 def harvest_table_stats(df: DataFrame,
                         filter_columns: set[str] | None = None) -> dict[str, Any]:
     """range_dict entries for one table. ``filter_columns`` restricts the
@@ -228,10 +204,3 @@ def _jsonable(v: Any) -> Any:
         return v.isoformat()
     return v
 
-
-__all__ = [
-    "approx_column_cardinalities", "epoch_seconds_view",
-    "find_timestamp_columns", "harvest_range_dict", "harvest_table_stats",
-    "numeric_ranges", "numeric_percentiles", "read_infos",
-    "string_value_stats", "write_infos",
-]

@@ -1,8 +1,2 @@
 """Structured Streaming surfaces: watermarked event-time aggregation and
 the incremental-retrain loop as ``foreachBatch``."""
-
-from .windowed import windowed_event_counts, sessionize_events  # noqa: F401
-from .incremental import incremental_retrain_stream  # noqa: F401
-from .stateful import running_user_totals  # noqa: F401
-from .joins import correlate_event_streams, enrich_events_stream  # noqa: F401
-from .monitor import run_monitor_stream  # noqa: F401

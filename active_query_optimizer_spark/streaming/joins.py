@@ -20,11 +20,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def correlate_event_streams(clicks: DataFrame, purchases: DataFrame,
-                            max_lag: str = "30 minutes",
-                            watermark: str = "1 hour") -> DataFrame:
+def correlate_event_streams(clicks: DataFrame,
+                            purchases: DataFrame) -> DataFrame:
     """Attribute each purchase to the same user's click within
-    ``[purchase.ts - max_lag, purchase.ts]`` — the classic conversion
+    ``[purchase.ts - 30 minutes, purchase.ts]`` — the classic conversion
     attribution shape. Equi-key on user_id (the shuffle key: state and
     matching are co-partitioned by user) + event-time interval bound
     (the state eviction contract).
@@ -35,9 +34,9 @@ def correlate_event_streams(clicks: DataFrame, purchases: DataFrame,
 
     c, p = clicks, purchases
     if c.isStreaming:
-        c = ensure_event_time(c).withWatermark("ts", watermark)
+        c = ensure_event_time(c).withWatermark("ts", "1 hour")
     if p.isStreaming:
-        p = ensure_event_time(p).withWatermark("ts", watermark)
+        p = ensure_event_time(p).withWatermark("ts", "1 hour")
     c = c.select(F.col("user_id").alias("c_user"),
                  F.col("event_id").alias("click_id"),
                  F.col("ts").alias("click_ts"))
@@ -48,33 +47,9 @@ def correlate_event_streams(clicks: DataFrame, purchases: DataFrame,
     cond = ((F.col("c_user") == F.col("p_user"))
             & (F.col("click_ts") <= F.col("purchase_ts"))
             & (F.col("click_ts")
-               >= F.col("purchase_ts") - F.expr(f"INTERVAL {max_lag}")))
+               >= F.col("purchase_ts") - F.expr("INTERVAL 30 minutes")))
     return (c.join(p, cond)
             .select(F.col("c_user").alias("user_id"), "click_id",
                     "purchase_id", "click_ts", "purchase_ts",
                     "purchase_value"))
 
-
-def enrich_events_stream(events: DataFrame, user_dim: DataFrame,
-                         watermark: str = "1 hour") -> DataFrame:
-    """Stream-STATIC enrichment: tag each event with its user's dimension
-    attributes (here: the user's nation key through the customer table) —
-    the lookup-join every ingest pipeline runs. The static side needs no
-    watermark and holds NO stream state: Spark re-plans it per micro-batch
-    (picking up dim updates between batches) and broadcasts it when small
-    — at 100 TB/day of events the dim broadcast is what keeps the
-    enrichment map-only, with zero shuffle of the stream.
-
-    Dual-mode like every streaming op here: batch frames run the same
-    plan as a plain broadcast join (the tests' equivalence anchor)."""
-    from .windowed import ensure_event_time
-
-    ev = events
-    if ev.isStreaming:
-        ev = ensure_event_time(ev).withWatermark("ts", watermark)
-    dim = user_dim.select(F.col("c_custkey").alias("user_id"),
-                          F.col("c_nationkey").alias("user_nation"),
-                          F.col("c_mktsegment").alias("user_segment"))
-    return (ev.join(F.broadcast(dim), "user_id", "left")
-            .select("event_id", "user_id", "ts", "event_type",
-                    "user_nation", "user_segment"))

@@ -1,14 +1,2 @@
 """Workload mining + synthetic SQL generation (reference ``create_sql.py``,
 ``generate_stats_sql.py``, ``generate_imdb_sql.py``, ``sql_template.py``)."""
-
-from .extract import (  # noqa: F401
-    build_join_graph,
-    mine_conditions,
-    workload_profile,
-)
-from .generate import (  # noqa: F401
-    SEED_WORKLOAD,
-    generate_workload,
-    generate_workload_template,
-)
-from .template import fingerprint, find_matching_template  # noqa: F401

@@ -180,17 +180,19 @@ def test_poisoned_marker_retries_then_expires(tmp_path, monkeypatch):
     assert hit is True  # exhausted marker = cached outcome
 
 
-def test_legacy_empty_bundle_reads_as_one_spent_attempt(tmp_path):
-    """Round-6 wrote poisoned queries as empty lists; they must surface
-    as markers with one attempt spent so they get a retry."""
+def test_stored_empty_bundle_is_a_hit(tmp_path, monkeypatch):
+    """``write_bundle`` stores ``[]`` for a query with no plannable form;
+    a rerun must serve it from the cache, not relabel it."""
     cache = str(tmp_path)
-    key = "legacykey"
-    with gzip.open(os.path.join(cache, f"{key}.json.gz"), "wt") as fh:
-        json.dump([], fh)
-    marker = LC.read_bundle(cache, key)
-    assert marker["poisoned"] and marker["attempts"] == 1
-    # a second poisoning on top of the legacy marker accumulates
-    assert LC.record_poisoned(cache, key) == 2
+    args = ("SELECT 1", ("A",), 30.0, "/data/sf0.1")
+    LC.write_bundle(cache, LC.bundle_key(*args), [])
+
+    def relabel(*a):
+        raise AssertionError("label_query ran on a cached empty bundle")
+
+    monkeypatch.setattr(LC, "label_query", relabel)
+    for _ in range(2):
+        assert LC.cached_label_query(None, *args, cache) == ([], True)
 
 
 def test_revive_spark_internals_still_exist():

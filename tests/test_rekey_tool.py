@@ -121,10 +121,9 @@ def test_markers_with_sql_migrate_and_sqlless_are_preserved(tmp_path):
 
 
 def test_empty_list_is_a_marker_orphan_not_deleted(tmp_path):
-    """Round-12 advice (r13 item #1): ``[]`` is what ``read_bundle``
-    treats as a poison marker with one retry attempt spent — the tool
-    must leave it in place as a SQL-less marker orphan, not delete it
-    via the 'no SQL to re-key' branch."""
+    """``[]`` is an empty bundle (a query with no plannable form) and
+    carries no SQL: the tool must leave it in place with the SQL-less
+    markers, not delete it via the 'no SQL to re-key' branch."""
     rk = _load_tool()
     cache = tmp_path / "cache"
     cache.mkdir()

@@ -232,24 +232,6 @@ def test_read_plan_bundles(spark, tmp_path):
     assert sorted(byq["q1"]) == [(0, p1), (1, p2)]
 
 
-def test_percentile_sketch_anchored_to_exact(spark):
-    """The scale-path percentile sketch must track the exact percentiles:
-    with rank error ≤ n/accuracy, at accuracy=10k and harvest-sized n the
-    sketch answer is an actual element within a whisker of the exact rank
-    — assert relative drift under 5%."""
-    from active_query_optimizer_spark.catalog import load_table
-    from active_query_optimizer_spark.stats.harvester import (
-        numeric_percentiles)
-
-    d = load_table(spark, SF_SMALL, "documents").select("n_chars")
-    exact = numeric_percentiles(d, ["n_chars"])["n_chars"]
-    sketch = numeric_percentiles(d, ["n_chars"], approx=True)["n_chars"]
-    assert set(exact) == {"p50", "p90", "p99"}
-    for k in exact:
-        assert abs(sketch[k] - exact[k]) <= 0.05 * max(exact[k], 1.0), (
-            k, sketch[k], exact[k])
-
-
 def test_join_size_exact_matches_executed_join(spark):
     """The histogram-product cardinality must equal the row count of the
     actually-executed join — the ground-truth contract that makes it a

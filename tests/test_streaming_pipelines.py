@@ -11,8 +11,9 @@ import pytest
 
 from tests.conftest import SF_SMALL
 
-from active_query_optimizer_spark.pipelines import (run_deployment,
-                                                    run_dynamic, run_stable)
+from active_query_optimizer_spark.pipelines.dynamic import (run_deployment,
+                                                            run_dynamic)
+from active_query_optimizer_spark.pipelines.stable import run_stable
 from active_query_optimizer_spark.streaming.incremental import (
     IncrementalTrainer, incremental_retrain_stream)
 from active_query_optimizer_spark.streaming.windowed import (
@@ -137,7 +138,7 @@ def _start_events_stream(spark, src_dir):
 
 def test_windowed_counts_streaming_matches_batch(spark, tmp_path):
     stream, batch = _start_events_stream(spark, str(tmp_path / "ev"))
-    q = (windowed_event_counts(stream, "1 hour")
+    q = (windowed_event_counts(stream)
          .writeStream.format("memory").queryName("win_counts")
          .outputMode("complete")
          .option("checkpointLocation", str(tmp_path / "ck1"))
@@ -146,21 +147,21 @@ def test_windowed_counts_streaming_matches_batch(spark, tmp_path):
     got = {(r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
            for r in spark.sql("SELECT * FROM win_counts").collect()}
     exp = {(r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-           for r in windowed_event_counts(batch, "1 hour").collect()}
+           for r in windowed_event_counts(batch).collect()}
     assert got == exp
     assert len(got) > 0
 
 
 def test_sessionize_streaming_runs(spark, tmp_path):
     stream, batch = _start_events_stream(spark, str(tmp_path / "ev2"))
-    q = (sessionize_events(stream, "30 minutes")
+    q = (sessionize_events(stream)
          .writeStream.format("memory").queryName("sessions")
          .outputMode("complete")
          .option("checkpointLocation", str(tmp_path / "ck2"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
     got = spark.sql("SELECT COUNT(*) c FROM sessions").collect()[0]["c"]
-    exp = sessionize_events(batch, "30 minutes").count()
+    exp = sessionize_events(batch).count()
     assert got == exp > 0
 
 
@@ -371,35 +372,6 @@ def test_active_loop_labels_batch_size_per_round(spark, monkeypatch):
         q for q, _ in _STUB_POOL if q not in out["labeled_qids"])
 
 
-def test_stateful_running_totals_matches_batch_agg(spark, tmp_path):
-    """applyInPandasWithState custom operator: after draining the stream,
-    per-user running totals equal a plain batch aggregation."""
-    from pyspark.sql import functions as F
-
-    from active_query_optimizer_spark.streaming.stateful import (
-        running_user_totals)
-
-    stream, batch = _start_events_stream(spark, str(tmp_path / "ev3"))
-    q = (running_user_totals(stream)
-         .writeStream.format("memory").queryName("user_totals")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ck4"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    # "update" mode may emit a row per micro-batch; keep the final row
-    got = {r["user_id"]: (r["n_events"], round(r["sum_value"], 6),
-                          r["first_ts"], r["last_ts"])
-           for r in spark.sql(
-               "SELECT * FROM user_totals").collect()}
-    exp = {r["user_id"]: (r["n"], round(r["s"], 6), r["f"], r["l"])
-           for r in batch.groupBy("user_id").agg(
-               F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"),
-               F.min("ts").alias("f"), F.max("ts").alias("l")).collect()}
-    assert set(got) == set(exp)
-    mismatched = {u for u in exp if got[u] != exp[u]}
-    assert not mismatched, list(mismatched)[:3]
-
-
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     """Bucketing both sides of a join on the key gives a co-located
     SortMergeJoin with NO Exchange — the pre-partitioned-storage pattern
@@ -438,7 +410,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from active_query_optimizer_spark.catalog import load_table
-    from active_query_optimizer_spark.streaming import (
+    from active_query_optimizer_spark.streaming.joins import (
         correlate_event_streams)
 
     ev = load_table(spark, SF_SMALL, "events")
@@ -461,131 +433,6 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     got = {(r["click_id"], r["purchase_id"])
            for r in spark.sql(f"SELECT * FROM {sink}").collect()}
     assert got == expect
-
-
-def test_streaming_anomaly_monitor_matches_sequential_replay(spark, tmp_path):
-    """The online anomaly monitor (watermarked daily counts → foreachBatch
-    moment folding) must flag exactly what a sequential day-ordered replay
-    of the finalized daily counts flags — and only days past the watermark
-    are ever observed."""
-    from active_query_optimizer_spark.catalog import load_table
-    from active_query_optimizer_spark.streaming.monitor import (
-        AnomalyMonitor, daily_counts_stream, run_monitor_stream)
-
-    batch = load_table(spark, SF_SMALL, "events")
-    src = str(tmp_path / "ev_mon")
-    # one file -> one micro-batch: cross-batch day ordering is the
-    # monitor's per-batch sort, exercised deterministically
-    batch.repartition(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-
-    q, monitor = run_monitor_stream(stream, str(tmp_path / "ck_mon"))
-    q.awaitTermination(120)
-
-    # sequential replica over the SAME finalized-day set: append mode
-    # emits a day only once the watermark (max event time here) passes
-    # its window end
-    from pyspark.sql import functions as F
-
-    daily = daily_counts_stream(batch).collect()
-    max_ts = batch.agg(F.max(F.col("ts").cast("timestamp"))).collect()[0][0]
-    import datetime
-    finalized = [r for r in daily
-                 if r["day"] + datetime.timedelta(days=1) <= max_ts]
-    replica = AnomalyMonitor()
-    for r in sorted(finalized, key=lambda r: (r["day"], r["event_type"])):
-        replica.observe(r["event_type"], r["day"], r["cnt"])
-
-    assert monitor.flags, "monitor observed no finalized days"
-    assert monitor.flags == replica.flags
-    # warm-up respected: the first MIN_HISTORY_DAYS per type never flag
-    from active_query_optimizer_spark.streaming.monitor import \
-        MIN_HISTORY_DAYS
-    for etype in {t for t, _ in monitor.flags}:
-        days = sorted(d for t, d in monitor.flags if t == etype)
-        for d in days[:MIN_HISTORY_DAYS]:
-            assert monitor.flags[(etype, d)] is False
-
-
-def test_stream_static_enrichment_matches_batch(spark, tmp_path):
-    """Stream-static enrichment join: streamed events enriched against the
-    static customer dim must produce exactly the batch join's rows, and
-    the static side must broadcast (no stream shuffle)."""
-    from active_query_optimizer_spark.catalog import load_table
-    from active_query_optimizer_spark.streaming.joins import \
-        enrich_events_stream
-
-    stream, batch = _start_events_stream(spark, str(tmp_path / "ev_enr"))
-    dim = load_table(spark, SF_SMALL, "customer")
-
-    q = (enrich_events_stream(stream, dim)
-         .writeStream.format("memory").queryName("enriched")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck_enr"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = {(r["event_id"], r["user_nation"], r["user_segment"])
-           for r in spark.sql("SELECT * FROM enriched").collect()}
-    exp_df = enrich_events_stream(batch, dim)
-    exp = {(r["event_id"], r["user_nation"], r["user_segment"])
-           for r in exp_df.collect()}
-    assert got == exp and got
-    plan = exp_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
-def test_anomaly_monitor_restart_resumes_history(spark, tmp_path):
-    """Restarting the monitor against an EXISTING checkpoint must not
-    restart the warm-up: with ``state_dir`` set, a fresh AnomalyMonitor
-    reloads the persisted moments, Spark skips the committed batches, and
-    the union of flags across both runs equals one sequential replay of
-    all finalized days (ADVICE r3: driver-dict-only history was silently
-    wrong on restart)."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from active_query_optimizer_spark.catalog import load_table
-    from active_query_optimizer_spark.streaming.monitor import (
-        AnomalyMonitor, daily_counts_stream, run_monitor_stream)
-
-    batch = load_table(spark, SF_SMALL, "events")
-    ts = F.col("ts").cast("timestamp")
-    lo, hi = batch.agg(F.min(ts), F.max(ts)).collect()[0]
-    split = lo + (hi - lo) / 2
-    src = str(tmp_path / "ev_restart")
-    ck = str(tmp_path / "ck_restart")
-    st = str(tmp_path / "state_restart")
-
-    # run 1: first half of the timeline only
-    batch.filter(ts < F.lit(split)).repartition(1).write.parquet(
-        src + "/part1")
-    stream = (spark.readStream.schema(batch.schema)
-              .option("recursiveFileLookup", "true").parquet(src))
-    q, mon1 = run_monitor_stream(stream, ck, state_dir=st)
-    q.awaitTermination(120)
-    assert mon1.flags, "first run observed no finalized days"
-
-    # run 2: remaining events land; NEW monitor, SAME checkpoint + state
-    batch.filter(ts >= F.lit(split)).repartition(1).write.parquet(
-        src + "/part2")
-    stream2 = (spark.readStream.schema(batch.schema)
-               .option("recursiveFileLookup", "true").parquet(src))
-    q2, mon2 = run_monitor_stream(stream2, ck, state_dir=st)
-    q2.awaitTermination(120)
-    assert len(mon2.flags) > len(mon1.flags), "second run finalized no days"
-
-    # sequential replica over ALL finalized days in one pass
-    daily = (daily_counts_stream(batch)
-             .withColumn("day", F.col("day").cast("timestamp")).collect())
-    finalized = [r for r in daily
-                 if r["day"] + datetime.timedelta(days=1) <= hi]
-    replica = AnomalyMonitor()
-    for r in sorted(finalized, key=lambda r: (r["day"], r["event_type"])):
-        replica.observe(r["event_type"], r["day"], r["cnt"])
-    assert mon2.flags == replica.flags
-    assert mon2.moments == replica.moments
 
 
 def test_stream_dedup_matches_first_touch_keys(spark, tmp_path):

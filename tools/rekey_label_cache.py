@@ -45,9 +45,9 @@ silently move labels onto keys claiming a different dataset/deadline
   moved) — but a migrating candidate-list bundle DOES replace a poison
   marker occupying its target (a marker that migrated earlier in the
   same pass must not strand the real measurements at the old key);
-* treats the empty-list payload (``[]``) as what ``read_bundle`` takes
-  it for — a SQL-less poison marker with one retry attempt spent — and
-  leaves it in place as a marker orphan instead of deleting it.
+* lists an empty bundle (``[]``, the stored outcome of a query with no
+  plannable form, which ``read_bundle`` serves as a hit) with the
+  SQL-less markers and leaves it in place: it carries no SQL to re-key.
 
 Usage::
 
@@ -240,10 +240,9 @@ def main(argv: list[str] | None = None) -> None:
             moved += 1
             continue
         if isinstance(raw, list) and not raw:
-            # an empty list IS a poison marker to read_bundle (one retry
-            # attempt already spent) — paid-for state like the dict
-            # markers above; it carries no SQL, so leave it in place as
-            # a marker orphan rather than deleting it
+            # an empty bundle is a labeled outcome (no plannable form)
+            # with no SQL to re-key: leave it in place like the SQL-less
+            # markers above rather than dropping it as SQL-less
             marker_orphans.append(old_key)
             continue
         if not isinstance(raw, list):
@@ -274,10 +273,10 @@ def main(argv: list[str] | None = None) -> None:
         if os.path.exists(target):
             with gzip.open(target, "rt") as fh:
                 existing = json.load(fh)
-            if isinstance(existing, dict) or existing == []:
-                # a poison marker (dict, or the empty-list form) claimed
-                # the key first — possibly migrated earlier THIS pass.
-                # A candidate-list bundle is real measurement; it wins.
+            if isinstance(existing, dict):
+                # a poison marker claimed the key first — possibly
+                # migrated earlier THIS pass. A candidate-list bundle is
+                # real measurement; it wins.
                 print(f"replace (marker at target yields to bundle): "
                       f"{old_key}")
                 if not dry:
@@ -297,9 +296,10 @@ def main(argv: list[str] | None = None) -> None:
           f"marker-orphans-left {len(marker_orphans)}"
           f"{' (dry run)' if dry else ''}")
     if marker_orphans:
-        print("marker orphans (probe/poison markers left IN PLACE — "
-              "legacy SQL-less payloads or unknown provenance; they are "
-              "unreachable under the current fingerprint but preserved):")
+        print("marker orphans (probe/poison markers and empty bundles "
+              "left IN PLACE — SQL-less payloads or unknown provenance; "
+              "they are unreachable under the current fingerprint but "
+              "preserved):")
         for k in marker_orphans:
             print(f"  {k}")
     if orphans and orphans_from is None:
