@@ -163,23 +163,18 @@ def _lero_dict(chosen: list) -> dict[str, float]:
     return out
 
 
-def weighted_ranking_loss(df: DataFrame) -> float | None:
+def _weighted_loss(sizes: np.ndarray, rho: np.ndarray) -> float | None:
     """1 − candidate-count-weighted mean Spearman: each query group
     contributes in proportion to ``n_candidates − 1`` (its number of
     independent pairwise comparisons), so a 7-candidate query — where
     ranking is genuinely harder and the signal richer — outweighs a
-    2-candidate coin flip instead of counting the same. The unweighted
-    ``ranking_loss`` replicates the reference's equal-weight mean
+    2-candidate coin flip instead of counting the same. ``ranking_loss``
+    replicates the reference's equal-weight mean
     (``lero_test.py:115-155``); this is the refinement for workloads
     with heterogeneous candidate counts (Spark's hint explorer yields
     2–7 per query, where the reference's PG explorer pinned ~3).
     Degenerate (constant-side) groups are skipped, as in the reference.
     """
-    _, sizes, rho = _group_spearman(df)
-    return _weighted_loss(sizes, rho)
-
-
-def _weighted_loss(sizes: np.ndarray, rho: np.ndarray) -> float | None:
     valid = ~np.isnan(rho)
     if not valid.any():
         return None
@@ -201,7 +196,7 @@ def evaluate_bundles(spark: SparkSession, model: LeroModel,
     query's argmin (``choose_best``) and compare with the measured
     latencies. Returns ``picks`` (``{qid: candidate_idx}``), ``lero_dict``
     (the ``selection_report`` shape), and ``loss``/``wloss`` (the
-    ``ranking_loss``/``weighted_ranking_loss`` values). The scored frame is
+    ``ranking_loss``/``_weighted_loss`` values). The scored frame is
     cached for its two collects (the argmin rows, the Spearman rows)."""
     rows = [(qid, i, to_pg_json(p, t), float(t))
             for qid, cands in bundles for i, (p, t) in enumerate(cands)]

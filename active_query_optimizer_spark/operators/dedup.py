@@ -611,28 +611,32 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Transitive near-dup clustering (connected components + survivors)
 # ---------------------------------------------------------------------------
 
-#: truncate label lineage every N propagation rounds (plan grows ~3×/round)
-_CC_CHECKPOINT_INTERVAL = 4
-#: graphs at or below this many (symmetrized) edges resolve driver-side:
-#: 400k edge rows = ~6 MB of longs — far under any driver budget, while
-#: the distributed loop's per-round fixed cost (O(log d) rounds x several
-#: stages each) is pure overhead at this size. Near-dup graphs are edge-
-#: bound, not corpus-bound, so even 100 TB corpora often land here; the
-#: loop below is the general path when they don't.
-CC_LOCAL_MAX_EDGES = 400_000
-#: target edges per shuffle partition inside the distributed loop —
-#: per-round state is (node, label) pairs bounded by edges, so a fixed
-#: session-wide partition count (32+) just fragments tiny rounds into
-#: tiny tasks; the loop re-derives its own count from the measured edge
-#: size (never above the session setting)
-_CC_EDGES_PER_PARTITION = 100_000
+#: the near-dup graph family (components, PageRank, triangles, BFS) runs
+#: driver-side over the collected edge list; a graph with more undirected
+#: pairs than this raises instead (200k pairs = 400k symmetrized rows, a
+#: few MB of longs). Near-dup graphs are edge-bound, not corpus-bound: the
+#: near-dup graph has 256 pairs at sf0.1, the sampled cosine graph 148.
+GRAPH_MAX_EDGES = 200_000
 
 
-def _cc_local(und_rows, node_rows, node_col: str,
-              spark: SparkSession) -> DataFrame:
-    """Driver-side union-find (path-halving) over a bounded edge list —
-    produces EXACTLY the distributed loop's output: every node labeled
-    with the smallest reachable node id."""
+def _graph_edges(pairs: DataFrame) -> list[tuple[int, int]]:
+    """The undirected edges of a two-column pair frame, collected to the
+    driver in one job; ``ValueError`` above ``GRAPH_MAX_EDGES``."""
+    rows = pairs.limit(GRAPH_MAX_EDGES + 1).collect()
+    if len(rows) > GRAPH_MAX_EDGES:
+        raise ValueError(
+            f"graph has at least {len(rows)} edges, above the driver-side "
+            f"bound GRAPH_MAX_EDGES = {GRAPH_MAX_EDGES}")
+    return [(u, v) for u, v in rows]
+
+
+def connected_components(pairs: DataFrame,
+                         node_col: str = "doc_id") -> DataFrame:
+    """Every endpoint of the two-column pair frame ``pairs`` labeled with
+    the smallest node id reachable from it (= component id): driver-side
+    union-find with path halving and min-id roots. Nodes in no edge are
+    not in the result; callers left-join them back as their own
+    cluster."""
     parent: dict = {}
 
     def find(x):
@@ -642,161 +646,16 @@ def _cc_local(und_rows, node_rows, node_col: str,
             r = parent[r]
         return r
 
-    for u, v in und_rows:
+    edges = _graph_edges(pairs)
+    for u, v in edges:
         ru, rv = find(u), find(v)
         if ru != rv:  # min-id root keeps labels = min reachable id
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru
-    out = [(n, find(n)) for n in node_rows]
-    return spark.createDataFrame(
+    out = [(n, find(n)) for n in {n for e in edges for n in e}]
+    return pairs.sparkSession.createDataFrame(
         out, f"{node_col} bigint, cluster_id bigint")
-
-
-def connected_components(edges: DataFrame, nodes: DataFrame,
-                         node_col: str = "doc_id",
-                         max_iters: int = 50,
-                         stats: dict | None = None,
-                         local_max_edges: int = CC_LOCAL_MAX_EDGES,
-                         ) -> DataFrame:
-    """Min-label propagation with pointer jumping: every node ends with the
-    smallest node id reachable from it (= component id).
-
-    Scale shape (the round-2 watch item, now closed):
-
-    - **One Spark action per iteration.** The old label is carried as a
-      column through the propagation pass, so the changed-count is a filter
-      over the same cached frame — no second join, no second traversal.
-    - **O(log diameter) rounds.** Each round takes the min over neighbor
-      labels AND the label of the current label's node (path halving):
-      label pointers double their reach every round, so a length-n chain
-      converges in ~log2(n) rounds instead of n (invariant: a label is
-      always the id of a *reachable* node, so jumping through it never
-      leaves the component).
-    - **No cache leak.** The result is eagerly ``localCheckpoint``-ed
-      (partitions already materialized by the last convergence action),
-      then every internal persist — and the caller's edge persist — can be
-      released immediately; the returned frame no longer references them.
-    - **AQE off inside the loop.** Adaptive execution re-plans stage by
-      stage, each materialization a separate job — on an iterative loop
-      that overhead multiplies by rounds × stages and dominates (measured
-      3-4× wall clock at sf0.1). Round shapes don't change between
-      iterations, so static planning loses nothing; the conf is saved and
-      restored around the loop only (the caller's pipeline keeps AQE).
-
-    Size-adaptive execution (round-4 fix — the loop's per-round fixed
-    cost, several stages of session-wide shuffle-partition tasks, was
-    ~3 s/round on a 148-edge graph, 11 rounds = 33 s of pure overhead):
-
-    - **edge count ≤ ``local_max_edges``** → driver-side union-find over
-      the collected edge list (a few MB of longs), identical output.
-      Near-dup graphs are edge-bound, not corpus-bound, so this is the
-      common case at ANY corpus scale; pass ``local_max_edges=0`` to
-      force the distributed loop (the deep-chain test does).
-    - otherwise the loop's shuffle-partition count is derived from the
-      measured edge count (``_CC_EDGES_PER_PARTITION`` per partition,
-      never above the session setting) — per-round state is bounded by
-      edges, so the session-wide count only fragments rounds into
-      empty tasks.
-
-    ``stats["iterations"]`` reports the executed round count when a dict is
-    passed (the deep-chain regression test pins the O(log n) behavior);
-    ``stats["mode"]`` records ``local`` / ``loop``."""
-    a, b = F.col("src"), F.col("dst")
-    # persist the symmetrized edge list: every iteration joins against it,
-    # and its lineage may be an entire LSH pipeline (dedup_minhash_clusters)
-    # that must not re-execute once per round
-    und = (edges.select(a.alias("u"), b.alias("v"))
-           .union(edges.select(b.alias("u"), a.alias("v")))).persist()
-    spark = edges.sparkSession
-    n_edges = und.count()  # materializes the cache (first action anyway)
-    if n_edges <= local_max_edges:
-        n_nodes = nodes.count()
-        if n_nodes <= 2 * max(local_max_edges, 1):
-            und_rows = [(r["u"], r["v"]) for r in und.collect()]
-            node_rows = [r[node_col] for r in nodes.collect()]
-            und.unpersist()
-            if stats is not None:
-                stats["iterations"] = 0
-                stats["mode"] = "local"
-            return _cc_local(und_rows, node_rows, node_col, spark)
-    if stats is not None:
-        stats["mode"] = "loop"
-    labels = nodes.select(F.col(node_col).alias("u"),
-                          F.col(node_col).alias("label"))
-    aqe_key = "spark.sql.adaptive.enabled"
-    sp_key = "spark.sql.shuffle.partitions"
-    aqe_saved = spark.conf.get(aqe_key, "true")
-    sp_saved = spark.conf.get(sp_key, "32")
-    loop_parts = max(4, min(int(sp_saved),
-                            n_edges // _CC_EDGES_PER_PARTITION + 1))
-    spark.conf.set(aqe_key, "false")
-    spark.conf.set(sp_key, str(loop_parts))
-    try:
-        return _cc_loop(und, labels, node_col, max_iters, stats)
-    finally:
-        spark.conf.set(aqe_key, aqe_saved)
-        spark.conf.set(sp_key, sp_saved)
-
-
-def _cc_loop(und: DataFrame, labels: DataFrame, node_col: str,
-             max_iters: int, stats: dict | None) -> DataFrame:
-    prev_cached = None
-    iters = 0
-    for _ in range(max_iters):
-        iters += 1
-        # one union-of-contributions + a single min-agg per round:
-        #   L'[u] = min(L[u], min_{v∈N(u)} L[v], L[L[u]])
-        # The self branch is tagged so the old label rides along in the same
-        # aggregate (min over exactly one tagged row) — changed-count needs
-        # no extra join. The L[L[u]] (pointer-jump / path-halving) branch
-        # starts at round 2: at round 1 labels are the identity, so
-        # L[L[u]] == L[u] and the join would be pure overhead.
-        self_ = labels.select("u", "label", F.lit(1).alias("own"))
-        neigh = (und.join(labels, und.v == labels.u)
-                 .select(und.u.alias("u"), F.col("label"),
-                         F.lit(0).alias("own")))
-        contrib = self_.unionByName(neigh)
-        if iters > 1:
-            l2 = labels.select(F.col("u").alias("j_u"),
-                               F.col("label").alias("j_label"))
-            jump = (labels.join(l2, labels.label == l2.j_u)
-                    .select(F.col("u"), F.col("j_label").alias("label"),
-                            F.lit(0).alias("own")))
-            contrib = contrib.unionByName(jump)
-        computed = (contrib.groupBy("u")
-                    .agg(F.min("label").alias("label"),
-                         F.min(F.when(F.col("own") == 1, F.col("label")))
-                         .alias("old")))
-        # the logical plan references `labels` three times per round, so the
-        # analyzed tree grows ~3× per iteration — persist() caches execution
-        # but does NOT truncate the plan, and a deep run OOMs the driver just
-        # *printing* it. Cut lineage every few rounds (GraphFrames'
-        # checkpointInterval pattern); non-eager, so the convergence count
-        # below is still the round's only job.
-        if iters % _CC_CHECKPOINT_INTERVAL == 0:
-            new_labels = computed.localCheckpoint(eager=False)
-            cached = None  # checkpoint blocks are context-cleaner managed
-        else:
-            new_labels = computed.persist()
-            cached = new_labels
-        # ONE action: materializes the round and reads the changed count
-        changed = new_labels.filter(F.col("label") != F.col("old")).count()
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = cached
-        labels = new_labels.select("u", "label")
-        if changed == 0:
-            break
-    if stats is not None:
-        stats["iterations"] = iters
-    result = (labels.select(F.col("u").alias(node_col),
-                            F.col("label").alias("cluster_id"))
-              .localCheckpoint(eager=True))
-    if prev_cached is not None:
-        prev_cached.unpersist()
-    und.unpersist()
-    return result
 
 
 @register(
@@ -825,28 +684,13 @@ def _cc_loop(und: DataFrame, labels: DataFrame, node_col: str,
 def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clusters: the pair stream from
     ``dedup_minhash_lsh`` becomes an undirected graph; connected components
-    by min-label propagation; the survivor of each cluster is its lowest
+    by driver-side union-find; the survivor of each cluster is its lowest
     doc_id (transitive closure matters — A~B, B~C puts A and C in one
     cluster even when A≁C directly; pair-level dedup would keep both)."""
-    # shared persisted pair frame: three consumers here (symmetrized
-    # edges ×2 via union, touched-node set) plus the rest of the graph
-    # family all read the ONE cached LSH pass (see neardup_pairs)
-    pairs = neardup_pairs(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    # the shared persisted pair frame: the rest of the graph family reads
+    # the same cached LSH pass (see neardup_pairs)
+    comp = connected_components(neardup_pairs(spark, sf_dir))
     d = load_table(spark, sf_dir, "documents")
-    # propagate labels only over nodes that occur in some edge — singleton
-    # docs never change label, and the final left join re-attaches them as
-    # their own cluster. At near-dup rates of a few percent this shrinks
-    # every per-iteration join from |corpus| to |touched nodes|.
-    touched = (pairs.select(F.col("src").alias("doc_id"))
-               .union(pairs.select(F.col("dst").alias("doc_id")))
-               .distinct())
-    comp = connected_components(pairs, touched)
-    # DELIBERATE RETENTION: the shared pair frame stays persisted so the
-    # rest of the graph family (and bench best-of-N re-invocations) hit
-    # the cache — neardup_pairs documents the contract; release with
-    # release_neardup_pairs. connected_components' own internals (edge
-    # union, per-round labels) ARE released eagerly.
     return (d.select("doc_id")
             .join(comp, "doc_id", "left")
             .select("doc_id",
@@ -886,21 +730,13 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic (embedding-cosine) near-dup clusters: the sampled exact
     pair stream from ``dedup_embedding_cosine`` becomes an undirected
     graph; connected components assign every vector the smallest reachable
-    vec_id. The semantic twin of ``dedup_minhash_clusters`` — at scale the
-    edge stream comes from ``ann_lsh_bucketed`` candidates instead of the
-    sampled brute-force baseline, and the same pointer-jumping loop
-    consumes it unchanged (component count is edge-bound, not corpus-
-    bound)."""
-    pairs = dedup_embedding_cosine(spark, sf_dir).select(
-        F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")).persist()
+    vec_id. The semantic twin of ``dedup_minhash_clusters``."""
+    comp = connected_components(
+        dedup_embedding_cosine(spark, sf_dir).select("vec_a", "vec_b"),
+        node_col="vec_id")
     sampled = (load_table(spark, sf_dir, "embeddings")
                .filter(F.col("vec_id") % SAMPLE_MOD == 0)
                .select("vec_id"))
-    touched = (pairs.select(F.col("src").alias("vec_id"))
-               .union(pairs.select(F.col("dst").alias("vec_id")))
-               .distinct())
-    comp = connected_components(pairs, touched, node_col="vec_id")
-    # same deliberate single-entry cache retention as dedup_minhash_clusters
     return (sampled
             .join(comp, "vec_id", "left")
             .select("vec_id",
@@ -980,78 +816,33 @@ def _pagerank_oracle() -> str:
 
 
 @register("docrank_neardup_pagerank", oracle=_pagerank_oracle())
-def docrank_neardup_pagerank(spark: SparkSession, sf_dir: str,
-                             local_max_edges: int = CC_LOCAL_MAX_EDGES,
-                             ) -> DataFrame:
+def docrank_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the verified near-duplicate graph — ranks documents
     by how centrally they sit in duplicate clusters (the doc to KEEP when
     a cluster collapses, and a boilerplate-detector signal: high-rank
     nodes are hub texts many others nearly copy).
 
-    The showpiece property: an ITERATIVE distributed graph algorithm with
-    a full value-hash oracle. Float PageRank can never hash-match across
-    engines (per-iteration rounding drift); quantizing ranks to integers
-    and making every update pure integer arithmetic
-    (``r' = 0.15·S + (85·Σ r/deg) // 100``) makes the 5-iteration
-    trajectory EXACTLY reproducible — DuckDB replays it as unrolled CTEs
-    over the same exact-Jaccard pair set the LSH path provably recovers.
-
-    Scale: the edge list (near-dup pairs — orders of magnitude smaller
-    than the corpus) is persisted with its degrees once; each iteration
-    is one join + one aggregate on (node, rank) pairs, the same bounded
-    shape as connected components, with a FIXED round count (no
-    convergence action). Size-adaptive like ``connected_components``:
-    an edge list at or under ``CC_LOCAL_MAX_EDGES`` replays the exact
-    integer trajectory driver-side (every update is integer `div`
-    arithmetic, so the local replica is bit-identical to the
-    distributed loop — pinned by test); larger graphs run the loop with
-    edge-count-derived shuffle partitions."""
-    from pyspark import StorageLevel
-
-    pairs = neardup_pairs(spark, sf_dir)
-    edges = (pairs.select(F.col("doc_a").alias("u"),
-                          F.col("doc_b").alias("v"))
-             .unionByName(pairs.select(F.col("doc_b").alias("u"),
-                                       F.col("doc_a").alias("v"))))
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    ed = (edges.join(deg, "u")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    n_edges = ed.count()  # materializes the cache either way
-    if n_edges <= local_max_edges:
-        rows = ed.collect()
-        ed.unpersist()
-        d = {}
-        for row in rows:
-            d[row["u"]] = row["d"]
-        r = {u: PR_SCALE for u in d}
-        for _ in range(PR_ITERS):
-            s: dict = {}
-            for row in rows:
-                s[row["v"]] = s.get(row["v"], 0) + r[row["u"]] // d[row["u"]]
-            r = {v: 150000 + (85 * sv) // 100 for v, sv in s.items()}
-        return spark.createDataFrame(
-            sorted(r.items()), "doc_id bigint, rank_q bigint")
-    sp_key = "spark.sql.shuffle.partitions"
-    sp_saved = spark.conf.get(sp_key, "32")
-    spark.conf.set(sp_key, str(max(4, min(
-        int(sp_saved), n_edges // _CC_EDGES_PER_PARTITION + 1))))
-    try:
-        r = deg.select(F.col("u").alias("node"),
-                       F.lit(PR_SCALE).cast("bigint").alias("r"))
-        for _ in range(PR_ITERS):
-            r = (ed.join(r, ed.u == r.node)
-                 .groupBy(F.col("v").alias("out_node"))
-                 .agg(F.expr("150000 + (85 * sum(r div d)) div 100")
-                      .cast("bigint").alias("r"))
-                 .select(F.col("out_node").alias("node"), "r"))
-        out = r.select(F.col("node").alias("doc_id"),
-                       F.col("r").alias("rank_q"))
-        # one action materializes the chain before the cache is released
-        out = out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(sp_key, sp_saved)
-    ed.unpersist()
-    return out
+    An iterative graph algorithm with a full value-hash oracle. Float
+    PageRank can never hash-match across engines (per-iteration rounding
+    drift); quantizing ranks to integers and making every update pure
+    integer arithmetic (``r' = 0.15·S + (85·Σ r/deg) // 100``) makes the
+    5-iteration trajectory EXACTLY reproducible — DuckDB replays it as
+    unrolled CTEs over the same exact-Jaccard pair set the LSH path
+    provably recovers. The trajectory runs driver-side over the collected
+    edge list."""
+    edges = _graph_edges(neardup_pairs(spark, sf_dir))
+    sym = edges + [(v, u) for u, v in edges]
+    d: dict = {}
+    for u, _ in sym:
+        d[u] = d.get(u, 0) + 1
+    r = {u: PR_SCALE for u in d}
+    for _ in range(PR_ITERS):
+        s: dict = {}
+        for u, v in sym:
+            s[v] = s.get(v, 0) + r[u] // d[u]
+        r = {v: 150000 + (85 * sv) // 100 for v, sv in s.items()}
+    return spark.createDataFrame(
+        sorted(r.items()), "doc_id bigint, rank_q bigint")
 
 
 def _triangle_oracle() -> str:
@@ -1067,11 +858,13 @@ def _triangle_oracle() -> str:
     """
 
 
-def _local_triangle_count(edges: list[tuple[int, int]]) -> int:
-    """Driver-side replica of the degree-ordered count: orient each edge
-    at its higher-(degree, id) endpoint, then sum |out(u) ∩ out(v)| over
-    oriented edges (u, v) — each triangle counted once at its ≺-minimum
-    vertex. Bit-identical to the distributed path (equality test)."""
+def _triangle_count(edges: list[tuple[int, int]]) -> int:
+    """Degree-ordered triangle count (Suri & Vassilvitskii, "Counting
+    Triangles and the Curse of the Last Reducer", WWW'11): orient each
+    undirected edge from its lower (degree, id) endpoint to the higher,
+    then sum |out(u) ∩ out(v)| over oriented edges (u, v). Out-degree
+    under this orientation is O(√m) for any node regardless of raw
+    degree, and each triangle is counted once, at its ≺-minimum vertex."""
     from collections import Counter, defaultdict
 
     deg = Counter()
@@ -1091,64 +884,6 @@ def _local_triangle_count(edges: list[tuple[int, int]]) -> int:
                for u, nbrs in out.items() for v in nbrs)
 
 
-def _oriented_triangle_count(pairs: DataFrame,
-                             local_max_edges: int = CC_LOCAL_MAX_EDGES,
-                             stats: dict | None = None) -> DataFrame:
-    """Degree-ordered triangle counting (the MapReduce-era standard —
-    Suri & Vassilvitskii's "Counting Triangles and the Curse of the Last
-    Reducer", WWW'11): orient each undirected edge from its lower
-    (degree, id) endpoint to the higher, enumerate out-out wedges at the
-    LOW vertex, and close them against oriented edges. Out-degree under
-    this orientation is O(√m) for any node regardless of raw degree, so
-    a celebrity node with 10⁶ neighbours produces √-bounded wedges
-    instead of 10¹² — the id-ordered form's failure mode on skewed
-    graphs. Each triangle is counted exactly once (its unique
-    ≺-minimum vertex anchors the wedge).
-
-    Size-adaptive like ``connected_components``: near-dup graphs are
-    edge-bound, not corpus-bound, so an edge list at or under
-    ``local_max_edges`` (collect is a few MB of longs) is counted
-    driver-side by the identical algorithm — the distributed form's
-    five-join DAG costs seconds of fixed overhead that dwarfs such
-    graphs (measured ~5 s vs ~0.3 s at sf0.1's 256 edges). Pass
-    ``local_max_edges=0`` to force the distributed path (tests do).
-
-    ``pairs``: unique undirected edges (a < b). Returns a single-row
-    frame ``n_triangles``."""
-    spark = pairs.sparkSession
-    if pairs.count() <= local_max_edges:
-        edges = [(r["a"], r["b"]) for r in pairs.collect()]
-        if stats is not None:
-            stats["mode"] = "local"
-        return spark.createDataFrame(
-            [(_local_triangle_count(edges),)], "n_triangles bigint")
-    if stats is not None:
-        stats["mode"] = "distributed"
-    sym = (pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionByName(pairs.select(F.col("b").alias("u"),
-                                     F.col("a").alias("v"))))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    # orientation key: degree first, id as tiebreak — attach to both ends
-    with_d = (sym.join(deg, "u")
-              .select("u", "v", F.col("d").alias("du")))
-    dv = deg.select(F.col("u").alias("v"), F.col("d").alias("dv"))
-    e = (with_d.join(dv, "v")
-         .where((F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))))
-         .select(F.col("u").alias("src"), F.col("v").alias("dst"),
-                 F.col("dv").alias("dst_d")))
-    e1, e2 = e.alias("e1"), e.alias("e2")
-    lex_lt = ((F.col("e1.dst_d") < F.col("e2.dst_d"))
-              | ((F.col("e1.dst_d") == F.col("e2.dst_d"))
-                 & (F.col("e1.dst") < F.col("e2.dst"))))
-    wedges = (e1.join(e2, (F.col("e1.src") == F.col("e2.src")) & lex_lt)
-              .select(F.col("e1.dst").alias("wa"),
-                      F.col("e2.dst").alias("wb")))
-    closer = e.select(F.col("src").alias("wa"), F.col("dst").alias("wb"))
-    return (wedges.join(closer, ["wa", "wb"])
-            .agg(F.count(F.lit(1)).alias("n_triangles")))
-
-
 @register("graph_triangle_count", oracle=_triangle_oracle())
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count over the verified near-duplicate graph — the
@@ -1158,23 +893,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal than PageRank's hubs. Same pair source as
     ``docrank_neardup_pagerank``; the oracle replays it over the
     exact-Jaccard pair set with the simple id-ordered join — the count
-    is orientation-invariant, so the oracle pins the DEGREE-ORDERED
-    production path (``_oriented_triangle_count``) against the textbook
+    is orientation-invariant, so the oracle pins the degree-ordered
+    driver-side count (``_triangle_count``) against the textbook
     formulation (an id-ordered-vs-degree-ordered equality test pins it
-    again on the same graph).
-
-    Scale: the near-dup edge list is orders of magnitude smaller than
-    the corpus, and the degree orientation bounds every node's out-wedge
-    count by O(√m) — the id-ordered form instead explodes on whichever
-    endpoint of a hub edge happens to sort first (the "last reducer"
-    skew). All joins shuffle on single node keys."""
-    pairs = (neardup_pairs(spark, sf_dir)
-             .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")))
-    tri = _oriented_triangle_count(pairs)
-    return (pairs.agg(F.count(F.lit(1)).alias("n_edges"))
-            .crossJoin(tri)
-            .select("n_edges", "n_triangles")
-            .localCheckpoint(eager=True))
+    again on the same graph)."""
+    edges = _graph_edges(neardup_pairs(spark, sf_dir))
+    return spark.createDataFrame([(len(edges), _triangle_count(edges))],
+                                 "n_edges bigint, n_triangles bigint")
 
 
 #: BFS seed set: every 100th document
@@ -1205,25 +930,23 @@ def _bfs_oracle() -> str:
     """
 
 
-def _local_bfs_hop_counts(edges: list[tuple[int, int]],
-                          seed_mod: int, max_hops: int) -> dict[int, int]:
-    """Driver-side BFS over a bounded edge list: min-hop layer sizes for
-    hops 1..max_hops from the seed predicate ``node % seed_mod == 0``.
-    Hop 0 is NOT included (seeds are corpus-bound, not edge-bound — the
-    caller counts them distributed)."""
+def _bfs_hop_counts(edges: list[tuple[int, int]]) -> dict[int, int]:
+    """Min-hop layer sizes for hops 1..``BFS_MAX_HOPS`` from the seed
+    endpoints ``node % BFS_SEED_MOD == 0`` (hop 0 is the caller's: the
+    frontier can only contain edge endpoints, seeds need not be)."""
     from collections import defaultdict, deque
 
     adj: dict[int, list[int]] = defaultdict(list)
     for u, v in edges:
         adj[u].append(v)
         adj[v].append(u)
-    seeds = [n for n in adj if n % seed_mod == 0]
+    seeds = [n for n in adj if n % BFS_SEED_MOD == 0]
     visited = set(seeds)
     q = deque((s, 0) for s in seeds)
     counts: dict[int, int] = {}
     while q:
         node, h = q.popleft()
-        if h >= max_hops:
+        if h >= BFS_MAX_HOPS:
             continue
         for nxt in adj[node]:
             if nxt not in visited:
@@ -1234,74 +957,26 @@ def _local_bfs_hop_counts(edges: list[tuple[int, int]],
 
 
 @register("graph_bfs_hops", oracle=_bfs_oracle())
-def graph_bfs_hops(spark: SparkSession, sf_dir: str,
-                   local_max_edges: int = CC_LOCAL_MAX_EDGES,
-                   stats: dict | None = None) -> DataFrame:
+def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source bounded BFS over the near-duplicate graph: minimum
-    hop distance (≤ {3}) from a seed set (every {100}th document), layer
-    sizes per hop — the provenance-expansion query ("everything within k
-    near-dup steps of these flagged documents") that contamination
-    triage and takedown propagation run.
+    hop distance (≤ ``BFS_MAX_HOPS``) from a seed set (every
+    ``BFS_SEED_MOD``-th document), layer sizes per hop — the
+    provenance-expansion query ("everything within k near-dup steps of
+    these flagged documents") that contamination triage and takedown
+    propagation run.
 
-    Scale shape:
-
-    - **hop 0 never touches the graph**: the seed count is a corpus
-      aggregate (count only — seeds are corpus-bound and must NOT be
-      collected);
-    - the edge list is edge-bound like ``connected_components`` and gets
-      the same size-adaptive treatment: ≤ ``local_max_edges`` →
-      driver-side BFS over the collected pairs (hops 1+ only — the
-      frontier can only contain edge endpoints); larger → a bounded
-      ``BFS_MAX_HOPS``-round frontier loop, each round one
-      edges-join + anti-join against the visited set, one action;
-    - rounds are FIXED (3), so there is no convergence-detection action
-      and lineage stays shallow — no checkpointing needed.
-
-    The oracle replays the exact-Jaccard pair set with a recursive CTE
-    (``UNION``-deduped, so the walk table is bounded by nodes × hops,
-    not path count)."""
-    pairs = (neardup_pairs(spark, sf_dir)
-             .select(F.col("doc_a").alias("src"),
-                     F.col("doc_b").alias("dst")))
-    d = load_table(spark, sf_dir, "documents")
-    n_seeds = d.filter(F.col("doc_id") % BFS_SEED_MOD == 0).count()
-    und = (pairs.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-           .union(pairs.select(F.col("dst").alias("u"),
-                               F.col("src").alias("v")))).persist()
-    n_edges = und.count()
-    if n_edges <= local_max_edges:
-        edges = [(r["u"], r["v"]) for r in und.collect()]
-        und.unpersist()
-        if stats is not None:
-            stats["mode"] = "local"
-        counts = _local_bfs_hop_counts(
-            edges, BFS_SEED_MOD, BFS_MAX_HOPS)
-        # hop-0 row only when seeds exist: the recursive-CTE oracle emits
-        # no rows at all for a seedless corpus, and the distributed loop
-        # path already degenerates to empty the same way
-        rows = ([(0, n_seeds)] if n_seeds else []) + sorted(counts.items())
-        return spark.createDataFrame(rows, "hops bigint, n_docs bigint")
-    if stats is not None:
-        stats["mode"] = "loop"
-    visited = (d.filter(F.col("doc_id") % BFS_SEED_MOD == 0)
-               .select(F.col("doc_id").alias("node"),
-                       F.lit(0).cast("bigint").alias("hops"))).persist()
-    frontier = visited.select("node")
-    for h in range(1, BFS_MAX_HOPS + 1):
-        nxt = (frontier.join(und, frontier["node"] == und["u"])
-               .select(F.col("v").alias("node")).distinct()
-               .join(visited.select("node"), "node", "left_anti")
-               .withColumn("hops", F.lit(h).cast("bigint"))).persist()
-        if nxt.count() == 0:
-            nxt.unpersist()
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("node")
-    out = (visited.groupBy("hops")
-           .agg(F.count(F.lit(1)).alias("n_docs"))
-           .localCheckpoint(eager=True))
-    und.unpersist()
-    return out
+    Hop 0 is the seed count, a corpus aggregate (seeds are corpus-bound
+    and are counted, never collected); hops 1+ come from a driver-side
+    BFS over the collected edge list. The oracle replays the
+    exact-Jaccard pair set with a recursive CTE (``UNION``-deduped, so
+    the walk table is bounded by nodes × hops, not path count)."""
+    n_seeds = (load_table(spark, sf_dir, "documents")
+               .filter(F.col("doc_id") % BFS_SEED_MOD == 0).count())
+    counts = _bfs_hop_counts(_graph_edges(neardup_pairs(spark, sf_dir)))
+    # hop-0 row only when seeds exist: the recursive-CTE oracle emits no
+    # rows at all for a seedless corpus
+    rows = ([(0, n_seeds)] if n_seeds else []) + sorted(counts.items())
+    return spark.createDataFrame(rows, "hops bigint, n_docs bigint")
 
 
 def _cluster_centroid_oracle() -> str:

@@ -22,10 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from .registry import register
-
-
-def _utc(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+from .relational import _utc
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,7 @@ from ..catalog import load_for_compute
 from ..functions import texttools as tt
 from ..functions import vector as vec
 from .registry import register
+from .text import EMAIL_RE
 
 #: repetition-rule thresholds (Gopher-style, tuned to flag a minority of
 #: the synthetic corpus — the *rule shapes* are what matters)
@@ -28,7 +29,6 @@ DUP_TOKEN_MAX = 0.55
 TOP_TOKEN_MAX = 0.10
 DUP_BIGRAM_MAX = 0.35
 
-EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 DIGITRUN_PATTERN = r"[0-9]{7,}"
 
 #: deterministic split parameters (multiplicative hash, engine-portable
@@ -151,10 +151,10 @@ def quality_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pii_flag_docs",
     oracle=f"""
     SELECT doc_id,
-           len(regexp_extract_all(text, '{EMAIL_PATTERN}')) AS n_emails,
+           len(regexp_extract_all(text, '{EMAIL_RE}')) AS n_emails,
            len(regexp_extract_all(text, '{DIGITRUN_PATTERN}'))
                AS n_digit_runs,
-           (len(regexp_extract_all(text, '{EMAIL_PATTERN}')) > 0
+           (len(regexp_extract_all(text, '{EMAIL_RE}')) > 0
             OR len(regexp_extract_all(text, '{DIGITRUN_PATTERN}')) > 0)
                AS flagged
     FROM documents
@@ -167,7 +167,7 @@ def pii_flag_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex subset so both engines match identically."""
     d = load_for_compute(spark, sf_dir, "documents", "doc_id")
     n_email = F.size(F.regexp_extract_all(
-        F.col("text"), F.lit(EMAIL_PATTERN), F.lit(0)))
+        F.col("text"), F.lit(EMAIL_RE), F.lit(0)))
     n_digit = F.size(F.regexp_extract_all(
         F.col("text"), F.lit(DIGITRUN_PATTERN), F.lit(0)))
     return d.select(

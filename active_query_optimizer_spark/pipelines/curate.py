@@ -61,8 +61,9 @@ def run_curation(spark: SparkSession, sf_dir: str, out_path: str) -> dict:
     counts["quality_repetition"] = d.count()
 
     # --- PII screen: drop docs with email-shaped or long-digit-run hits
-    from ..operators.quality import DIGITRUN_PATTERN, EMAIL_PATTERN
-    pii = (F.regexp_count(F.col("text"), F.lit(EMAIL_PATTERN))
+    from ..operators.quality import DIGITRUN_PATTERN
+    from ..operators.text import EMAIL_RE
+    pii = (F.regexp_count(F.col("text"), F.lit(EMAIL_RE))
            + F.regexp_count(F.col("text"), F.lit(DIGITRUN_PATTERN)))
     d = d.filter(pii == 0)
     # persist: the dedup stage consumes this frame TWICE (fingerprint

@@ -4,6 +4,7 @@ guarantees that SQL can't express."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from active_query_optimizer_spark.operators import QUERIES
@@ -231,54 +232,73 @@ def test_run_optimized_runs_conf_winner_under_its_conf(spark, monkeypatch):
     assert rows == spark.sql(sql).collect()
 
 
-def test_connected_components_deep_chain_converges_logarithmically(spark):
-    """Pointer jumping must make rounds O(log diameter): a 200-node chain
-    (diameter 199) has to converge in far fewer than 199 rounds, with every
-    node labeled 0. Plain min-propagation would need ~199 rounds — this
-    pins the round-2 scale watch item (deep near-dup chains)."""
-    import math
-
+def test_connected_components_deep_chain_single_cluster(spark):
+    """A 200-node chain (diameter 199, the deep near-dup chain shape) is
+    one component: every node is labeled 0."""
     from active_query_optimizer_spark.operators.dedup import (
         connected_components)
 
     n = 200
     edges = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
-    nodes = spark.range(n).select(F.col("id").alias("doc_id"))
-    stats: dict = {}
-    # local_max_edges=0 forces the distributed loop (a 200-edge graph
-    # would otherwise take the driver-side union-find fast path)
-    comp = connected_components(edges, nodes, stats=stats,
-                                local_max_edges=0)
-    rows = comp.collect()
+    rows = connected_components(edges).collect()
     assert len(rows) == n
     assert all(r["cluster_id"] == 0 for r in rows)
-    assert stats["mode"] == "loop"
-    # path halving: reach doubles per round; generous 3×log2(n)+3 bound
-    # still far below the diameter bound of n-1
-    assert stats["iterations"] <= 3 * math.ceil(math.log2(n)) + 3, (
-        f"chain took {stats['iterations']} rounds — pointer jump regressed")
 
 
 def test_connected_components_releases_caches(spark):
-    """The eager localCheckpoint must let every internal persist be
-    released: after the call, no RDD from the propagation loop may remain
-    cached (round-2 advice: repeated invocations accumulated blocks)."""
+    """Connected components collects its edges once and persists
+    nothing: no RDD stays cached after the call."""
     from active_query_optimizer_spark.operators.dedup import (
         connected_components)
 
     before = {i for i, _ in spark.sparkContext._jsc.getPersistentRDDs().items()}
     edges = spark.range(20).select(
         (F.col("id") % 10).alias("src"), (F.col("id") % 10 + 10).alias("dst"))
-    nodes = spark.range(20).select(F.col("id").alias("doc_id"))
-    comp = connected_components(edges, nodes)
-    comp.count()
+    connected_components(edges).count()
     after = {i for i, _ in spark.sparkContext._jsc.getPersistentRDDs().items()}
-    leaked = after - before
-    # the final localCheckpoint RDD (and at most one interval checkpoint,
-    # freed later by the context cleaner) may remain; explicit persists from
-    # the propagation loop must all be gone
-    assert len(leaked) <= 2, f"cached RDDs leaked from the loop: {leaked}"
+    assert not after - before, f"cached RDDs leaked: {after - before}"
+
+
+@pytest.mark.parametrize(
+    "name", ["dedup_embedding_clusters", "graph_triangle_count"])
+def test_graph_queries_leave_no_cached_frames(spark, tmp_path, name):
+    """The graph queries collect their edge lists once, so none may
+    leave a persisted RDD behind. Beyond the shared near-dup pair frame
+    (``neardup_pairs``, warmed first), the registered-RDD count must not
+    move. A copy of the data gives plans no earlier test has cached."""
+    import shutil
+
+    from active_query_optimizer_spark.operators import dedup
+
+    for t in ("documents", "embeddings"):
+        shutil.copy(f"{SF_SMALL}/{t}.parquet", tmp_path)
+    sf = str(tmp_path)
+    jsc = spark.sparkContext._jsc
+    dedup.neardup_pairs(spark, sf).count()
+    try:
+        before = jsc.getPersistentRDDs().size()
+        QUERIES[name](spark, sf).collect()
+        assert jsc.getPersistentRDDs().size() == before
+    finally:
+        dedup.release_neardup_pairs(spark, sf)
+
+
+def test_graph_edges_above_bound_raise(spark, monkeypatch):
+    """An edge list above ``GRAPH_MAX_EDGES`` raises ``ValueError``
+    naming the count and the bound; one at the bound runs."""
+    from active_query_optimizer_spark.operators import dedup
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3), (3, 4)],
+                                  "src bigint, dst bigint")
+    monkeypatch.setattr(dedup, "GRAPH_MAX_EDGES", 4)
+    assert dedup.connected_components(edges).count() == 5
+    monkeypatch.setattr(dedup, "GRAPH_MAX_EDGES", 3)
+    with pytest.raises(ValueError, match="at least 4 edges.*= 3"):
+        dedup.connected_components(edges)
+    monkeypatch.setattr(dedup, "GRAPH_MAX_EDGES", 1)
+    with pytest.raises(ValueError, match="at least 2 edges.*= 1"):
+        QUERIES["graph_triangle_count"](spark, SF_SMALL)
 
 
 def test_fingerprint_lanes_identical_survivors(spark):
@@ -369,71 +389,52 @@ def test_ann_ivf_pq_recall_and_determinism(spark):
     assert run1 == run2, "IVF-PQ is not deterministic across runs"
 
 
-def test_connected_components_local_fastpath_equals_loop(spark):
-    """The driver-side union-find fast path must produce EXACTLY the
-    distributed loop's labeling (min reachable id per node), including
-    isolated nodes, on an irregular multi-component graph."""
+def test_connected_components_matches_bruteforce_labeling(spark):
+    """Union-find labels every endpoint with the smallest node id
+    reachable from it — checked against a brute-force reachability
+    labeling on an irregular multi-component graph."""
     from active_query_optimizer_spark.operators.dedup import (
         connected_components)
 
-    # chains, a star, a cycle, self-contained pairs + isolated nodes
+    # chains, a star, a cycle, self-contained pairs
     raw = ([(i, i + 1) for i in range(0, 30)]            # chain 0..30
            + [(100, j) for j in range(101, 110)]         # star at 100
            + [(200, 201), (201, 202), (202, 200)]        # cycle
            + [(300, 301), (302, 303)])                   # pairs
+    adj: dict = {}
+    for u, v in raw:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    want = set()
+    for n in adj:
+        seen, todo = {n}, [n]
+        while todo:
+            for m in adj[todo.pop()] - seen:
+                seen.add(m)
+                todo.append(m)
+        want.add((n, min(seen)))
     edges = spark.createDataFrame(raw, "src bigint, dst bigint")
-    nodes = spark.createDataFrame(
-        [(i,) for i in sorted({u for e in raw for u in e} | {400, 401})],
-        "doc_id bigint")
-    stats_a: dict = {}
-    stats_b: dict = {}
-    fast = {(r["doc_id"], r["cluster_id"]) for r in connected_components(
-        edges, nodes, stats=stats_a).collect()}
-    loop = {(r["doc_id"], r["cluster_id"]) for r in connected_components(
-        edges, nodes, stats=stats_b, local_max_edges=0).collect()}
-    assert stats_a["mode"] == "local" and stats_b["mode"] == "loop"
-    assert fast == loop
-    # spot semantics: isolated nodes label themselves; the star collapses
-    assert (400, 400) in fast and (101, 100) in fast
-
-
-def test_pagerank_local_replica_equals_loop(spark):
-    """Integer PageRank's driver-side fast path must be BIT-identical to
-    the distributed loop (every update is integer div arithmetic — no
-    float drift to hide behind)."""
-    from active_query_optimizer_spark.operators.dedup import (
-        docrank_neardup_pagerank)
-
-    fast = {(r["doc_id"], r["rank_q"]) for r in
-            docrank_neardup_pagerank(spark, SF_SMALL).collect()}
-    loop = {(r["doc_id"], r["rank_q"]) for r in
-            docrank_neardup_pagerank(spark, SF_SMALL,
-                                     local_max_edges=0).collect()}
-    assert fast == loop and fast
+    got = {(r["doc_id"], r["cluster_id"])
+           for r in connected_components(edges).collect()}
+    assert got == want
+    assert (101, 100) in got and (30, 0) in got
 
 
 def test_triangle_count_degree_orientation_invariance(spark):
-    """The degree-ordered production path must count exactly the same
-    triangles as the textbook id-ordered formulation — on a synthetic
-    graph with a hub (the skew case the orientation exists for) and on
-    the real near-dup graph the registry entry runs over."""
+    """The degree-ordered count must equal the textbook id-ordered
+    formulation — on a synthetic graph with a hub (the skew case the
+    orientation exists for) and on the real near-dup graph the registry
+    entry runs over."""
     from pyspark.sql import functions as F
 
     from active_query_optimizer_spark.operators.dedup import (
-        _oriented_triangle_count, dedup_minhash_lsh)
+        _triangle_count, dedup_minhash_lsh)
 
     # hub node 0 with satellites; triangles {0,1,2} and {2,3,4} only
     edges = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 4), (2, 4),
              (0, 5), (0, 6), (0, 7), (0, 8)]
     pairs = spark.createDataFrame(edges, "a long, b long")
-    stats: dict = {}
-    got = _oriented_triangle_count(
-        pairs, stats=stats).collect()[0]["n_triangles"]
-    assert got == 2 and stats["mode"] == "local"
-    stats = {}
-    dist = _oriented_triangle_count(
-        pairs, local_max_edges=0, stats=stats).collect()[0]["n_triangles"]
-    assert dist == 2 and stats["mode"] == "distributed"
+    assert _triangle_count(edges) == 2
 
     def id_ordered(p):
         e1 = p.select(F.col("a").alias("x"), F.col("b").alias("y"))
@@ -449,10 +450,8 @@ def test_triangle_count_degree_orientation_invariance(spark):
             .persist())
     try:
         want = id_ordered(real)
-        assert (_oriented_triangle_count(real)
-                .collect()[0]["n_triangles"] == want)
-        assert (_oriented_triangle_count(real, local_max_edges=0)
-                .collect()[0]["n_triangles"] == want)
+        assert want > 0
+        assert _triangle_count([(r.a, r.b) for r in real.collect()]) == want
     finally:
         real.unpersist()
 

@@ -9,7 +9,9 @@ reference is a name, an attribute, or a string constant equal to the name
 defining module counts, ``__all__`` lists do not. Names are matched
 without resolving imports, so a definition whose name some live code
 also uses for something else passes. Code that only its own tests run
-either goes, or gets an ``ALLOWED`` entry naming why it stays.
+either goes, or gets an ``ALLOWED`` entry naming why it stays. It also
+checks that every ``@register``-ed query takes exactly ``(spark, sf_dir)``,
+the call the driver makes.
 """
 
 from __future__ import annotations
@@ -53,8 +55,6 @@ ALLOWED = {
     "evaluation/metrics.py:spearman_by_group":
         "reference rebuild: the per-query spearmanr of "
         "compute_ranking_loss, Lero/lero_test.py:115-155",
-    "evaluation/metrics.py:weighted_ranking_loss":
-        "test reference for evaluate_bundles' ranking_loss_weighted",
     # test references for registered queries
     "stats/harvester.py:approx_column_cardinalities":
         "test reference for stats_column_cardinalities_approx",
@@ -138,3 +138,29 @@ def test_allowlist_names_only_test_only_definitions():
     gone, is stale."""
     stale = sorted(set(ALLOWED) - set(unreferenced()))
     assert not stale, f"stale ALLOWED entries: {stale}"
+
+
+def registered_signatures(pkg: Path = PKG) -> dict[str, list[str]]:
+    """``module:name`` -> parameter names of every ``@register``-ed
+    function in ``pkg``, with ``*args``/``**kwargs`` spelled out."""
+    out = {}
+    for path in _modules(pkg):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (isinstance(node, ast.FunctionDef)
+                    and _is_registered(node)):
+                continue
+            a = node.args
+            params = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+            params += [f"*{a.vararg.arg}"] if a.vararg else []
+            params += [f"**{a.kwarg.arg}"] if a.kwarg else []
+            out[f"{path.relative_to(pkg).as_posix()}:{node.name}"] = params
+    return out
+
+
+def test_registered_queries_take_only_spark_and_sf_dir():
+    """The driver calls every registered query as ``fn(spark, sf_dir)``;
+    an extra parameter is a knob no driver call can reach."""
+    sigs = registered_signatures()
+    bad = {k: v for k, v in sigs.items() if v != ["spark", "sf_dir"]}
+    assert not bad, f"registered queries with extra parameters: {bad}"
+    assert len(sigs) >= 100, f"found only {len(sigs)} registered queries"

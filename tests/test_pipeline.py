@@ -98,6 +98,11 @@ def test_ranking_loss_perfect_and_inverted(spark):
     assert M.ranking_loss(inv) == pytest.approx(2.0)       # fully inverted
 
 
+def _wloss(df):
+    """The weighted ranking loss as ``evaluate_bundles`` computes it."""
+    return M._weighted_loss(*M._group_spearman(df)[1:])
+
+
 def test_weighted_ranking_loss_weights_by_pair_count(spark):
     """Candidate-count weighting: a perfectly-ranked 2-candidate group
     (1 comparison) and a fully-inverted 5-candidate group (4 comparisons)
@@ -108,7 +113,7 @@ def test_weighted_ranking_loss_weights_by_pair_count(spark):
     df = spark.createDataFrame(
         rows, "qid string, candidate_idx int, score double, exec_time_ms double")
     assert M.ranking_loss(df) == pytest.approx(1.0)
-    assert M.weighted_ranking_loss(df) == pytest.approx(1.6)
+    assert _wloss(df) == pytest.approx(1.6)
 
 
 def test_ranking_loss_skips_constant_groups(spark):
@@ -125,7 +130,7 @@ def test_ranking_loss_skips_constant_groups(spark):
         rows, "qid string, candidate_idx int, score double, exec_time_ms double")
     # q0 and q2 drop out; only q1 (rho = 1) counts
     assert M.ranking_loss(df) == pytest.approx(0.0)
-    assert M.weighted_ranking_loss(df) == pytest.approx(0.0)
+    assert _wloss(df) == pytest.approx(0.0)
 
 
 def test_ranking_loss_none_when_all_groups_degenerate(spark):
@@ -139,7 +144,7 @@ def test_ranking_loss_none_when_all_groups_degenerate(spark):
     df = spark.createDataFrame(
         rows, "qid string, candidate_idx int, score double, exec_time_ms double")
     assert M.ranking_loss(df) is None
-    assert M.weighted_ranking_loss(df) is None
+    assert _wloss(df) is None
 
 
 def test_spearman_average_ranks_match_scipy(spark):
@@ -191,7 +196,7 @@ def _spearman_by_group_ref(df):
 
 
 def _ranking_losses_ref(df):
-    """``(ranking_loss, weighted_ranking_loss)`` of the reference form."""
+    """``(ranking_loss, weighted ranking loss)`` of the reference form."""
     row = (_spearman_by_group_ref(df)
            .where(F.col("spearman").isNotNull() & (F.col("__w") > 0))
            .agg(F.avg("spearman").alias("rho"),
@@ -245,7 +250,7 @@ def test_ranking_metrics_match_window_reference(spark, seed):
     assert got["qone"] is None
     loss, wloss = _ranking_losses_ref(df)
     assert M.ranking_loss(df) == pytest.approx(loss, abs=1e-12)
-    assert M.weighted_ranking_loss(df) == pytest.approx(wloss, abs=1e-12)
+    assert _wloss(df) == pytest.approx(wloss, abs=1e-12)
 
 
 def test_ranking_metrics_none_decisions_match_reference(spark):
@@ -260,7 +265,7 @@ def test_ranking_metrics_none_decisions_match_reference(spark):
     assert _ranking_losses_ref(df) == (None, None)
     assert M.spearman_by_group(df) == {"q0": None, "q1": None, "q2": None}
     assert M.ranking_loss(df) is None
-    assert M.weighted_ranking_loss(df) is None
+    assert _wloss(df) is None
 
 
 def test_ranking_metrics_order_independent(spark):
@@ -268,8 +273,7 @@ def test_ranking_metrics_order_independent(spark):
     df = _metrics_frame(spark, 3)
     rev = spark.createDataFrame(df.collect()[::-1], df.schema)
     forms = [df, rev, df.repartition(7)]
-    for fn in (M.spearman_by_group, M.ranking_loss,
-               M.weighted_ranking_loss):
+    for fn in (M.spearman_by_group, M.ranking_loss, _wloss):
         got = [repr(fn(d)) for d in forms]
         assert got[0] == got[1] == got[2], fn.__name__
 
