@@ -279,15 +279,15 @@ def setsim_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (21,348 candidates vs 124,750 all-pairs) — the brute-force baseline
     (``dedup_ngram_jaccard``) needs a 10% id-sample to stay feasible,
     this runs on the FULL corpus. The record frame has three consumers
-    (prefix explode + both verify sides), so it is PERSISTED plan-keyed
-    — Spark's CacheManager dedupes by canonicalized plan, exactly the
-    ``neardup_pairs`` contract — instead of re-tokenizing the corpus
-    three times per run (the pre-round-10 shape: a 3-run JIT+recompute
-    ramp, 24 s cold vs 2.1 s steady at sf0.1). Call
-    :func:`release_setsim_records` (or ``spark.catalog.clearCache()``)
-    when a long-lived session is done with this family — mirroring
-    ``release_neardup_pairs``. At 100 TB the same move is "write the
-    ordered-record table once, join against it"."""
+    (prefix explode + both verify sides), so it is persisted instead of
+    re-tokenizing the corpus three times per run (the pre-round-10 shape:
+    a 3-run JIT+recompute ramp, 24 s cold vs 2.1 s steady at sf0.1).
+    Cache contract (shared with ``neardup_pairs`` and
+    ``_shingle_collapse``): the frame is persisted and keyed by its plan
+    — Spark's CacheManager dedupes by canonicalized plan — so repeat
+    calls in one session share it, and only the session owner's
+    ``spark.catalog.clearCache()`` releases it. At 100 TB the same move
+    is "write the ordered-record table once, join against it"."""
     rec = _setsim_records(spark, sf_dir)
     lvl = rec.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
@@ -321,13 +321,6 @@ def setsim_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
                     >= SETSIM_NUM * F.col("n_union")))
 
 
-def release_setsim_records(spark: SparkSession, sf_dir: str) -> None:
-    """Drop the shared ordered-record cache entry for ``sf_dir``
-    (plan-keyed, so a fresh equivalent frame addresses the same entry) —
-    the ``release_neardup_pairs`` contract for the setsim family."""
-    _setsim_records(spark, sf_dir).unpersist()
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH banding (the scale path)
 # ---------------------------------------------------------------------------
@@ -340,7 +333,9 @@ def _shingle_collapse(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     ``(doc_id, rep, grp_n)`` (every doc tagged with its group's min
     doc_id and size) and ``reps`` is ``(rep, s, sig)`` (one row per
     DISTINCT shingle set, carrying the sorted shingle array and its
-    MinHash signature) — both persisted, plan-keyed.
+    MinHash signature). Every frame it builds is persisted and keyed by
+    its plan: repeat calls in one session share them, and only the
+    session owner's ``spark.catalog.clearCache()`` releases them.
 
     Scale shape (round-8 verdict item #2): the collapse is a ``groupBy``
     on two seeded ``xxhash64`` longs over the sorted shingle array — the
@@ -488,27 +483,20 @@ def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``docrank_neardup_pagerank``), which previously each re-ran the pair
     pipeline per invocation (round-4 verdict watch item).
 
-    Contract: the returned frame is PERSISTED and deliberately retained.
+    Contract: the returned frame is persisted and keyed by its plan.
     Spark's CacheManager dedupes by canonicalized plan, so every caller
-    (and every repeat invocation over the same ``sf_dir``) shares one
-    cache entry — the first action materializes it, the rest reuse it.
-    This does NOT accumulate: re-invocation re-registers the same plan.
-    Call :func:`release_neardup_pairs` (or ``spark.catalog.clearCache()``)
-    when a long-lived session is done with the dedup-graph family. At
-    100 TB the same dataflow is "write the verified pair table once,
-    join against it" — storage-backed instead of cache-backed.
+    (and every repeat call over the same ``sf_dir``) in one session
+    shares one cache entry — the first action materializes it, the rest
+    reuse it, and re-invocation stacks no second entry. Only the session
+    owner's ``spark.catalog.clearCache()`` releases it. At 100 TB the
+    same dataflow is "write the verified pair table once, join against
+    it" — storage-backed instead of cache-backed.
     """
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     lvl = pairs.storageLevel  # CacheManager lookup by canonicalized plan
     if not (lvl.useMemory or lvl.useDisk):
         pairs.persist()
     return pairs
-
-
-def release_neardup_pairs(spark: SparkSession, sf_dir: str) -> None:
-    """Drop the shared pair cache entry for ``sf_dir`` (plan-keyed, so a
-    fresh equivalent frame addresses the same entry)."""
-    dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b").unpersist()
 
 
 # ---------------------------------------------------------------------------

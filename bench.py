@@ -3,13 +3,25 @@ on local[$SPARK_GRAFT_CPUS].
 
 Output contract (round 4+): the FINAL stdout line is a compact JSON record
 ``{"metric": "headline_query_wall_clock_total", "value": N, "unit": "sec",
-"sf": ...}`` guaranteed to fit the driver's tail capture; the full per-query
-timing + spread dict is printed on the preceding line AND written to
-``BENCH_DETAIL.json`` at the repo root (round 3's 43-query single line
-overflowed the capture window and recorded ``parsed: null``).
+"sf": ..., "cpu_total_s": ...}`` guaranteed to fit the driver's tail
+capture; the full per-query timing + spread dict is printed on the
+preceding line AND written to ``BENCH_DETAIL.json`` at the repo root
+(round 3's 43-query single line overflowed the capture window and
+recorded ``parsed: null``).
 
-Each query is executed once after a session warm-up; timing covers logical
-planning through action completion (count/collect of the result).
+:func:`time_query` is the one loop that runs and measures a registered
+query. Every run starts from an empty cache (``spark.catalog.clearCache()``),
+so no run reads a frame that it, or an earlier query, left persisted; it
+times the build plus ``count()`` and reads the run's executor CPU, stages,
+tasks and shuffle bytes from Spark's status store through its own job
+group. A subset runs as
+``SPARK_GRAFT_BENCH_QUERIES=q1,q2 SPARK_GRAFT_BENCH_RUNS=3 python bench.py``.
+
+``BENCH_COMMITTED.json`` was taken when runs still shared the cache, a
+warm-cache snapshot: the queries that persist frames (``setsim_join_prefix``
+and the MinHash/near-dup graph family) read slower against it, so
+``load_ratio_median`` reads high for them until the snapshot is
+re-baselined (ROADMAP K).
 """
 
 from __future__ import annotations
@@ -23,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from active_query_optimizer_spark.operators import QUERIES  # noqa: E402
 from active_query_optimizer_spark.session import get_spark  # noqa: E402
+from perfbench.sparkstats import group_counters  # noqa: E402
 
 # Headline set: the scale-relevant core — big-table joins/aggs, the 7-way
 # join, window + dedup/similarity/text pipeline ops as they land.
@@ -164,6 +177,33 @@ HEADLINE = [
 ]
 
 
+def time_query(spark, name: str, sf_dir: str, runs: int) -> list[dict]:
+    """Run registered query ``name`` ``runs`` times, each from an empty
+    cache and in its own job group. Per run: ``wall_s`` (build plus
+    ``count()``), ``rows``, and the group's executor ``cpu_s``,
+    ``stages``, ``tasks`` and ``shuffle_write_mb``."""
+    sc = spark.sparkContext
+    out = []
+    for _ in range(runs):
+        spark.catalog.clearCache()
+        # unique per run: a reused group id would add an earlier call's jobs
+        group = f"bench-{name}-{time.monotonic_ns()}"
+        sc.setJobGroup(group, name)
+        try:
+            t0 = time.perf_counter()
+            rows = QUERIES[name](spark, sf_dir).count()
+            wall = time.perf_counter() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        c = group_counters(spark, group)
+        out.append({"wall_s": wall, "rows": rows,
+                    "cpu_s": c["spark.executor_cpu_s"],
+                    "stages": int(c["spark.stages"]),
+                    "tasks": int(c["spark.tasks"]),
+                    "shuffle_write_mb": c["spark.shuffle_write_mb"]})
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("aqo-bench")
@@ -174,35 +214,30 @@ def main() -> None:
 
     # best-of-N per query (default 3): the first run pays JIT/codegen and
     # GC noise; min-of-runs is the standard benchmark estimator for the
-    # steady-state cost. Each run replans + re-executes from parquet.
+    # steady-state cost. Each run replans + re-executes from parquet with
+    # an empty cache (time_query).
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     # optional subset (e.g. the sf1 scale rehearsal runs only the heavy
-    # entries): comma-separated names, order preserved from HEADLINE
+    # entries): comma-separated names, order preserved from HEADLINE;
+    # registered queries outside HEADLINE follow in name order
     subset_env = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
     subset = {s.strip() for s in subset_env.split(",") if s.strip()}
     queries = [n for n in HEADLINE if not subset or n in subset]
+    queries += sorted(subset - set(HEADLINE))
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    cpus: dict[str, float] = {}
     for name in queries:
-        fn = QUERIES.get(name)
-        if fn is None:
+        if name not in QUERIES:
             continue
-        samples: list[float] = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.count()
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(min(samples), 4)
+        samples = time_query(spark, name, sf_dir, runs)
+        walls = [r["wall_s"] for r in samples]
+        timings[name] = round(min(walls), 4)
         # run-to-run spread (max-min): quantifies JIT/GC noise per query —
         # a large spread next to a small best means the best is steady-state
         # while cold runs still pay codegen/GC, not that the plan is flaky
-        spreads[name] = round(max(samples) - min(samples), 4)
-        # NOTE: persisted intermediates (e.g. the minhash signature table)
-        # are deliberately NOT cleared between the N runs — Spark's cache
-        # manager dedupes by canonicalized plan, so later runs measure the
-        # warm steady-state (signature table materialized once, reused),
-        # which is the shape a production pipeline runs in.
+        spreads[name] = round(max(walls) - min(walls), 4)
+        cpus[name] = round(min(r["cpu_s"] for r in samples), 4)
 
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     try:
@@ -212,11 +247,14 @@ def main() -> None:
     detail = {
         "metric": "headline_query_wall_clock_detail",
         "queries": timings,
+        "cpu_s": cpus,
         "spread": spreads,
         "sf": sf_val,
         "runs_per_query": runs,
-        "notes": ("best-of-N wall clock per query; spread = max-min over "
-                  "the N runs (JIT/GC noise quantified per query)"),
+        "notes": ("best-of-N wall clock per query, every run from an "
+                  "empty cache; cpu_s = least executor CPU over the N "
+                  "runs; spread = max-min wall over the N runs (JIT/GC "
+                  "noise quantified per query)"),
     }
     # The per-query dict grew past the driver's tail-capture window in
     # round 3 (BENCH_r03.json parsed:null). Emit the full detail FIRST
@@ -234,6 +272,7 @@ def main() -> None:
         "metric": "headline_query_wall_clock_total",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
+        "cpu_total_s": round(sum(cpus.values()), 4),
         "sf": sf_val,
         "queries_run": len(timings),
         "runs_per_query": runs,

@@ -42,3 +42,29 @@ def test_bench_headline_is_registered_and_duplicate_free():
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE)), "duplicates"
     unknown = [n for n in bench.HEADLINE if n not in QUERIES]
     assert not unknown, f"HEADLINE entries not in the registry: {unknown}"
+
+
+def test_time_query_starts_every_run_from_an_empty_cache(spark, monkeypatch):
+    """``bench.time_query`` clears the cache before every run, so no run
+    reads a frame that it or an earlier query left persisted. Both
+    queries persist frames (setsim's records, the near-dup pair family),
+    so without the clear the second run starts with them cached."""
+    import bench
+
+    from active_query_optimizer_spark.operators import QUERIES
+
+    from .conftest import SF_SMALL
+
+    jsc = spark.sparkContext._jsc
+    for name in ("setsim_join_prefix", "dedup_minhash_clusters"):
+        at_start: list[int] = []
+
+        def probe(spark, sf_dir, fn=QUERIES[name]):
+            at_start.append(jsc.getPersistentRDDs().size())
+            return fn(spark, sf_dir)
+
+        monkeypatch.setitem(QUERIES, name, probe)
+        runs = bench.time_query(spark, name, SF_SMALL, runs=2)
+        assert at_start == [0, 0], name
+        assert all(r["cpu_s"] > 0 for r in runs), (name, runs)
+        assert runs[0]["rows"] == runs[1]["rows"], (name, runs)

@@ -281,7 +281,7 @@ def test_graph_queries_leave_no_cached_frames(spark, tmp_path, name):
         QUERIES[name](spark, sf).collect()
         assert jsc.getPersistentRDDs().size() == before
     finally:
-        dedup.release_neardup_pairs(spark, sf)
+        spark.catalog.clearCache()
 
 
 def test_graph_edges_above_bound_raise(spark, monkeypatch):
@@ -460,11 +460,11 @@ def test_neardup_pairs_one_cache_serves_graph_family(spark):
     """Round-4 verdict item #6: the graph family shares ONE persisted LSH
     pair frame. Running any member registers the plan-keyed cache entry;
     every other member (and repeat invocations) addresses the same entry;
-    release_neardup_pairs drops it."""
+    the session owner's clearCache() drops it."""
     from active_query_optimizer_spark.operators import dedup
     from active_query_optimizer_spark.operators import QUERIES
 
-    dedup.release_neardup_pairs(spark, SF_SMALL)
+    spark.catalog.clearCache()
     probe = dedup.dedup_minhash_lsh(spark, SF_SMALL).select("doc_a", "doc_b")
     lvl = probe.storageLevel
     assert not (lvl.useMemory or lvl.useDisk), "stale cache entry"
@@ -481,18 +481,20 @@ def test_neardup_pairs_one_cache_serves_graph_family(spark):
         # and actually produces the pair rows from the cache
         assert QUERIES["graph_bfs_hops"](spark, SF_SMALL).count() >= 1
     finally:
-        dedup.release_neardup_pairs(spark, SF_SMALL)
+        spark.catalog.clearCache()
     lvl = probe.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk), "release did not drop entry"
+    assert not (lvl.useMemory or lvl.useDisk), "clearCache did not drop entry"
 
 
-def test_setsim_records_release_drops_cache_entry(spark):
-    """Round-10 advice: the setsim ordered-record persist needs a release
-    path mirroring release_neardup_pairs — running the operator registers
-    the plan-keyed entry; release_setsim_records drops it."""
+def test_setsim_records_cache_is_shared_until_clear_cache(spark):
+    """Round-10 advice: the setsim ordered-record persist follows the
+    ``neardup_pairs`` contract — running the operator registers the
+    plan-keyed entry, a repeat call shares it, and the session owner's
+    clearCache() drops it."""
     from active_query_optimizer_spark.operators import dedup
 
-    dedup.release_setsim_records(spark, SF_SMALL)
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
     probe = dedup._setsim_records(spark, SF_SMALL)
     lvl = probe.storageLevel
     assert not (lvl.useMemory or lvl.useDisk), "stale cache entry"
@@ -501,10 +503,14 @@ def test_setsim_records_release_drops_cache_entry(spark):
         lvl = probe.storageLevel
         assert lvl.useMemory or lvl.useDisk, (
             "setsim_join_prefix did not register the record cache")
+        n = jsc.getPersistentRDDs().size()
+        dedup.setsim_join_prefix(spark, SF_SMALL).count()
+        assert jsc.getPersistentRDDs().size() == n, (
+            "a repeat call stacked a second cache entry")
     finally:
-        dedup.release_setsim_records(spark, SF_SMALL)
+        spark.catalog.clearCache()
     lvl = probe.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk), "release did not drop entry"
+    assert not (lvl.useMemory or lvl.useDisk), "clearCache did not drop entry"
 
 
 def test_setsim_prefix_filter_prunes_and_loses_nothing(spark):

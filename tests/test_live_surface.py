@@ -11,7 +11,8 @@ without resolving imports, so a definition whose name some live code
 also uses for something else passes. Code that only its own tests run
 either goes, or gets an ``ALLOWED`` entry naming why it stays. It also
 checks that every ``@register``-ed query takes exactly ``(spark, sf_dir)``,
-the call the driver makes.
+the call the driver makes, and that no package module imports
+``perfbench`` or ``tests``.
 """
 
 from __future__ import annotations
@@ -58,10 +59,6 @@ ALLOWED = {
     # test references for registered queries
     "stats/harvester.py:approx_column_cardinalities":
         "test reference for stats_column_cardinalities_approx",
-    "operators/dedup.py:release_setsim_records":
-        "releases the frame setsim_join_prefix keeps cached",
-    "operators/dedup.py:release_neardup_pairs":
-        "releases the pairs dedup_minhash_lsh keeps cached",
 }
 
 
@@ -164,3 +161,22 @@ def test_registered_queries_take_only_spark_and_sf_dir():
     bad = {k: v for k, v in sigs.items() if v != ["spark", "sf_dir"]}
     assert not bad, f"registered queries with extra parameters: {bad}"
     assert len(sigs) >= 100, f"found only {len(sigs)} registered queries"
+
+
+def test_package_imports_neither_perfbench_nor_tests():
+    """The package must not import the benchmark (``perfbench``) or the
+    test suite: bench and test code may call the package, never the
+    other way round."""
+    bad = []
+    for path in _modules(PKG):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and not node.level:
+                mods = [node.module or ""]
+            else:
+                continue
+            bad += [f"{path.relative_to(PKG).as_posix()}:{node.lineno} {m}"
+                    for m in mods
+                    if m.split(".")[0] in ("perfbench", "tests")]
+    assert not bad, f"package modules import perfbench or tests: {bad}"

@@ -299,3 +299,28 @@ def test_load_for_compute_repartition_is_conditional(spark, tmp_path):
     plan2 = narrow._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" in plan2, (
         f"small scan lost its fan-out repartition:\n{plan2}")
+
+
+@pytest.mark.parametrize("name,exchanges,python_nodes", [
+    ("flagship_multijoin_count", 3, 0),
+    ("decontam_substring_containment", 9, 3),
+    ("dedup_simhash", 1, 1),
+])
+def test_capture_plan_counts_each_node_once(spark, name, exchanges,
+                                            python_nodes):
+    """``tools/capture_plan.py`` counts physical plan nodes, not
+    substrings of the formatted explain, which names every node twice
+    (tree and detail block) and in which ``ArrowEvalPython`` matched two
+    patterns: the text count read 6/0, 18/12 and 2/4 here. The counts are
+    the test session's (8 cores, where ``documents`` is repartitioned
+    before compute; at 4 cores the last two read 5/3 and 0/1)."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "tools" / "capture_plan.py"
+    spec = importlib.util.spec_from_file_location("capture_plan_tool", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    _, counts = tool.capture(spark, name, SF_SMALL)
+    assert counts == {"plan.exchanges": exchanges,
+                      "plan.python_nodes": python_nodes}

@@ -10,6 +10,19 @@ import os, sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from active_query_optimizer_spark.operators import QUERIES
 from active_query_optimizer_spark.session import get_spark
+from perfbench.sparkstats import plan_counts
+
+
+def capture(spark, name: str, sf_dir: str) -> tuple[str, dict[str, float]]:
+    """Query ``name``'s formatted explain and its Exchange and
+    Python-node counts. The counts come from the physical plan tree, not
+    from the explain text, which names every node twice (in the tree and
+    in its detail block)."""
+    df = QUERIES[name](spark, sf_dir)
+    txt = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"))
+    return txt, plan_counts(df)
 
 
 def main() -> None:
@@ -23,16 +36,13 @@ def main() -> None:
     spark = get_spark("plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        df = QUERIES[name](spark, sf_dir)
-        txt = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"))
+        txt, counts = capture(spark, name, sf_dir)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(txt)
-        n_ex = txt.count("Exchange")
-        n_py = txt.count("EvalPython") + txt.count("MapInPandas") + txt.count("ArrowEval")
-        print(f"{name}: {len(txt)} chars, Exchange x{n_ex}, pythonNodes x{n_py} -> {path}")
+        print(f"{name}: {len(txt)} chars, "
+              f"Exchange x{counts['plan.exchanges']:.0f}, "
+              f"pythonNodes x{counts['plan.python_nodes']:.0f} -> {path}")
 
 
 if __name__ == "__main__":
