@@ -33,18 +33,14 @@ from ..catalog import register_views
 from ..model.lero import train_pairwise_from_bundles
 from ..pipelines.dynamic import run_deployment
 from ..plans.explore import (HINT_STRATEGIES, LABEL_TIMEOUT_PENALTY,
-                             Candidate, ZombieExecutionError)
+                             LABEL_TIMEOUT_S, Candidate,
+                             ZombieExecutionError)
 from ..plans.labelcache import cached_label_query
 from ..stats.harvester import harvest_range_dict
 from ..workload.extract import extract_aliases
 from ..workload.generate import generate_workload
 from .metrics import as_bundles, evaluate_bundles
 
-
-#: per-candidate labeling deadline (sec): a pathological variant (e.g. a
-#: replicate-NL hint degenerating an equi-join) gets cancelled and
-#: penalty-labeled instead of holding the whole artifact run hostage
-LABEL_TIMEOUT_S = 30.0
 
 #: the training recipe every committed artifact records. A pointwise
 #: latency pretrain initializes the net (timeout-penalty labels are
@@ -124,7 +120,7 @@ def _clamp_folds(folds: int, n_bundles: int) -> int:
 
 def label_generated_workload(spark: SparkSession, sf_dir: str,
                              num_queries: int, seed: int,
-                             timeout_s: float | None = LABEL_TIMEOUT_S,
+                             timeout_s: float,
                              cache_dir: str | None = None,
                              probe_default_s: float | None = None,
                              skip_saturated: bool = False,
@@ -206,8 +202,7 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
         lookups += cache_dir is not None
         hits += was_hit
         if len(cands) >= 2:
-            if skip_saturated and timeout_s is not None and _is_saturated(
-                    cands, timeout_s):
+            if skip_saturated and _is_saturated(cands, timeout_s):
                 skip_stats["saturated_skipped"] += 1
                 print(f"labeling: q{r['id']} saturated-skipped (all "
                       f"{len(cands)} candidates at the timeout penalty)",

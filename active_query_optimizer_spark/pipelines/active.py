@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..evaluation.metrics import as_bundles
 from ..model.infer import plan_embeddings
 from ..model.lero import LeroModelPairWise, train_pairwise_from_bundles
-from ..plans.explore import label_workload
+from ..plans.explore import HINT_STRATEGIES, LABEL_TIMEOUT_S, label_query
 from ..plans.featurize import capture_plan, to_pg_json
 from ..select.coreset import coreset_select
 
@@ -105,13 +105,20 @@ def run_active_loop(spark: SparkSession, pool: list[tuple[str, str]],
     """Bootstrap-label ``seed_batch`` queries and capture every pool
     query's default plan once, then for each round: train,
     embed the pool, coreset-select ``batch_size`` new queries, label them,
-    fold into the training set. Returns the model + labeling history."""
+    fold into the training set. Returns the model + labeling history.
+    Every candidate is labeled under ``LABEL_TIMEOUT_S``; one that survives
+    the cancellation escalation raises ``ZombieExecutionError`` to the
+    caller."""
     by_qid = dict(pool)
     labeled: list = []
     labeled_qids: set[str] = set()
 
+    def label(qids: list[str]) -> list:
+        return [(q, label_query(spark, by_qid[q], HINT_STRATEGIES,
+                                LABEL_TIMEOUT_S)) for q in qids]
+
     first = [q for q, _ in pool[:seed_batch]]
-    labeled += label_workload(spark, [(q, by_qid[q]) for q in first])
+    labeled += label(first)
     labeled_qids |= set(first)
     history = [sorted(first)]
 
@@ -125,7 +132,7 @@ def run_active_loop(spark: SparkSession, pool: list[tuple[str, str]],
                                    labeled_qids, seed=seed)
         if not picked:
             break
-        labeled += label_workload(spark, [(q, by_qid[q]) for q in picked])
+        labeled += label(picked)
         labeled_qids |= set(picked)
         history.append(sorted(picked))
 

@@ -25,7 +25,7 @@ from pyspark.sql import SparkSession
 
 from ..evaluation.metrics import as_bundles, evaluate_bundles
 from ..model.lero import train_pairwise_from_bundles
-from ..plans.explore import label_workload
+from ..plans.explore import HINT_STRATEGIES, LABEL_TIMEOUT_S, label_query
 
 
 def run_stable(spark: SparkSession, train_queries: list[tuple[str, str]],
@@ -34,13 +34,20 @@ def run_stable(spark: SparkSession, train_queries: list[tuple[str, str]],
                seed: int = 0) -> dict:
     """Label + train on ``train_queries`` (``(qid, sql)`` against already
     registered views), evaluate on ``test_queries`` (defaults to the train
-    set — the reference evaluates a held-out file when present)."""
-    bundles = as_bundles(label_workload(spark, train_queries))
+    set — the reference evaluates a held-out file when present). Every
+    candidate is labeled under ``LABEL_TIMEOUT_S``; one that survives the
+    cancellation escalation raises ``ZombieExecutionError`` to the caller."""
+    def label(queries: list[tuple[str, str]]) -> list:
+        return as_bundles([(q, label_query(spark, sql, HINT_STRATEGIES,
+                                           LABEL_TIMEOUT_S))
+                           for q, sql in queries])
+
+    bundles = label(train_queries)
     model = train_pairwise_from_bundles(bundles, epochs=epochs, seed=seed)
 
     eval_bundles = bundles
     if test_queries is not None:
-        eval_bundles = as_bundles(label_workload(spark, test_queries))
+        eval_bundles = label(test_queries)
     ev = evaluate_bundles(spark, model, eval_bundles)
 
     if model_dir:

@@ -12,10 +12,10 @@ default (SURVEY.md §4.1). Catalyst may override a hint, so variants are
 deduplicated by structural plan fingerprint before execution
 (SURVEY.md §7.3c).
 
-Labeling executes candidates one at a time and wall-clocks them — the same
-process shape as the reference's PG labeling runs; this is the *training*
-loop, not a query path, and its cost is the whole point (active learning
-exists to minimize how often we pay it).
+Labeling (``label_query``) executes candidates one at a time, each under
+a deadline — the reference's PG labeling runs under ``statement_timeout``;
+this is the *training* loop, not a query path, and its cost is the whole
+point (active learning exists to minimize how often we pay it).
 """
 
 from __future__ import annotations
@@ -35,22 +35,17 @@ HINT_STRATEGIES = ("BROADCAST", "MERGE", "SHUFFLE_HASH", "SHUFFLE_REPLICATE_NL")
 
 #: Conf-knob exploration dimensions — the closest Spark analog of Lero's
 #: PG cardinality-scaling knobs (the Lero paper steers the native optimizer
-#: through its tuning GUCs; Spark's equivalents are the join-threshold and
-#: runtime-filter switches). Each yields a candidate planned under a
-#: temporarily overridden session conf; the override is re-applied when the
-#: candidate is executed/labeled. Adaptive execution is no knob here: the
-#: fingerprint reads the pre-AQE ``sparkPlan``, which turning AQE off
-#: leaves unchanged, so that form always dedups away.
+#: through its tuning GUCs; Spark's equivalent is the join-threshold
+#: switch). Each yields a candidate planned under a temporarily overridden
+#: session conf; the override is re-applied when the candidate is
+#: executed/labeled. Adaptive execution is no knob here: the fingerprint
+#: reads the pre-AQE ``sparkPlan``, which turning AQE off leaves
+#: unchanged, so that form always dedups away. Nor is the runtime bloom
+#: filter: Spark injects one only when the application side scans more
+#: than ``runtime.bloomFilter.applicationSideScanSizeThreshold`` (10 GB by
+#: default), so turning it off never changes a plan here.
 CONF_VARIANTS: tuple[tuple[str, dict[str, str]], ...] = (
     ("nobroadcast", {"spark.sql.autoBroadcastJoinThreshold": "-1"}),
-    # runtime bloom-filter join pushdown off: Spark injects a bloom
-    # filter from the build side into the probe scan when stats look
-    # favorable — whether that wins is data-dependent, i.e. exactly the
-    # kind of knob a learned ranker should see both settings of. A query
-    # where the toggle doesn't change the plan dedups away by
-    # fingerprint, costing nothing.
-    ("nobloom", {"spark.sql.optimizer.runtime.bloomFilter.enabled":
-                 "false"}),
 )
 
 #: executed-plan join node names (raw Spark vocabulary, pre-PG-mapping)
@@ -216,12 +211,13 @@ def plan_variants(spark: SparkSession, sql: str,
     return plan_forms(spark, variant_forms(sql, strategies))
 
 
-#: a timed-out candidate is labeled at ``penalty * timeout`` ms — the
-#: Lero-style treatment (PG labeling runs under ``statement_timeout``):
-#: the ranker still learns "this plan is bad", and the labeling loop is
-#: never hostage to one pathological variant (a SHUFFLE_REPLICATE_NL
-#: hint can turn an equi-join into a near-cartesian plan whose runtime
-#: is unbounded relative to its siblings)
+#: per-candidate labeling deadline (sec); a timed-out candidate is labeled
+#: at ``LABEL_TIMEOUT_PENALTY * timeout_s`` ms — the Lero-style treatment
+#: (PG labeling runs under ``statement_timeout``): the ranker still learns
+#: "this plan is bad", and the labeling loop is never hostage to one
+#: pathological variant (a SHUFFLE_REPLICATE_NL hint can turn an equi-join
+#: into a near-cartesian plan whose runtime is unbounded)
+LABEL_TIMEOUT_S = 30.0
 LABEL_TIMEOUT_PENALTY = 2.0
 
 
@@ -243,19 +239,14 @@ _CANCEL_RETRY_WAIT_S = 5.0
 _CANCEL_ALL_WAIT_S = 30.0
 
 
-def _time_execution(df: DataFrame,
-                    timeout_s: float | None = None) -> float | None:
-    """Wall-clock ``collect()`` in ms; with ``timeout_s`` set, the action
-    runs in a worker thread under its own job group and the caller
+def _time_execution(df: DataFrame, timeout_s: float) -> float | None:
+    """Wall-clock ``collect()`` in ms under a ``timeout_s`` deadline: the
+    action runs in a worker thread under its own job group and the caller
     cancels the group at the deadline (``interruptOnCancel`` so running
     tasks die too) — returns ``None`` on timeout. Cancellation escalates
     (re-cancel for AQE follow-on jobs, then ``cancelAllJobs``); an action
     that survives the full escalation raises ``ZombieExecutionError``
     instead of holding the labeling loop hostage."""
-    if timeout_s is None:
-        t0 = time.perf_counter()
-        df.collect()
-        return (time.perf_counter() - t0) * 1000.0
     sc = df.sparkSession.sparkContext
     group = f"aqo-label-{time.monotonic_ns()}"
     result: dict[str, object] = {}
@@ -312,19 +303,19 @@ def probe_default(spark: SparkSession, sql: str,
     return _time_execution(spark.sql(sql), probe_s)
 
 
-def label_query(spark: SparkSession, sql: str,
-                strategies: tuple[str, ...] = HINT_STRATEGIES,
-                timeout_s: float | None = None) -> list[Candidate]:
+def label_query(spark: SparkSession, sql: str, strategies: tuple[str, ...],
+                timeout_s: float) -> list[Candidate]:
     """Execute every distinct variant of ``sql``; attach wall time and the
     AQE-final executed plan (with actual ``numOutputRows``) to each
     candidate — one labeled bundle, the reference's
     ``qid#####planJSON…`` line content.
 
-    With ``timeout_s`` set, each candidate's execution is cancelled at
-    the deadline and labeled ``LABEL_TIMEOUT_PENALTY * timeout_s`` ms
-    (see the penalty note above) with its *pre-execution* plan — the
-    labeling loop's wall clock is bounded by
-    ``variants x timeout`` no matter how pathological a variant plans.
+    Each candidate's execution is cancelled at the ``timeout_s`` deadline
+    and labeled ``LABEL_TIMEOUT_PENALTY * timeout_s`` ms (see the penalty
+    note above) with its *pre-execution* plan — the labeling loop's wall
+    clock is bounded by ``variants x timeout`` no matter how pathological
+    a variant plans. Sequential by design: each candidate must own the
+    cluster while timed.
 
     Post-execution discipline (SURVEY §7.3c): hints are requests — the
     *realized* strategy is read back from the executed plan
@@ -359,17 +350,6 @@ def label_query(spark: SparkSession, sql: str,
                            else bool(expect.intersection(realized))),
             timed_out=False))
     return labeled
-
-
-def label_workload(spark: SparkSession, queries: list[tuple[str, str]],
-                   strategies: tuple[str, ...] = HINT_STRATEGIES,
-                   timeout_s: float | None = None,
-                   ) -> list[tuple[str, list[Candidate]]]:
-    """Label a list of ``(qid, sql)`` — returns bundles in workload order.
-    Sequential by design: each candidate must own the cluster while timed,
-    concurrent labeling would corrupt the labels."""
-    return [(qid, label_query(spark, sql, strategies, timeout_s))
-            for qid, sql in queries]
 
 
 def bundles_to_lines(bundles: list[tuple[str, list["Candidate"]]]) -> list[str]:

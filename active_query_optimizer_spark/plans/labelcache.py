@@ -147,7 +147,7 @@ def data_fingerprint(sf_dir: str) -> str:
 
 
 def _key_from(sql: str, strategies: tuple[str, ...],
-              timeout_s: float | None, sf_dir: str, data_fp: str,
+              timeout_s: float, sf_dir: str, data_fp: str,
               code_fp: str | None = None) -> str:
     payload = json.dumps(
         [sql, list(strategies), timeout_s, os.path.normpath(sf_dir),
@@ -157,7 +157,7 @@ def _key_from(sql: str, strategies: tuple[str, ...],
 
 
 def bundle_key(sql: str, strategies: tuple[str, ...],
-               timeout_s: float | None, sf_dir: str) -> str:
+               timeout_s: float, sf_dir: str) -> str:
     """Content key for one labeled bundle (includes the code fingerprint
     and the data fingerprint of ``sf_dir``)."""
     return _key_from(sql, strategies, timeout_s, sf_dir,
@@ -165,7 +165,7 @@ def bundle_key(sql: str, strategies: tuple[str, ...],
 
 
 def bundle_key_at_code(sql: str, strategies: tuple[str, ...],
-                       timeout_s: float | None, sf_dir: str,
+                       timeout_s: float, sf_dir: str,
                        code_fp: str) -> str:
     """``bundle_key`` under an EXPLICIT code fingerprint — migration use
     only (``tools/rekey_label_cache.py --legacy-code-rev``): when a
@@ -315,7 +315,7 @@ def read_bundle(cache_dir: str, key: str):
 
 def cached_label_query(spark: "SparkSession", sql: str,
                        strategies: tuple[str, ...],
-                       timeout_s: float | None, sf_dir: str,
+                       timeout_s: float, sf_dir: str,
                        cache_dir: str | None, probe_s: float | None = None,
                        ) -> tuple[list[Candidate] | None, bool]:
     """Label one generated query through the cache: the only place the

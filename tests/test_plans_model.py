@@ -653,7 +653,8 @@ def test_plan_variants_and_labeling(spark):
              if "Join" in op or op == "Nested Loop"}
     assert len(joins) >= 2  # genuinely different strategies realized
 
-    labeled = EX.label_query(spark, sql)
+    labeled = EX.label_query(spark, sql, EX.HINT_STRATEGIES,
+                             EX.LABEL_TIMEOUT_S)
     assert all(c.exec_time_ms and c.exec_time_ms > 0 for c in labeled)
     lines = EX.bundles_to_lines([("q0", labeled)])
     assert lines[0].startswith("q0#####")
@@ -778,7 +779,8 @@ def test_label_query_realized_strategies(spark):
     register_views(spark, SF_SMALL)
     sql = ("SELECT COUNT(*) FROM customer c, nation n "
            "WHERE c.c_nationkey = n.n_nationkey")
-    labeled = EX.label_query(spark, sql)
+    labeled = EX.label_query(spark, sql, EX.HINT_STRATEGIES,
+                             EX.LABEL_TIMEOUT_S)
     assert labeled, "no labeled candidates"
     # every labeled candidate ran at least one join and recorded it
     assert all(c.realized_joins for c in labeled)

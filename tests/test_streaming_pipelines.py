@@ -80,10 +80,13 @@ def test_deployment_pipeline_live_bundles(spark):
     synthetic trees — train/valid splits flow through the same series."""
     from active_query_optimizer_spark.catalog import register_views
     from active_query_optimizer_spark.evaluation.metrics import as_bundles
-    from active_query_optimizer_spark.plans.explore import label_workload
+    from active_query_optimizer_spark.plans.explore import (
+        HINT_STRATEGIES, LABEL_TIMEOUT_S, label_query)
 
     register_views(spark, SF_SMALL)
-    labeled = label_workload(spark, TRAIN_QUERIES[:2])
+    labeled = [(qid, label_query(spark, sql, HINT_STRATEGIES,
+                                 LABEL_TIMEOUT_S))
+               for qid, sql in TRAIN_QUERIES[:2]]
     bundles = [b for b in as_bundles(labeled) if len(b[1]) >= 2]
     assert bundles, "explorer produced no multi-candidate bundles"
     out = run_deployment(spark, [bundles, bundles], [bundles, bundles],
@@ -233,6 +236,23 @@ def test_incremental_trainer_skips_unlabeled_candidates(monkeypatch):
     assert trainer.model == "m"
 
 
+#: six join and scan queries: the active loop's live-labeled pool
+ACTIVE_POOL = [
+    ("p0", "SELECT COUNT(*) FROM customer c, nation n "
+           "WHERE c.c_nationkey = n.n_nationkey"),
+    ("p1", "SELECT COUNT(*) FROM orders o, customer c "
+           "WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 10000"),
+    ("p2", "SELECT COUNT(*) FROM supplier s, nation n "
+           "WHERE s.s_nationkey = n.n_nationkey"),
+    ("p3", "SELECT COUNT(*) FROM nation n, region r "
+           "WHERE n.n_regionkey = r.r_regionkey"),
+    ("p4", "SELECT COUNT(*) FROM orders o, customer c, nation n "
+           "WHERE o.o_custkey = c.c_custkey "
+           "AND c.c_nationkey = n.n_nationkey"),
+    ("p5", "SELECT COUNT(*) FROM customer c WHERE c.c_acctbal > 0"),
+]
+
+
 def test_active_learning_loop(spark):
     """The reference's core workflow: label seed batch → train → embed pool
     → coreset-select next batch → label → retrain (SURVEY §0 step 6)."""
@@ -240,21 +260,7 @@ def test_active_learning_loop(spark):
     from active_query_optimizer_spark.pipelines.active import run_active_loop
 
     register_views(spark, SF_SMALL)
-    pool = [
-        ("p0", "SELECT COUNT(*) FROM customer c, nation n "
-               "WHERE c.c_nationkey = n.n_nationkey"),
-        ("p1", "SELECT COUNT(*) FROM orders o, customer c "
-               "WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 10000"),
-        ("p2", "SELECT COUNT(*) FROM supplier s, nation n "
-               "WHERE s.s_nationkey = n.n_nationkey"),
-        ("p3", "SELECT COUNT(*) FROM nation n, region r "
-               "WHERE n.n_regionkey = r.r_regionkey"),
-        ("p4", "SELECT COUNT(*) FROM orders o, customer c, nation n "
-               "WHERE o.o_custkey = c.c_custkey "
-               "AND c.c_nationkey = n.n_nationkey"),
-        ("p5", "SELECT COUNT(*) FROM customer c WHERE c.c_acctbal > 0"),
-    ]
-    out = run_active_loop(spark, pool, seed_batch=2, batch_size=2,
+    out = run_active_loop(spark, ACTIVE_POOL, seed_batch=2, batch_size=2,
                           rounds=1, epochs=5)
     assert out["model"] is not None
     # seed batch + at least one actively-selected batch got labeled
@@ -263,6 +269,33 @@ def test_active_learning_loop(spark):
     newly = set(out["history"][1])
     assert newly and newly <= {"p2", "p3", "p4", "p5"}
     assert out["labeled_qids"] == {"p0", "p1"} | newly
+
+
+def test_pipelines_label_every_candidate_under_the_deadline(spark,
+                                                           monkeypatch):
+    """``run_active_loop`` and ``run_stable`` execute every candidate for
+    a label under ``LABEL_TIMEOUT_S``: no labeling path runs a bare,
+    uncancellable ``collect()``."""
+    from active_query_optimizer_spark.catalog import register_views
+    from active_query_optimizer_spark.pipelines.active import run_active_loop
+    from active_query_optimizer_spark.plans import explore as EX
+
+    register_views(spark, SF_SMALL)
+    timeouts = []
+    real = EX._time_execution
+
+    def recording(df, timeout_s):
+        timeouts.append(timeout_s)
+        return real(df, timeout_s)
+
+    monkeypatch.setattr(EX, "_time_execution", recording)
+    out = run_active_loop(spark, ACTIVE_POOL, seed_batch=2, batch_size=2,
+                          rounds=1, epochs=2)
+    n_active = len(timeouts)
+    assert n_active >= sum(len(c) for _, c in out["bundles"]) > 0
+    run_stable(spark, TRAIN_QUERIES, epochs=2)
+    assert len(timeouts) > n_active
+    assert all(t == EX.LABEL_TIMEOUT_S for t in timeouts), set(timeouts)
 
 
 def test_select_next_batch_embeds_each_pool_plan_once(spark, monkeypatch):
@@ -312,20 +345,17 @@ _STUB_POOL = [(f"p{k}", f"SELECT COUNT(*) FROM {t} WHERE {p.format(k)}")
                   ("supplier s", "s.s_acctbal > {}")] * 4)]
 
 
-def _stub_label(spark_, queries):
-    """Stub labels: two candidates on the default plan, timed by a hash
-    of the qid."""
+def _stub_label(spark_, sql, strategies, timeout_s):
+    """Stub ``label_query``: two candidates on the default plan, timed by
+    a hash of the pool qid."""
     from active_query_optimizer_spark.plans import featurize as FZ
     from active_query_optimizer_spark.plans.explore import Candidate
 
-    out = []
-    for qid, sql in queries:
-        plan = FZ.capture_plan(spark_.sql(sql), executed=False)
-        ms = float(sum(map(ord, qid)) % 7 + 1)
-        out.append((qid, [
-            Candidate("default", sql, "fa", plan, exec_time_ms=ms),
-            Candidate("rot1", sql, "fb", plan, exec_time_ms=ms + 1)]))
-    return out
+    qid = {s: q for q, s in _STUB_POOL}[sql]
+    plan = FZ.capture_plan(spark_.sql(sql), executed=False)
+    ms = float(sum(map(ord, qid)) % 7 + 1)
+    return [Candidate("default", sql, "fa", plan, exec_time_ms=ms),
+            Candidate("rot1", sql, "fb", plan, exec_time_ms=ms + 1)]
 
 
 def test_active_loop_plans_each_pool_query_once(spark, monkeypatch):
@@ -343,7 +373,7 @@ def test_active_loop_plans_each_pool_query_once(spark, monkeypatch):
         captured.append(df)
         return real(df, **kw)
 
-    monkeypatch.setattr(active, "label_workload", _stub_label)
+    monkeypatch.setattr(active, "label_query", _stub_label)
     monkeypatch.setattr(active, "capture_plan", counting)
     out = active.run_active_loop(spark, _STUB_POOL, seed_batch=2,
                                  batch_size=2, rounds=2, epochs=2)
@@ -360,7 +390,7 @@ def test_active_loop_labels_batch_size_per_round(spark, monkeypatch):
     from active_query_optimizer_spark.pipelines import active
 
     register_views(spark, SF_SMALL)
-    monkeypatch.setattr(active, "label_workload", _stub_label)
+    monkeypatch.setattr(active, "label_query", _stub_label)
     out = active.run_active_loop(spark, _STUB_POOL, seed_batch=2,
                                  batch_size=2, rounds=2, epochs=2)
     assert [len(h) for h in out["history"]] == [2, 2, 2]
