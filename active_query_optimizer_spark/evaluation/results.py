@@ -15,6 +15,9 @@ held-out query:
 - **chosen_ms** — the plan the learned ranker picks from the candidate set;
 - **best_ms** / **worst_ms** — the oracle floor / ceiling over candidates.
 
+Every generated query is labeled through one path,
+``plans/labelcache.cached_label_query``, under ``LABEL_TIMEOUT_S``.
+
 ``write_results_md`` renders RESULTS.md; ``tools/make_results.py`` is the
 CLI that produces the committed artifact at sf0.1, and the sf0.01 test
 regenerates a small one each CI run so the artifact can't rot.
@@ -120,16 +123,14 @@ def _clamp_folds(folds: int, n_bundles: int) -> int:
 
 def label_generated_workload(spark: SparkSession, sf_dir: str,
                              num_queries: int, seed: int,
-                             timeout_s: float,
                              cache_dir: str | None = None,
-                             probe_default_s: float | None = None,
-                             skip_saturated: bool = False,
                              ) -> tuple[list[tuple[str, list[Candidate]]],
-                                        tuple[int, int], SparkSession,
-                                        dict[str, int]]:
+                                        tuple[int, int], SparkSession]:
     """Generate a seeded workload against ``sf_dir``'s views and label each
     query by executing its plan variants (every ``HINT_STRATEGIES`` hint
-    plus the other explorer forms). Queries whose variants collapse
+    plus the other explorer forms) under ``LABEL_TIMEOUT_S``. Every
+    generated query goes through ``cached_label_query``, in generation
+    order, until ``num_queries`` are kept. Queries whose variants collapse
     to one physical plan carry no ranking signal and are skipped (the
     generator over-samples ``OVERSAMPLE``x to cover the loss).
 
@@ -137,28 +138,10 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
     (sql, strategies, timeout, sf_dir, code+data-fingerprint) key is present
     (``plans/labelcache`` — the deliberate measurement-protocol decision:
     a grown workload mixes measurement sessions). Returns
-    ``(bundles, (hits, lookups), spark, skip_stats)`` — lookups counts
-    every labeled query including skipped single-plan ones, and the
-    returned session replaces the caller's if a zombie variant forced a
-    JVM teardown (see ``_revive_spark``); tests leave the cache off.
-
-    Deadline-saturation controls (round-10 verdict #2 — at 10x data with
-    a fixed deadline, most generated bundles saturate to the timeout
-    penalty on EVERY candidate and carry zero ranking signal):
-
-    - ``probe_default_s``: before fully labeling a never-seen query, time
-      its DEFAULT plan under this budget (typically ``0.5 × timeout_s``);
-      a timeout skips the query for one bounded execution instead of
-      ``variants × timeout``, and the outcome is cached as a probe marker
-      so reruns skip instantly. Already-cached bundles are never probed.
-    - ``skip_saturated``: drop a labeled bundle whose candidates ALL
-      carry the timeout-penalty label (catches cached saturated bundles
-      and probe-passed queries whose every hinted sibling still
-      saturated). The skipped bundle stays in the cache; it is only
-      biased out of the SELECTED workload.
-
-    Both document the generation bias in ``skip_stats``
-    (``{"probe_skipped": n, "saturated_skipped": n}``)."""
+    ``(bundles, (hits, lookups), spark)`` — lookups counts every labeled
+    query including skipped single-plan ones, and the returned session
+    replaces the caller's if a zombie variant forced a JVM teardown (see
+    ``_revive_spark``); tests leave the cache off."""
     register_views(spark, sf_dir)
     print("labeling: harvesting ranges...", file=sys.stderr, flush=True)
     rd = harvest_range_dict(spark, sf_dir)
@@ -168,17 +151,17 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
                                   seed=seed).collect(),
                 key=lambda r: r["id"])
     hits = lookups = 0
-    skip_stats = {"probe_skipped": 0, "saturated_skipped": 0}
     out: list[tuple[str, list[Candidate]]] = []
     for r in wl:
         print(f"labeling: q{r['id']} (kept {len(out)}/{num_queries})",
               file=sys.stderr, flush=True)
+        lookups += cache_dir is not None
         try:
             # hit accounting comes from the cache itself: an under-budget
             # poison marker that relabels live is a miss
             cands, was_hit = cached_label_query(
-                spark, r["sql"], HINT_STRATEGIES, timeout_s, sf_dir,
-                cache_dir, probe_default_s)
+                spark, r["sql"], HINT_STRATEGIES, LABEL_TIMEOUT_S, sf_dir,
+                cache_dir)
         except ZombieExecutionError as e:
             # one variant ignored the full cancellation escalation: the
             # query is poisoned — drop it for this run (the generator
@@ -186,43 +169,30 @@ def label_generated_workload(spark: SparkSession, sf_dir: str,
             # JVM down so the runaway threads actually die, and move on.
             # With the cache on, the cache has recorded a POISONED marker
             # with a cross-run retry budget (a transient machine condition
-            # must not exclude the query from every future run); an
-            # admitted query still counts as a lookup.
+            # must not exclude the query from every future run).
             print(f"WARNING: q{r['id']} poisoned ({e}); reviving session",
                   file=sys.stderr)
-            lookups += cache_dir is not None and e.admitted
             spark = _revive_spark(spark)
             register_views(spark, sf_dir)
             continue
-        if cands is None:
-            skip_stats["probe_skipped"] += 1
-            print(f"labeling: q{r['id']} probe-skipped (default > "
-                  f"{probe_default_s}s)", file=sys.stderr, flush=True)
-            continue
-        lookups += cache_dir is not None
         hits += was_hit
         if len(cands) >= 2:
-            if skip_saturated and _is_saturated(cands, timeout_s):
-                skip_stats["saturated_skipped"] += 1
-                print(f"labeling: q{r['id']} saturated-skipped (all "
-                      f"{len(cands)} candidates at the timeout penalty)",
-                      file=sys.stderr, flush=True)
-                continue
             out.append((f"q{r['id']}", cands))
         if len(out) >= num_queries:
             break
-    return out, (hits, lookups), spark, skip_stats
+    return out, (hits, lookups), spark
 
 
-def _is_saturated(cands: list[Candidate], timeout_s: float) -> bool:
+def _is_saturated(cands: list[Candidate]) -> bool:
     """True when every candidate carries the timeout-penalty label — the
     bundle has zero ranking signal (its truth side is constant, so the
-    tie-aware Spearman already NULLs it out of the loss). Labeled on the
+    tie-aware Spearman already NULLs it out of the loss); RESULTS counts
+    the kept ones in ``saturated_bundles``. Labeled on the
     explicit ``timed_out`` flag; legacy bundles cached before the flag
     existed fall back to magnitude inference, which can misclassify a
     REAL measurement landing inside the cancellation-escalation window
     above the penalty threshold (round-12 advice #2 — why the flag)."""
-    pen_ms = LABEL_TIMEOUT_PENALTY * timeout_s * 1000.0
+    pen_ms = LABEL_TIMEOUT_PENALTY * LABEL_TIMEOUT_S * 1000.0
     return all(
         c.timed_out if c.timed_out is not None
         else float(c.exec_time_ms) >= pen_ms
@@ -269,9 +239,6 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
                       deployment_batches: int = 5,
                       cache_dir: str | None = None,
                       folds: int = 3,
-                      label_timeout_s: float = LABEL_TIMEOUT_S,
-                      probe_default_s: float | None = None,
-                      skip_saturated: bool = False,
                       ) -> dict[str, Any]:
     """Label a generated workload, evaluate ``folds`` rotated
     train/held-out splits over the same labels, and report held-out
@@ -288,11 +255,8 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
     future evaluates."""
     if folds < 2:
         raise ValueError(f"folds={folds}: need at least 2")
-    bundles, (cache_hits, cache_lookups), spark, skip_stats = \
-        label_generated_workload(
-            spark, sf_dir, num_queries, seed, cache_dir=cache_dir,
-            timeout_s=label_timeout_s, probe_default_s=probe_default_s,
-            skip_saturated=skip_saturated)
+    bundles, (cache_hits, cache_lookups), spark = label_generated_workload(
+        spark, sf_dir, num_queries, seed, cache_dir=cache_dir)
     if len(bundles) < 3:
         raise ValueError(f"only {len(bundles)} rankable bundles generated")
     print(f"labeling done: {len(bundles)} bundles "
@@ -300,7 +264,7 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
           file=sys.stderr, flush=True)
     # timeout-penalty labels are censored observations: excluded from the
     # pointwise pretrain set, kept for the pairwise ordering pass
-    penalty_ms = LABEL_TIMEOUT_PENALTY * label_timeout_s * 1000.0
+    penalty_ms = LABEL_TIMEOUT_PENALTY * LABEL_TIMEOUT_S * 1000.0
 
     # rotate the held-out block through the generation-ordered bundle
     # list (k disjoint held-out blocks)
@@ -413,22 +377,21 @@ def optimizer_results(spark: SparkSession, sf_dir: str,
         "label_cache": {"enabled": cache_dir is not None,
                         "hits": cache_hits,
                         "misses": cache_lookups - cache_hits},
-        # generation-bias + saturation transparency (round-10 verdict #2):
-        # how many queries the probe/saturation filters biased out, and
-        # how many KEPT bundles still carry zero ranking signal (all
-        # candidates at the timeout penalty) — the held-out count is the
-        # verdict's "<30% of held-out fully saturated" criterion
+        # every generated query is labeled, so nothing is biased out; the
+        # record keeps the fields RESULTS_SF1.json carries, so one
+        # renderer serves both artifacts. ``saturated_bundles`` counts
+        # the KEPT bundles that carry zero ranking signal (all candidates
+        # at the timeout penalty)
         "workload_bias": {
-            "probe_default_s": probe_default_s,
-            "skip_saturated": skip_saturated,
+            "probe_default_s": None,
+            "skip_saturated": False,
             "oversample": OVERSAMPLE,
-            **skip_stats,
+            "probe_skipped": 0,
+            "saturated_skipped": 0,
         },
         "saturated_bundles": {
-            "labeled": sum(1 for _, cs in bundles
-                           if _is_saturated(cs, label_timeout_s)),
-            "held_out": sum(1 for _, cs in test
-                            if _is_saturated(cs, label_timeout_s)),
+            "labeled": sum(1 for _, cs in bundles if _is_saturated(cs)),
+            "held_out": sum(1 for _, cs in test if _is_saturated(cs)),
         },
         "cross_split": cross,
         "per_query": per_query,

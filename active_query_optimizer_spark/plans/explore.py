@@ -289,20 +289,6 @@ def _time_execution(df: DataFrame, timeout_s: float) -> float | None:
     return float(result["ms"])  # type: ignore[arg-type]
 
 
-def probe_default(spark: SparkSession, sql: str,
-                  probe_s: float) -> float | None:
-    """Time the DEFAULT (hint-free) plan of ``sql`` under a ``probe_s``
-    deadline — ``None`` on timeout. The cheap admission test for
-    deadline-scaled labeling (round-10 verdict #2): a query whose default
-    saturates a fraction of the labeling deadline will saturate EVERY
-    candidate at the full deadline with high probability, producing an
-    all-penalty bundle that carries zero ranking signal; probing costs
-    one bounded execution instead of ``variants × timeout``. Shares
-    ``_time_execution``'s cancellation escalation, so a pathological
-    default raises ``ZombieExecutionError`` like any labeled variant."""
-    return _time_execution(spark.sql(sql), probe_s)
-
-
 def label_query(spark: SparkSession, sql: str, strategies: tuple[str, ...],
                 timeout_s: float) -> list[Candidate]:
     """Execute every distinct variant of ``sql``; attach wall time and the

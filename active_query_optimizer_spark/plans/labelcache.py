@@ -32,7 +32,12 @@ empty bundle: reruns retry the query up to ``MAX_POISON_ATTEMPTS`` times
 (a transient machine condition should not exclude a query from every
 future measurement round), and only a repeat offender is skipped
 permanently. An empty bundle is the stored outcome of a query with no
-plannable form, which reruns serve as a hit.
+plannable form, which reruns serve as a hit. Every generated query is
+labeled through ``cached_label_query``, under the one labeling deadline.
+The ``*-probe.json.gz`` files in the committed cache are default-plan
+admission markers from the sf1 rehearsal (round 10); that admission is
+retired, nothing reads them, and a real ``tools/rekey_label_cache.py``
+run drops them.
 
 MEASUREMENT-PROTOCOL NOTE (the deliberate decision the round-5 verdict
 asked for): with the cache on, a grown workload's totals mix measurement
@@ -60,8 +65,7 @@ import json
 import os
 from typing import TYPE_CHECKING
 
-from .explore import (Candidate, ZombieExecutionError, label_query,
-                      probe_default)
+from .explore import Candidate, ZombieExecutionError, label_query
 from .featurize import from_pg_json, to_pg_json
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -242,8 +246,7 @@ def record_poisoned(cache_dir: str, key: str, error: str = "",
     incrementing its cross-run attempt count; returns the new count.
     Reruns retry the query until ``MAX_POISON_ATTEMPTS`` is spent.
     ``sql`` (kept from the prior marker when the caller omits it) makes
-    the marker re-keyable across verified-benign labeling-code changes,
-    like ``record_probe``'s."""
+    the marker re-keyable across verified-benign labeling-code changes."""
     attempts = 1
     prior = read_bundle(cache_dir, key)
     if isinstance(prior, dict) and prior.get("poisoned"):
@@ -255,52 +258,6 @@ def record_poisoned(cache_dir: str, key: str, error: str = "",
         payload["sql"] = sql
     _atomic_write(cache_dir, key, payload)
     return attempts
-
-
-def record_probe(cache_dir: str, key: str, probe_s: float,
-                 passed: bool, ms: float | None = None,
-                 sql: str | None = None) -> None:
-    """Persist the default-variant probe outcome for ``key`` (round-10
-    verdict #2 — de-saturating the scale rehearsal): a query whose
-    DEFAULT plan cannot finish within ``probe_s`` is generation-biased
-    out of the workload BEFORE paying for full variant labeling, and the
-    marker makes that decision free on every rerun. Keyed alongside the
-    bundle (same code+data fingerprints), so a labeling-code or data
-    change re-probes. ``sql`` makes the marker re-keyable across
-    verified-benign labeling-code changes (round-12 advice: rekey runs
-    used to drop markers wholesale because, unlike bundles, they carried
-    no SQL to recompute their key from)."""
-    payload: dict = {"probe": True, "probe_s": probe_s,
-                     "passed": bool(passed), "ms": ms}
-    if sql is not None:
-        payload["sql"] = sql
-    _atomic_write(cache_dir, f"{key}-probe", payload)
-
-
-def clear_probe(cache_dir: str, key: str) -> bool:
-    """Remove ``key``'s probe marker if present — called once the full
-    bundle is cached (``read_bundle`` then owns admission, so the marker
-    is redundant; round-12 advice #4). True if a marker was removed.
-
-    A crash between ``write_bundle`` and this call leaves a redundant
-    marker behind; that is harmless (``read_bundle`` wins admission once
-    the bundle exists) and the rekey tool's second pass garbage-collects
-    it. Callers therefore need no ordering guarantees here."""
-    try:
-        os.remove(os.path.join(cache_dir, f"{key}-probe.json.gz"))
-        return True
-    except FileNotFoundError:
-        return False
-
-
-def read_probe(cache_dir: str, key: str, probe_s: float):
-    """The stored probe marker for ``key`` at exactly ``probe_s``, or
-    ``None`` (never probed / probed at a different budget)."""
-    raw = read_bundle(cache_dir, f"{key}-probe")
-    if (isinstance(raw, dict) and raw.get("probe")
-            and raw.get("probe_s") == probe_s):
-        return raw
-    return None
 
 
 def read_bundle(cache_dir: str, key: str):
@@ -316,8 +273,8 @@ def read_bundle(cache_dir: str, key: str):
 def cached_label_query(spark: "SparkSession", sql: str,
                        strategies: tuple[str, ...],
                        timeout_s: float, sf_dir: str,
-                       cache_dir: str | None, probe_s: float | None = None,
-                       ) -> tuple[list[Candidate] | None, bool]:
+                       cache_dir: str | None,
+                       ) -> tuple[list[Candidate], bool]:
     """Label one generated query through the cache: the only place the
     labeling path computes a bundle key or reads/writes a cache file.
 
@@ -325,22 +282,16 @@ def cached_label_query(spark: "SparkSession", sql: str,
     (decoded without touching the cluster; an empty list is the stored
     no-plannable-form outcome), an EXHAUSTED poison marker
     returns ``[]`` as a hit (the plan-collapse skip), an under-budget
-    marker relabels live. A never-seen query with ``probe_s`` set first
-    passes the default-plan probe: a stored probe marker at that budget
-    answers it, otherwise ``probe_default`` runs once and its outcome is
-    recorded (with the SQL, so the marker survives re-keys). Then the
-    query labels live, the bundle is written and the now-redundant probe
-    marker cleared. A ``ZombieExecutionError`` records a poison marker
-    (with the SQL) and propagates; its ``admitted`` attribute says
-    whether the query had passed admission (False when the probe itself
-    zombied).
+    marker relabels live. Anything else labels live under ``timeout_s``
+    and the bundle is written. A ``ZombieExecutionError`` records a
+    poison marker (with the SQL) and propagates.
 
-    Returns ``(candidates, hit)``; ``candidates is None`` means the probe
-    rejected the query. ``hit`` is True only when the result came from
-    the cache: an under-budget marker that relabels live is a miss, so
-    RESULTS.md cannot overstate how many bundles came from the cache. With ``cache_dir=None`` the query is probed (when asked)
-    and labeled live with no file I/O."""
-    key = raw = None
+    Returns ``(candidates, hit)``. ``hit`` is True only when the result
+    came from the cache: an under-budget marker that relabels live is a
+    miss, so RESULTS.md cannot overstate how many bundles came from the
+    cache. With ``cache_dir=None`` the query is labeled live with no file
+    I/O."""
+    key = None
     if cache_dir is not None:
         key = bundle_key(sql, strategies, timeout_s, sf_dir)
         raw = read_bundle(cache_dir, key)
@@ -349,37 +300,17 @@ def cached_label_query(spark: "SparkSession", sql: str,
         if (isinstance(raw, dict) and raw.get("poisoned")
                 and int(raw.get("attempts", 1)) >= MAX_POISON_ATTEMPTS):
             return [], True
-    admitted = False
     try:
-        # stored bundles and poison markers own their query's admission
-        if probe_s is not None and raw is None:
-            marker = (read_probe(cache_dir, key, probe_s)
-                      if cache_dir is not None else None)
-            if marker is not None:
-                passed = bool(marker["passed"])
-            else:
-                ms = probe_default(spark, sql, probe_s)
-                passed = ms is not None
-                if cache_dir is not None:
-                    record_probe(cache_dir, key, probe_s, passed, ms,
-                                 sql=sql)
-            if not passed:
-                return None, False
-        admitted = True
         cands = label_query(spark, sql, strategies, timeout_s)
     except ZombieExecutionError as e:
         if cache_dir is not None:
             record_poisoned(cache_dir, key, error=str(e), sql=sql)
-        e.admitted = admitted
         raise
     if cache_dir is not None:
         write_bundle(cache_dir, key, cands)
-        # the bundle owns admission from here on
-        clear_probe(cache_dir, key)
     return cands, False
 
 
 __all__ = ["cached_label_query", "write_bundle", "read_bundle",
-           "record_poisoned", "record_probe", "read_probe", "clear_probe",
-           "bundle_key", "code_fingerprint", "data_fingerprint",
-           "MAX_POISON_ATTEMPTS"]
+           "record_poisoned", "bundle_key", "code_fingerprint",
+           "data_fingerprint", "MAX_POISON_ATTEMPTS"]

@@ -233,27 +233,9 @@ def test_hit_path_never_touches_the_cluster(tmp_path):
     assert hit is True
 
 
-def test_probe_marker_roundtrip(tmp_path):
-    """Probe markers (round-10 verdict #2) persist the default-plan
-    admission outcome per (key, probe budget); a different budget
-    re-probes rather than trusting a stale decision."""
-    cache = str(tmp_path)
-    key = "k" * 32
-    assert LC.read_probe(cache, key, 45.0) is None
-    LC.record_probe(cache, key, 45.0, False)
-    m = LC.read_probe(cache, key, 45.0)
-    assert m is not None and m["passed"] is False
-    assert LC.read_probe(cache, key, 90.0) is None  # budget mismatch
-    LC.record_probe(cache, key, 45.0, True, ms=123.0)
-    m = LC.read_probe(cache, key, 45.0)
-    assert m["passed"] is True and m["ms"] == 123.0
-
-
 def test_probe_admits_cached_paths_no_cluster(tmp_path, monkeypatch):
-    """Every cached admission decision must resolve without a
-    SparkSession: a stored bundle bypasses the probe entirely (and is
-    decompressed exactly once), and a stored probe
-    marker answers pass/fail directly."""
+    """A stored bundle resolves without a SparkSession, and the file is
+    decompressed exactly once."""
     reads = []
     real_read = LC.read_bundle
 
@@ -261,37 +243,22 @@ def test_probe_admits_cached_paths_no_cluster(tmp_path, monkeypatch):
         reads.append(key)
         return real_read(cache_dir, key)
 
-    def no_probe(*a):
-        raise AssertionError("a cached decision must not probe")
-
     monkeypatch.setattr(LC, "read_bundle", counting_read)
-    monkeypatch.setattr(LC, "probe_default", no_probe)
     cache = str(tmp_path)
     key = LC.bundle_key("SELECT 1", ("A",), 30.0, "/data/sf0.1")
     with gzip.open(os.path.join(cache, f"{key}.json.gz"), "wt") as fh:
         json.dump(LC._encode([_cand()]), fh)
     out, hit = LC.cached_label_query(None, "SELECT 1", ("A",), 30.0,
-                                     "/data/sf0.1", cache, 15.0)
+                                     "/data/sf0.1", cache)
     assert hit is True and len(out) == 1
     assert reads == [key]  # one decompress + parse of the stored bundle
-    key2 = LC.bundle_key("SELECT 2", ("A",), 30.0, "/data/sf0.1")
-    LC.record_probe(cache, key2, 15.0, False)
-    out, hit = LC.cached_label_query(None, "SELECT 2", ("A",), 30.0,
-                                     "/data/sf0.1", cache, 15.0)
-    assert out is None and hit is False
-    key3 = LC.bundle_key("SELECT 3", ("A",), 30.0, "/data/sf0.1")
-    LC.record_probe(cache, key3, 15.0, True, ms=1.0)
-    monkeypatch.setattr(LC, "label_query", lambda *a: [_cand()])
-    out, hit = LC.cached_label_query(None, "SELECT 3", ("A",), 30.0,
-                                     "/data/sf0.1", cache, 15.0)
-    assert hit is False and len(out) == 1
 
 
 def test_cached_label_query_outcomes_no_cluster(tmp_path, monkeypatch):
     """The one labeling call owns every cache outcome: hit, under-budget
-    poison (relabels), exhausted poison (skip), probe reject from a
-    stored and from a fresh probe, and a zombie (poison marker with the
-    SQL recorded, error propagated)."""
+    poison (relabels), exhausted poison (skip), a zombie (poison marker
+    with the SQL recorded, error propagated) and no cache (live, no file
+    I/O)."""
     from active_query_optimizer_spark.plans.explore import (
         ZombieExecutionError)
 
@@ -305,93 +272,38 @@ def test_cached_label_query_outcomes_no_cluster(tmp_path, monkeypatch):
             raise ZombieExecutionError("stuck")
         return [_cand()]
 
-    probed = []
-
-    def fake_probe(spark, sql, probe_s):
-        probed.append(sql)
-        if sql == "PZOMBIE":
-            raise ZombieExecutionError("stuck default")
-        return None  # every other fresh probe times out
-
     monkeypatch.setattr(LC, "label_query", fake_label)
-    monkeypatch.setattr(LC, "probe_default", fake_probe)
     key = lambda sql: LC.bundle_key(sql, *args)  # noqa: E731
 
-    # hit: a stored candidate list, no labeling, no probe
+    # hit: a stored candidate list, no labeling
     LC.write_bundle(cache, key("HIT"), [_cand()])
-    out, hit = LC.cached_label_query(None, "HIT", *args, cache, 15.0)
-    assert hit is True and len(out) == 1 and labeled == probed == []
+    out, hit = LC.cached_label_query(None, "HIT", *args, cache)
+    assert hit is True and len(out) == 1 and labeled == []
 
-    # under-budget poison: relabels live without probing, a miss
+    # under-budget poison: relabels live, a miss
     LC.record_poisoned(cache, key("RETRY"), error="z", sql="RETRY")
-    out, hit = LC.cached_label_query(None, "RETRY", *args, cache, 15.0)
-    assert hit is False and len(out) == 1
-    assert labeled == ["RETRY"] and probed == []
+    out, hit = LC.cached_label_query(None, "RETRY", *args, cache)
+    assert hit is False and len(out) == 1 and labeled == ["RETRY"]
     assert isinstance(LC.read_bundle(cache, key("RETRY")), list)
 
     # exhausted poison: the plan-collapse skip, counted as a hit
     for _ in range(LC.MAX_POISON_ATTEMPTS):
         LC.record_poisoned(cache, key("DEAD"), sql="DEAD")
-    out, hit = LC.cached_label_query(None, "DEAD", *args, cache, 15.0)
+    out, hit = LC.cached_label_query(None, "DEAD", *args, cache)
     assert out == [] and hit is True and labeled == ["RETRY"]
 
-    # probe reject, stored marker: no probe run, no labeling
-    LC.record_probe(cache, key("SLOW"), 15.0, False, sql="SLOW")
-    out, hit = LC.cached_label_query(None, "SLOW", *args, cache, 15.0)
-    assert out is None and hit is False and probed == []
-
-    # probe reject, fresh: probes once and records the marker with its SQL
-    out, hit = LC.cached_label_query(None, "FRESH", *args, cache, 15.0)
-    assert out is None and hit is False and probed == ["FRESH"]
-    m = LC.read_probe(cache, key("FRESH"), 15.0)
-    assert m["passed"] is False and m["sql"] == "FRESH"
-    assert labeled == ["RETRY"]
-
     # zombie: poison marker written with the SQL, the error propagates
-    with pytest.raises(ZombieExecutionError) as err:
-        LC.cached_label_query(None, "ZOMBIE", *args, cache, None)
-    assert err.value.admitted is True
+    with pytest.raises(ZombieExecutionError):
+        LC.cached_label_query(None, "ZOMBIE", *args, cache)
     raw = LC.read_bundle(cache, key("ZOMBIE"))
     assert raw == {"poisoned": True, "attempts": 1, "error": "stuck",
                    "sql": "ZOMBIE"}
-    # a zombie in the probe itself: poisoned too, but never admitted
-    with pytest.raises(ZombieExecutionError) as err:
-        LC.cached_label_query(None, "PZOMBIE", *args, cache, 15.0)
-    assert err.value.admitted is False
-    assert LC.read_bundle(cache, key("PZOMBIE"))["attempts"] == 1
-    assert LC.read_probe(cache, key("PZOMBIE"), 15.0) is None
 
-    # no cache: probe (when asked) and label live, no file I/O
+    # no cache: label live, no file I/O
     before = sorted(os.listdir(cache))
-    out, hit = LC.cached_label_query(None, "LIVE", *args, None, None)
+    out, hit = LC.cached_label_query(None, "LIVE", *args, None)
     assert hit is False and len(out) == 1 and labeled[-1] == "LIVE"
-    assert LC.cached_label_query(None, "LIVE", *args, None, 15.0) == (
-        None, False) and probed[-1] == "LIVE"
     assert sorted(os.listdir(cache)) == before
-
-
-def test_probe_marker_stores_sql_and_clears_on_bundle_write(tmp_path,
-                                                            monkeypatch):
-    """Round-12 advice: (a) probe markers record their SQL so a cache
-    re-key can migrate them instead of dropping paid-for admission
-    decisions; (b) once the full bundle is written the marker is deleted
-    — ``read_bundle`` owns admission from then on."""
-    cache = str(tmp_path)
-    sql = "SELECT 4"
-    key = LC.bundle_key(sql, ("A",), 30.0, "/data/sf0.1")
-    LC.record_probe(cache, key, 15.0, True, ms=2.0, sql=sql)
-    m = LC.read_probe(cache, key, 15.0)
-    assert m is not None and m["sql"] == sql
-    # miss path labels live (stubbed) and must clear the marker
-    monkeypatch.setattr(LC, "label_query",
-                        lambda *a, **k: [_cand()])
-    out, hit = LC.cached_label_query(None, sql, ("A",), 30.0,
-                                     "/data/sf0.1", cache)
-    assert hit is False and len(out) == 1
-    assert LC.read_probe(cache, key, 15.0) is None
-    assert not os.path.exists(os.path.join(cache, f"{key}-probe.json.gz"))
-    # clear_probe is a no-op (False) when no marker exists
-    assert LC.clear_probe(cache, key) is False
 
 
 def test_poison_marker_keeps_sql_across_attempts(tmp_path):

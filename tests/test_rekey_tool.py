@@ -31,8 +31,9 @@ def test_bare_dry_run_moves_nothing():
     summary = [ln for ln in out.stdout.splitlines()
                if ln.startswith("re-keyed ")]
     assert summary, out.stdout[-2000:]
-    # without --orphans-from, nothing may move (poison markers may still
-    # be counted as droppable — that reset is documented tool behavior)
+    # without --orphans-from, nothing may move (the committed cache's
+    # retired probe markers are counted as droppable — documented tool
+    # behavior)
     assert "re-keyed 0," in summary[0], summary[0]
 
 
@@ -57,11 +58,10 @@ def _load_tool():
 
 
 def test_markers_with_sql_migrate_and_sqlless_are_preserved(tmp_path):
-    """Round-12 advice: probe/poison markers are paid-for state. A marker
-    recorded with its SQL re-keys exactly like a bundle (probe markers
-    keep the ``-probe`` suffix); a probe marker whose bundle lives at the
-    new key is garbage-collected as redundant (second pass); a legacy
-    SQL-less marker is left IN PLACE — never deleted."""
+    """Round-12 advice: poison markers are paid-for state. A marker
+    recorded with its SQL re-keys exactly like a bundle; a legacy SQL-less
+    marker is left IN PLACE — never deleted. A probe marker of the retired
+    default-plan admission is not a label: a real run drops it."""
     from active_query_optimizer_spark.plans import labelcache as LC
     from active_query_optimizer_spark.plans.explore import HINT_STRATEGIES
 
@@ -84,40 +84,40 @@ def test_markers_with_sql_migrate_and_sqlless_are_preserved(tmp_path):
     leg = lambda s: _old_key(s, sf)  # noqa: E731
     cur = lambda s: LC.bundle_key(  # noqa: E731
         s, HINT_STRATEGIES, 30.0, str(sf))
-    # bundle + its probe marker, a bundle-less probe marker, a SQL-less
-    # probe marker, and a poison marker — all keyed under a retired
-    # code fingerprint except the SQL-less one
+    # a bundle, a probe marker, a SQL-less poison marker and a poison
+    # marker with its SQL — all keyed under a retired code fingerprint
+    # except the SQL-less one
     put(leg(sql1), [{"variant": "default", "sql": sql1,
                      "fingerprint": "f", "plan_json": "{}",
                      "exec_time_ms": 1.0, "conf": {},
                      "realized_joins": [], "hint_realized": None}])
-    put(leg(sql1) + "-probe", {"probe": True, "probe_s": 45.0,
-                               "passed": True, "ms": 10.0, "sql": sql1})
     put(leg(sql2) + "-probe", {"probe": True, "probe_s": 45.0,
                                "passed": False, "ms": None, "sql": sql2})
-    put("deadbeef-probe", {"probe": True, "probe_s": 45.0,
-                           "passed": False, "ms": None})
+    put("deadbeef", {"poisoned": True, "attempts": 1, "error": "z"})
     put(leg(sql3), {"poisoned": True, "attempts": 1, "error": "z",
                     "sql": sql3})
 
     args = ["--cache-dir", str(cache), "--orphans-from", f"{sf}:30",
             "--force-code-ok"]
     rk.main(args)
-    rk.main(args)  # second pass GCs probes superseded by migrated bundles
+    after_first = sorted(os.listdir(cache))
+    rk.main(args)  # a second pass finds everything current
+    assert sorted(os.listdir(cache)) == after_first
 
     assert (cache / f"{cur(sql1)}.json.gz").exists()
     assert not (cache / f"{leg(sql1)}.json.gz").exists()
-    # sql1's probe marker: superseded by its migrated bundle -> gone
-    assert not (cache / f"{cur(sql1)}-probe.json.gz").exists()
-    assert not (cache / f"{leg(sql1)}-probe.json.gz").exists()
-    # sql2's probe marker migrated intact (readable by read_probe)
-    m = LC.read_probe(str(cache), cur(sql2), 45.0)
-    assert m is not None and m["passed"] is False and m["sql"] == sql2
+    # the probe marker is dropped, not migrated
+    assert not (cache / f"{leg(sql2)}-probe.json.gz").exists()
+    assert not (cache / f"{cur(sql2)}-probe.json.gz").exists()
+    assert not (cache / f"{cur(sql2)}.json.gz").exists()
     # poison marker migrated intact
     raw = LC.read_bundle(str(cache), cur(sql3))
     assert raw["poisoned"] is True and raw["sql"] == sql3
-    # the SQL-less legacy marker is preserved byte-for-byte in place
-    assert (cache / "deadbeef-probe.json.gz").exists()
+    assert not (cache / f"{leg(sql3)}.json.gz").exists()
+    # the SQL-less legacy marker is preserved in place
+    assert LC.read_bundle(str(cache), "deadbeef") == {
+        "poisoned": True, "attempts": 1, "error": "z"}
+    assert len(after_first) == 3
 
 
 def test_empty_list_is_a_marker_orphan_not_deleted(tmp_path):
@@ -198,9 +198,9 @@ def test_marker_migration_is_idempotent_and_dry_run_safe(tmp_path):
     import gzip
     import json
 
-    with gzip.open(cache / f"{key}-probe.json.gz", "wt") as fh:
-        json.dump({"probe": True, "probe_s": 45.0, "passed": True,
-                   "ms": 5.0, "sql": sql}, fh)
+    with gzip.open(cache / f"{key}.json.gz", "wt") as fh:
+        json.dump({"poisoned": True, "attempts": 1, "error": "z",
+                   "sql": sql}, fh)
     before = sorted(os.listdir(cache))
     rk.main(["--cache-dir", str(cache), "--orphans-from", f"{sf}:30",
              "--force-code-ok", "--dry-run"])

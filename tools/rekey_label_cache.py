@@ -11,14 +11,14 @@ unchanged in git since the cache files' last commit; pass
 
 For every stored candidate-list bundle, the query SQL is recovered from
 its ``default`` variant (``plan_variants`` always emits one) and the
-bundle is re-written under the CURRENT ``bundle_key``. Probe and poison
-markers recorded with their SQL (round 12 on) re-key the same way —
-probe markers keep their ``-probe`` key suffix, and one whose full
-bundle already exists is dropped as redundant. Legacy SQL-less markers
-are left IN PLACE (unreachable under the new fingerprint, but each
-records a paid-for bounded execution — round-12 advice: never delete
-them wholesale). Old-key files are removed so the cache directory stays
-one-file-per-bundle.
+bundle is re-written under the CURRENT ``bundle_key``. Poison markers
+recorded with their SQL (round 12 on) re-key the same way. Legacy
+SQL-less poison markers are left IN PLACE (unreachable under the new
+fingerprint, but each records a paid-for cancellation escalation —
+round-12 advice: never delete them wholesale). Any other dict is not a
+label, and a real run drops it: the ``-probe`` admission markers of the
+retired sf1 rehearsal are such files. Old-key files are
+removed so the cache directory stays one-file-per-bundle.
 
 The committed cache mixes bundles measured under DIFFERENT
 (sf_dir, timeout) configurations — sf0.1/30 s plus the sf1 rehearsal's
@@ -55,9 +55,8 @@ Usage::
         [--known SF_DIR:TIMEOUT ...] [--orphans-from SF_DIR:TIMEOUT] \
         [--legacy-code-rev REV --force-code-ok] [--cache-dir DIR]
 
-Run it twice after a fingerprint change: the first pass migrates
-bundles and markers; the second garbage-collects probe markers whose
-bundle landed at the new key after the marker was processed.
+A second pass after a fingerprint change reports every migrated file
+as already current.
 """
 
 from __future__ import annotations
@@ -167,15 +166,14 @@ def main(argv: list[str] | None = None) -> None:
     orphans: list[str] = []
     marker_orphans: list[str] = []
 
-    def provenance(sql: str, old_key: str, suffix: str = ""):
+    def provenance(sql: str, old_key: str):
         """Classify ``old_key`` for ``sql``: ``"current"`` (already the
         live key under a known configuration), a ``(sf_dir, timeout)``
         pair (keyed under the ``--legacy-code-rev`` code fingerprint —
         the key match itself establishes the measurement provenance), or
-        ``None`` (unknown).
-        ``suffix`` handles probe markers, keyed ``<bundle_key>-probe``."""
-        if any(LC.bundle_key(sql, HINT_STRATEGIES, t, d) + suffix
-               == old_key for d, t in configs):
+        ``None`` (unknown)."""
+        if any(LC.bundle_key(sql, HINT_STRATEGIES, t, d) == old_key
+               for d, t in configs):
             return "current"
         if legacy_code_fp is None:
             return None
@@ -183,49 +181,31 @@ def main(argv: list[str] | None = None) -> None:
         return next(
             ((d, t) for d, t in configs
              if LC.bundle_key_at_code(sql, HINT_STRATEGIES, t, d,
-                                      legacy_code_fp) + suffix
-             == old_key), None)
+                                      legacy_code_fp) == old_key), None)
 
     for path in sorted(glob.glob(os.path.join(cache_dir, "*.json.gz"))):
         old_key = os.path.basename(path)[: -len(".json.gz")]
         with gzip.open(path, "rt") as fh:
             raw = json.load(fh)
-        if isinstance(raw, dict) and (raw.get("probe")
-                                      or raw.get("poisoned")):
-            # probe/poison markers are paid-for state (each probe cost a
-            # bounded default-plan execution; each poison attempt a full
+        if isinstance(raw, dict) and raw.get("poisoned"):
+            # poison markers are paid-for state (each attempt a full
             # cancellation escalation) — round-12 advice: never drop them
             # wholesale. Markers recorded with their SQL re-key exactly
             # like bundles; legacy SQL-less ones are left in place
             # (unreachable under the new fingerprint, but preserved).
-            suffix = "-probe" if raw.get("probe") else ""
             sql = raw.get("sql")
             if sql is None:
                 marker_orphans.append(old_key)
                 continue
-            prov = provenance(sql, old_key, suffix)
-            if prov is None and orphans_from is None:
-                marker_orphans.append(old_key)
-                continue
-            d, t = ((None, None) if prov == "current"
-                    else prov if prov is not None else orphans_from)
-            new_key = (old_key if prov == "current"
-                       else LC.bundle_key(sql, HINT_STRATEGIES, t, d)
-                       + suffix)
-            if suffix:
-                # a probe marker whose full bundle exists is redundant —
-                # read_bundle owns admission from then on
-                base = new_key[: -len(suffix)]
-                if os.path.exists(os.path.join(cache_dir,
-                                               f"{base}.json.gz")):
-                    print(f"drop (bundle supersedes probe): {old_key}")
-                    dropped += 1
-                    if not dry:
-                        os.remove(path)
-                    continue
+            prov = provenance(sql, old_key)
             if prov == "current":
                 skipped_current += 1
                 continue
+            if prov is None and orphans_from is None:
+                marker_orphans.append(old_key)
+                continue
+            d, t = prov if prov is not None else orphans_from
+            new_key = LC.bundle_key(sql, HINT_STRATEGIES, t, d)
             target = os.path.join(cache_dir, f"{new_key}.json.gz")
             if os.path.exists(target):
                 # a fresher marker already lives at the new key
@@ -246,7 +226,8 @@ def main(argv: list[str] | None = None) -> None:
             marker_orphans.append(old_key)
             continue
         if not isinstance(raw, list):
-            print(f"drop (no SQL to re-key): {old_key}")
+            # not a label: a retired probe marker or an unknown payload
+            print(f"drop (not a bundle or poison marker): {old_key}")
             dropped += 1
             if not dry:
                 os.remove(path)
@@ -296,7 +277,7 @@ def main(argv: list[str] | None = None) -> None:
           f"marker-orphans-left {len(marker_orphans)}"
           f"{' (dry run)' if dry else ''}")
     if marker_orphans:
-        print("marker orphans (probe/poison markers and empty bundles "
+        print("marker orphans (poison markers and empty bundles "
               "left IN PLACE — SQL-less payloads or unknown provenance; "
               "they are unreachable under the current fingerprint but "
               "preserved):")
