@@ -1,2 +1,2 @@
 """End-to-end optimizer pipelines (reference ``stable.py``,
-``Lero/dynamic.py``, ``Lero/deployment.py``)."""
+``Lero/deployment.py``, whose loop also covers ``Lero/dynamic.py``)."""

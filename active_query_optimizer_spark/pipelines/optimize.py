@@ -26,8 +26,7 @@ from ..plans.explore import (HINT_STRATEGIES, Candidate, _conf_overrides,
 from ..plans.extension import extension_forms
 
 
-def choose_plan(spark: SparkSession, sql: str, model: LeroModel,
-                strategies: tuple[str, ...] = HINT_STRATEGIES
+def choose_plan(spark: SparkSession, sql: str, model: LeroModel
                 ) -> tuple[Candidate, list[tuple[Candidate, float]]]:
     """Score every distinct variant of ``sql``; return the predicted
     cheapest (deterministic tie-break on variant order) plus all scored
@@ -39,7 +38,7 @@ def choose_plan(spark: SparkSession, sql: str, model: LeroModel,
     reference's per-join-operator granularity), all planned in one pass and
     deduplicated by plan fingerprint: one ranker, every steering
     mechanism."""
-    cands = plan_forms(spark, variant_forms(sql, strategies)
+    cands = plan_forms(spark, variant_forms(sql, HINT_STRATEGIES)
                        + extension_forms(spark, sql))
     if not cands:
         raise ValueError("query produced no plannable variants")
@@ -50,12 +49,12 @@ def choose_plan(spark: SparkSession, sql: str, model: LeroModel,
     return cands[order], list(zip(cands, [float(s) for s in scores]))
 
 
-def run_optimized(spark: SparkSession, sql: str, model: LeroModel,
-                  strategies: tuple[str, ...] = HINT_STRATEGIES) -> list[Row]:
+def run_optimized(spark: SparkSession, sql: str, model: LeroModel
+                  ) -> list[Row]:
     """Run ``sql`` as the learned-best candidate and return its rows. The
     action runs inside the candidate's session-conf overrides: Spark plans
     a query at its action, so a DataFrame handed back from inside them
     would run under the restored session conf, as Spark's default plan."""
-    best, _ = choose_plan(spark, sql, model, strategies)
+    best, _ = choose_plan(spark, sql, model)
     with _conf_overrides(spark, best.conf):
         return spark.sql(best.sql).collect()

@@ -1,2 +1,2 @@
 """Structured Streaming surfaces: watermarked event-time aggregation and
-the incremental-retrain loop as ``foreachBatch``."""
+the stream-stream interval join, both run by registered queries."""

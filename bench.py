@@ -35,146 +35,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from active_query_optimizer_spark.operators import QUERIES  # noqa: E402
 from active_query_optimizer_spark.session import get_spark  # noqa: E402
+from perfbench.queries import HEADLINE_108  # noqa: E402
 from perfbench.sparkstats import group_counters  # noqa: E402
 
-# Headline set: the scale-relevant core — big-table joins/aggs, the 7-way
-# join, window + dedup/similarity/text pipeline ops as they land.
-HEADLINE = [
-    "flagship_multijoin_count",
-    "scan_filter_count",
-    "hash_join_count",
-    "merge_join_count",
-    "sevenway_join_count",
-    "self_join_count",
-    "pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_region_volume",
-    "window_running_total",
-    "window_topk_per_group",
-    "exchange_reuse_pairs",
-    "min_projection_job_style",
-    # data-pipeline ops (present from round 1 onward)
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "dedup_minhash_clusters",
-    "dedup_simhash",
-    "ann_cosine_topk",
-    "ann_lsh_bucketed",
-    "text_quality_scores",
-    # curation (round 2)
-    "decontam_ngram_overlap",
-    "pack_sequences_budget",
-    "sample_balanced_per_lang",
-    # quality / splits (round 3)
-    "quality_repetition_rules",
-    "tfidf_top_terms_per_source",
-    # analytics / kNN / token-freq / cross-source (round 3)
-    "event_funnel_steps",
-    "cohort_retention_weekly",
-    "knn_label_vote",
-    "quality_token_freq_score",
-    "cross_source_overlap",
-    # embedding preprocessing / mixing / monitoring (round 3)
-    "embedding_dim_stats",
-    "embedding_gram_upper",
-    "embedding_pca_project",
-    "sample_weighted_mix",
-    "stats_histogram_equiwidth",
-    "events_anomaly_days",
-    # optimizer-stats / join-optimization shapes (round 3)
-    "stats_join_size_exact",
-    "join_bloom_prefilter_count",
-    # optimizer-pipeline + streaming shapes
-    "plan_selection_argmin",
-    "spearman_rank_corr",
-    "stats_topk_frequent_values",
-    "stream_windowed_event_counts",
-    "stream_sessionize_events",
-    # round-4 additions: CDC merge, range-frame window, arg-max agg,
-    # Q17 scalar subquery, substring decontamination, null/NDV harvest,
-    # triangle counting, per-group centroids
-    "upsert_snapshot_apply",
-    "window_rolling_7day_avg",
-    "latest_order_per_customer",
-    "scalar_subquery_small_qty",
-    "decontam_substring_containment",
-    "stats_null_profile",
-    "stats_column_cardinalities_approx",
-    "graph_triangle_count",
-    "embedding_lang_centroids",
-    "tpch_q10_returned_items",
-    "events_first_touch",
-    "stats_price_deciles",
-    "cluster_centroid_vectors",
-    "tpch_q7_nation_volume",
-    "tpch_q12_shipmode_priority",
-    "tpch_q14_promo_share",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q22_lapsed_high_balance",
-    # round-4b additions: decision-support set II + stratified sampling,
-    # discrete medians, levenshtein neighbour pairs
-    "tpch_q2_min_cost_supplier",
-    "tpch_q4_priority_exists",
-    "tpch_q6_forecast_revenue",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_variety",
-    "tpch_q20_promo_volume_suppliers",
-    "tpch_q21_waiting_supplier",
-    "sample_stratified_proportional",
-    "stats_median_disc_per_group",
-    "text_edit_distance_pairs",
-    "order_gap_stats_per_customer",
-    "events_trailing_7d_active_users",
-    "window_dense_rank_ties",
-    "tpch_q11_important_parts",
-    "full_outer_reconciliation",
-    # round-4d additions: span-level dedup, context-window chunking,
-    # temperature mixture sampling, correlation harvest, sketch percentiles
-    "dedup_paragraph_spans",
-    "dedup_paragraph_rewrite",
-    "text_chunk_overlap",
-    "sample_temperature_mixture",
-    "stats_corr_qty_discount",
-    "stats_length_percentiles_approx",
-    # round-4e additions: data-quality constraint suite, Z-order layout,
-    # SCD2 versioning, incremental aggregate maintenance, bounded BFS
-    "dq_constraint_report",
-    "zorder_layout_profile",
-    "scd2_history_build",
-    "incremental_agg_maintenance",
-    "graph_bfs_hops",
-    # round-4f additions: skyline, decay-weighted rolling feature,
-    # within-group percentile normalization
-    "pareto_front_orders",
-    "events_decay_weighted_sum",
-    "quality_length_percent_rank",
-    # round-4g additions: deterministic stats reservoir, time-weighted
-    # value segments, market-basket pair support
-    "stats_reservoir_sample_profile",
-    "events_time_weighted_value",
-    "basket_brand_pairs",
-    # round-4h additions: revenue-concentration harvest, behavioural
-    # transition matrix, RFM segmentation cube
-    "stats_revenue_gini",
-    "events_transition_matrix",
-    "orders_rfm_segments",
-    # round-4i additions: vocabulary-growth harvest, burst screening,
-    # exact one-step k-means
-    "text_vocab_stats",
-    "events_burst_users",
-    "embedding_kmeans_step",
-    "embedding_kmeans_two_steps",
-    "setsim_join_prefix",
-    "orders_yoy_monthly_growth",
-    # round-6 additions: GK-sketch production decile path + GK-threshold
-    # stratified sampling route
-    "stats_price_deciles_sketch",
-    "sample_stratified_sketch",
-]
+# Headline set: the benchmark's frozen list of 108 scale-relevant queries
+# (big-table joins/aggs, the 7-way join, window, dedup/similarity/text
+# pipeline ops).
+HEADLINE = HEADLINE_108
 
 
 def time_query(spark, name: str, sf_dir: str, runs: int) -> list[dict]:

@@ -29,10 +29,6 @@ ENTRY_POINTS = [REPO / "tools", REPO / "perfbench", REPO / "bench.py",
 ALLOWED = {
     # optimizer pipeline entry points
     "pipelines/active.py:run_active_loop": "pipeline entry point",
-    "pipelines/dynamic.py:run_dynamic": "pipeline entry point",
-    "pipelines/optimize.py:run_optimized": "pipeline entry point",
-    "streaming/incremental.py:incremental_retrain_stream":
-        "pipeline entry point: the streaming retrain loop",
     "plans/extension.py:configure_builder":
         "pipeline entry point: loads the extension whose forms "
         "choose_plan ranks",

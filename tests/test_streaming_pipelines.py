@@ -1,5 +1,5 @@
-"""Tests for the stable/dynamic pipelines (SURVEY §2.F, §3.1, §3.3) and the
-Structured Streaming surfaces."""
+"""Tests for the stable and deployment pipelines (SURVEY §2.F, §3.1, §3.3),
+the pipeline tool and the Structured Streaming surfaces."""
 
 from __future__ import annotations
 
@@ -11,11 +11,8 @@ import pytest
 
 from tests.conftest import SF_SMALL
 
-from active_query_optimizer_spark.pipelines.dynamic import (run_deployment,
-                                                            run_dynamic)
+from active_query_optimizer_spark.pipelines.dynamic import run_deployment
 from active_query_optimizer_spark.pipelines.stable import run_stable
-from active_query_optimizer_spark.streaming.incremental import (
-    IncrementalTrainer, incremental_retrain_stream)
 from active_query_optimizer_spark.streaming.windowed import (
     sessionize_events, windowed_event_counts)
 
@@ -46,14 +43,24 @@ def test_stable_pipeline_end_to_end(spark, tmp_path):
     assert all(len(cands) >= 2 for _, cands in out["bundles"])
 
 
-def test_dynamic_pipeline_series(spark):
-    from tests.test_plans_model import _synthetic_bundles
+def test_lero_pipeline_tool_serves_the_argmin(spark, capsys, monkeypatch):
+    """``tools/run_lero_pipeline.py`` end to end on the session: it labels,
+    trains and evaluates, then serves every query through
+    ``run_optimized``; the served rows equal the default plan's and one
+    chosen variant is counted per query."""
+    import json
+    import runpy
+    import sys
+    from pathlib import Path
 
-    batches = [_synthetic_bundles(8, seed=s) for s in (0, 1, 2)]
-    out = run_dynamic(spark, batches, epochs=10)
-    assert len(out["latency_series"]) == 2
-    assert len(out["ranking_loss_series"]) == 2
-    assert all(v > 0 for v in out["latency_series"])
+    tool = str(Path(__file__).resolve().parent.parent
+               / "tools" / "run_lero_pipeline.py")
+    monkeypatch.setattr(sys, "argv", [tool, SF_SMALL, "3"])
+    runpy.run_path(tool, run_name="__main__")
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["n_queries"] == 3
+    assert summary["optimized_rows_match_default"] is True
+    assert sum(summary["chosen_variants"].values()) == 3
 
 
 def test_deployment_pipeline_valid_split_series(spark):
@@ -166,74 +173,6 @@ def test_sessionize_streaming_runs(spark, tmp_path):
     got = spark.sql("SELECT COUNT(*) c FROM sessions").collect()[0]["c"]
     exp = sessionize_events(batch).count()
     assert got == exp > 0
-
-
-def test_incremental_retrain_foreachbatch(spark, tmp_path):
-    from tests.test_plans_model import _synthetic_bundles
-    from active_query_optimizer_spark.plans.featurize import to_pg_json
-
-    src = tmp_path / "bundles"
-    src.mkdir()
-    # two files → two micro-batches is not guaranteed; availableNow may
-    # coalesce, so assert on model existence + drift metric length bound
-    for i, seed in enumerate((3, 4)):
-        lines = []
-        for qid, cands in _synthetic_bundles(5, seed=seed):
-            lines.append("#####".join(
-                [f"b{i}_{qid}"] + [to_pg_json(p, t) for p, t in cands]))
-        (src / f"batch_{i}.txt").write_text("\n".join(lines) + "\n")
-
-    trainer = IncrementalTrainer(epochs=5)
-    stream = spark.readStream.format("text").load(str(src))
-    q = incremental_retrain_stream(stream, trainer, str(tmp_path / "ck3"))
-    q.awaitTermination(180)
-    assert trainer.model is not None
-    assert trainer.batches_seen >= 1
-    # the trained model scores a plan without error
-    from active_query_optimizer_spark.plans.featurize import from_pg_json
-    tree, _ = from_pg_json(to_pg_json(
-        _synthetic_bundles(1, seed=9)[0][1][0][0], 1.0))
-    score = trainer.model.predict([trainer.model.fg.transform_tree(tree)])
-    assert score.shape == (1,)
-
-
-def test_incremental_trainer_skips_unlabeled_candidates(monkeypatch):
-    """A bundle line whose plan JSON has no Execution Time is an
-    unlabeled candidate: it must not reach training (read as 0 ms it
-    would train as its query's fastest plan), and a query left with one
-    labeled candidate carries no pair."""
-    from tests.test_plans_model import _synthetic_bundles
-    from active_query_optimizer_spark.plans.featurize import to_pg_json
-    from active_query_optimizer_spark.streaming import incremental as INC
-
-    (_, a_cands), (_, b_cands) = _synthetic_bundles(2, depths=(1, 2, 3))
-    rows = ([{"qid": "A", "candidate_idx": i, "plan_json": to_pg_json(p, t)}
-             for i, (p, t) in enumerate(a_cands[:2])]
-            + [{"qid": "A", "candidate_idx": 2,
-                "plan_json": to_pg_json(a_cands[2][0])},
-               {"qid": "B", "candidate_idx": 0,
-                "plan_json": to_pg_json(*b_cands[0])},
-               {"qid": "B", "candidate_idx": 1,
-                "plan_json": to_pg_json(b_cands[1][0])}])
-
-    class _Batch:
-        sparkSession = None
-
-        def select(self, *cols):
-            return self
-
-        def collect(self):
-            return rows
-
-    seen = []
-    monkeypatch.setattr(INC, "train_pairwise_from_bundles",
-                        lambda bundles, **kw: seen.append(bundles) or "m")
-    trainer = INC.IncrementalTrainer(epochs=1)
-    trainer.process_batch(_Batch(), 0)
-    assert len(seen) == 1
-    assert [(q, [t for _, t in cands]) for q, cands in seen[0]] == [
-        ("A", [t for _, t in a_cands[:2]])]
-    assert trainer.model == "m"
 
 
 #: six join and scan queries: the active loop's live-labeled pool

@@ -10,9 +10,12 @@ Runs the full Layer-B loop the reference orchestrates across ``pg.py`` →
   4. label: explore hint-variant plans, time them      (plans/explore)
   5. train the pairwise tree-conv ranker               (model/lero)
   6. evaluate: chosen-plan latency + ranking loss      (evaluation/metrics)
+  7. serve: run each query as the ranker's argmin and  (pipelines/optimize)
+     check its rows against Spark's default plan
 
 Usage:  python tools/run_lero_pipeline.py [sf_dir] [n_queries]
-Prints one JSON summary line.
+Prints one JSON summary line; exits 1 when a served query's rows differ
+from the default plan's.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -29,6 +33,8 @@ from active_query_optimizer_spark.catalog import register_views  # noqa: E402
 from active_query_optimizer_spark.session import get_spark  # noqa: E402
 from active_query_optimizer_spark.stats.harvester import harvest_range_dict  # noqa: E402
 from active_query_optimizer_spark.workload.generate import generate_workload  # noqa: E402
+from active_query_optimizer_spark.pipelines.optimize import (  # noqa: E402
+    choose_plan, run_optimized)
 from active_query_optimizer_spark.pipelines.stable import run_stable  # noqa: E402
 
 
@@ -54,6 +60,16 @@ def main() -> None:
     # 4-6. label → train → evaluate
     out = run_stable(spark, queries, epochs=20, seed=7)
 
+    # 7. serve: the reference's test path runs the argmin
+    # (Lero/lero_test.py:82-112); run_optimized returns rows only, so the
+    # tally of chosen variants asks choose_plan for its pick
+    chosen: Counter[str] = Counter()
+    rows_match = True
+    for _, sql in queries:
+        chosen[choose_plan(spark, sql, out["model"])[0].variant] += 1
+        rows_match &= (run_optimized(spark, sql, out["model"])
+                       == spark.sql(sql).collect())
+
     n_cands = [len(c) for _, c in out["bundles"]]
     summary = {
         "sf_dir": sf_dir,
@@ -63,8 +79,12 @@ def main() -> None:
             "mean": round(float(np.mean(n_cands)), 2)},
         "chosen_plan_total_s": round(out["lero_dict"]["sum"], 3),
         "ranking_loss": round(out["ranking_loss"], 4),
+        "optimized_rows_match_default": rows_match,
+        "chosen_variants": chosen,
     }
     print(json.dumps(summary))
+    if not rows_match:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
